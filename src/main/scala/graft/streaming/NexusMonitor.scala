@@ -11,8 +11,8 @@ import graft.tax.{Compliance, Dims}
   * thresholds as transactions arrive.
   *
   * Three layers:
-  *  - [[nexusStatusStream]]: running `groupBy(state)` aggregate joined to
-  *    the broadcast threshold dim — emit in update/complete mode.
+  *  - [[nexusStatusStream]]: running `groupBy(state)` aggregate with the
+  *    thresholds looked up in-stage — emit in update/complete mode.
   *  - [[windowedRevenue]]: watermarked event-time daily revenue windows
   *    (late data dropped after the watermark).
   *  - [[crossingAlerts]]: `flatMapGroupsWithState` dedup — each state emits
@@ -20,8 +20,8 @@ import graft.tax.{Compliance, Dims}
   *    micro-batches arrive afterwards.
   *
   * Scale: state cardinality is 51, so the running aggregate's state store
-  * is tiny regardless of input volume; the threshold join is broadcast;
-  * only the pre-aggregation shuffle scales with traffic.
+  * is tiny regardless of input volume; the thresholds are a per-row hash
+  * lookup; only the pre-aggregation shuffle scales with traffic.
   */
 object NexusMonitor {
 

@@ -1,6 +1,6 @@
 package graft.tax
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,7 +28,7 @@ object Compliance {
     *
     * Input columns: state, revenue, transaction_count [, physical_presence].
     * The three-way outcome (no-nexus states / no-threshold-data / economic
-    * test) is a CASE tree over a broadcast threshold join. Output mirrors
+    * test) is a CASE tree over hashed threshold lookups. Output mirrors
     * `NexusStatus` (compliance.py:51-65); pcts emitted as doubles to mirror
     * the reference's float typing.
     */
@@ -39,16 +39,13 @@ object Compliance {
   /** [[checkNexus]] without the final sort — usable under Structured
     * Streaming (sorting is the caller's concern there). */
   def checkNexusUnsorted(activity: DataFrame): DataFrame = {
-    val spark = activity.sparkSession
-    val thresholds = Dims.nexusThresholds(spark)
-      .select(col("state_code").as("nx_state"), col("revenue_threshold"),
-        col("transaction_threshold"), col("measurement_period"))
     val withPhys =
       if (activity.columns.contains("physical_presence")) activity
       else activity.withColumn("physical_presence", lit(false))
 
     val noNexus = col("state").isin(Dims.noNexusStates: _*)
-    val noData = col("nx_state").isNull
+    // every threshold row has a period: a NULL period is a lookup miss
+    val noData = col("measurement_period").isNull
 
     val revPct = when(col("revenue_threshold") > 0,
       col("revenue").cast(DoubleType) /
@@ -65,8 +62,12 @@ object Compliance {
 
     val physical = col("physical_presence")
 
+    val state = col("state")
     withPhys
-      .join(broadcast(thresholds), col("state") === col("nx_state"), "left")
+      .select(col("*"),
+        Dims.nexusRevenueThreshold(state).as("revenue_threshold"),
+        Dims.nexusTransactionThreshold(state).as("transaction_threshold"),
+        Dims.nexusPeriod(state).as("measurement_period"))
       .withColumn("has_nexus",
         when(noNexus, lit(false))
           .when(noData, physical)
@@ -106,7 +107,7 @@ object Compliance {
                 col("transaction_count"), col("transaction_threshold"),
                 col("transaction_pct_of_threshold"))),
             concat(lit("Period: "), col("measurement_period")))))
-      .drop("nx_state", "measurement_period")
+      .drop("measurement_period")
   }
 
   /** Monthly/quarterly/annual filing periods for a year, generated with
@@ -116,10 +117,7 @@ object Compliance {
     * (compliance.py:186-200) unless a `frequency` column is supplied. */
   def filingDeadlines(statesWithFreq: DataFrame, yr: Int,
       asOf: java.time.LocalDate, filed: Option[DataFrame] = None): DataFrame = {
-    val spark = statesWithFreq.sparkSession
     val asOfCol = lit(java.sql.Date.valueOf(asOf))
-    val dueDays = Dims.filingDueDays(spark)
-      .select(col("state_code").as("dd_state"), col("due_day"))
 
     val withFreq =
       if (statesWithFreq.columns.contains("frequency")) statesWithFreq
@@ -147,8 +145,8 @@ object Compliance {
     // (compliance.py:171-183).
     val nextMonth = add_months(col("period_end"), 1)
     val withDue = periods
-      .join(broadcast(dueDays), col("state_code") === col("dd_state"), "left")
-      .withColumn("due_day_eff", coalesce(col("due_day"), lit(Dims.DefaultDueDay)))
+      .withColumn("due_day_eff",
+        coalesce(Dims.dueDay(col("state_code")), lit(Dims.DefaultDueDay)))
       .withColumn("due_date",
         make_date(year(nextMonth), month(nextMonth), col("due_day_eff")))
 
@@ -178,7 +176,7 @@ object Compliance {
         when(col("is_filed"), "filed")
           .when(col("is_overdue"), "overdue")
           .otherwise("pending"))
-      .drop("dd_state", "due_day", "due_day_eff")
+      .drop("due_day_eff")
   }
 
   /** Overdue filings across registered states (compliance.py:483-497). */

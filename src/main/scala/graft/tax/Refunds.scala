@@ -34,8 +34,6 @@ object Refunds {
   def overpayments(txns: DataFrame, asOf: java.time.LocalDate): DataFrame = {
     val taxed = TaxCalc.withTax(txns)
     val asOfCol = lit(java.sql.Date.valueOf(asOf))
-    val solYears = Dims.solYears(txns.sparkSession)
-      .select(col("state_code").as("sol_state"), col("sol_years"))
 
     val withOver = taxed
       .withColumn("tax_paid", coalesce(col("tax_paid"), lit(BigDecimal(0))).cast(Money))
@@ -44,9 +42,8 @@ object Refunds {
       .filter(col("overpayment") > 0)
 
     val withSol = withOver
-      .join(broadcast(solYears), col("state") === col("sol_state"), "left")
       .withColumn("sol_years_eff",
-        coalesce(col("sol_years"), lit(Dims.DefaultSolYears)))
+        coalesce(Dims.solYears(col("state")), lit(Dims.DefaultSolYears)))
       // cutoff = as_of shifted back sol_years; eligible := txn_date >= cutoff
       .withColumn("sol_cutoff",
         make_date(year(asOfCol) - col("sol_years_eff"), month(asOfCol),
@@ -157,8 +154,6 @@ object Refunds {
     * aggregation buffer, which does not survive 100 TB. Full detail belongs
     * in a flat sink (see [[overpayments]] / Reports.transactionDetails). */
   def claims(over: DataFrame, maxRecords: Int = 100): DataFrame = {
-    val solYears = Dims.solYears(over.sparkSession)
-      .select(col("state_code").as("sol_state"), col("sol_years"))
     val headers = over.filter(col("refund_eligible"))
       .groupBy(col("state").as("state_code"))
       .agg(
@@ -175,14 +170,13 @@ object Refunds {
         .as("records"))
     headers
       .join(recs, col("state_code") === col("rec_state"), "left")
-      .join(broadcast(solYears), col("state_code") === col("sol_state"), "left")
       .withColumn("sol_years_eff",
-        coalesce(col("sol_years"), lit(Dims.DefaultSolYears)))
+        coalesce(Dims.solYears(col("state_code")), lit(Dims.DefaultSolYears)))
       .withColumn("filing_notes", format_string(
         "Refund claim for %d transactions. SOL: %d years from transaction date. Total requested: $%,.2f",
         col("transaction_count"), col("sol_years_eff"),
         col("total_refund_requested").cast(DoubleType)))
-      .drop("rec_state", "sol_state", "sol_years", "sol_years_eff")
+      .drop("rec_state", "sol_years_eff")
       .orderBy(col("total_refund_requested").desc, col("state_code"))
   }
 

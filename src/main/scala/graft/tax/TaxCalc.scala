@@ -14,9 +14,9 @@ import org.apache.spark.sql.types._
   * (calculator.py:214-224), tax-inclusive back-out (calculator.py:229-232),
   * and HALF_UP cents rounding applied per component before summing
   * (calculator.py:236-238). Architecture is Spark-first: the reference's
-  * dict lookups become broadcast hash joins, its if/elif chains become a
-  * single CASE expression tree, and the whole thing stays inside
-  * whole-stage codegen — no UDFs.
+  * dict lookups become in-stage hashed [[Dims]] lookup columns, its
+  * if/elif chains become a single CASE expression tree, and the whole thing
+  * stays inside whole-stage codegen — no joins, no UDFs.
   */
 object TaxCalc {
   import Dims.{Money, Rate}
@@ -76,32 +76,22 @@ object TaxCalc {
     * local_tax, tax_amount, effective_rate, is_exempt, exemption_reason,
     * warnings, total_with_tax` — the `TaxResult` fields (calculator.py:60-78).
     *
-    * All three dimension joins are broadcast (≤ 100-row dims): at 100 TB of
-    * facts this plan has zero shuffles — scan → 3×BroadcastHashJoin →
-    * projection, one codegen stage.
+    * The state, local-rate and exemption dimensions resolve per row with
+    * hashed [[Dims]] lookups (a miss is NULL): at
+    * 100 TB of facts this plan has no join, no broadcast and no shuffle —
+    * scan → projection, one codegen stage.
     */
   def withTax(txns: DataFrame): DataFrame = {
-    val spark = txns.sparkSession
-    val states = Dims.stateRates(spark)
-      .select(col("state_code").as("st_code"), col("state_name").as("st_name"),
-        col("base_rate").as("st_base"), col("has_local_taxes").as("st_has_local"),
-        col("avg_combined_rate").as("st_avg"))
-    val locals = Dims.localRates(spark)
-      .select(col("state_code").as("lr_state"), col("city_lc").as("lr_city"),
-        col("rate").as("lr_rate"))
-    val exempt = Dims.exemptSynonyms(spark)
+    val state = col("state")
+    val withDims = txns.select(col("*"),
+      Dims.stateName(state).as("st_name"),
+      Dims.stateBaseRate(state).as("st_base"),
+      Dims.stateHasLocal(state).as("st_has_local"),
+      Dims.stateAvgRate(state).as("st_avg"),
+      Dims.localRate(state, lower(col("city"))).as("lr_rate"),
+      Dims.exemptCategory(state, lower(col("item_category"))).as("ex_category"))
 
-    val joined = txns
-      .join(broadcast(states), txns("state") === states("st_code"), "left")
-      .join(broadcast(locals),
-        col("state") === col("lr_state") && lower(col("city")) === col("lr_city"),
-        "left")
-      .join(broadcast(exempt),
-        col("state") === col("ex_state") &&
-          lower(col("item_category")) === col("ex_synonym"),
-        "left")
-
-    val unknownState = col("st_code").isNull
+    val unknownState = col("st_name").isNull
     val noTaxState = col("st_base") === lit(BigDecimal(0)).cast(Rate) && !col("st_has_local")
 
     // Exemption resolution, first-match-wins (calculator.py:132-155).
@@ -158,7 +148,7 @@ object TaxCalc {
     // consumers downstream, exactly the guard that blocks inlining.
     // Measured on op_incl_backout (600 k rows, every row inclusive):
     // 7.5 s -> 1.4 s warm. Still one codegen stage, still zero shuffles.
-    val staged = joined
+    val staged = withDims
       .withColumn("is_exempt", isExempt)
       .withColumn("exemption_reason", exemptReason)
       .withColumn("_taxed", taxed)

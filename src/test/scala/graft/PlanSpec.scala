@@ -1,12 +1,18 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+
 /** Physical-plan regression tests — pin the scale properties the operators
-  * were designed around (broadcast dims, parquet pushdown/pruning, shuffle
-  * counts). A refactor that silently turns a broadcast join into a
-  * sort-merge join or drops a pushed filter fails here, not at 100 TB.
+  * were designed around (in-stage dimension lookups, broadcast joins,
+  * parquet pushdown/pruning, shuffle counts). A refactor that silently
+  * turns a broadcast join into a sort-merge join or drops a pushed filter
+  * fails here, not at 100 TB.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {
@@ -20,12 +26,33 @@ class PlanSpec extends SparkSpec {
     "(?<!Broadcast)Exchange ".r
       .findAllIn(df.queryExecution.executedPlan.toString).size
 
-  test("op_tax_calc: all dim joins broadcast, zero shuffles") {
-    val p = plan("op_tax_calc")
-    assert(p.contains("BroadcastHashJoin"), p.take(2000))
-    assert(!p.contains("SortMergeJoin"), "dims must never sort-merge")
+  test("op_tax_calc: zero shuffles; the tax block adds no join and no exchange") {
     assert(shuffleCount(SparkEntry.queries("op_tax_calc")(spark, sf)) == 0,
       "the tax expression block must be shuffle-free")
+    // static dimensions resolve in-stage: over a file source, each tax
+    // pipeline's executed plan has exactly its input's joins and exchanges
+    // (broadcast ones included), and no dimension relation at all
+    def count(df: DataFrame)(p: SparkPlan => Boolean): Int =
+      collect(df.queryExecution.executedPlan) { case n if p(n) => n }.size
+    def joins(df: DataFrame) = count(df)(_.isInstanceOf[BaseJoinExec])
+    def exchanges(df: DataFrame) = count(df)(n =>
+      n.isInstanceOf[Exchange] || n.isInstanceOf[ReusedExchangeExec])
+    val txns = graft.tax.TaxCalc.normalize(graft.tax.TaxCalc.readCsv(spark,
+      getClass.getResource("/sample_transactions.csv").getPath))
+    val activity = graft.tax.Compliance.stateActivity(txns)
+    assert(exchanges(activity) == 1)
+    for ((name, in, out) <- Seq(
+        ("TaxCalc.withTax", txns, graft.tax.TaxCalc.withTax(txns)),
+        ("Refunds.overpayments", txns, graft.tax.Refunds.overpayments(txns,
+          java.time.LocalDate.of(2026, 8, 12))),
+        ("Compliance.checkNexusUnsorted", activity,
+          graft.tax.Compliance.checkNexusUnsorted(activity)))) {
+      val p = out.queryExecution.executedPlan.toString
+      assert(joins(out) == joins(in), s"$name adds a join:\n$p")
+      assert(exchanges(out) == exchanges(in), s"$name adds an exchange:\n$p")
+      assert(count(out)(_.isInstanceOf[LocalTableScanExec]) == 0,
+        s"$name reads a local dimension relation:\n$p")
+    }
   }
 
   test("op_filter_project: filter pushed to the parquet scan, columns pruned") {

@@ -88,7 +88,7 @@ class NexusMonitorSpec extends SparkSpec {
   }
 
   test("the batch tax expression block runs unchanged on a stream") {
-    // stream-static broadcast joins: TaxCalc.withTax over a streaming source
+    // in-stage dimension lookups: TaxCalc.withTax over a streaming source
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(String, java.sql.Date, String, String, String)]
     val txns = graft.tax.TaxCalc.normalize(

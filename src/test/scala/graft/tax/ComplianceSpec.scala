@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import java.sql.Date
 import java.time.LocalDate
 
-/** Golden tests ported from /root/reference/tests/test_compliance.py. */
+/** Golden tests ported from the reference's tests/test_compliance.py. */
 class ComplianceSpec extends SparkSpec {
   import spark.implicits._
 

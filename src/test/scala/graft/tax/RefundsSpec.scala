@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import java.sql.Date
 import java.time.LocalDate
 
-/** Golden tests ported from /root/reference/tests/test_refund_analyzer.py,
+/** Golden tests ported from the reference's tests/test_refund_analyzer.py,
   * plus the README end-to-end golden over the committed sample CSV. */
 class RefundsSpec extends SparkSpec {
   import spark.implicits._
@@ -128,7 +128,7 @@ class RefundsSpec extends SparkSpec {
     // (README.md:128-146), but RUNNING the reference's own analyzer on its
     // own sample CSV yields 12 / $33.35 / $28.35 — the README numbers are
     // stale. We pin parity with the reference's actual behavior (verified by
-    // executing /root/reference/tax_engine/refund_analyzer.py on
+    // executing the reference's tax_engine/refund_analyzer.py on
     // data/sample_transactions.csv with as_of=2026-01-01).
     val path = getClass.getResource("/sample_transactions.csv").getPath
     val t = TaxCalc.normalize(TaxCalc.readCsv(spark, path))

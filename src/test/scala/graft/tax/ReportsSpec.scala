@@ -134,8 +134,8 @@ class ReportsSpec extends SparkSpec {
     // text rendering, including blank-line structure.
     val golden = scala.io.Source.fromResource("golden_report.txt").mkString
       .stripLineEnd
-    val txns = TaxCalc.normalize(
-      TaxCalc.readCsv(spark, "/root/reference/data/sample_transactions.csv"))
+    val txns = TaxCalc.normalize(TaxCalc.readCsv(spark,
+      getClass.getResource("/sample_transactions.csv").getPath))
     val taxedCsv = TaxCalc.withTax(txns)
     val taxTxt = TextReport.formatText(
       Reports.taxSummaryReport(taxedCsv, "2024-Q1", "2026-08-12"))

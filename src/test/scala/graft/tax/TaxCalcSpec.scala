@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import java.sql.Date
 
-/** Golden tests ported from /root/reference/tests/test_calculator.py and
+/** Golden tests ported from the reference's tests/test_calculator.py and
   * tests/test_rates.py — exact-value assertions on the Spark pipeline. */
 class TaxCalcSpec extends SparkSpec {
   import spark.implicits._
