@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at the given scale factor and
   * prints ONE machine-parsed JSON line.
@@ -18,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * — because `Dataset.count()` re-optimizes and can prune expensive
   * subtrees whose row count is statically derivable (op_mrr's brute scan
   * vanished under a unique-key left-join elimination; 36 queries showed
-  * count-pruned leaves in the CountAudit sweep). Pre-r17 trend entries
-  * for that set under-measured; the sidecar field marks the boundary.
+  * count-pruned leaves in a `Probe count-audit` sweep). Pre-r17 trend
+  * entries for that set under-measured; the sidecar field marks the
+  * boundary.
   */
 object Bench {
   /** Short metric-line aliases — ROUND 19: the rename ledger reopened and
@@ -428,17 +428,13 @@ object Bench {
         .getOrElse(line("{}", sorted.length, slim = 4, unit = "s")))
   }
 
+  /** The scale-factor directory [[Bench]] and [[Probe]] read. */
+  def envSfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = envSfDir
+    val spark = GraftSession("graft-bench")
     // Warm-up: session init, parquet footer reads, and a ONE-TIME
     // materialization of the shared tax/refund/dedup lineages (reused by
     // 20+ queries via the CacheManager).
@@ -456,11 +452,11 @@ object Bench {
     // round-17 finding — Catalyst re-optimizes the count() plan and can
     // prune expensive subtrees whose row count is statically derivable
     // (unique-key left-join elimination made op_mrr's brute scan vanish:
-    // 0.4 s measured for a 60+ s plan at ×100; a CountAudit sweep found
-    // 36 queries with count-pruned leaves). toRdd runs the declared plan
-    // as planned — what the bench claims to measure. Convention change
-    // marked "exec":"plan" in the sidecar; pre-r17 per-query trends for
-    // the pruned set under-measured.
+    // 0.4 s measured for a 60+ s plan at ×100; a `Probe count-audit`
+    // sweep found 36 queries with count-pruned leaves). toRdd runs the
+    // declared plan as planned — what the bench claims to measure.
+    // Convention change marked "exec":"plan" in the sidecar; pre-r17
+    // per-query trends for the pruned set under-measured.
     def runPlan(df: org.apache.spark.sql.DataFrame): Unit = {
       df.queryExecution.toRdd.count(); ()
     }

@@ -1725,7 +1725,8 @@ object Catalog {
     "op_rollup" -> ((s, dir) =>
       // expr()-based grouping columns: rollup(String*) resolves names via
       // Dataset.col, which trips the ambiguous-self-join check on the
-      // withTax join lineage's dataset-id tags
+      // dataset-id tags of the join left in this lineage — the
+      // SyntheticTxns `state_idx` join
       taxed(s, dir).select("state", "is_exempt", "tax_amount")
         .rollup(expr("state"), expr("is_exempt"))
         .agg(dbl(sum(col("tax_amount"))).as("tax_total"),
@@ -3190,7 +3191,7 @@ object Catalog {
     }),
 
     "op_simhash" -> ((s, dir) =>
-      Dedup.withSimhash(dedupCorpus(s, dir), portable = true)
+      Dedup.withSimhash(dedupCorpus(s, dir))
         .select("doc_id", "simhash")),
 
     // simhash near-dup PAIRS: 4x15-bit banded Hamming LSH with

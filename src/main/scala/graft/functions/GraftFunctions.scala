@@ -1,30 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** SQL registration for the native expressions: `minhash_sig(shingles[, k])`
-  * and `cosine_sim(a, b)`.
-  *
-  * Two paths:
-  *  - [[GraftExtensions]] for `spark.sql.extensions=graft.functions.GraftExtensions`
-  *    (cluster-wide, applied at session build);
-  *  - [[GraftFunctions.register]] for imperative per-session registration.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    GraftFunctions.descriptors.foreach { case (name, info, builder) =>
-      e.injectFunction((FunctionIdentifier(name), info, builder))
-    }
-    // the bounded-heap top-k physical operator: sessions configured with
-    // spark.sql.extensions=graft.functions.GraftExtensions get the
-    // strategy at build time (graft.ops.TopK.perKey also self-registers
-    // via experimental.extraStrategies for imperative use)
-    e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
-  }
-}
-
+/** SQL registration for the native expressions (`minhash_sig`,
+  * `cosine_sim`, `lsh_sig`, `p_minhash_sig`, `p_simhash`, `kmv_sketch`):
+  * [[GraftFunctions.register]] adds them to an existing session. The
+  * bounded-heap top-k strategy is not registered here —
+  * [[graft.ops.TopK.perKey]] adds it to its session on first use. */
 object GraftFunctions {
   type Builder = Seq[Expression] => Expression
 
@@ -41,9 +24,8 @@ object GraftFunctions {
     v.toString.toInt
   }
 
-  private[functions] val descriptors: Seq[(String, ExpressionInfo, Builder)] = Seq(
+  private val descriptors: Seq[(String, Builder)] = Seq(
     ("minhash_sig",
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
       (args: Seq[Expression]) => args match {
         case Seq(c) => MinHashSig(c, 64)
         case Seq(c, k) => MinHashSig(c,
@@ -52,13 +34,11 @@ object GraftFunctions {
           "minhash_sig(shingles[, numHashes])")
       }),
     ("cosine_sim",
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
       (args: Seq[Expression]) => args match {
         case Seq(a, b) => CosineSim(a, b)
         case _ => throw new IllegalArgumentException("cosine_sim(a, b)")
       }),
     ("lsh_sig",
-      new ExpressionInfo(classOf[LshSig].getName, "lsh_sig"),
       (args: Seq[Expression]) => args match {
         case Seq(e) => LshSig(e, 4, 8)
         case Seq(e, t, p) => LshSig(e,
@@ -67,7 +47,6 @@ object GraftFunctions {
           "lsh_sig(embedding[, nTables, planesPerTable])")
       }),
     ("p_minhash_sig",
-      new ExpressionInfo(classOf[PortableMinHashSig].getName, "p_minhash_sig"),
       (args: Seq[Expression]) => args match {
         case Seq(c) => PortableMinHashSig(c, 64)
         case Seq(c, k) => PortableMinHashSig(c, litInt("p_minhash_sig", "numHashes", k))
@@ -75,13 +54,11 @@ object GraftFunctions {
           "p_minhash_sig(shingles[, numHashes])")
       }),
     ("p_simhash",
-      new ExpressionInfo(classOf[PortableSimHash].getName, "p_simhash"),
       (args: Seq[Expression]) => args match {
         case Seq(c) => PortableSimHash(c, 60)
         case _ => throw new IllegalArgumentException("p_simhash(shingles)")
       }),
     ("kmv_sketch",
-      new ExpressionInfo(classOf[KmvSketch].getName, "kmv_sketch"),
       (args: Seq[Expression]) => args match {
         case Seq(h, k) => KmvSketch(h, litInt("kmv_sketch", "k", k))
         case _ => throw new IllegalArgumentException("kmv_sketch(hash, k)")
@@ -89,7 +66,7 @@ object GraftFunctions {
 
   /** Imperative registration on an existing session. */
   def register(spark: SparkSession): Unit =
-    descriptors.foreach { case (name, _, builder) =>
+    descriptors.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }

@@ -113,9 +113,9 @@ object PortableMinHashSig {
 
 /** Native portable SimHash: `array<string>` shingles → 60-bit simhash
   * long — per-bit ±1 majority vote over the md5-60 base hashes, sign bits
-  * packed (vote > 0 → bit set). Replaces the interpreted two-stage
-  * vote/pack HOF in [[graft.text.Dedup.withSimhash]] (portable variant);
-  * bit-identical by construction. */
+  * packed (vote > 0 → bit set). Replaces an interpreted two-stage
+  * vote/pack HOF (the tests keep it as the reference); bit-identical by
+  * construction. */
 case class PortableSimHash(child: Expression, bits: Int)
     extends UnaryExpression {
 

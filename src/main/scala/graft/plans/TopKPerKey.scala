@@ -26,8 +26,8 @@ import org.apache.spark.sql.execution.SparkStrategy
   *    (the final's `requiredChildDistribution` makes Catalyst insert the
   *    key-clustered exchange between them)
   *  - [[TopKPerKeyExec]] — bounded-heap physical operator (both phases)
-  *  - registered via [[graft.functions.GraftExtensions]], or used directly
-  *    through [[graft.ops.TopK.perKey]]
+  *  - used through [[graft.ops.TopK.perKey]], which adds the strategy to
+  *    its session's `experimental.extraStrategies` on first use
   */
 case class TopKPerKey(k: Int, keys: Seq[Expression], order: Expression,
     descending: Boolean, child: LogicalPlan) extends UnaryNode {

@@ -28,7 +28,7 @@ import org.apache.spark.sql.types._
   */
 object Dedup {
   /** 31-bit modulus keeps a*x+b inside a long under ANSI overflow checks. */
-  private val P = 2147483647L
+  private[text] val P = 2147483647L
   val NumHashes = 64
   val Bands = 16
   val RowsPerBand = 4 // NumHashes / Bands
@@ -133,10 +133,6 @@ object Dedup {
     array_distinct(when(n >= 3, tri).otherwise(array(concat_ws(" ", toks))))
   }
 
-  /** 64-bit base hashes of the shingles, folded into [0, 2^31). */
-  private def baseHashes(sh: Column): Column =
-    transform(sh, s => pmod(xxhash64(s), lit(P)))
-
   /** Engine-portable base hash: the first 15 hex chars of md5 parsed as a
     * 60-bit integer (DuckDB: `CAST('0x' || substring(md5(s),1,15) AS
     * BIGINT)`), optionally folded into [0, 2^31). xxhash64 is Spark-only,
@@ -146,34 +142,10 @@ object Dedup {
   def portableHash(s: Column): Column =
     conv(substring(md5(s.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
 
-  private def portableHashes(sh: Column, foldP: Boolean): Column =
-    transform(sh, s =>
-      if (foldP) pmod(portableHash(s), lit(P)) else portableHash(s))
-
   /** MinHash signature via the native codegen expression
     * [[graft.functions.MinHashSig]] — one fused pass over the shingles. */
   def minhashSignature(text: Column): Column =
     graft.functions.MinHashSig(shingles(text), NumHashes)
-
-  /** Pure-HOF construction of the same signature (bit-identical output) —
-    * kept for cross-validation of the native expression.
-    *
-    * PERF note: one `aggregate` pass over the hashes with a 64-wide
-    * running-min accumulator — the hash array sits in argument position
-    * (one eval); lambdas touch only bound vars and literals. A transpose
-    * (per-function transform over captured hashes) re-evaluates the shingle
-    * pipeline 64× per row. HOFs never codegen, so even this allocates a
-    * 64-long array per shingle — hence the native expression. */
-  def minhashSignatureHof(text: Column): Column = {
-    val base = baseHashes(shingles(text))
-    val aLit = typedLit(coefA.toSeq)
-    val bLit = typedLit(coefB.toSeq)
-    val idx = typedLit((0 until NumHashes).toList)
-    aggregate(base, array_repeat(lit(P), NumHashes),
-      (acc, x) => zip_with(acc, idx, (m, i) =>
-        least(m, pmod(element_at(aLit, i + 1) * x + element_at(bLit, i + 1),
-          lit(P)))))
-  }
 
   /** docs → (id, sig) with the signature computed in one codegen stage. */
   def withSignature(docs: DataFrame, textCol: String = "text"): DataFrame =
@@ -184,21 +156,6 @@ object Dedup {
     * [[portableHash]] base hashes, one fused pass. */
   def minhashSignaturePortable(text: Column): Column =
     graft.functions.PortableMinHashSig(shingles(text), NumHashes)
-
-  /** Pure-HOF construction of the portable signature (bit-identical) —
-    * kept for cross-validation of the native expression: one `aggregate`
-    * pass with a 64-wide running-min accumulator (hash array in argument
-    * position; see the PERF note on [[minhashSignatureHof]]). */
-  def minhashSignaturePortableHof(text: Column): Column = {
-    val base = portableHashes(shingles(text), foldP = true)
-    val aLit = typedLit(coefA.toSeq)
-    val bLit = typedLit(coefB.toSeq)
-    val idx = typedLit((0 until NumHashes).toList)
-    aggregate(base, array_repeat(lit(P), NumHashes),
-      (acc, x) => zip_with(acc, idx, (m, i) =>
-        least(m, pmod(element_at(aLit, i + 1) * x + element_at(bLit, i + 1),
-          lit(P)))))
-  }
 
   /** Per-(bucket) occupancy cap for the banded self-joins: buckets at or
     * under the cap emit ALL pairs; buckets over it emit STAR edges to the
@@ -338,7 +295,7 @@ object Dedup {
             (x, y) => when(x === y, 1).otherwise(0)), lit(0),
             (acc, v) => acc + v)),
       col("n_agree") >= minAgree)
-    val shSigs = scope.persist(withSimhash(docs, textCol, portable = true)
+    val shSigs = scope.persist(withSimhash(docs, textCol)
       .select(col(idCol).as("id"), col("simhash")))
     val sh = shSigs
       .select(col("id"),
@@ -383,42 +340,12 @@ object Dedup {
       .select("a", "b", "n_agree")
   }
 
-  /** SimHash over shingle hashes: per-bit majority vote of ±1.
-    * (Built via expr(): the Scala shiftleft/shiftright helpers only accept
-    * literal Ints, but the underlying expressions take any int column.)
-    * Default: 64-bit xxhash64 base. `portable = true` votes over the 60
-    * bits of [[portableHash]] instead — DuckDB-reproducible. */
-  def withSimhash(docs: DataFrame, textCol: String = "text",
-      portable: Boolean = false): DataFrame =
-    if (portable)
-      // native codegen path ([[graft.functions.PortableSimHash]]) — the
-      // HOF vote/pack below stays as the cross-validated reference
-      docs.withColumn("simhash",
-        graft.functions.PortableSimHash(shingles(col(textCol)), 60))
-    else withSimhashHof(docs, textCol, portable = false)
-
-  /** HOF construction of the simhash (bit-identical to the native portable
-    * path when `portable = true`) — cross-validation + the xxh64 family. */
-  def withSimhashHof(docs: DataFrame, textCol: String = "text",
-      portable: Boolean = false): DataFrame = {
-    val bits = if (portable) 60 else 64
-    val baseCol =
-      if (portable) portableHashes(shingles(col(textCol)), foldP = false)
-      else transform(shingles(col(textCol)), s => xxhash64(s))
-    docs
-      .withColumn("sh_h64", baseCol)
-      // single pass: bit-wide ±1 vote accumulator, then pack sign bits —
-      // sh_h64 only ever in argument position (see shingles() PERF note)
-      .withColumn("sh_votes", expr(
-        s"""aggregate(sh_h64, array_repeat(0L, $bits),
-             (acc, h) -> zip_with(acc, sequence(0, ${bits - 1}),
-               (v, j) -> v + if(((h >> j) & 1) = 1, 1L, -1L)))"""))
-      .withColumn("simhash", expr(
-        s"""aggregate(zip_with(sh_votes, sequence(0, ${bits - 1}),
-             (v, j) -> if(v > 0, shiftleft(1L, j), 0L)),
-           0L, (acc, b) -> acc + b)"""))
-      .drop("sh_h64", "sh_votes")
-  }
+  /** SimHash over shingle hashes: per-bit majority vote of ±1 over the
+    * 60 bits of [[portableHash]] (DuckDB-reproducible), computed by the
+    * native codegen expression [[graft.functions.PortableSimHash]]. */
+  def withSimhash(docs: DataFrame, textCol: String = "text"): DataFrame =
+    docs.withColumn("simhash",
+      graft.functions.PortableSimHash(shingles(col(textCol)), 60))
 
   /** Hamming distance between two simhash longs (bit_count of xor). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -451,7 +378,7 @@ object Dedup {
         "only for pairs whose shared bucket is <= maxBucket — consult " +
         "bandStats' n_overcap_buckets/star-edge columns before trusting " +
         "recall on a corpus with over-cap buckets")
-    val sh = scope.persist(withSimhash(docs, textCol, portable = true)
+    val sh = scope.persist(withSimhash(docs, textCol)
       .select(col(idCol).as("id"), col("simhash")))
     val banded = sh.select(col("id"),
         explode(array((0 until 4).map(b => struct(lit(b).as("bd"),

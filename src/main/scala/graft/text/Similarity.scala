@@ -43,14 +43,10 @@ object Similarity {
       lit(0.0), (acc, v) => acc + v)
 
   /** Cosine via the native codegen expression [[graft.functions.CosineSim]]
-    * — one fused loop; accumulation order identical to [[cosineHof]]. */
+    * — one fused loop; accumulation order identical to
+    * `dot(a, b) / sqrt(norm2(a) * norm2(b))`. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim(a, b)
-
-  /** Pure-HOF cosine (three interpreted array passes) — kept for
-    * cross-validation of the native expression. */
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / sqrt(norm2(a) * norm2(b))
 
   /** Deterministic per-query top-k of a scored candidate frame
     * (q_id, neighbor_id, cos): bounded-heap selection on

@@ -40,27 +40,14 @@ object TextOps {
   /** Language ID via stopword/charset scoring — n-gram-free heuristic that
     * stays SQL-expressible. Scores: CJK chars → zh; else the Latin language
     * whose marker stopwords appear most. */
-  def langId(text: Column): Column =
-    langIdImpl(text, hof = false)
-
-  /** The original split-count formulation — kept as the cross-validation
-    * reference for the native [[graft.functions.RegexHits]] path
-    * (CurationOpsSpec pins langId == langIdHof row-for-row). */
-  def langIdHof(text: Column): Column =
-    langIdImpl(text, hof = true)
-
-  private def langIdImpl(text: Column, hof: Boolean): Column = {
+  def langId(text: Column): Column = {
     val t = concat(lit(" "), lower(text), lit(" "))
-    // per-language word-hit totals: the split form compiles each regex and
-    // re-converts the string PER ROW inside StringSplit (22 splits/row);
-    // the native RegexHits expression precompiles the pattern list and
-    // counts in one pass per pattern — value-identical by construction
-    // (find-count == split-size − 1), pinned by RegexHitsSpec
+    // per-language word-hit totals, one native precompiled match count per
+    // language — value-identical to the split-size − 1 sum it replaced,
+    // which compiled each regex and re-converted the string per row
+    // (22 splits/row); RegexHitsSpec pins the equality
     def hits(words: Seq[String]): Column =
-      if (hof)
-        words.map(w => size(split(t, s"\\s${w}\\s")) - 1).reduce(_ + _)
-      else
-        graft.functions.RegexHits(t, words.map(w => s"\\s${w}\\s"))
+      graft.functions.RegexHits(t, words.map(w => s"\\s${w}\\s"))
     val en = hits(Seq("the", "and", "of", "is", "with"))
     val es = hits(Seq("el", "la", "los", "las", "es", "y"))
     val fr = hits(Seq("le", "les", "des", "est", "et", "une"))
@@ -1581,8 +1568,8 @@ object TextOps {
     * Scale: fully NARROW — the char histogram is ONE primitive codepoint
     * pass per row (the native [[graft.functions.CharDivStats]]
     * expression) riding the corpus scan; no explode, no shuffle. The HOF
-    * formulation it replaced ([[charDiversityHof]], kept for
-    * cross-validation) evaluated ~6 interpreted lambda passes — measured
+    * formulation it replaced (kept in the tests to cross-validate the
+    * kernel) evaluated ~6 interpreted lambda passes — measured
     * 3.97 s at sf0.1 vs ~0.3 s native (round-18 rewrite; CurationOpsSpec
     * pins native == HOF row-for-row). Contrast the oracle's
     * unnest-and-group formulation, which moves every (doc, char) pair
@@ -1599,35 +1586,6 @@ object TextOps {
         (col("_st.sum_sq").cast(DoubleType) /
           (col("_st.n_chars") * col("_st.n_chars")).cast(DoubleType))
           .as("repeat_prob"))
-
-  /** Interpreted-HOF formulation of [[charDiversity]] — kept solely to
-    * cross-validate the native [[graft.functions.CharDivStats]] kernel
-    * (the [[Similarity.cosineHof]] discipline): chars via
-    * split-empty-regex (codepoints; the length filter drops the trailing
-    * empty string), per-distinct-char counts materialized once into `cn`. */
-  def charDiversityHof(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val cs = filter(split(col(textCol), ""), c => length(c) === 1)
-    val cnt = (ch: Column, arr: Column) =>
-      size(filter(arr, c => c === ch)).cast(LongType)
-    docs
-      .select(col(idCol), cs.as("cs"))
-      .filter(size(col("cs")) > 0)
-      .select(col(idCol), col("cs"), array_distinct(col("cs")).as("d"))
-      .select(col(idCol), col("cs"), col("d"),
-        transform(col("d"), ch => cnt(ch, col("cs"))).as("cn"))
-      .select(col(idCol),
-        size(col("cs")).cast(LongType).as("n_chars"),
-        size(col("d")).cast(LongType).as("n_distinct_chars"),
-        array_max(col("cn")).as("top_char_n"),
-        aggregate(col("cn"), lit(0L), (acc, c) => acc + c * c)
-          .as("sum_sq"))
-      .select(col(idCol), col("n_chars"), col("n_distinct_chars"),
-        col("top_char_n"),
-        (col("sum_sq").cast(DoubleType) /
-          (col("n_chars") * col("n_chars")).cast(DoubleType))
-          .as("repeat_prob"))
-  }
 
   /** Character-trigram language ID, Cavnar–Trenkle style, TRAINED AND
     * APPLIED in one plan: per-language profiles are the top `profileK`

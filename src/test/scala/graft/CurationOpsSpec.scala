@@ -911,7 +911,7 @@ class CurationOpsSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).sortBy(_._1).toSeq
     val native = rows(graft.text.TextOps.charDiversity(docs))
-    val hof = rows(graft.text.TextOps.charDiversityHof(docs))
+    val hof = rows(graft.text.ReferenceForms.charDiversityHof(docs))
     assert(native == hof, s"native=$native hof=$hof")
     assert(native.map(_._1) == Seq(1L, 2L, 3L, 6L)) // empty+null dropped
     // spot: "中中文𝄞𝄞𝄞" = counts {中:2, 文:1, 𝄞:3} -> n=6, d=3, top=3, ss=14

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.text.{Dedup, Similarity}
+import graft.text.{Dedup, ReferenceForms, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Cross-validation of the native codegen expressions against their pure-HOF
@@ -15,7 +15,7 @@ class NativeExprSpec extends SparkSpec {
       .limit(100)
     val both = docs.select(
       Dedup.minhashSignature(col("text")).as("native"),
-      Dedup.minhashSignatureHof(col("text")).as("hof"))
+      ReferenceForms.minhashSignatureHof(col("text")).as("hof"))
     assert(both.filter(expr("native != hof")).count() == 0)
     val first = both.head()
     assert(first.getSeq[Long](0).length == 64)
@@ -27,7 +27,7 @@ class NativeExprSpec extends SparkSpec {
     val b = emb.select(col("vec_id").as("bi"), col("embedding").as("eb")).limit(50)
     val both = a.crossJoin(b).select(
       Similarity.cosine(col("ea"), col("eb")).as("native"),
-      Similarity.cosineHof(col("ea"), col("eb")).as("hof"))
+      ReferenceForms.cosineHof(col("ea"), col("eb")).as("hof"))
     // bit-identical doubles (not approx): accumulation order must match
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
   }
@@ -84,7 +84,7 @@ class NativeExprSpec extends SparkSpec {
       .limit(100)
     val both = docs.select(
       Dedup.minhashSignaturePortable(col("text")).as("native"),
-      Dedup.minhashSignaturePortableHof(col("text")).as("hof"))
+      ReferenceForms.minhashSignaturePortableHof(col("text")).as("hof"))
     assert(both.filter(expr("native != hof")).count() == 0)
     assert(both.head().getSeq[Long](0).length == 64)
   }
@@ -92,10 +92,10 @@ class NativeExprSpec extends SparkSpec {
   test("PortableSimHash matches the HOF vote/pack bit-for-bit") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(100)
-    val native = Dedup.withSimhash(docs, portable = true)
+    val native = Dedup.withSimhash(docs)
       .select("doc_id", "simhash").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hof = Dedup.withSimhashHof(docs, portable = true)
+    val hof = ReferenceForms.withSimhashHof(docs)
       .select("doc_id", "simhash").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == hof)

@@ -59,7 +59,7 @@ class RegexHitsSpec extends SparkSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val both = docs.select(
       graft.text.TextOps.langId(col("text")).as("native"),
-      graft.text.TextOps.langIdHof(col("text")).as("hof"))
+      graft.text.ReferenceForms.langIdHof(col("text")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
   }
 }

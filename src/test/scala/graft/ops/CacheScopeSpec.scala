@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** The multi-corpus session persist policy (round-11): per-corpus scopes
   * keep the session's cached-block audit BOUNDED at one corpus's working
-  * set no matter how many corpora flow through — the CacheAudit-style
+  * set no matter how many corpora flow through — the `Probe cache-audit`-style
   * check the round-10 verdict asked for. */
 class CacheScopeSpec extends SparkSpec {
   import spark.implicits._

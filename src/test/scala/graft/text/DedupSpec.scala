@@ -370,7 +370,7 @@ class DedupSpec extends SparkSpec {
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val got = Dedup.simhashPairs(corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    val hashes = Dedup.withSimhash(corpus, portable = true)
+    val hashes = Dedup.withSimhash(corpus)
       .select("doc_id", "simhash")
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     val brute = (for {
@@ -492,7 +492,7 @@ class DedupSpec extends SparkSpec {
         s"minhash star ledger: ${out("minhash")} vs brute " +
           s"(${star.size}, $starVerified)")
       // simhash side: same brute-force pinning over the 60-bit fingerprints
-      val shRows = Dedup.withSimhash(corpus, portable = true)
+      val shRows = Dedup.withSimhash(corpus)
         .select("doc_id", "simhash")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val sBands = for {

@@ -83,7 +83,7 @@ class SqSpec extends SparkSpec {
       .filter(col("vec_id") < col("v2"))
       .select(col("vec_id"), col("v2"),
         Similarity.cosine(col("_xr"), col("_xr2")).as("native"),
-        Similarity.cosineHof(col("_xr"), col("_xr2")).as("hof"))
+        ReferenceForms.cosineHof(col("_xr"), col("_xr2")).as("hof"))
       .collect()
     assert(pairs.nonEmpty)
     pairs.foreach { r =>

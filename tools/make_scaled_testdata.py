@@ -11,7 +11,7 @@ crawl would), embeddings get a small per-replica perturbation (replicas are
 genuine near-neighbors).
 
 Usage: python3 tools/make_scaled_testdata.py [N] [outdir]
-Then:  SPARK_GRAFT_SF_DIR=<outdir> sbt 'runMain graft.PerfProbe <queries...>'
+Then:  SPARK_GRAFT_SF_DIR=<outdir> sbt 'runMain graft.Probe time <queries...>'
 """
 import os
 import shutil
