@@ -1,20 +1,31 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.tax._
 
 /** Thin CLI mirroring the reference's subcommands (cli.py:466-529):
   *
-  *   runMain graft.Cli calculate --file txns.csv
-  *   runMain graft.Cli calculate --amount 500 --state TX --city Houston [--as-of 2024-06-01]
+  *   runMain graft.Cli calculate --file txns.csv [--period P] [--export-json f]
+  *   runMain graft.Cli calculate --amount 500 --state TX --city Houston
   *   runMain graft.Cli rates [--state TX | --category groceries]
-  *   runMain graft.Cli compliance --file txns.csv --registered TX,CA
-  *   runMain graft.Cli refund --file txns.csv [--as-of 2026-01-01] [--quick]
-  *   runMain graft.Cli report --file txns.csv [--period P] [--export-json f]
+  *   runMain graft.Cli compliance --file txns.csv --registered TX,CA [--export-json f]
+  *   runMain graft.Cli refund --file txns.csv [--quick [--minimum 0.50]]
+  *   runMain graft.Cli report --file txns.csv [--period P] [--export-json f] [--export-csv f]
+  *
+  * Every command also takes `--as-of YYYY-MM-DD` (default today, like the
+  * reference's date.today()): it dates the single transaction, the nexus
+  * alerts and the statute-of-limitations window, and stamps
+  * `generated_date` on exported reports. Exports go under `--output-dir`
+  * (default `reports`).
   *
   * Rendering collects only aggregate/summary/display rows to the driver —
-  * all computation (including display truncation) stays in Spark.
+  * all computation (including display truncation) stays in Spark. `report`
+  * collects each document once; its text and its JSON export both come
+  * from that one row. An unknown or missing command throws an
+  * IllegalArgumentException carrying the usage line, so `main` exits
+  * non-zero.
   */
 object Cli {
   import tax.TextReport.{money, pct}
@@ -30,10 +41,18 @@ object Cli {
 
   def run(spark: SparkSession, args: Array[String]): Unit = {
     import spark.implicits._
+    val file = arg(args, "file")
+    val asOf = arg(args, "as-of").map(java.time.LocalDate.parse)
+      .getOrElse(java.time.LocalDate.now())
+    val outDir = arg(args, "output-dir").getOrElse("reports")
+    val period = arg(args, "period").getOrElse("")
+    // the file commands' one input definition
+    lazy val txns = TaxCalc.normalize(TaxCalc.readCsv(spark,
+      file.getOrElse(sys.error("--file required"))))
     args.headOption match {
-      case Some("calculate") => arg(args, "file") match {
-        case Some(f) =>
-          val taxed = TaxCalc.withTax(TaxCalc.normalize(TaxCalc.readCsv(spark, f)))
+      case Some("calculate") => file match {
+        case Some(_) =>
+          val taxed = TaxCalc.withTax(txns)
           println("Tax Calculation Results")
           println(f"${"ID"}%-14s ${"State"}%-5s ${"City"}%-16s ${"Amount"}%12s ${"Tax"}%10s ${"Rate"}%8s Exempt")
           Reports.displayResults(taxed).collect().foreach { r =>
@@ -53,18 +72,12 @@ object Cli {
             println(f"  ${r.getAs[String]("state")}  n=${r.getAs[Long]("transaction_count")}%-6d tax=$$${r.getAs[java.math.BigDecimal]("tax_amount")}")
           }
           arg(args, "export-json").foreach { name =>
-            Reports.writeJson(Reports.taxSummaryReport(taxed,
-              periodLabel = arg(args, "period").getOrElse("")),
-              s"${arg(args, "output-dir").getOrElse("reports")}/$name")
+            Reports.writeJson(Reports.taxSummaryReport(taxed, period,
+              asOf.toString), s"$outDir/$name")
             println(s"JSON exported to $name")
           }
         case None =>
           val amount = arg(args, "amount").getOrElse(sys.error("--amount or --file required"))
-          // --as-of pins the transaction date (defaults to today, mirroring
-          // the reference CLI's implicit date.today()) — the only other
-          // now() in the repo; everything else takes explicit as-of dates
-          val asOf = arg(args, "as-of").map(java.time.LocalDate.parse)
-            .getOrElse(java.time.LocalDate.now())
           val txn = Seq((
             "cli", java.sql.Date.valueOf(asOf),
             new java.math.BigDecimal(amount),
@@ -124,36 +137,29 @@ object Cli {
         }
 
       case Some("compliance") =>
-        val f = arg(args, "file").getOrElse(sys.error("--file required"))
         val registered = arg(args, "registered")
           .map(_.split(",").toSeq).getOrElse(Seq.empty)
           .toDF("state_code")
-        val txns = TaxCalc.normalize(TaxCalc.readCsv(spark, f))
-        val nexus = Compliance.checkNexus(Compliance.stateActivity(txns))
+        val activity = Compliance.stateActivity(txns)
+        val nexus = Compliance.checkNexus(activity)
         println("Nexus status (top by revenue pct):")
         nexus.limit(15).collect().foreach { r =>
           val flag = if (r.getAs[Boolean]("has_nexus")) "NEXUS"
             else if (r.getAs[Boolean]("approaching_threshold")) "approaching" else ""
           println(f"  ${r.getAs[String]("state")}  rev=$$${r.getAs[java.math.BigDecimal]("revenue")}  $flag")
         }
-        val asOf = arg(args, "as-of").map(java.time.LocalDate.parse)
-          .getOrElse(java.time.LocalDate.now())
         println("\nAlerts:")
-        Compliance.alerts(Compliance.stateActivity(txns), registered, asOf)
+        Compliance.alerts(activity, registered, asOf)
           .collect().foreach { a =>
             println(s"  [${a.getAs[String]("severity")}] ${a.getAs[String]("message")}")
           }
         arg(args, "export-json").foreach { name =>
           Reports.writeJson(Reports.nexusReport(nexus, asOf.toString),
-            s"${arg(args, "output-dir").getOrElse("reports")}/$name")
+            s"$outDir/$name")
           println(s"Report exported to $name")
         }
 
       case Some("refund") =>
-        val f = arg(args, "file").getOrElse(sys.error("--file required"))
-        val asOf = arg(args, "as-of").map(java.time.LocalDate.parse)
-          .getOrElse(java.time.LocalDate.now())
-        val txns = TaxCalc.normalize(TaxCalc.readCsv(spark, f))
         if (args.contains("--quick")) {
           // Quick scan (cmd_refund --quick, cli.py:340-377): overpayments at
           // or above --minimum (default 0.50), id/reason truncated in-plan.
@@ -186,42 +192,34 @@ object Cli {
       // Full compliance report (cmd_report, cli.py:421-463): tax summary +
       // refund analysis rendered via format_text, optional JSON/CSV export.
       case Some("report") =>
-        val f = arg(args, "file").getOrElse(sys.error("--file required"))
-        val asOf = arg(args, "as-of").map(java.time.LocalDate.parse)
-          .getOrElse(java.time.LocalDate.now())
-        val outDir = arg(args, "output-dir").getOrElse("reports")
-        val txns = TaxCalc.normalize(TaxCalc.readCsv(spark, f))
-        val taxed = TaxCalc.withTax(txns)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val taxReport = Reports.taxSummaryReport(taxed,
-          periodLabel = arg(args, "period").getOrElse(""),
-          generatedDate = asOf.toString)
-        println(TextReport.formatText(taxReport))
-        val over = Refunds.overpayments(txns, asOf)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val reviewed = txns.count()
-        val refundRpt = Reports.refundReport(over, reviewed,
-          generatedDate = asOf.toString)
-        val anyOverpayment = !over.isEmpty
-        if (anyOverpayment) println(TextReport.formatText(refundRpt))
-        arg(args, "export-json").foreach { name =>
-          Reports.writeJson(taxReport, s"$outDir/tax_$name")
-          if (anyOverpayment) Reports.writeJson(refundRpt, s"$outDir/refund_$name")
-          println("Reports exported.")
-        }
-        arg(args, "export-csv").foreach { name =>
-          Reports.writeCsv(Reports.taxSummaryFlat(taxed)
-            .filter(col("section") === "state").drop("section"),
-            s"$outDir/tax_$name")
-          Reports.exportTransactionDetails(taxed, s"$outDir/details_$name")
-          println("CSV exported.")
-        }
-        taxed.unpersist(blocking = false)
-        over.unpersist(blocking = false)
+        val taxed = TaxCalc.withTax(txns).persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val taxRow = Reports.taxSummaryReport(taxed, period, asOf.toString).head()
+          println(TextReport.formatText(taxRow))
+          // withTax keeps one row per input row: its count is the reviewed count
+          val reviewed = taxRow.getAs[Row]("summary").getAs[Long]("total_transactions")
+          val refundRow = Reports.refundReport(Refunds.overpayments(txns, asOf),
+            reviewed, asOf.toString).head()
+          val anyOverpayment = refundRow.getAs[Row]("summary").getAs[Long]("overpayments_found") > 0
+          if (anyOverpayment) println(TextReport.formatText(refundRow))
+          def local(r: Row) = spark.createDataFrame(java.util.List.of(r), r.schema)
+          arg(args, "export-json").foreach { name =>
+            Reports.writeJson(local(taxRow), s"$outDir/tax_$name")
+            if (anyOverpayment) Reports.writeJson(local(refundRow), s"$outDir/refund_$name")
+            println("Reports exported.")
+          }
+          arg(args, "export-csv").foreach { name =>
+            Reports.writeCsv(Reports.taxSummaryFlat(taxed)
+              .filter(col("section") === "state").drop("section"),
+              s"$outDir/tax_$name")
+            Reports.exportTransactionDetails(taxed, s"$outDir/details_$name")
+            println("CSV exported.")
+          }
+        } finally taxed.unpersist(blocking = false)
 
       case other =>
-        System.err.println(s"unknown command: ${other.getOrElse("<none>")}")
-        System.err.println("usage: calculate|rates|compliance|refund|report [options]")
+        throw new IllegalArgumentException(s"unknown command: ${other.getOrElse("<none>")}; " +
+          "usage: calculate|rates|compliance|refund|report [options]")
     }
   }
 }

@@ -32,14 +32,6 @@ object Multimodal {
       byte_mean: Double, byte_entropy: Double, histogram: Array[Long],
       frames_sampled: Int)
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType), StructField("height", IntegerType),
-      StructField("sampleRate", IntegerType), StructField("durationMs", IntegerType))))))
-
   /** Deterministic synthetic media table derived from the documents corpus:
     * payload = utf-8 bytes of the text (stands in for encoded image/audio),
     * kind round-robins image/audio/video, metadata derived from sizes. */

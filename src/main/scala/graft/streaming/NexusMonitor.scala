@@ -157,10 +157,4 @@ object NexusMonitor {
           else Iterator.empty
       }
   }
-
-  /** Convenience: the 47-state revenue thresholds as a plain map for
-    * [[crossingAlerts]]. */
-  def thresholdMap: Map[String, Double] =
-    graft.tax.TaxDims.nexusThresholds
-      .map { case (st, rev, _, _) => st -> rev.toDouble }.toMap
 }

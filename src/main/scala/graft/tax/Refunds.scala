@@ -1,6 +1,6 @@
 package graft.tax
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,8 +16,7 @@ import org.apache.spark.sql.types._
   */
 object Refunds {
   import Dims.Money
-
-  private def roundMoney(c: Column): Column = round(c, 2).cast(Money)
+  import TaxCalc.roundMoney
 
   /** Overpayment records (refund_analyzer.py:134-189): tax owed from the
     * shared calc block, overpayment = round(paid − owed) kept only when > 0,

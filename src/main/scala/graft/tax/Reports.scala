@@ -1,6 +1,6 @@
 package graft.tax
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,42 +15,35 @@ import org.apache.spark.sql.types._
   * stamps date.today()).
   */
 object Reports {
-  import Dims.Money
-
   /** Tax liability summary (report_generator.py:73-130): one row with a
-    * global summary struct + per-state breakdown array (sorted by state). */
+    * global summary struct + per-state breakdown array (sorted by state),
+    * folded from [[taxSummaryFlat]]'s rows so each figure is defined once. */
   def taxSummaryReport(taxed: DataFrame, periodLabel: String = "",
       generatedDate: String = ""): DataFrame = {
-    val byState = TaxCalc.summaryByState(taxed)
-      .select(struct(
-        col("state"),
-        col("transaction_count"),
-        col("taxable_amount").cast(DoubleType).as("taxable_amount"),
-        col("tax_amount").cast(DoubleType).as("tax_collected"),
-        col("exempt_amount").cast(DoubleType).as("exempt_amount"),
-        col("effective_rate")).as("detail"))
-      .agg(array_sort(collect_list(col("detail"))).as("state_breakdown"))
-    val summary = TaxCalc.batchAgg(taxed)
-      .select(struct(
-        col("transaction_count").as("total_transactions"),
-        col("total_taxable").cast(DoubleType).as("total_taxable"),
-        col("total_tax").cast(DoubleType).as("total_tax"),
-        col("total_exempt").cast(DoubleType).as("total_exempt"),
-        col("exempt_count").as("exempt_transactions"),
-        when(col("total_taxable") > 0,
-          col("total_tax").cast(DoubleType) / col("total_taxable").cast(DoubleType))
-          .otherwise(0.0).as("overall_effective_rate")).as("summary"))
-    summary.crossJoin(byState).select(
+    val isSummary = col("section") === "summary"
+    taxSummaryFlat(taxed).agg(
       lit("tax_liability_summary").as("report_type"),
       lit(periodLabel).as("period"),
       lit(generatedDate).as("generated_date"),
-      col("summary"), col("state_breakdown"))
+      first(when(isSummary, struct(
+        col("transaction_count").as("total_transactions"),
+        col("taxable_amount").as("total_taxable"),
+        col("tax_amount").as("total_tax"),
+        col("exempt_amount").as("total_exempt"),
+        col("exempt_count").as("exempt_transactions"),
+        col("effective_rate").as("overall_effective_rate"))),
+        ignoreNulls = true).as("summary"),
+      array_sort(collect_list(when(!isSummary, struct(
+        col("state"), col("transaction_count"), col("taxable_amount"),
+        col("tax_amount").as("tax_collected"), col("exempt_amount"),
+        col("effective_rate"))))).as("state_breakdown"))
   }
 
   /** Oracle-flat projection of [[taxSummaryReport]]: per-state breakdown
     * rows (section='state') plus the global summary row (section='summary').
     * The driver's hasher cannot sort nested arrays, so the DECLARED query
-    * flattens the document; the nested single-row variant stays API-only. */
+    * flattens the document; [[taxSummaryReport]] folds these rows back into
+    * the nested one. */
   def taxSummaryFlat(taxed: DataFrame): DataFrame = {
     val st = TaxCalc.summaryByState(taxed).select(
       lit("state").as("section"), col("state"),

@@ -21,12 +21,6 @@ import org.apache.spark.sql.types._
 object TaxCalc {
   import Dims.{Money, Rate}
 
-  /** Input contract (CSV columns per /root/reference/cli.py:50-62 +
-    * README.md:149-161); programmatic-only extras default here the same way
-    * `Transaction` defaults them (calculator.py:36-40). */
-  val requiredCols: Seq[String] = Seq("transaction_id", "transaction_date",
-    "amount", "state", "city", "item_category")
-
   /** Adds any missing optional columns with their reference defaults and
     * normalizes: state upper-cased, empty strings → NULL (cli.py:57-59). */
   def normalize(txns: DataFrame): DataFrame = {
@@ -46,7 +40,7 @@ object TaxCalc {
   /** HALF_UP cents rounding — Spark's `round` on DecimalType is HALF_UP,
     * matching the reference's quantize(0.01, ROUND_HALF_UP)
     * (calculator.py:116-118). Cast back to Money to keep a stable scale. */
-  private def roundMoney(c: Column): Column = round(c, 2).cast(Money)
+  private[tax] def roundMoney(c: Column): Column = round(c, 2).cast(Money)
 
   /** CSV loader with the reference's permissive bad-row behavior
     * (cli.py:63-66): malformed rows are dropped, not failed. */

@@ -223,12 +223,6 @@ object Dedup {
       maxBucket: Int = MaxBandBucket): DataFrame =
     cappedBucketPairs(bandedSigs(sigs), Seq("band", "band_hash"), maxBucket)
 
-  /** LSH candidate pairs computed from raw docs. */
-  def lshCandidates(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    lshCandidatesFromSigs(
-      withSignature(docs, textCol).select(col(idCol).as("id"), col("sig")))
-
   /** Band-bucket occupancy report for BOTH signature pair miners — the
     * dropped-mass accounting behind [[MaxBandBucket]]: per miner, bucket
     * count, over-cap bucket count, the worst bucket, the exact all-pairs

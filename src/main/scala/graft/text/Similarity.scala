@@ -353,10 +353,6 @@ object Similarity {
       when(s >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** Single-table signature (back-compat name; table 0). */
-  def lshSignature(emb: Column, nPlanes: Int = 16): Column =
-    tableSignature(emb, 0, nPlanes)
-
   /** Planes per table sized so the expected bucket occupancy stays near
     * `targetBucket` for an `n`-vector corpus: 2^planes buckets per table ⇒
     * planes = ceil(log2(n / targetBucket)). The quadratic-within-bucket

@@ -1,8 +1,14 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
+
 /** CLI surface pins: the fixed-date single-transaction path (no hidden
-  * now() — `--as-of` threads the date through) and the `rates --category`
-  * exemption listing (reference rates.py:856-862). */
+  * now() — `--as-of` threads the date through), the `rates --category`
+  * exemption listing (reference rates.py:856-862), and the stdout and
+  * exports of the file commands on the sample CSV, byte for byte against
+  * goldens under `src/test/resources/cli/`. */
 class CliSpec extends SparkSpec {
   private def runCapture(args: String*): String = {
     val bos = new java.io.ByteArrayOutputStream()
@@ -10,6 +16,57 @@ class CliSpec extends SparkSpec {
       Cli.run(spark, args.toArray)
     }
     bos.toString("UTF-8")
+  }
+
+  private val sampleCsv = getClass.getResource("/sample_transactions.csv").getPath
+
+  private def golden(name: String): String =
+    new String(getClass.getResourceAsStream(s"/cli/$name").readAllBytes(), UTF_8)
+
+  /** The one part file a `coalesce(1)` export writes. */
+  private def part(dir: Path): String = {
+    val parts = Files.list(dir).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    assert(parts.size == 1, s"$dir holds ${parts.size} part files")
+    new String(Files.readAllBytes(parts.head), UTF_8)
+  }
+
+  test("file commands print and export the golden bytes and leave nothing cached") {
+    // quiesce: drop any cache left by other suites (shared session)
+    spark.sharedState.cacheManager.clearCache()
+    val out = Files.createTempDirectory("graft_cli_golden")
+    Seq(
+      "calculate" -> Seq("calculate", "--file", sampleCsv),
+      "compliance" -> Seq("compliance", "--file", sampleCsv, "--registered", "CA,TX"),
+      "refund" -> Seq("refund", "--file", sampleCsv),
+      "refund_quick" -> Seq("refund", "--file", sampleCsv, "--quick"),
+      "report" -> Seq("report", "--file", sampleCsv, "--period", "2024-Q1",
+        "--export-json", "report.json", "--export-csv", "report.csv",
+        "--output-dir", out.toString)
+    ).foreach { case (name, args) =>
+      assert(runCapture(args ++ Seq("--as-of", "2026-08-12"): _*) == golden(s"$name.txt"), name)
+      assert(spark.sharedState.cacheManager.isEmpty, s"$name left a cached frame")
+    }
+    Seq("tax_report.json", "refund_report.json", "tax_report.csv", "details_report.csv")
+      .foreach(f => assert(part(out.resolve(f)) == golden(f), f))
+  }
+
+  test("calculate --file --export-json stamps the --as-of date") {
+    val out = Files.createTempDirectory("graft_cli_calc_json")
+    runCapture("calculate", "--file", sampleCsv, "--as-of", "2026-08-12",
+      "--period", "2024-Q1", "--export-json", "calc.json", "--output-dir", out.toString)
+    val json = part(out.resolve("calc.json"))
+    assert(json.startsWith("{\"report_type\":\"tax_liability_summary\"," +
+      "\"period\":\"2024-Q1\",\"generated_date\":\"2026-08-12\","), json)
+  }
+
+  test("an unknown or missing command throws with the usage line") {
+    Seq(Seq("frobnicate") -> "frobnicate", Seq.empty[String] -> "<none>").foreach {
+      case (args, shown) =>
+        val e = intercept[IllegalArgumentException](Cli.run(spark, args.toArray))
+        assert(e.getMessage.contains(s"unknown command: $shown"))
+        assert(e.getMessage.contains("usage: calculate|rates|compliance|refund|report"))
+    }
   }
 
   test("single-transaction calculate with --as-of is fully pinned") {
