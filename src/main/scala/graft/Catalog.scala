@@ -57,24 +57,22 @@ object Catalog {
     * wholesale (its DataFrames — and through them the old session —
     * become unreachable). Sequential sessions (Bench, Verify, every test
     * suite) each get a fresh cache; a pathological interleaving of two
-    * live sessions would only thrash re-resolution, never corrupt. */
+    * live sessions would only thrash re-resolution, never corrupt. The
+    * slot is swapped with `updateAndGet`, so concurrent first callers on
+    * one new session converge on one map (and so on one relation). */
   private val fixtureCache = new java.util.concurrent.atomic.AtomicReference[
     (java.lang.ref.WeakReference[SparkSession],
       scala.collection.concurrent.TrieMap[String, DataFrame])]
   private[graft] def fixture(spark: SparkSession, path: String): DataFrame = {
-    val per = {
-      val cur = fixtureCache.get()
-      // the WeakReference only IDENTIFIES the owning session (eq-compare)
-      // without retaining it — the strong reference lives in the cached
-      // DataFrames, which this single-slot design drops wholesale on the
-      // first access from a different session
-      if (cur != null && (cur._1.get() eq spark)) cur._2
-      else {
-        val m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-        fixtureCache.set((new java.lang.ref.WeakReference(spark), m))
-        m
-      }
-    }
+    // the WeakReference only IDENTIFIES the owning session (eq-compare)
+    // without retaining it — the strong reference lives in the cached
+    // DataFrames, which this single-slot design drops wholesale on the
+    // first access from a different session
+    val per = fixtureCache.updateAndGet { cur =>
+      if (cur != null && (cur._1.get() eq spark)) cur
+      else (new java.lang.ref.WeakReference(spark),
+        scala.collection.concurrent.TrieMap.empty[String, DataFrame])
+    }._2
     per.getOrElseUpdate(path, {
       val df = spark.read.parquet(path)
       df.schema // force analysis: one listing + footer read per session
@@ -324,7 +322,7 @@ object Catalog {
     memoPersist(s, s"jpairs:$dir")(Dedup.jaccardPairs(dedupCorpus(s, dir)))
   def minhashPairsShared(s: SparkSession, dir: String): DataFrame =
     memoPersist(s, s"mhpairs:$dir")(
-      Dedup.minhashPairs(dedupCorpus(s, dir), minAgree = 20, portable = true))
+      Dedup.minhashPairs(dedupCorpus(s, dir), minAgree = 20))
   def simhashPairsShared(s: SparkSession, dir: String): DataFrame =
     memoPersist(s, s"shpairs:$dir")(Dedup.simhashPairs(dedupCorpus(s, dir)))
 
@@ -3168,9 +3166,7 @@ object Catalog {
     }),
 
     // Dedup/similarity families hash with the engine-portable md5-prefix
-    // base hash in their DECLARED queries (xxhash64 is Spark-only; the
-    // banding/voting/affine math is identical either way and the xxh64
-    // fast path is cross-validated in DedupSpec).
+    // base hash, which DuckDB reproduces (xxhash64 is Spark-only).
     "op_minhash_pairs" -> ((s, dir) =>
       minhashPairsShared(s, dir)),
 

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.tax._
 
@@ -23,9 +24,11 @@ import graft.tax._
   * Rendering collects only aggregate/summary/display rows to the driver —
   * all computation (including display truncation) stays in Spark. `report`
   * collects each document once; its text and its JSON export both come
-  * from that one row. An unknown or missing command throws an
-  * IllegalArgumentException carrying the usage line, so `main` exits
-  * non-zero.
+  * from that one row; `compliance` collects the per-state activity once
+  * and its nexus table, alerts and export all read those rows. An unknown
+  * or missing command throws an IllegalArgumentException carrying the
+  * usage line, and `rates --state` with a code not in the rate table
+  * throws one naming the code, so `main` exits non-zero.
   */
 object Cli {
   import tax.TextReport.{money, pct}
@@ -49,6 +52,10 @@ object Cli {
     // the file commands' one input definition
     lazy val txns = TaxCalc.normalize(TaxCalc.readCsv(spark,
       file.getOrElse(sys.error("--file required"))))
+    // collected rows as a local relation: later plans read these rows
+    // instead of evaluating their source again
+    def local(rows: Array[Row], schema: StructType) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     args.headOption match {
       case Some("calculate") => file match {
         case Some(_) =>
@@ -112,7 +119,9 @@ object Cli {
             println(s"States exempting '$resolved': " +
               (if (states.isEmpty) "(none)" else states.mkString(", ")))
           case (None, Some(s)) =>
-            val r = st.filter(upper(col("state_code")) === s.toUpperCase).head()
+            val r = st.filter(upper(col("state_code")) === s.toUpperCase).head(1)
+              .headOption.getOrElse(
+                throw new IllegalArgumentException(s"unknown state code: $s"))
             println(s"${r.getAs[String]("state_name")} (${r.getAs[String]("state_code")})")
             println(s"  base rate:     ${r.getAs[java.math.BigDecimal]("base_rate")}")
             println(s"  avg combined:  ${r.getAs[java.math.BigDecimal]("avg_combined_rate")}")
@@ -140,7 +149,10 @@ object Cli {
         val registered = arg(args, "registered")
           .map(_.split(",").toSeq).getOrElse(Seq.empty)
           .toDF("state_code")
-        val activity = Compliance.stateActivity(txns)
+        // ≤ 51 rows, collected once: the nexus table, the alerts and the
+        // export all read them, so the CSV is scanned once
+        val activityDf = Compliance.stateActivity(txns)
+        val activity = local(activityDf.collect(), activityDf.schema)
         val nexus = Compliance.checkNexus(activity)
         println("Nexus status (top by revenue pct):")
         nexus.limit(15).collect().foreach { r =>
@@ -202,10 +214,10 @@ object Cli {
             reviewed, asOf.toString).head()
           val anyOverpayment = refundRow.getAs[Row]("summary").getAs[Long]("overpayments_found") > 0
           if (anyOverpayment) println(TextReport.formatText(refundRow))
-          def local(r: Row) = spark.createDataFrame(java.util.List.of(r), r.schema)
           arg(args, "export-json").foreach { name =>
-            Reports.writeJson(local(taxRow), s"$outDir/tax_$name")
-            if (anyOverpayment) Reports.writeJson(local(refundRow), s"$outDir/refund_$name")
+            Reports.writeJson(local(Array(taxRow), taxRow.schema), s"$outDir/tax_$name")
+            if (anyOverpayment)
+              Reports.writeJson(local(Array(refundRow), refundRow.schema), s"$outDir/refund_$name")
             println("Reports exported.")
           }
           arg(args, "export-csv").foreach { name =>

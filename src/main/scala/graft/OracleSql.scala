@@ -232,10 +232,10 @@ object OracleSql {
           ELSE [array_to_string(toks, ' ')] END) AS s
         FROM tok0))"""
 
-  /** The MinHash affine coefficient families as SQL list literals — same
-    * values as [[graft.text.Dedup.coefA]]/coefB. */
-  private val coefASql = graft.text.Dedup.coefA.mkString("[", ", ", "]")
-  private val coefBSql = graft.text.Dedup.coefB.mkString("[", ", ", "]")
+  /** The MinHash affine coefficient families as SQL list literals — the
+    * values of [[graft.functions.PortableTextSig.coefA]]/coefB. */
+  private val coefASql = graft.functions.PortableTextSig.coefA.mkString("[", ", ", "]")
+  private val coefBSql = graft.functions.PortableTextSig.coefB.mkString("[", ", ", "]")
 
   /** Engine-portable shingle hash — mirrors [[graft.text.Dedup
     * .portableHash]]: first 15 md5 hex chars as a 60-bit integer. */
@@ -357,7 +357,7 @@ object OracleSql {
             * list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"""
 
   /** Sign-LSH bucket id for table `t` (planes t*8 .. t*8+7) — mirrors
-    * [[graft.text.Similarity.tableSignature]] with planesPerTable = 8. */
+    * [[graft.functions.LshSig]] with planesPerTable = 8. */
   private def lshBucketSql(embCol: String, tExpr: String): String = s"""
         CAST(list_sum(list_transform(generate_series(0, 7), p ->
           CASE WHEN list_sum(list_transform(
@@ -1120,9 +1120,9 @@ object OracleSql {
       WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
       GROUP BY c.c_mktsegment""",
 
-    // Triangle count on the co-purchase graph (mirrors Graph.triangleCount
-    // over Graph.cooccurrenceEdges: canonical x<y edges, wedge join,
-    // close on (x, z)).
+    // Triangle count on the co-purchase graph (the count
+    // Graph.triangleCountAdj gives over Graph.cooccurrenceEdges: canonical
+    // x<y edges, here by wedge join, close on (x, z)).
     "op_triangles" -> """
       WITH li AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS v
                   FROM lineitem),

@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * 2 zip_with concats → array_distinct) evaluates ~6 interpreted lambda
   * passes with per-char object churn — measured ~2.6 ms/doc inside
   * [[graft.text.TextOps.ngramLangId]], 12.8 s at sf0.1 for what is one
-  * substring loop. Same escalation as [[MinHashSig]]/[[SignedProj]]:
+  * substring loop. Same escalation as [[PortableMinHashSig]]/[[SignedProj]]:
   * one primitive pass, codegen-friendly.
   */
 case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {

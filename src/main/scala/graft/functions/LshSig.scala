@@ -11,24 +11,24 @@ import org.apache.spark.sql.types._
   * `array<long>` of `nTables` packed sign-bit signatures
   * (`planesPerTable` bits each).
   *
-  * Replaces the higher-order-function formulation in
-  * [[graft.text.Similarity.tableSignature]] — nTables × planesPerTable
-  * separate interpreted `aggregate(zip_with(...))` passes over the
-  * embedding (HOFs don't codegen) become ONE fused codegen loop:
-  * dims outer, planes inner, per-plane left-to-right double accumulation —
-  * bit-identical to evaluating each plane's aggregate independently, and to
-  * the DuckDB oracle's `list_sum(list_transform(...))` mirror.
+  * The hyperplane family is data-independent and seedless: plane p has
+  * component +1 at dimension d when (d + p·1000003)·2654435761 mod
+  * (2^31 − 1) is even and −1 otherwise — a splitmix-style parity that ANSI
+  * SQL reproduces exactly. Table t owns planes t·planesPerTable until
+  * (t+1)·planesPerTable, and its signature sets bit p when the dot of the
+  * embedding with its plane p is ≥ 0.
   *
-  * The ±1 hyperplane family is the same splitmix-style parity
-  * (plane, dim) → sign the HOF version uses; keep in sync with
-  * [[graft.text.Similarity.planeSign]].
+  * All nTables × planesPerTable dots run in ONE fused codegen loop: dims
+  * outer, planes inner, per-plane left-to-right double accumulation —
+  * bit-identical to evaluating each plane's dot independently, and to the
+  * DuckDB oracle's `list_sum(list_transform(...))` mirror.
   *
   * NULL elements: this expression SKIPS null array elements (treats them as
-  * absent), whereas the HOF formulation propagates them through
-  * aggregate/zip_with (nulling the whole signature). The documented
-  * bit-identical equivalence therefore holds only for arrays with
-  * `containsNull = false` — which every embedding/shingle producer in this
-  * library guarantees. Filter nulls first if the input can contain them.
+  * absent), whereas a per-plane `aggregate(zip_with(...))` formulation
+  * propagates them (nulling the whole signature). The bit-identical
+  * equivalence therefore holds only for arrays with `containsNull = false`
+  * — which every embedding producer in this library guarantees. Filter
+  * nulls first if the input can contain them.
   */
 case class LshSig(child: Expression, nTables: Int, planesPerTable: Int)
     extends UnaryExpression {

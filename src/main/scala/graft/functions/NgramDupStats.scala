@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why native: the HOF formulation (two zip_with concats to build the
   * trigram strings + array_distinct) measured ~4.4 ms/doc interpreted —
   * ~7 s for the ×10 probe corpus where this loop is ~0.9 s. Same
-  * escalation rule as [[CharNgrams]]/[[MinHashSig]]: hot per-row text
-  * kernels become one primitive loop. Distinctness is by exact string
+  * escalation rule as [[CharNgrams]]/[[PortableMinHashSig]]: hot per-row
+  * text kernels become one primitive loop. Distinctness is by exact string
   * equality of the space-joined window — identical to the HOF's
   * array_distinct and the oracle's list_distinct.
   *

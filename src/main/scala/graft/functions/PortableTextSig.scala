@@ -17,10 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * nibble.
   *
   * NULL elements: the native expressions below SKIP null array elements,
-  * while the HOF cross-validation formulations in [[graft.text.Dedup]]
-  * propagate them (nulling/zeroing the signature) — bit-identity holds for
-  * `containsNull=false` inputs, which [[graft.text.Dedup.shingles]]
-  * guarantees. Filter nulls first otherwise. */
+  * while the HOF reference forms the specs compare them against (test-scope
+  * `graft.text.ReferenceForms`) propagate them (nulling/zeroing the
+  * signature) — bit-identity holds for `containsNull=false` inputs, which
+  * [[graft.text.Dedup.shingles]] guarantees. Filter nulls first otherwise. */
 object PortableTextSig {
   private val mdLocal: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
@@ -34,36 +34,40 @@ object PortableTextSig {
     while (i < 8) { b = (b << 8) | (bytes(i) & 0xffL); i += 1 }
     b >>> 4
   }
+
+  /** The MinHash family: `NumHashes` affine permutations
+    * x ↦ (coefA(j)·x + coefB(j)) mod P of the base hash folded into
+    * [0, P). The 31-bit modulus keeps a·x + b inside a long under ANSI
+    * overflow checks. Seeded and data-independent; the DuckDB oracle embeds
+    * the coefficients as SQL list literals. */
+  val P = 2147483647L
+  val NumHashes = 64
+  val coefA: Array[Long] =
+    Array.tabulate(NumHashes)(i => 2654435761L * (i + 1) % P | 1L)
+  val coefB: Array[Long] =
+    Array.tabulate(NumHashes)(i => 40503L * (i + 7) * 2654435769L % P)
 }
 
 /** Native portable MinHash signature: `array<string>` shingles →
-  * `array<long>` of `numHashes` affine-permuted minima over the md5-60
-  * base hash. Same affine family as [[MinHashSig]] (keep in sync with
-  * [[graft.text.Dedup]]); one fused codegen pass replaces the interpreted
-  * 64-wide `aggregate` accumulator of
-  * [[graft.text.Dedup.minhashSignaturePortable]]. */
-case class PortableMinHashSig(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-
-  private val P = 2147483647L
-
-  private lazy val coefA: Array[Long] =
-    Array.tabulate(numHashes)(i => 2654435761L * (i + 1) % P | 1L)
-  private lazy val coefB: Array[Long] =
-    Array.tabulate(numHashes)(i => 40503L * (i + 7) * 2654435769L % P)
+  * `array<long>` of the [[PortableTextSig.NumHashes]] affine-permuted
+  * minima over the md5-60 base hash ([[PortableTextSig.coefA]]/`coefB`);
+  * one fused codegen pass replaces an interpreted 64-wide `aggregate`
+  * accumulator (the tests keep it as the reference). */
+case class PortableMinHashSig(child: Expression) extends UnaryExpression {
+  import PortableTextSig.{NumHashes, P, coefA, coefB}
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val acc = Array.fill(numHashes)(P)
+    val acc = Array.fill(NumHashes)(P)
     var i = 0
     while (i < arr.numElements()) {
       if (!arr.isNullAt(i)) {
         val x = PortableTextSig.md5h60(arr.getUTF8String(i)) % P
         var j = 0
-        while (j < numHashes) {
+        while (j < NumHashes) {
           val v = (coefA(j) * x + coefB(j)) % P
           if (v < acc(j)) acc(j) = v
           j += 1
@@ -84,13 +88,13 @@ case class PortableMinHashSig(child: Expression, numHashes: Int)
       val x = ctx.freshName("x")
       val v = ctx.freshName("v")
       s"""
-        long[] $acc = new long[$numHashes];
+        long[] $acc = new long[$NumHashes];
         java.util.Arrays.fill($acc, ${P}L);
         for (int $i = 0; $i < $arr.numElements(); $i++) {
           if (!$arr.isNullAt($i)) {
             long $x = graft.functions.PortableTextSig
               .md5h60($arr.getUTF8String($i)) % ${P}L;
-            for (int $j = 0; $j < $numHashes; $j++) {
+            for (int $j = 0; $j < $NumHashes; $j++) {
               long $v = ($aRef[$j] * $x + $bRef[$j]) % ${P}L;
               if ($v < $acc[$j]) $acc[$j] = $v;
             }
@@ -106,9 +110,8 @@ case class PortableMinHashSig(child: Expression, numHashes: Int)
 }
 
 object PortableMinHashSig {
-  def apply(shingles: Column, numHashes: Int = 64): Column =
-    ColumnBridge.column(
-      PortableMinHashSig(ColumnBridge.expression(shingles), numHashes))
+  def apply(shingles: Column): Column =
+    ColumnBridge.column(PortableMinHashSig(ColumnBridge.expression(shingles)))
 }
 
 /** Native portable SimHash: `array<string>` shingles → 60-bit simhash

@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   * `element_at` chain compiles a monster method (measured ≥1.5 s of fixed
   * janino/codegen cost per execution). This is one primitive loop over
   * the vector with the ±1 matrix precomputed at plan time — the
-  * [[DotProduct]]/[[MinHashSig]] treatment. NativeExprSpec-style parity
-  * is pinned in CurationOpsSpec (direct recompute).
+  * [[DotProduct]]/[[PortableMinHashSig]] treatment. NativeExprSpec-style
+  * parity is pinned in CurationOpsSpec (direct recompute).
   *
   * NULL for an all-zero vector (no max-abs scale — the quantizer's
   * drop-out-of-band contract); a wrong-length vector or a NULL component

@@ -27,75 +27,6 @@ object Graph {
       .select("x", "y").distinct()
   }
 
-  /** Triangle count by the degree-ordered wedge join (compact-forward):
-    * every edge is oriented from its lower endpoint to its higher one
-    * under the total order (degree, id), wedges are pairs of
-    * out-neighbors of the same low vertex, and each triangle is counted
-    * exactly once when the closing oriented edge exists. The count is
-    * orientation-invariant (any total order finds the same triangle
-    * set), but degree order minimizes the wedge volume on skewed
-    * graphs: sum of C(outdeg, 2) with hub vertices forced to tiny
-    * out-degrees, vs sum of C(deg, 2) under id order — 41M wedges vs
-    * 148M on the sf0.1 co-purchase graph (max degree 222), measured
-    * 14 s → 7.6 s warm under the same load. Three shuffles (degree
-    * count, wedge build keyed on the low vertex, close keyed on the
-    * wedge endpoints) — the standard distributed formulation. Vertex ids
-    * must lie in [0, 2^32) (they are packed with the degree into one
-    * long order key); renumber upstream for wider id spaces. Returns
-    * one row: (n_edges, n_triangles).
-    *
-    * `broadcastClose = true` broadcasts the oriented edge list to the
-    * close join so the 41M-row wedge stream never shuffles — correct
-    * whenever the oriented edges fit an executor (two longs per edge),
-    * but MEASURED SLOWER on the gate fixture (12 s vs 7.6 s warm at
-    * sf0.1, load-matched): every core probes one shared 1.2M-entry
-    * broadcast table with no cache locality, while the default
-    * shuffle-hash close gives each task a ~37k-entry partitioned table
-    * that stays cache-resident. The option exists for deployments where
-    * shuffling the wedge stream is the bottleneck (network-bound
-    * clusters, wedge volume ≫ CPU budget); on a single node CPU wins.
-    * Default false = partitioned shuffle-hash, which also holds for
-    * billion-edge graphs where no side fits memory. */
-  def triangleCount(edges: DataFrame, broadcastClose: Boolean = false,
-      scope: CacheScope = CacheScope.Session): DataFrame = {
-    val e = edges.select("x", "y")
-    val deg = e.select(col("x").as("v")).unionByName(e.select(col("y").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("dg"))
-    // order key compressed to ONE long (degree in the high bits, id in the
-    // low 32) — unique ids make it a total order, and the wedge stream
-    // stays two longs wide instead of two structs; callers with ids
-    // outside [0, 2^32) must renumber first (see scaladoc)
-    val key = (d: Column, v: Column) => d * lit(4294967296L) + v
-    val keyed = e
-      .join(deg.select(col("v").as("x"), col("dg").as("dgx")), "x")
-      .join(deg.select(col("v").as("y"), col("dg").as("dgy")), "y")
-      .select(key(col("dgx"), col("x")).as("kx"),
-        key(col("dgy"), col("y")).as("ky"))
-    // the oriented edge list feeds THREE join sides (both wedge legs and
-    // the close probe) — without a persist barrier the whole build chain
-    // (degree count + two degree joins + orient) runs three times per
-    // action. Two longs per edge: trivially cacheable at any graph size
-    // that fits a cluster at all. Same CacheScope contract as the dedup
-    // families (Session default; pass a scope to release eagerly).
-    val oriented = scope.persist(keyed.select(
-      least(col("kx"), col("ky")).as("u"),
-      greatest(col("kx"), col("ky")).as("w")))
-    val wedges = oriented.select(col("u"), col("w").as("b"))
-      .join(oriented.select(col("u"), col("w").as("c")), "u")
-      .filter(col("b") < col("c"))
-      .select("b", "c")
-    // the close side must hash-build, never sort-merge: SortMergeJoin
-    // would SORT the wedge stream (sum C(outdeg, 2) rows — 41M on the
-    // sf0.1 co-purchase graph). broadcast goes further and keeps the
-    // wedges from shuffling at all (see scaladoc for when that is safe)
-    val closeBase = oriented.select(col("u").as("b"), col("w").as("c"))
-    val close =
-      if (broadcastClose) broadcast(closeBase) else closeBase.hint("shuffle_hash")
-    val tri = wedges.join(close, Seq("b", "c"))
-      .agg(count(lit(1)).as("n_triangles"))
-    e.agg(count(lit(1)).as("n_edges")).crossJoin(tri)
-  }
-
   /** Degree distribution of the undirected graph: for each observed
     * degree, how many vertices carry it — the first diagnostic anyone
     * runs on a graph (skew, hubs, connectivity shape), and the input to
@@ -109,11 +40,19 @@ object Graph {
       .groupBy("v").agg(count(lit(1)).as("degree"))
       .groupBy("degree").agg(count(lit(1)).as("n_vertices"))
 
-  /** Triangle count by per-edge ADJACENCY INTERSECTION over the same
-    * degree-ordered orientation as [[triangleCount]]: build each low
-    * vertex's sorted out-neighbor array once, then for every oriented
-    * edge (u, w) count `|N⁺(u) ∩ N⁺(w)|` — each triangle is found exactly
-    * once, at its closing edge. Identical result to the wedge join; the
+  /** Triangle count by per-edge ADJACENCY INTERSECTION over a
+    * degree-ordered orientation: every edge points from its lower endpoint
+    * to its higher one under the total order (degree, id), packed into one
+    * long key (degree in the high bits, id in the low 32 — so vertex ids
+    * must lie in [0, 2^32); renumber upstream for wider id spaces). Any
+    * total order finds the same triangle set; degree order gives hub
+    * vertices tiny out-degrees. Build each low vertex's sorted
+    * out-neighbor array once, then for every oriented edge (u, w) count
+    * `|N⁺(u) ∩ N⁺(w)|` — each triangle is found exactly once, at its
+    * closing edge. Returns one row: (n_edges, n_triangles).
+    *
+    * Identical result to the wedge join (the compact-forward formulation:
+    * wedges = out-neighbor pairs of the low vertex, closed by a join); the
     * difference is what flows through the engine: the wedge formulation
     * materializes Σ C(outdeg, 2) rows (41M on the sf0.1 co-purchase
     * graph) through a shuffle, while this streams the E edge rows (1.2M)
@@ -126,11 +65,10 @@ object Graph {
     *
     * Scale: the neighbor frame is one groupBy over the oriented edges
     * (arrays total exactly E entries — the edge list regrouped, so
-    * "fits memory" means the edge list fits, the same bound as
-    * [[triangleCount]]'s broadcastClose option); both probe joins are
-    * plain equi-joins, so when the neighbor frame outgrows broadcast,
-    * AQE falls back to shuffle joins keyed on u / w and the plan still
-    * never materializes wedges. Out-degrees are capped by the degree
+    * "fits memory" means the edge list fits, two longs per edge); both
+    * probe joins are plain equi-joins, so when the neighbor frame outgrows
+    * broadcast, AQE falls back to shuffle joins keyed on u / w and the
+    * plan still never materializes wedges. Out-degrees are capped by the degree
     * orientation (≤ √(2E)), bounding every intersect. */
   def triangleCountAdj(edges: DataFrame,
       scope: CacheScope = CacheScope.Session): DataFrame = {
@@ -270,7 +208,9 @@ object Graph {
     * appears in every unrolled round of the final lazy plan, so it is
     * persisted under `scope` exactly like [[pageRank]]'s adjacency (two
     * ids per directed edge) — without it the edge build re-runs per
-    * round. */
+    * round. For integral ids, one eager min/max action over that persisted
+    * edge list runs at call time, before any result action: it picks the
+    * packed-long or the struct argmax path. */
   def labelPropagation(edges: DataFrame, rounds: Int = 3,
       topK: Int = 100, scope: CacheScope = CacheScope.Session): DataFrame = {
     require(rounds >= 1 && rounds <= 8, "labelPropagation: rounds in [1, 8]")
@@ -290,7 +230,7 @@ object Graph {
     // later round adopts an existing label), so the per-round argmax
     // tie-break order on (−count, label) admits a PACKED-LONG fast path
     // whenever ids are integral and in [0, 2^32) — the same id contract
-    // [[triangleCount]]'s order key pins, here guarded in-plan: pack
+    // [[triangleCountAdj]]'s order key pins, here guarded in-plan: pack
     // (−count)·2^32 + label into ONE long and take min. min(long) hash-
     // aggregates, where min(struct) forces a SortAggregate pair (struct
     // buffers are not hash-aggregable) that sorted the edge-sized count

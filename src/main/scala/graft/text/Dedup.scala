@@ -27,19 +27,10 @@ import org.apache.spark.sql.types._
   * storage evicts under pressure.
   */
 object Dedup {
-  /** 31-bit modulus keeps a*x+b inside a long under ANSI overflow checks. */
-  private[text] val P = 2147483647L
-  val NumHashes = 64
+  /** LSH banding of the 64-hash signature
+    * ([[graft.functions.PortableTextSig.NumHashes]] = Bands × RowsPerBand). */
   val Bands = 16
-  val RowsPerBand = 4 // NumHashes / Bands
-
-  /** Deterministic affine coefficients for the MinHash family (seeded,
-    * data-independent). Exposed for the DuckDB oracle, which embeds them as
-    * SQL list literals. */
-  val coefA: Array[Long] =
-    Array.tabulate(NumHashes)(i => 2654435761L * (i + 1) % P | 1L)
-  val coefB: Array[Long] =
-    Array.tabulate(NumHashes)(i => 40503L * (i + 7) * 2654435769L % P)
+  val RowsPerBand = 4
 
   /** Exact dedup: canonical survivor per identical text. */
   def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
@@ -135,27 +126,17 @@ object Dedup {
 
   /** Engine-portable base hash: the first 15 hex chars of md5 parsed as a
     * 60-bit integer (DuckDB: `CAST('0x' || substring(md5(s),1,15) AS
-    * BIGINT)`), optionally folded into [0, 2^31). xxhash64 is Spark-only,
-    * so the oracle-checked dedup queries hash with md5 — the shingling,
-    * affine-permutation, banding, and voting math is identical either way;
-    * the xxh64 family stays the fast path for non-oracle use. */
+    * BIGINT)`), optionally folded into [0, 2^31). Every signature in this
+    * object hashes shingles with it, so the DuckDB oracle reproduces them
+    * bit for bit. */
   def portableHash(s: Column): Column =
     conv(substring(md5(s.cast(BinaryType)), 1, 15), 16, 10).cast(LongType)
 
-  /** MinHash signature via the native codegen expression
-    * [[graft.functions.MinHashSig]] — one fused pass over the shingles. */
-  def minhashSignature(text: Column): Column =
-    graft.functions.MinHashSig(shingles(text), NumHashes)
-
-  /** docs → (id, sig) with the signature computed in one codegen stage. */
-  def withSignature(docs: DataFrame, textCol: String = "text"): DataFrame =
-    docs.withColumn("sig", minhashSignature(col(textCol)))
-
   /** Engine-portable MinHash signature via the native codegen expression
-    * [[graft.functions.PortableMinHashSig]] — same affine family over
-    * [[portableHash]] base hashes, one fused pass. */
+    * [[graft.functions.PortableMinHashSig]] — the affine family over
+    * [[portableHash]] base hashes, one fused pass over the shingles. */
   def minhashSignaturePortable(text: Column): Column =
-    graft.functions.PortableMinHashSig(shingles(text), NumHashes)
+    graft.functions.PortableMinHashSig(shingles(text))
 
   /** Per-(bucket) occupancy cap for the banded self-joins: buckets at or
     * under the cap emit ALL pairs; buckets over it emit STAR edges to the
@@ -213,9 +194,8 @@ object Dedup {
 
   /** LSH candidate pairs from a precomputed `(id, sig)` frame: band the
     * signature (16 bands × 4 rows), bucket-join on (band, band-key), emit
-    * each unordered pair once. Band keys are the joined band values (hash-
-    * scheme-agnostic, so the same banding serves the xxh64 and portable
-    * signatures — bucketing only needs equality). Buckets over `maxBucket`
+    * each unordered pair once. Band keys are the joined band values
+    * (bucketing only needs equality). Buckets over `maxBucket`
     * emit star edges to the bucket min instead of all pairs (see
     * [[MaxBandBucket]]) — pass `Int.MaxValue` for the exact all-pairs form
     * at calibration scale. */
@@ -309,20 +289,17 @@ object Dedup {
 
   /** Candidate pairs + estimated Jaccard from signature agreement; keep
     * pairs with est ≥ threshold (num agreeing hashes ≥ thresh64/64).
-    * `portable = true` hashes shingles with [[portableHash]] instead of
-    * xxhash64 — same banding/agreement math, DuckDB-reproducible. */
+    * Signatures are [[minhashSignaturePortable]]'s, DuckDB-reproducible. */
   def minhashPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", minAgree: Int = 32,
-      portable: Boolean = false,
       maxBucket: Int = MaxBandBucket,
       scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
     // Persist the (id, sig) table: it feeds the band join twice and the
     // verify join twice — without it the signature aggregate (the expensive
     // narrow stage) runs 3-4×. Size is id + 64 longs per doc — tiny
     // relative to the corpus, safe to persist at any scale.
-    val sigCol = if (portable) minhashSignaturePortable(col(textCol))
-      else minhashSignature(col(textCol))
-    val sigs = scope.persist(docs.withColumn("sig", sigCol)
+    val sigs = scope.persist(docs
+      .withColumn("sig", minhashSignaturePortable(col(textCol)))
       .select(col(idCol).as("sid"), col("sig")))
     lshCandidatesFromSigs(sigs.select(col("sid").as("id"), col("sig")), maxBucket)
       .join(sigs.select(col("sid").as("a"), col("sig").as("sig_a")), "a")
@@ -695,7 +672,7 @@ object Dedup {
     val spark = docs.sparkSession
     val nDocs = docs.agg(count(lit(1)).as("_n_docs"))
     val pairs = minhashPairs(docs, textCol, idCol,
-      minAgree = thresholds.head, portable = true, scope = scope)
+      minAgree = thresholds.head, scope = scope)
     val hits = pairs
       .select(col("b"),
         explode(array(thresholds.map(t => lit(t)): _*)).as("min_agree"),

@@ -49,9 +49,9 @@ object Pq {
       Array.tabulate(dsub)(d => fixedComponent(b, j, d).toDouble))))
 
   /** Left-to-right double dot of a subvector column against a literal
-    * codeword via the native [[graft.functions.DotProduct]] — the same
-    * accumulation order as [[Similarity.dot]]'s HOF form, so the oracle's
-    * list_sum(list_transform(list_zip(...))) is bit-identical
+    * codeword via the native [[graft.functions.DotProduct]] — the
+    * left-to-right accumulation order of `aggregate(zip_with(...))`, so
+    * the oracle's list_sum(list_transform(list_zip(...))) is bit-identical
     * (NativeExprSpec pins the native↔HOF equality). */
   private def dotLit(sub: Column, cw: Array[Double]): Column =
     graft.functions.DotProduct(sub, typedLit(cw.toSeq))

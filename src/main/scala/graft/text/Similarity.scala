@@ -33,18 +33,9 @@ import org.apache.spark.sql.types._
   */
 object Similarity {
 
-  /** Left-to-right double dot product of two float-array columns. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm2(a: Column): Column =
-    aggregate(transform(a, x => x.cast(DoubleType) * x.cast(DoubleType)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Cosine via the native codegen expression [[graft.functions.CosineSim]]
-    * — one fused loop; accumulation order identical to
-    * `dot(a, b) / sqrt(norm2(a) * norm2(b))`. */
+    * — one fused loop: dot(a, b) / sqrt(norm2(a) · norm2(b)), each sum
+    * accumulated left to right in double. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.CosineSim(a, b)
 
@@ -328,70 +319,6 @@ object Similarity {
         (col("pos_cos") - col("neg_cos")).as("margin"))
   }
 
-  /** Deterministic pseudo-random ±1 hyperplane component for (plane, dim):
-    * parity of a splitmix-style integer mix — data-independent, seedable,
-    * and exactly reproducible in ANSI SQL (the DuckDB oracle mirrors it). */
-  private def planeSign(plane: Int, dim: Column): Column = {
-    val mixed = (dim + lit(plane.toLong * 1000003L)) * lit(2654435761L) % lit(2147483647L)
-    when(pmod(mixed, lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))
-  }
-
-  /** Sign-bit signature for one LSH table: `planesPerTable` hyperplane dots
-    * (planes `table*planesPerTable ..` of the global family) → packed long.
-    * HOF formulation — kept for cross-validation of the native
-    * [[graft.functions.LshSig]] (which computes ALL tables in one fused
-    * codegen pass and is what [[lshTopK]]/[[nearDupPairs]] use).
-    * Equivalence precondition: embedding arrays with `containsNull=false`
-    * (a null element nulls this formulation's whole signature but is
-    * skipped by the native one — see the LshSig scaladoc). */
-  def tableSignature(emb: Column, table: Int, planesPerTable: Int): Column =
-    (0 until planesPerTable).map { p =>
-      val s = aggregate(
-        zip_with(emb, sequence(lit(0), size(emb) - 1),
-          (x, i) => x.cast(DoubleType) * planeSign(table * planesPerTable + p, i)),
-        lit(0.0), (acc, v) => acc + v)
-      when(s >= 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** Planes per table sized so the expected bucket occupancy stays near
-    * `targetBucket` for an `n`-vector corpus: 2^planes buckets per table ⇒
-    * planes = ceil(log2(n / targetBucket)). The quadratic-within-bucket
-    * candidate cost is (n / 2^planes)² per bucket — at FIXED planes it grows
-    * with n², so callers working at a new corpus scale should re-derive
-    * planes from this rule (measured: a 10× corpus at fixed 8 planes grew
-    * candidate pairs ~50×; the maxBucket cap bounds the worst bucket but not
-    * the average). Recall falls as planes rise — compensate with more
-    * tables (recall ≈ 1-(1-p^planes)^tables for per-plane agreement p). */
-  def planesFor(n: Long, targetBucket: Int = 64): Int =
-    math.max(1, math.ceil(math.log(n.toDouble / targetBucket) / math.log(2)).toInt)
-
-  /** Sizing advisory for a FIXED `planesPerTable` at corpus size `n`: a
-    * warning message when the expected per-table bucket occupancy
-    * (n / 2^planes) exceeds ~4× `targetBucket` — the measured regime where
-    * within-bucket candidate generation goes quadratic (see [[planesFor]]).
-    * Pure function of the sizes, so it's unit-testable without a corpus. */
-  def advisePlanes(n: Long, planesPerTable: Int,
-      targetBucket: Int = 64): Option[String] = {
-    val expected = n.toDouble / math.pow(2.0, planesPerTable)
-    if (expected > 4.0 * targetBucket)
-      Some(s"[graft] Similarity: expected LSH bucket occupancy ~${expected.toLong} " +
-        s"rows at planesPerTable=$planesPerTable for an n=$n corpus exceeds " +
-        s"${4 * targetBucket} (4x target $targetBucket); candidate generation " +
-        s"grows ~quadratically past this point — re-derive planes with " +
-        s"planesFor(n) = ${planesFor(n, targetBucket)}")
-    else None
-  }
-
-  /** When `check` is set, count the corpus and surface [[advisePlanes]]'s
-    * warning on stderr. Off by default: the count is an extra action, and
-    * the declared bench/oracle queries pin their parameters — this guard is
-    * for deployments, where a silently mis-sized plane count re-creates the
-    * measured ×10 quadratic candidate growth. */
-  private def maybeWarnPlanes(corpus: DataFrame, planesPerTable: Int,
-      check: Boolean): Unit =
-    if (check) advisePlanes(corpus.count(), planesPerTable)
-      .foreach(System.err.println)
-
   /** (vec_id, tbl, bkt) rows: one bucket assignment per LSH table, hub
     * buckets larger than `maxBucket` dropped. Ids only — the embedding is
     * re-joined AFTER candidate dedup, so the bucket join, the pair
@@ -442,13 +369,16 @@ object Similarity {
     * the saving is the corpus/queries ratio (measured 25× avoidable
     * scoring in the recall harness before this parameter existed).
     *
-    * `checkSizing`: opt-in [[advisePlanes]] guard (one extra count action).
+    * Sizing: keep the expected bucket occupancy n / 2^planesPerTable near
+    * 64, i.e. planesPerTable ≈ ceil(log2(n / 64)) for an n-vector corpus —
+    * at fixed planes the within-bucket candidate cost grows with n² (a 10×
+    * corpus at 8 planes measured ~50× the candidate pairs).
+    *
     * `scope`: release handle for the internal bucket-table persist. */
   def lshTopK(corpus: DataFrame, k: Int, nTables: Int = 4,
       planesPerTable: Int = 8, maxBucket: Int = 512,
-      queries: Option[DataFrame] = None, checkSizing: Boolean = false,
+      queries: Option[DataFrame] = None,
       scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
-    maybeWarnPlanes(corpus, planesPerTable, checkSizing)
     val all = candidatePairs(corpus, nTables, planesPerTable, maxBucket,
       ordered = false, scope)
       .select(col("left").as("q_id"), col("right").as("neighbor_id"))
@@ -680,9 +610,7 @@ object Similarity {
     * via the multi-table LSH buckets (each unordered pair once). */
   def nearDupPairs(corpus: DataFrame, minCos: Double, nTables: Int = 4,
       planesPerTable: Int = 8, maxBucket: Int = 512,
-      checkSizing: Boolean = false,
       scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
-    maybeWarnPlanes(corpus, planesPerTable, checkSizing)
     val cand = candidatePairs(corpus, nTables, planesPerTable, maxBucket,
       ordered = true, scope)
       .select(col("left").as("a"), col("right").as("b"))

@@ -60,6 +60,21 @@ class CliSpec extends SparkSpec {
       "\"period\":\"2024-Q1\",\"generated_date\":\"2026-08-12\","), json)
   }
 
+  test("compliance reads its CSV from disk once") {
+    // Hadoop's `file`-scheme statistics count bytes read from disk, not
+    // from Spark's cache; the nexus table, the alerts and the export all
+    // read one collected activity relation
+    def bytesRead = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    val out = Files.createTempDirectory("graft_cli_compliance")
+    val before = bytesRead
+    runCapture("compliance", "--file", sampleCsv, "--registered", "CA,TX",
+      "--as-of", "2026-08-12", "--export-json", "nexus.json",
+      "--output-dir", out.toString)
+    val reads = (bytesRead - before).toDouble / Files.size(Path.of(sampleCsv))
+    assert(math.round(reads) == 1, s"read the CSV $reads times")
+  }
+
   test("an unknown or missing command throws with the usage line") {
     Seq(Seq("frobnicate") -> "frobnicate", Seq.empty[String] -> "<none>").foreach {
       case (args, shown) =>
@@ -88,6 +103,12 @@ class CliSpec extends SparkSpec {
       .split(", ").toSeq
     assert(states.nonEmpty && states == states.sorted)
     assert(states.forall(_.matches("[A-Z]{2}")))
+  }
+
+  test("rates --state with an unknown code throws naming the code") {
+    val e = intercept[IllegalArgumentException](
+      Cli.run(spark, Array("rates", "--state", "ZZ")))
+    assert(e.getMessage == "unknown state code: ZZ")
   }
 
   test("rates --category with an unknown category reports none") {

@@ -94,19 +94,20 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val corpus = Catalog.dedupCorpus(spark, sf)
     val p = graft.text.Dedup.minhashPairs(corpus, minAgree = 20)
       .queryExecution.executedPlan.toString
-    assert(p.contains("minhashsig") || p.contains("MinHashSig"), p.take(2000))
+    assert(p.contains("portableminhashsig") || p.contains("PortableMinHashSig"),
+      p.take(2000))
   }
 
   test("declared op_minhash_pairs uses the portable md5 hash family") {
-    // the ORACLE-checked variant must hash with the md5-based portable
+    // the ORACLE-checked query must hash with the md5-based portable
     // family (DuckDB-reproducible), via the native PortableMinHashSig
-    // expression; the xxh64 MinHashSig stays the non-oracle fast path
+    // expression, and with no other minhash kernel
     val p = plan("op_minhash_pairs")
     assert(p.contains("portableminhashsig") || p.contains("PortableMinHashSig"),
       p.take(2000))
     assert(!p.replace("portableminhashsig", "").replace("PortableMinHashSig", "")
       .toLowerCase.contains("minhashsig"),
-      "portable path must not use xxh64 sigs")
+      "the declared query plans one minhash kernel")
   }
 
   test("similarity top-k plans use TopKPerKey, not a corpus-wide window") {

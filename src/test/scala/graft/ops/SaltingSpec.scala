@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 class SaltingSpec extends SparkSpec {
@@ -40,35 +39,6 @@ class SaltingSpec extends SparkSpec {
     val salted = Salting.saltedSum(df, "key", "v", buckets = 8).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(plain == salted)
-  }
-
-  test("SQL registration: minhash_sig and cosine_sim callable from spark.sql") {
-    GraftFunctions.register(spark)
-    val sig = spark.sql(
-      "SELECT minhash_sig(array('a b c', 'b c d')) AS s").head().getSeq[Long](0)
-    assert(sig.length == 64)
-    val cos = spark.sql(
-      "SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
-        "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c").head().getDouble(0)
-    assert(cos == 1.0)
-  }
-
-  test("SQL registration: lsh_sig, p_minhash_sig, p_simhash, kmv_sketch") {
-    GraftFunctions.register(spark)
-    val lsh = spark.sql(
-      "SELECT lsh_sig(array(CAST(0.5 AS FLOAT), CAST(-0.25 AS FLOAT)), 2, 4) AS s")
-      .head().getSeq[Long](0)
-    assert(lsh.length == 2 && lsh.forall(s => s >= 0 && s < 16))
-    val pm = spark.sql(
-      "SELECT p_minhash_sig(array('a b c', 'b c d'), 32) AS s")
-      .head().getSeq[Long](0)
-    assert(pm.length == 32)
-    val ps = spark.sql("SELECT p_simhash(array('a b c')) AS s").head().getLong(0)
-    assert(ps >= 0L)
-    val kmv = spark.sql(
-      "SELECT kmv_sketch(h, 3) AS m FROM (SELECT CAST(id * 37 % 11 AS BIGINT) AS h " +
-        "FROM range(100))").head().getSeq[Long](0)
-    assert(kmv == Seq(0L, 1L, 2L)) // 3 smallest distinct residues
   }
 
   test("skewStats: heavy hitters, exact shares, bounded top-k plan") {

@@ -101,6 +101,34 @@ class TopKPerKeySpec extends SparkSpec {
     }
   }
 
+  test("primitive bare-double fast path == window semantics incl. NaN, ±0.0 and null") {
+    // fastMode 1: NaN greatest (and equal to itself), -0.0 == 0.0, and a
+    // NULL order value dropped (the TopK.perKey contract) — so the window
+    // reference ranks only the non-null rows. A bare order picks an
+    // arbitrary row among ties, so compare order-value multisets, with
+    // -0.0 read as 0.0.
+    val rows: Seq[(String, java.lang.Double, Long)] = Seq(
+      ("a", 1.5, 1L), ("a", Double.NaN, 2L), ("a", 1.5, 3L),
+      ("a", null, 4L), ("a", 0.0, 5L), ("a", -0.0, 6L),
+      ("a", Double.NaN, 7L), ("a", -2.0, 8L),
+      ("b", -0.0, 9L), ("b", 0.0, 10L), ("b", null, 11L), ("b", -1.0, 12L),
+      ("c", null, 13L), ("d", Double.NaN, 14L), ("d", 3.0, 15L))
+    val df = rows.toDF("k", "score", "id")
+    def multisets(out: org.apache.spark.sql.DataFrame): Map[String, Seq[String]] =
+      out.select("k", "score").as[(String, Double)].collect().toSeq
+        .groupBy(_._1).map { case (k, v) =>
+          k -> v.map(p => (if (p._2 == 0.0) 0.0 else p._2).toString).sorted }
+    for (desc <- Seq(true, false); k <- Seq(1, 2, 3)) {
+      val got = multisets(TopK.perKey(df, Seq("k"), col("score"), k,
+        descending = desc))
+      val w = Window.partitionBy("k")
+        .orderBy(if (desc) col("score").desc else col("score").asc)
+      val exp = multisets(df.filter(col("score").isNotNull)
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k))
+      assert(got == exp, s"desc=$desc k=$k")
+    }
+  }
+
   test("plan shows the heap exec pair with an exchange, and no sort") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val df = TopK.perKey(orders, Seq("o_custkey"), col("o_totalprice"), 2)

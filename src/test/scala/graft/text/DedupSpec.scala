@@ -41,7 +41,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature agreement approximates jaccard") {
-    val sigs = Dedup.withSignature(docs).select("doc_id", "sig")
+    val sigs = docs.select(col("doc_id"),
+        Dedup.minhashSignaturePortable(col("text")).as("sig"))
       .collect().map(r => r.getAs[Long]("doc_id") ->
         r.getSeq[Long](r.fieldIndex("sig"))).toMap
     val agree12 = sigs(1L).zip(sigs(2L)).count { case (x, y) => x == y }
@@ -163,18 +164,6 @@ class DedupSpec extends SparkSpec {
     assert(top.last == 25L) // opposite direction ranks last
   }
 
-  test("planesFor sizes bucket counts to the corpus") {
-    // 2^planes buckets => expected occupancy n / 2^planes <= targetBucket
-    assert(Similarity.planesFor(2000, 64) == 5)   // 2000/32=62.5 <= 64
-    assert(Similarity.planesFor(20000, 64) == 9)  // 20000/512=39
-    assert(Similarity.planesFor(64, 64) == 1)     // floor at 1 plane
-    for (n <- Seq(1000L, 100000L, 10000000L)) {
-      val p = Similarity.planesFor(n, 64)
-      assert(n.toDouble / (1L << p) <= 64.0)
-      assert(p == 1 || n.toDouble / (1L << (p - 1)) > 64.0) // minimal
-    }
-  }
-
   test("LSH ANN returns a subset consistent with brute force on testdata") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val brute = Similarity.bruteForceTopK(emb, emb.filter($"vec_id" < 20), 5)
@@ -262,18 +251,6 @@ class DedupSpec extends SparkSpec {
     val restricted = key(Similarity.lshTopK(emb, k = 5, queries = Some(qs)))
     assert(restricted == full) // per-query top-k commutes with restriction
     assert(restricted.nonEmpty)
-  }
-
-  test("advisePlanes warns only when fixed planes under-bucket the corpus") {
-    // 1M vectors at 8 planes -> ~3900/bucket, way past 4x64
-    assert(Similarity.advisePlanes(1000000L, 8).isDefined)
-    // and the advice names the planesFor-sized fix
-    assert(Similarity.advisePlanes(1000000L, 8).get
-      .contains(Similarity.planesFor(1000000L).toString))
-    // properly sized: 1M at planesFor(1M)=14 planes -> ~61/bucket
-    assert(Similarity.advisePlanes(1000000L,
-      Similarity.planesFor(1000000L)).isEmpty)
-    assert(Similarity.advisePlanes(500L, 8).isEmpty) // small corpus fine
   }
 
   test("ngramNovelty: unseen-shingle fraction against the reference; extremes hit 0 and 1") {
@@ -397,9 +374,9 @@ class DedupSpec extends SparkSpec {
     val corpus = (mega ++ rest).toDF("doc_id", "text")
     val scope = new graft.ops.CacheScope
     try {
-      val capped = Dedup.minhashPairs(corpus, minAgree = 20, portable = true,
+      val capped = Dedup.minhashPairs(corpus, minAgree = 20,
         scope = scope)
-      val exact = Dedup.minhashPairs(corpus, minAgree = 20, portable = true,
+      val exact = Dedup.minhashPairs(corpus, minAgree = 20,
         maxBucket = Int.MaxValue, scope = scope)
       val nCapped = capped.count()
       val nExact = exact.count()
@@ -543,7 +520,7 @@ class DedupSpec extends SparkSpec {
         ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     val n = docs.count()
     ths.foreach { t =>
-      val pairs = Dedup.minhashPairs(docs, minAgree = t, portable = true)
+      val pairs = Dedup.minhashPairs(docs, minAgree = t)
       assert(out(t)._1 == pairs.count(), s"threshold $t pairs")
       val dropped = pairs.select("b").distinct().count()
       assert(out(t)._2 == dropped && out(t)._3 == n - dropped,

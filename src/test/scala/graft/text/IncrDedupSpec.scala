@@ -50,7 +50,7 @@ class IncrDedupSpec extends SparkSpec {
     val scratch = Dedup.survivors(
       hist.unionByName(newBatch),
       Dedup.components(Dedup.minhashPairs(
-        hist.unionByName(newBatch), minAgree = 20, portable = true)))
+        hist.unionByName(newBatch), minAgree = 20)))
       .select(col("doc_id"), col("survivor"))
       .as[(Long, Boolean)].collect().toMap
       .filter(_._1 >= 10L)
@@ -102,7 +102,7 @@ class IncrDedupSpec extends SparkSpec {
     val scratch = Dedup.survivors(
       retainedCorpus.unionByName(newBatch),
       Dedup.components(Dedup.minhashPairs(
-        retainedCorpus.unionByName(newBatch), minAgree = 20, portable = true)))
+        retainedCorpus.unionByName(newBatch), minAgree = 20)))
       .select(col("doc_id"), col("survivor"))
       .as[(Long, Boolean)].collect().toMap
       .filter(_._1 >= 10L)

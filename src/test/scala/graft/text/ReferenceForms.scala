@@ -9,11 +9,40 @@ import org.apache.spark.sql.types._
   * HOFs never codegen, so these run interpreted lambda passes; the library
   * uses only the native forms. */
 object ReferenceForms {
+  /** Left-to-right double dot product of two float-array columns. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
+      lit(0.0), (acc, v) => acc + v)
+
+  def norm2(a: Column): Column =
+    aggregate(transform(a, x => x.cast(DoubleType) * x.cast(DoubleType)),
+      lit(0.0), (acc, v) => acc + v)
+
   /** Cosine in three interpreted array passes; same left-to-right
     * accumulation order as [[graft.functions.CosineSim]]. */
   def cosineHof(a: Column, b: Column): Column =
-    Similarity.dot(a, b) /
-      sqrt(Similarity.norm2(a) * Similarity.norm2(b))
+    dot(a, b) / sqrt(norm2(a) * norm2(b))
+
+  /** Deterministic pseudo-random ±1 hyperplane component for (plane, dim):
+    * parity of a splitmix-style integer mix — the family
+    * [[graft.functions.LshSig]] documents. */
+  private def planeSign(plane: Int, dim: Column): Column = {
+    val mixed = (dim + lit(plane.toLong * 1000003L)) * lit(2654435761L) % lit(2147483647L)
+    when(pmod(mixed, lit(2)) === 0, lit(1.0)).otherwise(lit(-1.0))
+  }
+
+  /** Sign-bit signature for one LSH table: `planesPerTable` hyperplane dots
+    * (planes `table*planesPerTable ..` of the global family) → packed long;
+    * one interpreted `aggregate(zip_with(...))` pass per plane, where
+    * [[graft.functions.LshSig]] computes all tables in one fused loop. */
+  def tableSignature(emb: Column, table: Int, planesPerTable: Int): Column =
+    (0 until planesPerTable).map { p =>
+      val s = aggregate(
+        zip_with(emb, sequence(lit(0), size(emb) - 1),
+          (x, i) => x.cast(DoubleType) * planeSign(table * planesPerTable + p, i)),
+        lit(0.0), (acc, v) => acc + v)
+      when(s >= 0, lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
 
   /** [[TextOps.langId]] with split counts: each word's hits are the
     * split size − 1, compiled and re-converted per row. */
@@ -60,31 +89,21 @@ object ReferenceForms {
           .as("repeat_prob"))
   }
 
-  /** The 64-wide MinHash signature over `base` hashes: one `aggregate`
-    * pass with a running-min accumulator (the hash array sits in argument
-    * position, so it is evaluated once; lambdas touch only bound vars and
-    * literals). */
-  private def minhashOf(base: Column): Column = {
-    import Dedup.{NumHashes, P, coefA, coefB}
+  /** [[Dedup.minhashSignaturePortable]] over folded md5 base hashes: one
+    * `aggregate` pass with a 64-wide running-min accumulator (the hash
+    * array sits in argument position, so it is evaluated once; lambdas
+    * touch only bound vars and literals). */
+  def minhashSignaturePortableHof(text: Column): Column = {
+    import graft.functions.PortableTextSig.{NumHashes, P, coefA, coefB}
     val aLit = typedLit(coefA.toSeq)
     val bLit = typedLit(coefB.toSeq)
     val idx = typedLit((0 until NumHashes).toList)
-    aggregate(base, array_repeat(lit(P), NumHashes),
+    aggregate(transform(Dedup.shingles(text), s => pmod(Dedup.portableHash(s), lit(P))),
+      array_repeat(lit(P), NumHashes),
       (acc, x) => zip_with(acc, idx, (m, i) =>
         least(m, pmod(element_at(aLit, i + 1) * x + element_at(bLit, i + 1),
           lit(P)))))
   }
-
-  /** [[Dedup.minhashSignature]] over xxhash64 base hashes folded into
-    * [0, 2^31). */
-  def minhashSignatureHof(text: Column): Column =
-    minhashOf(transform(Dedup.shingles(text),
-      s => pmod(xxhash64(s), lit(Dedup.P))))
-
-  /** [[Dedup.minhashSignaturePortable]] over folded md5 base hashes. */
-  def minhashSignaturePortableHof(text: Column): Column =
-    minhashOf(transform(Dedup.shingles(text),
-      s => pmod(Dedup.portableHash(s), lit(Dedup.P))))
 
   /** [[Dedup.withSimhash]] as a 60-bit ±1 vote accumulator over the md5
     * base hashes, then the sign bits packed. Built via expr(): the Scala

@@ -36,7 +36,7 @@ class Round14PropertySpec extends SparkSpec {
       try {
         def drops(maxBucket: Int): Set[Long] =
           Dedup.components(
-            Dedup.minhashPairs(docs, minAgree = 20, portable = true,
+            Dedup.minhashPairs(docs, minAgree = 20,
               maxBucket = maxBucket, scope = scope).select("a", "b"))
             .filter(col("doc_id") =!= col("cluster_id"))
             .select("doc_id").collect().map(_.getLong(0)).toSet
