@@ -59,25 +59,36 @@ object Catalog {
     * suite) each get a fresh cache; a pathological interleaving of two
     * live sessions would only thrash re-resolution, never corrupt. The
     * slot is swapped with `updateAndGet`, so concurrent first callers on
-    * one new session converge on one map (and so on one relation). */
-  private val fixtureCache = new java.util.concurrent.atomic.AtomicReference[
+    * one new session converge on one map (and so on one relation).
+    *
+    * The same map holds [[memoFrame]]'s frames, so fixtures and memoized
+    * frames follow one lifetime rule. */
+  private[graft] def fixture(spark: SparkSession, path: String): DataFrame =
+    memoFrame(spark, path) {
+      val df = spark.read.parquet(path)
+      df.schema // force analysis: one listing + footer read per session
+      df
+    }
+
+  private val sessionFrames = new java.util.concurrent.atomic.AtomicReference[
     (java.lang.ref.WeakReference[SparkSession],
       scala.collection.concurrent.TrieMap[String, DataFrame])]
-  private[graft] def fixture(spark: SparkSession, path: String): DataFrame = {
+  /** Memoize a DataFrame per session: same session + key → the same frame
+    * object. For resolved fixtures ([[fixture]], keyed by path) and for
+    * frames whose CONSTRUCTION runs driver-synchronized jobs (a CC
+    * fixpoint, an incremental-dedup probe; keyed `<kind>:<sfDir>`), so
+    * the jobs run once per sweep. A different session drops the map. */
+  private def memoFrame(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
     // the WeakReference only IDENTIFIES the owning session (eq-compare)
     // without retaining it — the strong reference lives in the cached
     // DataFrames, which this single-slot design drops wholesale on the
     // first access from a different session
-    val per = fixtureCache.updateAndGet { cur =>
-      if (cur != null && (cur._1.get() eq spark)) cur
-      else (new java.lang.ref.WeakReference(spark),
+    val per = sessionFrames.updateAndGet { cur =>
+      if (cur != null && (cur._1.get() eq s)) cur
+      else (new java.lang.ref.WeakReference(s),
         scala.collection.concurrent.TrieMap.empty[String, DataFrame])
     }._2
-    per.getOrElseUpdate(path, {
-      val df = spark.read.parquet(path)
-      df.schema // force analysis: one listing + footer read per session
-      df
-    })
+    per.getOrElseUpdate(key, build)
   }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -130,21 +141,32 @@ object Catalog {
     p.toString
   }
 
+  private val stagedArtifacts =
+    scala.collection.concurrent.TrieMap.empty[(String, String), Any]
+  /** An artifact written to disk once per (kind, sfDir) and reused across
+    * queries, runs and bench passes — a standing index, a staged stream
+    * source, a compacted copy. `path` names the directory that proves the
+    * memoized artifact is still there: a tmp reaper (or a session
+    * spanning cleanups) can remove it out from under this JVM-global
+    * memo, and a stale entry would fail the reader instead of
+    * rebuilding, so a missing directory rebuilds. */
+  private[graft] def staged[A](kind: String, dir: String, path: A => String)(
+      build: => A): A = {
+    val key = (kind, dir)
+    stagedArtifacts.get(key).foreach { a =>
+      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path(a.asInstanceOf[A]))))
+        stagedArtifacts.remove(key, a)
+    }
+    stagedArtifacts.getOrElseUpdate(key, build).asInstanceOf[A]
+  }
+
   /** Staged copy of the events fixture for the file-stream replays —
-    * written once per sfDir and shared by both streaming queries (and
-    * both bench passes): the stream source needs a directory it can
-    * list, and re-staging 1M rows per query run is pure overhead. */
-  private val stagedEventsDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedEvents(s: SparkSession, dir: String): String = {
-    // revalidate the memoized path: a tmp reaper (or a session spanning
-    // cleanups) can remove the staged dir out from under the JVM-global
-    // cache, and a stale entry would fail the stream source instead of
-    // restaging
-    stagedEventsDirs.get(dir).filterNot(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-      .foreach(_ => stagedEventsDirs.remove(dir))
-    stagedEventsDirs.getOrElseUpdate(dir, {
+    * written once per sfDir ([[staged]]) and shared by both streaming
+    * queries (and both bench passes): the stream source needs a
+    * directory it can list, and re-staging 1M rows per query run is
+    * pure overhead. */
+  private def stagedEvents(s: SparkSession, dir: String): String =
+    staged("stream_src", dir, identity[String]) {
       val out = tempOutDir("graft_stream_src")
       // 16 source files (r19): the single-file staging serialized every
       // replay's narrow map stage (the bloom replay's k-salt md5 explode,
@@ -152,20 +174,14 @@ object Catalog {
       // many partitions, so the replay should too
       t(s, dir, "events").repartition(16).write.mode("overwrite").parquet(out)
       out
-    })
-  }
+    }
 
   /** Staged documents-with-planted-duplicates for the streaming dedup
     * replay: every 7th doc appears twice (different id/ts, identical
-    * text), each row stamped with a deterministic event time. Same
-    * memoize-and-revalidate contract as [[stagedEvents]]. */
-  private val stagedDocDupDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedDocDups(s: SparkSession, dir: String): String = {
-    stagedDocDupDirs.get(dir).filterNot(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-      .foreach(_ => stagedDocDupDirs.remove(dir))
-    stagedDocDupDirs.getOrElseUpdate(dir, {
+    * text), each row stamped with a deterministic event time. Written
+    * once per sfDir ([[staged]]). */
+  private def stagedDocDups(s: SparkSession, dir: String): String =
+    staged("stream_docs", dir, identity[String]) {
       val out = tempOutDir("graft_stream_docs")
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       d.unionByName(d.filter(col("doc_id") % 7 === 0).select(
@@ -177,21 +193,15 @@ object Catalog {
         .repartition(16)
         .write.mode("overwrite").parquet(out)
       out
-    })
-  }
+    }
 
   /** Staged documents-with-planted-NEAR-duplicates for the streaming
     * near-dup replay: every 9th doc (doc_id % 9 = 4) re-arrives later
     * (+3e9 id) with a small tail appended — a band-collision near-dup,
     * not an exact copy, so the streaming path must verify signatures,
-    * not hash text. Same memoize contract as [[stagedEvents]]. */
-  private val stagedDocNearDupDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedDocNearDups(s: SparkSession, dir: String): String = {
-    stagedDocNearDupDirs.get(dir).filterNot(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-      .foreach(_ => stagedDocNearDupDirs.remove(dir))
-    stagedDocNearDupDirs.getOrElseUpdate(dir, {
+    * not hash text. Written once per sfDir ([[staged]]). */
+  private def stagedDocNearDups(s: SparkSession, dir: String): String =
+    staged("stream_neardup", dir, identity[String]) {
       val out = tempOutDir("graft_stream_neardup")
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       d.unionByName(d.filter(col("doc_id") % 9 === 4).select(
@@ -208,8 +218,7 @@ object Catalog {
         .repartition(16)
         .write.mode("overwrite").parquet(out)
       out
-    })
-  }
+    }
 
   /** Pinned as-of for the refund pipeline — shipdates span 1995-2001, so a
     * 2004 reference date exercises both SOL outcomes. */
@@ -268,38 +277,13 @@ object Catalog {
       .repartition(s.sparkContext.defaultParallelism)
   }
 
-  /** Shared CC labels over [[dedupCorpus]]'s jaccard pair graph — the
-    * clustering that op_neardup_survivors, op_cluster_sizes, and
-    * op_best_survivors all derive their reports from. [[Dedup.components]]
-    * runs its label-propagation fixpoint AT CALL TIME (driver-synchronized
-    * rounds), so the three queries calling it independently would run
-    * three identical fixpoints per sweep; memoizing the returned
-    * (persisted) labels frame per session+dir runs it ONCE — the
-    * [[incrIndex]] memoize-and-reuse contract applied to an in-session
-    * frame instead of an on-disk index. Invalidated when the session
-    * changes or stops (test suites spin their own sessions). */
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[String, (SparkSession, DataFrame)]
-  /** Memoize a DataFrame whose CONSTRUCTION runs driver-synchronized jobs
-    * (a CC fixpoint, an incremental-dedup probe): same session + key →
-    * the same frame object, so the jobs run once per sweep. Invalidated
-    * when the session changes or stops (test suites spin their own). */
-  private def memoFrame(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    frameCache.get(key) match {
-      case Some((sess, df)) if (sess eq s) && !sess.sparkContext.isStopped =>
-        df
-      case _ =>
-        val df = build
-        frameCache.put(key, (s, df))
-        df
-    }
   /** [[memoFrame]] plus an eager MEMORY_AND_DISK persist and a
     * materializing count: the build runs ONCE per (session, key), and
     * every later reader hits the cache. For frames whose construction is
     * the expensive part and whose result is small (the near-dup pair
     * frames: ~100 rows at sf0.1, scaling with true near-dup mass, never
-    * the corpus). Session-lifetime storage — the documented
-    * CacheScope.Session trade. */
+    * the corpus). Session-lifetime storage, like every library
+    * intermediate. */
   private def memoPersist(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     memoFrame(s, key) {
       val df = build.persist(
@@ -326,6 +310,14 @@ object Catalog {
   def simhashPairsShared(s: SparkSession, dir: String): DataFrame =
     memoPersist(s, s"shpairs:$dir")(Dedup.simhashPairs(dedupCorpus(s, dir)))
 
+  /** Shared CC labels over [[dedupCorpus]]'s jaccard pair graph — the
+    * clustering that op_neardup_survivors, op_cluster_sizes, and
+    * op_best_survivors all derive their reports from. [[Dedup.components]]
+    * runs its label-propagation fixpoint AT CALL TIME (driver-synchronized
+    * rounds), so the three queries calling it independently would run
+    * three identical fixpoints per sweep; memoizing the returned
+    * (persisted) labels frame per session+dir runs it ONCE
+    * ([[memoFrame]]). */
   def ccLabels(s: SparkSession, dir: String): DataFrame =
     memoFrame(s, s"cc:$dir")(
       Dedup.components(jaccardPairsShared(s, dir)))
@@ -488,23 +480,17 @@ object Catalog {
 
   /** Persistent MinHash band index over the HISTORICAL corpus (= raw
     * documents) for the incremental-dedup query — written once per sfDir
-    * and reused across runs/passes (the [[stagedEvents]]
-    * memoize-and-revalidate contract): real ingest probes a standing
-    * index; rebuilding history per query would defeat the operator. */
-  private val incrIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def incrIndex(s: SparkSession, dir: String): String = {
-    incrIndexDirs.get(dir).filterNot(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-      .foreach(_ => incrIndexDirs.remove(dir))
-    incrIndexDirs.getOrElseUpdate(dir, {
+    * and reused across runs/passes ([[staged]]): real ingest probes a
+    * standing index; rebuilding history per query would defeat the
+    * operator. */
+  private def incrIndex(s: SparkSession, dir: String): String =
+    staged("incr_idx", dir, identity[String]) {
       val out = tempOutDir("graft_incr_idx")
       graft.text.IncrDedup.writeIndex(
         t(s, dir, "documents")
           .repartition(s.sparkContext.defaultParallelism), out)
       out
-    })
-  }
+    }
 
   /** NEW vector ingest batch for the incremental SEMANTIC dedup query —
     * [[ingestBatch]]'s shape on the embeddings table, ids offset ABOVE
@@ -530,21 +516,15 @@ object Catalog {
 
   /** Persistent IVF cell store over the HISTORICAL vectors (= raw
     * embeddings) for the incremental-semantic-dedup query — written once
-    * per sfDir and reused across runs/passes (the [[incrIndex]]
-    * contract): real ingest probes a standing store. */
-  private val semIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def semIndex(s: SparkSession, dir: String): String = {
-    semIndexDirs.get(dir).filterNot(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)))
-      .foreach(_ => semIndexDirs.remove(dir))
-    semIndexDirs.getOrElseUpdate(dir, {
+    * per sfDir and reused across runs/passes ([[staged]]): real ingest
+    * probes a standing store. */
+  private def semIndex(s: SparkSession, dir: String): String =
+    staged("sem_idx", dir, identity[String]) {
       val out = tempOutDir("graft_sem_idx")
       graft.text.IncrSemDedup.writeIndex(
         embCorpus(s, dir), graft.text.Ivf.fixedModel(c = 16, dim = 64), out)
       out
-    })
-  }
+    }
 
   /** Multimodal ingest batch for the END-TO-END incremental pipeline
     * query — (doc_id, text, embedding) rows over the EMBEDDED subset of
@@ -589,26 +569,20 @@ object Catalog {
   }
 
   /** RETENTION-COMPACTED variant of [[incrIndex]] for the compaction
-    * query — written once per sfDir (the [[incrIndex]] contract): the
+    * query — written once per sfDir ([[staged]]): the
     * corpus retains only `doc_id % 3 != 0` (a deterministic stand-in for
     * takedowns/TTL expiry), and [[graft.text.IncrDedup.compactIndex]]
     * rewrites the standing band index to exactly the retained docs'
     * signatures. Returns (compacted path, store rows before, after) —
     * the size reduction the compaction exists to deliver. */
-  private val incrCompactDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long)]
-  private def incrCompactIndex(s: SparkSession, dir: String): (String, Long, Long) = {
-    incrCompactDirs.get(dir).filterNot { case (d, _, _) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)) }
-      .foreach(_ => incrCompactDirs.remove(dir))
-    incrCompactDirs.getOrElseUpdate(dir, {
+  private def incrCompactIndex(s: SparkSession, dir: String): (String, Long, Long) =
+    staged("incr_cidx", dir, (a: (String, Long, Long)) => a._1) {
       val out = tempOutDir("graft_incr_cidx")
       val stats = graft.text.IncrDedup.compactIndex(s, incrIndex(s, dir), out,
         t(s, dir, "documents").filter(col("doc_id") % 3 =!= 0)
           .select("doc_id"))
       (out, stats.nSigsBefore, stats.nSigsAfter)
-    })
-  }
+    }
 
   /** TRAINED-cell variant of [[semIndex]] + its FROZEN model — the pinned
     * retrain policy (round-15): batch 1 (= the historical corpus) trains
@@ -619,40 +593,28 @@ object Catalog {
     * ids stay stable, so the standing store's layout (and the static
     * partition pruning riding it) never recomputes — a retrain would
     * reshuffle every historical vector's cell and with it the whole
-    * store. Written once per sfDir (the [[incrIndex]] contract). */
-  private val semTrainedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, graft.text.Ivf.Model)]
-  private def semTrainedIndex(s: SparkSession, dir: String): (String, graft.text.Ivf.Model) = {
-    semTrainedDirs.get(dir).filterNot { case (d, _) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)) }
-      .foreach(_ => semTrainedDirs.remove(dir))
-    semTrainedDirs.getOrElseUpdate(dir, {
+    * store. Written once per sfDir ([[staged]]). */
+  private def semTrainedIndex(s: SparkSession, dir: String): (String, graft.text.Ivf.Model) =
+    staged("sem_tidx", dir, (a: (String, graft.text.Ivf.Model)) => a._1) {
       val out = tempOutDir("graft_sem_tidx")
       val model = graft.text.Ivf.lloydNext(embCorpus(s, dir),
         graft.text.Ivf.fixedModel(c = 16, dim = 64))
       graft.text.IncrSemDedup.writeIndex(embCorpus(s, dir), model, out)
       (out, model)
-    })
-  }
+    }
 
   /** RETENTION-COMPACTED variant of [[semIndex]] — the vector twin of
     * [[incrCompactIndex]]: retained = `vec_id % 3 != 0`, store rewritten
     * by [[graft.text.IncrSemDedup.compactIndex]] (hive-partitioned cell
-    * layout preserved). */
-  private val semCompactDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long, Long)]
-  private def semCompactIndex(s: SparkSession, dir: String): (String, Long, Long) = {
-    semCompactDirs.get(dir).filterNot { case (d, _, _) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(d)) }
-      .foreach(_ => semCompactDirs.remove(dir))
-    semCompactDirs.getOrElseUpdate(dir, {
+    * layout preserved). Written once per sfDir ([[staged]]). */
+  private def semCompactIndex(s: SparkSession, dir: String): (String, Long, Long) =
+    staged("sem_cidx", dir, (a: (String, Long, Long)) => a._1) {
       val out = tempOutDir("graft_sem_cidx")
       val stats = graft.text.IncrSemDedup.compactIndex(s, semIndex(s, dir),
         out, t(s, dir, "embeddings").filter(col("vec_id") % 3 =!= 0)
           .select("vec_id"))
       (out, stats.nVecsBefore, stats.nVecsAfter)
-    })
-  }
+    }
 
   /** Bucketed (lineitem, orders) table pair on the order key for the
     * co-located-join query — written once per sfDir via
@@ -660,7 +622,8 @@ object Catalog {
     * lives in the catalog; files land under spark-warehouse/). Real
     * deployments pay this shuffle ONCE at ingest and amortize it over
     * every subsequent join on the key — rebuilding per query would defeat
-    * the layout operator, hence the [[incrIndex]] memoize contract. */
+    * the layout operator. Memoized per sfDir in a map of its own: the
+    * tables are catalog entries, not a directory [[staged]] can check. */
   private val bucketedPairs =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   /** saveAsTable refuses a managed-table location left behind by a PRIOR
@@ -691,18 +654,13 @@ object Catalog {
     })
 
   /** Two parquet "crawl snapshots" with EVOLVED schemas for the
-    * schema-merge query — written once per sfDir (the [[incrIndex]]
-    * contract): snapshot 1 (even doc_ids) predates the `lang` column;
-    * snapshot 2 (odd doc_ids) carries it. A real pipeline adds columns
+    * schema-merge query — written once per sfDir ([[staged]]): snapshot
+    * 1 (even doc_ids) predates the `lang` column; snapshot 2 (odd
+    * doc_ids) carries it. A real pipeline adds columns
     * without rewriting history — the mergeSchema read is a footer merge,
     * not a 100 TB rewrite. */
-  private val schemaSnapDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private def schemaSnapshots(s: SparkSession, dir: String): (String, String) = {
-    schemaSnapDirs.get(dir).filterNot { case (a, _) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(a)) }
-      .foreach(_ => schemaSnapDirs.remove(dir))
-    schemaSnapDirs.getOrElseUpdate(dir, {
+  private def schemaSnapshots(s: SparkSession, dir: String): (String, String) =
+    staged("schema_snap", dir, (a: (String, String)) => a._1) {
       val out = tempOutDir("graft_schema_snap")
       val d = t(s, dir, "documents")
       d.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
@@ -710,23 +668,17 @@ object Catalog {
       d.filter(col("doc_id") % 2 =!= 0).select("doc_id", "text", "lang")
         .write.mode("overwrite").parquet(s"$out/snap2")
       (s"$out/snap1", s"$out/snap2")
-    })
-  }
+    }
 
   /** Fragmented + compacted copies of the documents table for the
-    * small-files compaction query — written once per sfDir (the
-    * [[incrIndex]] contract): 64 round-robin shards (the
+    * small-files compaction query — written once per sfDir
+    * ([[staged]]): 64 round-robin shards (the
     * one-file-per-task ingest pathology), then the compaction pass
     * reading the FRAGMENTED copy and rewriting as 4 range-partitioned
     * files (fewer, larger files AND doc_id-clustered layout for min/max
     * pruning — the two things compaction buys). */
-  private val compactDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private def compactedDocs(s: SparkSession, dir: String): (String, String) = {
-    compactDirs.get(dir).filterNot { case (a, _) =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(a)) }
-      .foreach(_ => compactDirs.remove(dir))
-    compactDirs.getOrElseUpdate(dir, {
+  private def compactedDocs(s: SparkSession, dir: String): (String, String) =
+    staged("compact", dir, (a: (String, String)) => a._1) {
       val out = tempOutDir("graft_compact")
       t(s, dir, "documents").select("doc_id", "text")
         .repartition(64).write.mode("overwrite").parquet(s"$out/frag")
@@ -734,8 +686,7 @@ object Catalog {
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(s"$out/compact")
       (s"$out/frag", s"$out/compact")
-    })
-  }
+    }
 
   /** Documents with deterministically planted PII — the fixture texts
     * carry no emails/phones/IPs, so the scrub query appends synthetic ones
@@ -2948,7 +2899,7 @@ object Catalog {
     // consumes the decisions downstream — re-running the whole probe +
     // CC fixpoint on an identical batch is a benchmark artifact, so the
     // decisions frame is memoized per session+dir like the standing
-    // index itself (the [[incrIndex]] contract, one level up). Repeat
+    // index itself ([[staged]], one level up). Repeat
     // passes then read the persisted labels instead of re-deduping.
     // (Through round 11 repeat passes got this accidentally: the
     // fixpoint's per-round caches leaked and plan-identity caching

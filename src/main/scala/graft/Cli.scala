@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -25,10 +25,12 @@ import graft.tax._
   * all computation (including display truncation) stays in Spark. `report`
   * collects each document once; its text and its JSON export both come
   * from that one row; `compliance` collects the per-state activity once
-  * and its nexus table, alerts and export all read those rows. An unknown
-  * or missing command throws an IllegalArgumentException carrying the
-  * usage line, and `rates --state` with a code not in the rate table
-  * throws one naming the code, so `main` exits non-zero.
+  * and its nexus table, alerts and export all read those rows. The file
+  * commands persist their one input, the normalized CSV, on first use and
+  * release it when the command ends, so each reads the file from disk
+  * once. An unknown or missing command throws an IllegalArgumentException
+  * carrying the usage line, and `rates --state` with a code not in the
+  * rate table throws one naming the code, so `main` exits non-zero.
   */
 object Cli {
   import tax.TextReport.{money, pct}
@@ -49,14 +51,21 @@ object Cli {
       .getOrElse(java.time.LocalDate.now())
     val outDir = arg(args, "output-dir").getOrElse("reports")
     val period = arg(args, "period").getOrElse("")
-    // the file commands' one input definition
-    lazy val txns = TaxCalc.normalize(TaxCalc.readCsv(spark,
-      file.getOrElse(sys.error("--file required"))))
+    // the file commands' one input, persisted on first use so each
+    // command reads its CSV from disk once; released after the command
+    var persisted: Option[DataFrame] = None
+    lazy val txns = {
+      val df = TaxCalc.normalize(TaxCalc.readCsv(spark,
+        file.getOrElse(sys.error("--file required"))))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      persisted = Some(df)
+      df
+    }
     // collected rows as a local relation: later plans read these rows
     // instead of evaluating their source again
     def local(rows: Array[Row], schema: StructType) =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    args.headOption match {
+    try args.headOption match {
       case Some("calculate") => file match {
         case Some(_) =>
           val taxed = TaxCalc.withTax(txns)
@@ -204,34 +213,32 @@ object Cli {
       // Full compliance report (cmd_report, cli.py:421-463): tax summary +
       // refund analysis rendered via format_text, optional JSON/CSV export.
       case Some("report") =>
-        val taxed = TaxCalc.withTax(txns).persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val taxRow = Reports.taxSummaryReport(taxed, period, asOf.toString).head()
-          println(TextReport.formatText(taxRow))
-          // withTax keeps one row per input row: its count is the reviewed count
-          val reviewed = taxRow.getAs[Row]("summary").getAs[Long]("total_transactions")
-          val refundRow = Reports.refundReport(Refunds.overpayments(txns, asOf),
-            reviewed, asOf.toString).head()
-          val anyOverpayment = refundRow.getAs[Row]("summary").getAs[Long]("overpayments_found") > 0
-          if (anyOverpayment) println(TextReport.formatText(refundRow))
-          arg(args, "export-json").foreach { name =>
-            Reports.writeJson(local(Array(taxRow), taxRow.schema), s"$outDir/tax_$name")
-            if (anyOverpayment)
-              Reports.writeJson(local(Array(refundRow), refundRow.schema), s"$outDir/refund_$name")
-            println("Reports exported.")
-          }
-          arg(args, "export-csv").foreach { name =>
-            Reports.writeCsv(Reports.taxSummaryFlat(taxed)
-              .filter(col("section") === "state").drop("section"),
-              s"$outDir/tax_$name")
-            Reports.exportTransactionDetails(taxed, s"$outDir/details_$name")
-            println("CSV exported.")
-          }
-        } finally taxed.unpersist(blocking = false)
+        val taxed = TaxCalc.withTax(txns)
+        val taxRow = Reports.taxSummaryReport(taxed, period, asOf.toString).head()
+        println(TextReport.formatText(taxRow))
+        // withTax keeps one row per input row: its count is the reviewed count
+        val reviewed = taxRow.getAs[Row]("summary").getAs[Long]("total_transactions")
+        val refundRow = Reports.refundReport(Refunds.overpayments(txns, asOf),
+          reviewed, asOf.toString).head()
+        val anyOverpayment = refundRow.getAs[Row]("summary").getAs[Long]("overpayments_found") > 0
+        if (anyOverpayment) println(TextReport.formatText(refundRow))
+        arg(args, "export-json").foreach { name =>
+          Reports.writeJson(local(Array(taxRow), taxRow.schema), s"$outDir/tax_$name")
+          if (anyOverpayment)
+            Reports.writeJson(local(Array(refundRow), refundRow.schema), s"$outDir/refund_$name")
+          println("Reports exported.")
+        }
+        arg(args, "export-csv").foreach { name =>
+          Reports.writeCsv(Reports.taxSummaryFlat(taxed)
+            .filter(col("section") === "state").drop("section"),
+            s"$outDir/tax_$name")
+          Reports.exportTransactionDetails(taxed, s"$outDir/details_$name")
+          println("CSV exported.")
+        }
 
       case other =>
         throw new IllegalArgumentException(s"unknown command: ${other.getOrElse("<none>")}; " +
           "usage: calculate|rates|compliance|refund|report [options]")
-    }
+    } finally persisted.foreach(_.unpersist(blocking = false))
   }
 }

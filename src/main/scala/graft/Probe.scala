@@ -38,7 +38,7 @@ import org.apache.spark.storage.StorageLevel
   *    join eliminated) — where `Dataset.count()` would time less work
   *    than the declared query. Plan-only.
   *  - `cache-audit`: persist the shared frames, run every named (default:
-  *    every declared) query once — accumulating each `CacheScope.Session`
+  *    every declared) query once — accumulating each session-lifetime
   *    persist the library takes — then print each cached RDD's
   *    memory/disk footprint and the session totals. */
 object Probe {

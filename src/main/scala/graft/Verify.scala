@@ -35,6 +35,9 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, Option.empty[Set[String]])
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case _ => throw new IllegalArgumentException(
+        s"expected 2 or 3 arguments, got ${args.length}; " +
+          "usage: graft.Verify <sfDir> <outDir> [query,query,...]")
     }
     val spark = GraftSession("graft-verify")
     new java.io.File(outDir).mkdirs()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Event-log analytics: ordered funnels, cohort retention, latest-record
   * compaction, and calendar gap-fill — the standard product-analytics
@@ -206,17 +207,17 @@ object EventOps {
     * exactly W; both distincts and the final counts are hash aggregates
     * with map-side partials; output is bounded by the calendar span. The
     * active frame feeds three consumers (cover, bounds, daily) — persisted
-    * via [[graft.ops.CacheScope]], Spark plans having no common-subtree
-    * elimination. */
+    * for the session, Spark plans having no common-subtree elimination; a
+    * caller that sweeps many event logs frees it with
+    * `spark.catalog.clearCache()`. */
   def rollingActives(events: DataFrame, userCol: String = "user_id",
-      tsCol: String = "ts", windowDays: Int = 7,
-      scope: CacheScope = CacheScope.Session): DataFrame = {
+      tsCol: String = "ts", windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, "windowDays must be positive")
     val dayNs = 86400L * 1000L * 1000L * 1000L
-    val active = scope.persist(events
+    val active = events
       .select(col(userCol).as("user_id"),
         expr(s"`$tsCol` div ${dayNs}L").as("day"))
-      .distinct())
+      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     val cover = active
       .select(col("user_id"), explode(sequence(col("day"),
         col("day") + lit((windowDays - 1).toLong))).as("day"))

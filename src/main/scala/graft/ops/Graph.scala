@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.storage.StorageLevel
 
 /** DataFrame-native graph analytics over edge lists — the relational
   * formulation (joins + aggregates) that scales with Spark's shuffle
@@ -70,8 +71,7 @@ object Graph {
     * broadcast, AQE falls back to shuffle joins keyed on u / w and the
     * plan still never materializes wedges. Out-degrees are capped by the degree
     * orientation (≤ √(2E)), bounding every intersect. */
-  def triangleCountAdj(edges: DataFrame,
-      scope: CacheScope = CacheScope.Session): DataFrame = {
+  def triangleCountAdj(edges: DataFrame): DataFrame = {
     val e = edges.select("x", "y")
     val deg = e.select(col("x").as("v")).unionByName(e.select(col("y").as("v")))
       .groupBy("v").agg(count(lit(1)).as("dg"))
@@ -84,10 +84,10 @@ object Graph {
     // pre-partitioned on u (the [[pageRank]] adjacency discipline): the
     // cached partitioning serves the neighbor-array groupBy AND the first
     // probe join exchange-free; only the w-keyed close join re-exchanges
-    val oriented = scope.persist(keyed.select(
+    val oriented = keyed.select(
       least(col("kx"), col("ky")).as("u"),
       greatest(col("kx"), col("ky")).as("w"))
-      .repartition(col("u")))
+      .repartition(col("u")).persist(StorageLevel.MEMORY_AND_DISK)
     val nbrs = oriented.groupBy("u")
       .agg(sort_array(collect_list(col("w"))).as("ns"))
     // The w-keyed close join is the ONE exchange that must move neighbor
@@ -137,15 +137,13 @@ object Graph {
     * `(v, rank_fp)` — TakeOrderedAndProject, never a global sort.
     *
     * Caching: the degree and adjacency persists (two longs per vertex +
-    * three longs per directed edge) live for the session under the
-    * default [[CacheScope.Session]] — the documented library trade, and
-    * measured harmless at the catalog's own budget (PLANS.md round-9
-    * audit: all session persists together are ~0.2% of the heap). A
-    * caller sweeping MANY DISTINCT graphs in one long-lived session
-    * should pass its own scope and `unpersistAll()` between graphs, as
-    * the triangle ops' scaladoc prescribes. */
-  def pageRank(edges: DataFrame, iterations: Int = 2, topK: Int = 20,
-      scope: CacheScope = CacheScope.Session): DataFrame = {
+    * three longs per directed edge) stay persisted for the session — the
+    * library's one cache lifetime, measured harmless at the catalog's own
+    * budget (PLANS.md round-9 audit: all session persists together are
+    * ~0.2% of the heap). A caller sweeping MANY DISTINCT graphs in one
+    * long-lived session frees them with `spark.catalog.clearCache()`
+    * between graphs. */
+  def pageRank(edges: DataFrame, iterations: Int = 2, topK: Int = 20): DataFrame = {
     require(iterations >= 1 && iterations <= 10, "iterations must be in [1, 10]")
     val Scale = 1000000000000L
     val sym = edges.select(col("x").as("s"), col("y").as("d"))
@@ -153,7 +151,8 @@ object Graph {
     // deg feeds the vertex-count action AND the adjacency join — persist
     // (vertex-count-bounded, two longs per vertex) so the count action
     // reads cache instead of re-aggregating the edge list
-    val deg = scope.persist(sym.groupBy("s").agg(count(lit(1)).as("dg")))
+    val deg = sym.groupBy("s").agg(count(lit(1)).as("dg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // the degree-annotated adjacency appears once PER UNROLLED ITERATION
     // in the final lazy plan (iteration i's plan nests iteration i-1's) —
     // persist it so the symmetrize + degree join runs once, not
@@ -164,7 +163,8 @@ object Graph {
     // re-exchanges only the (vertex-sized) rank frame, never the edge-
     // sized adjacency (round-18 plan audit: the unpartitioned cache was
     // re-exchanged once per iteration).
-    val adj = scope.persist(sym.join(deg, "s").repartition(col("s")))
+    val adj = sym.join(deg, "s").repartition(col("s"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val n = deg.count() // one bounded action: the vertex count scalar
     require(n > 0, "pageRank needs a non-empty edge list")
     val base = (Scale * 15L / 100L) / n
@@ -206,13 +206,13 @@ object Graph {
     * hub mitigation belongs upstream in the edge builder (the
     * [[cooccurrenceEdges]] group-size note). The symmetrized edge list
     * appears in every unrolled round of the final lazy plan, so it is
-    * persisted under `scope` exactly like [[pageRank]]'s adjacency (two
+    * persisted for the session exactly like [[pageRank]]'s adjacency (two
     * ids per directed edge) — without it the edge build re-runs per
     * round. For integral ids, one eager min/max action over that persisted
     * edge list runs at call time, before any result action: it picks the
     * packed-long or the struct argmax path. */
   def labelPropagation(edges: DataFrame, rounds: Int = 3,
-      topK: Int = 100, scope: CacheScope = CacheScope.Session): DataFrame = {
+      topK: Int = 100): DataFrame = {
     require(rounds >= 1 && rounds <= 8, "labelPropagation: rounds in [1, 8]")
     require(topK >= 1, "labelPropagation: topK must be positive")
     // pre-partitioned on the join key, like [[pageRank]]'s adjacency: the
@@ -220,10 +220,10 @@ object Graph {
     // only the vertex-sized label frame re-exchanges per round (the
     // round-18 plan audit found the unpartitioned cache re-exchanged its
     // edge-sized rows every round)
-    val sym = scope.persist(
+    val sym =
       edges.select(col("x").as("s"), col("y").as("d"))
         .unionByName(edges.select(col("y").as("s"), col("x").as("d")))
-        .repartition(col("s")))
+        .repartition(col("s")).persist(StorageLevel.MEMORY_AND_DISK)
     var labels = sym.select(col("s").as("v")).distinct()
       .withColumn("lbl", col("v"))
     // Labels can only ever be vertex ids (round 0 sets lbl = v; every

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -17,14 +18,14 @@ import org.apache.spark.sql.types._
   * Persistence contract: [[minhashPairs]], [[jaccardPairs]] and
   * [[contamination]] persist a narrow intermediate (the signature table /
   * exploded shingle index) that the returned lazy frame reads more than
-  * once, and deliberately do NOT unpersist it by default — the result would
+  * once, and deliberately do NOT unpersist it — the result would
   * recompute the expensive narrow stage on every downstream action. Spark's
   * CacheManager dedupes identical plans, so repeated calls over the same
-  * input reuse one cache entry. Callers sweeping MANY DISTINCT corpora in
-  * one session pass their own [[graft.ops.CacheScope]] and call
-  * `scope.unpersistAll()` after consuming each result, so cached
-  * intermediates are released instead of accumulating until executor
-  * storage evicts under pressure.
+  * input reuse one cache entry. Library intermediates stay persisted for
+  * the session; a caller that sweeps MANY DISTINCT corpora in one session
+  * frees them with `spark.catalog.clearCache()` after consuming each
+  * result, so they do not accumulate until executor storage evicts under
+  * pressure.
   */
 object Dedup {
   /** LSH banding of the 64-hash signature
@@ -222,8 +223,7 @@ object Dedup {
     * aggregates per miner plus one star-edge-sized verify join. */
   def bandStats(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", maxBucket: Int = MaxBandBucket,
-      minAgree: Int = 20, maxHamming: Int = 3,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      minAgree: Int = 20, maxHamming: Int = 3): DataFrame = {
     def report(miner: String, buckets: DataFrame,
         keyCols: Seq[String]): DataFrame =
       buckets.groupBy(keyCols.map(col): _*)
@@ -256,9 +256,10 @@ object Dedup {
         sum(when(verified, 1L).otherwise(0L)).as("n_star_verified"))
         .select(col("n_star_edges"),
           coalesce(col("n_star_verified"), lit(0L)).as("n_star_verified"))
-    val sigs = scope.persist(docs
+    val sigs = docs
       .withColumn("sig", minhashSignaturePortable(col(textCol)))
-      .select(col(idCol).as("sid"), col("sig")))
+      .select(col(idCol).as("sid"), col("sig"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val mh = bandedSigs(sigs.select(col("sid").as("id"), col("sig")))
     val mhStars = starCounts(
       starEdges(mh, Seq("band", "band_hash"))
@@ -269,8 +270,9 @@ object Dedup {
             (x, y) => when(x === y, 1).otherwise(0)), lit(0),
             (acc, v) => acc + v)),
       col("n_agree") >= minAgree)
-    val shSigs = scope.persist(withSimhash(docs, textCol)
-      .select(col(idCol).as("id"), col("simhash")))
+    val shSigs = withSimhash(docs, textCol)
+      .select(col(idCol).as("id"), col("simhash"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val sh = shSigs
       .select(col("id"),
         explode(array((0 until 4).map(b => struct(lit(b).as("bd"),
@@ -292,15 +294,15 @@ object Dedup {
     * Signatures are [[minhashSignaturePortable]]'s, DuckDB-reproducible. */
   def minhashPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", minAgree: Int = 32,
-      maxBucket: Int = MaxBandBucket,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      maxBucket: Int = MaxBandBucket): DataFrame = {
     // Persist the (id, sig) table: it feeds the band join twice and the
     // verify join twice — without it the signature aggregate (the expensive
     // narrow stage) runs 3-4×. Size is id + 64 longs per doc — tiny
     // relative to the corpus, safe to persist at any scale.
-    val sigs = scope.persist(docs
+    val sigs = docs
       .withColumn("sig", minhashSignaturePortable(col(textCol)))
-      .select(col(idCol).as("sid"), col("sig")))
+      .select(col(idCol).as("sid"), col("sig"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     lshCandidatesFromSigs(sigs.select(col("sid").as("id"), col("sig")), maxBucket)
       .join(sigs.select(col("sid").as("a"), col("sig").as("sig_a")), "a")
       .join(sigs.select(col("sid").as("b"), col("sig").as("sig_b")), "b")
@@ -342,15 +344,15 @@ object Dedup {
     * the star — pass `Int.MaxValue` for the exact form. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       textCol: String = "text", idCol: String = "doc_id",
-      maxBucket: Int = MaxBandBucket,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      maxBucket: Int = MaxBandBucket): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       "4x15-bit banding guarantees recall only for maxHamming <= 3; and " +
         "only for pairs whose shared bucket is <= maxBucket — consult " +
         "bandStats' n_overcap_buckets/star-edge columns before trusting " +
         "recall on a corpus with over-cap buckets")
-    val sh = scope.persist(withSimhash(docs, textCol)
-      .select(col(idCol).as("id"), col("simhash")))
+    val sh = withSimhash(docs, textCol)
+      .select(col(idCol).as("id"), col("simhash"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val banded = sh.select(col("id"),
         explode(array((0 until 4).map(b => struct(lit(b).as("bd"),
           shiftrightunsigned(col("simhash"), 15 * b)
@@ -369,11 +371,18 @@ object Dedup {
     * (a, b, inter, union) with 2*inter ≥ union (Jaccard ≥ 1/3 kept,
     * caller filters tighter). Hub shingles are capped to bound the join
     * (a shingle shared by > maxDf docs is dropped — standard inverted-
-    * index trick; at 100 TB this is what keeps the op near-linear). */
+    * index trick; at 100 TB this is what keeps the op near-linear).
+    *
+    * `maxDf` bounds the pair join, not the document-frequency count:
+    * the df comes from a count window partitioned by shingle, so every
+    * row of a hub shingle passes through ONE window buffer, in one task,
+    * before the `maxDf` filter drops it. The buffer spills to disk past
+    * `spark.sql.windowExec.buffer.spill.threshold` rows, so a hub costs
+    * disk and one task's time, not heap; the op assumes no shingle's
+    * posting list is a large share of the corpus. */
   def jaccardPairs(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxDf: Int = 100,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame =
-    shingleIntersections(docs, textCol, idCol, maxDf, scope)
+      idCol: String = "doc_id", maxDf: Int = 100): DataFrame =
+    shingleIntersections(docs, textCol, idCol, maxDf)
       .withColumn("union_n", col("na") + col("nb") - col("inter"))
       .filter(col("inter") * 2 >= col("union_n"))
       .select("a", "b", "inter", "union_n")
@@ -384,17 +393,19 @@ object Dedup {
     * or below. Keeps pairs where `inter / min(n_a, n_b) ≥ minPermille/1000`
     * (threshold multiplicative — integer-only; the reported containment is
     * ONE exact-int division). Same de-hubbed inverted index, same maxDf
-    * cap, same O(collisions) bound as [[jaccardPairs]].
+    * cap, same O(collisions) bound as [[jaccardPairs]], and the same
+    * hub-size assumption: each hub shingle's rows pass through one window
+    * buffer (spilling past `spark.sql.windowExec.buffer.spill.threshold`)
+    * before the `maxDf` filter drops them.
     *
     * Scale: identical posture to [[jaccardPairs]] — the two ops share the
     * [[shingleIntersections]] core, so running both against the same
     * corpus reuses the persisted index via plan-identity caching. */
   def containmentPairs(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxDf: Int = 100, minPermille: Int = 800,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      idCol: String = "doc_id", maxDf: Int = 100, minPermille: Int = 800): DataFrame = {
     require(minPermille >= 1 && minPermille <= 1000,
       "minPermille must be in [1, 1000]")
-    shingleIntersections(docs, textCol, idCol, maxDf, scope)
+    shingleIntersections(docs, textCol, idCol, maxDf)
       .filter(col("inter") * 1000 >= least(col("na"), col("nb")) * minPermille)
       .select(col("a"), col("b"), col("inter"),
         col("na").cast(LongType).as("na"), col("nb").cast(LongType).as("nb"),
@@ -406,8 +417,7 @@ object Dedup {
     * inverted shingle index → per-pair intersection counts with both
     * docs' distinct-shingle counts carried through the aggregation. */
   private def shingleIntersections(docs: DataFrame, textCol: String,
-      idCol: String, maxDf: Int,
-      scope: graft.ops.CacheScope): DataFrame = {
+      idCol: String, maxDf: Int): DataFrame = {
     // Per-doc distinct-shingle count rides ALONG the exploded index (size
     // of the shingle array, same narrow map), so there is no per-doc counts
     // aggregation and no (a)/(b) count joins downstream — two fewer
@@ -430,9 +440,10 @@ object Dedup {
     // exchange and NO sort on either side. Rows are narrow (two longs + a
     // ~25-byte shingle), O(collisions) join bound unchanged.
     val w = Window.partitionBy("s")
-    val filtered = scope.persist(
+    val filtered =
       sh.withColumn("_df", count(lit(1)).over(w))
-        .filter(col("_df") <= maxDf).drop("_df"))
+        .filter(col("_df") <= maxDf).drop("_df")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val inter = filtered.select(col("s"), col("id").as("a"), col("n_sh").as("na"))
       .join(filtered.select(col("s"), col("id").as("b"), col("n_sh").as("nb")), "s")
       .filter(col("a") < col("b"))
@@ -465,19 +476,17 @@ object Dedup {
     * Persistence contract: the returned labels frame is backed by a LOCAL
     * CHECKPOINT (lineage-free persisted RDD blocks — see the storage note
     * in the body), so downstream actions scan materialized blocks without
-    * any recompute; pass a [[graft.ops.CacheScope]] to have the blocks
-    * released with the corpus's working set (`scope.unpersistAll()` /
-    * `CacheScope.releaseCorpus` — the per-corpus sweep pattern; under the
-    * default Session scope they live for the session). All per-round
+    * any recompute. Those blocks live for the session: they are no
+    * CacheManager entry, so `spark.catalog.clearCache()` (which frees the
+    * library's other intermediates) leaves them in place. All per-round
     * intermediates and the edge list are freed here. The fixpoint runs AT
     * CALL TIME (driver-synchronized rounds), so callers deriving several
     * reports from one clustering — survivors, cluster sizes,
     * best-survivor argmax — should call this once and reuse the returned
     * frame, not re-call per report. */
   def components(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
-      maxIters: Int = 20,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame =
-    componentsWithStats(pairs, aCol, bCol, maxIters, scope).labels
+      maxIters: Int = 20): DataFrame =
+    componentsWithStats(pairs, aCol, bCol, maxIters).labels
 
   /** Result of [[componentsWithStats]]: final labels + convergence info. */
   final case class ComponentsResult(labels: DataFrame, rounds: Int,
@@ -485,8 +494,7 @@ object Dedup {
 
   /** [[components]] with the round count and convergence flag exposed. */
   def componentsWithStats(pairs: DataFrame, aCol: String = "a",
-      bCol: String = "b", maxIters: Int = 20,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): ComponentsResult = {
+      bCol: String = "b", maxIters: Int = 20): ComponentsResult = {
     // ITERATION STORAGE: per-round LOCAL CHECKPOINTS, not cache entries.
     // Spark's CacheManager re-compiles (and drops the materialized blocks
     // of) every cached entry whose plan references an entry being
@@ -544,10 +552,7 @@ object Dedup {
         s"be split. Raise maxIters for long-chain graphs.")
     edges.unpersist()
     // the result is a projection of the final checkpoint — lineage-free,
-    // so later unpersists can't invalidate it; the scope's deferred
-    // release frees the checkpoint blocks with the corpus's working set
-    val finalCk = ck
-    scope.defer(() => CheckpointBridge.release(finalCk))
+    // so later unpersists can't invalidate it
     ComponentsResult(
       labels.select(col("id").as("doc_id"), col("label").as("cluster_id")),
       iters, converged)
@@ -664,15 +669,14 @@ object Dedup {
     * [[graft.ops.Sampling.tokenBudgetMix]] pattern) — no eager count()
     * action, so the whole sweep is ONE job. */
   def minhashSweep(docs: DataFrame, thresholds: Seq[Int],
-      textCol: String = "text", idCol: String = "doc_id",
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(thresholds.nonEmpty, "thresholds must be non-empty")
     require(thresholds == thresholds.sorted && thresholds.distinct == thresholds,
       "thresholds must be strictly ascending")
     val spark = docs.sparkSession
     val nDocs = docs.agg(count(lit(1)).as("_n_docs"))
     val pairs = minhashPairs(docs, textCol, idCol,
-      minAgree = thresholds.head, scope = scope)
+      minAgree = thresholds.head)
     val hits = pairs
       .select(col("b"),
         explode(array(thresholds.map(t => lit(t)): _*)).as("min_agree"),
@@ -737,12 +741,12 @@ object Dedup {
     * of train docs. */
   def contamination(train: DataFrame, bench: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
-      minOverlap: Int = 5, maxDf: Int = 100,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      minOverlap: Int = 5, maxDf: Int = 100): DataFrame = {
     // persisted for the same reason as jaccardPairs' index: the exploded
     // train shingles feed the df-count aggregate AND the probe join
-    val tSh = scope.persist(train.select(col(idCol).as("train_id"),
-      explode(shingles(col(textCol))).as("s")))
+    val tSh = train.select(col(idCol).as("train_id"),
+      explode(shingles(col(textCol))).as("s"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val tIdx = tSh.join(
       tSh.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") <= maxDf)
         .select("s"), "s")

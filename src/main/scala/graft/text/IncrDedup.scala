@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Incremental-corpus near-dup dedup — the recurring-ingest shape a real
   * 100 TB pipeline runs daily: dedup a NEW batch (crawl snapshot) against
@@ -145,14 +146,14 @@ object IncrDedup {
     */
   def dedupAgainst(spark: SparkSession, newBatch: DataFrame, path: String,
       textCol: String = "text", idCol: String = "doc_id",
-      minAgree: Int = 20,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): Result = {
+      minAgree: Int = 20): Result = {
     val histSigs = spark.read.parquet(s"$path/sigs")
     val histBands = spark.read.parquet(s"$path/bands")
     // persisted: feeds its band explode, two verify joins, and the final
     // decisions join — the expensive narrow stage must run once (the same
     // contract as Dedup.minhashPairs' signature table)
-    val newSigs = scope.persist(signatures(newBatch, textCol, idCol))
+    val newSigs = signatures(newBatch, textCol, idCol)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val newBands = bandTable(newSigs)
 
     // loud guard, not silent wrong answers: min-id survivor semantics need

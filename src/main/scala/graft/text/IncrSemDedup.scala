@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Incremental SEMANTIC dedup — the embedding-side twin of [[IncrDedup]],
   * completing the recurring-ingest pair (MinHash text side / cosine
@@ -98,14 +99,14 @@ object IncrSemDedup {
     * ([[graft.functions.CosineSim]] — fused accumulation order, mirrored
     * in the oracle, so the threshold compare is bit-stable). */
   def dedupAgainst(spark: SparkSession, newBatch: DataFrame, path: String,
-      model: Ivf.Model, minCos: Double,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): Result = {
+      model: Ivf.Model, minCos: Double): Result = {
     // persisted: feeds the guard aggregate, the cell collect, both join
     // sides, and the decisions join — and materializing it keeps the
     // CodegenFallback centroid argmax out of the join stage (the
     // op_knn_graph codegen lesson)
-    val assigned = scope.persist(Ivf.assign(newBatch, model)
-      .select(col("vec_id"), col("ivf_cell"), col("embedding")))
+    val assigned = Ivf.assign(newBatch, model)
+      .select(col("vec_id"), col("ivf_cell"), col("embedding"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val store = spark.read.parquet(path)
     // loud guard, not silent wrong answers: smaller-id survivorship needs

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.storage.StorageLevel
 
 /** Product quantization (PQ) — the compressed-domain ANN tier beside brute
   * force (exact), sign-LSH (hash buckets) and IVF (cell pruning): the
@@ -91,15 +92,16 @@ object Pq {
     * the code store is read cell-partitioned (bucket by `ivf_cell` at
     * write time) so a probe touches only its cells' files. */
   def searchTopKIvf(corpus: DataFrame, queries: DataFrame, ivf: Ivf.Model,
-      pq: Model, k: Int, nprobe: Int,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      pq: Model, k: Int, nprobe: Int): DataFrame = {
     // the code table persists for the same reasons as in [[searchTopK]] —
     // it IS the stored index, and unpersisted its encode expressions can
     // be re-planned into the join output path
-    val codes = scope.persist(encode(Ivf.assign(corpus, ivf), pq)
+    val codes = encode(Ivf.assign(corpus, ivf), pq)
       .select(col("ivf_cell") +: col("vec_id").as("neighbor_id") +:
-        (0 until pq.m).map(b => col(codeCol(b))): _*))
-    adcTopK(scope.persist(probeLuts(queries, ivf, pq, nprobe)), codes, pq, k)
+        (0 until pq.m).map(b => col(codeCol(b))): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    adcTopK(probeLuts(queries, ivf, pq, nprobe)
+      .persist(StorageLevel.MEMORY_AND_DISK), codes, pq, k)
   }
 
   /** Per-query probe frame carrying the per-block ADC LUTs: q_id × nprobe
@@ -159,9 +161,9 @@ object Pq {
     * identical to [[searchTopKIvf]] on the same corpus/models. */
   def searchTopKIvfStore(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, ivf: Ivf.Model, pq: Model, k: Int,
-      nprobe: Int,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
-    val probed = scope.persist(probeLuts(queries, ivf, pq, nprobe))
+      nprobe: Int): DataFrame = {
+    val probed = probeLuts(queries, ivf, pq, nprobe)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // distinct probed cells: bounded by the centroid count C (kilobytes),
     // collected so the cell restriction is a LITERAL predicate on the
     // partition column — static directory pruning, no join needed to
@@ -179,8 +181,7 @@ object Pq {
     * via the bounded-heap [[graft.ops.TopK]] operator like every ANN path
     * here. Scores are ADC approximations of the dot product (not cosine) —
     * rank quality, not metric parity, is the contract. */
-  def searchTopK(corpus: DataFrame, queries: DataFrame, model: Model, k: Int,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+  def searchTopK(corpus: DataFrame, queries: DataFrame, model: Model, k: Int): DataFrame = {
     // Persist the code table: it is the STORED index in a real PQ
     // deployment (encode once, scan codes many times), it is tiny
     // (id + m small ints per vector — the whole point of PQ), and the
@@ -188,11 +189,12 @@ object Pq {
     // it, AQE's runtime re-planning of the scored stage can inline the
     // m×ksub encode dots into the join OUTPUT projection — measured
     // 260 s vs 3.4 s at the ×10 probe (the dots re-ran per candidate,
-    // not per vector). Same CacheScope release contract as the dedup
-    // families.
-    val codes = scope.persist(encode(corpus, model)
+    // not per vector). Session-lifetime persist, like the dedup
+    // families'.
+    val codes = encode(corpus, model)
       .select(col("vec_id").as("neighbor_id") +:
-        (0 until model.m).map(b => col(codeCol(b))): _*))
+        (0 until model.m).map(b => col(codeCol(b))): _*)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val q = (0 until model.m).foldLeft(
       queries.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))) {
       (acc, b) =>

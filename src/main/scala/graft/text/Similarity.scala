@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Approximate-nearest-neighbor search over an `Array[Float]` embedding
   * column.
@@ -337,9 +338,9 @@ object Similarity {
   /** Distinct candidate id-pairs from the multi-table bucket self-join
     * (`left` < `right` when `ordered`, `left` ≠ `right` otherwise). */
   private def candidatePairs(corpus: DataFrame, nTables: Int,
-      planesPerTable: Int, maxBucket: Int, ordered: Boolean,
-      scope: graft.ops.CacheScope): DataFrame = {
-    val b = scope.persist(bucketed(corpus, nTables, planesPerTable, maxBucket))
+      planesPerTable: Int, maxBucket: Int, ordered: Boolean): DataFrame = {
+    val b = bucketed(corpus, nTables, planesPerTable, maxBucket)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val l = b.select(col("tbl"), col("bkt"), col("vec_id").as("left"))
     val r = b.select(col("tbl"), col("bkt"), col("vec_id").as("right"))
     val pairCond = if (ordered) col("left") < col("right")
@@ -374,13 +375,13 @@ object Similarity {
     * at fixed planes the within-bucket candidate cost grows with n² (a 10×
     * corpus at 8 planes measured ~50× the candidate pairs).
     *
-    * `scope`: release handle for the internal bucket-table persist. */
+    * The internal bucket table stays persisted for the session; a caller
+    * that sweeps many corpora frees it with `spark.catalog.clearCache()`. */
   def lshTopK(corpus: DataFrame, k: Int, nTables: Int = 4,
       planesPerTable: Int = 8, maxBucket: Int = 512,
-      queries: Option[DataFrame] = None,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      queries: Option[DataFrame] = None): DataFrame = {
     val all = candidatePairs(corpus, nTables, planesPerTable, maxBucket,
-      ordered = false, scope)
+      ordered = false)
       .select(col("left").as("q_id"), col("right").as("neighbor_id"))
     val cand = queries.fold(all)(q =>
       all.join(q.select(col("vec_id").as("q_id")), Seq("q_id"), "left_semi"))
@@ -438,8 +439,7 @@ object Similarity {
     * (|thresholds| is a handful), and two bounded aggregates finish. The
     * sweep costs one dedup pass, not |thresholds| passes. */
   def semDedupSweep(corpus: DataFrame, model: Ivf.Model,
-      thresholds: Seq[Double],
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      thresholds: Seq[Double]): DataFrame = {
     require(thresholds.nonEmpty, "thresholds must be non-empty")
     require(thresholds == thresholds.sorted && thresholds.distinct == thresholds,
       "thresholds must be strictly ascending")
@@ -447,8 +447,9 @@ object Similarity {
     // corpus total rides the plan as a cross-joined 1-row aggregate (the
     // tokenBudgetMix pattern) — no eager count() action, ONE job
     val nVecs = corpus.agg(count(lit(1)).as("_n_vecs"))
-    val assigned = scope.persist(Ivf.assign(corpus, model)
-      .select(col("vec_id"), col("ivf_cell"), col("embedding")))
+    val assigned = Ivf.assign(corpus, model)
+      .select(col("vec_id"), col("ivf_cell"), col("embedding"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val l = assigned.select(col("ivf_cell"), col("vec_id").as("a"),
       col("embedding").as("a_emb"))
     val r = assigned.select(col("ivf_cell"), col("vec_id").as("b"),
@@ -489,7 +490,7 @@ object Similarity {
     * needed the bounded-heap TopK operator). Vectors alone in their cell
     * emit no rows (no neighbors at nprobe=1 — widen C/probes to trade).
     *
-    * The assigned frame is PERSISTED (`scope`): [[Ivf.assign]]'s HOF
+    * The assigned frame is PERSISTED (session lifetime): [[Ivf.assign]]'s HOF
     * centroid scoring is CodegenFallback, and feeding it unmaterialized
     * into the self-join poisons whole-stage codegen for the entire
     * join+cosine+top-k stage — measured 4.1 s vs 0.6 s at sf0.1 (the
@@ -497,11 +498,11 @@ object Similarity {
     * nothing survives its threshold; the rank path materializes every
     * scored pair). Caching the tiny (id, cell, emb) frame restores
     * codegen downstream AND halves the double assign evaluation. */
-  def knnGraph(corpus: DataFrame, model: Ivf.Model, k: Int,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+  def knnGraph(corpus: DataFrame, model: Ivf.Model, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    val assigned = scope.persist(Ivf.assign(corpus, model)
-      .select(col("vec_id"), col("ivf_cell"), col("embedding")))
+    val assigned = Ivf.assign(corpus, model)
+      .select(col("vec_id"), col("ivf_cell"), col("embedding"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val l = assigned.select(col("ivf_cell"), col("vec_id").as("q"),
       col("embedding").as("q_emb"))
     val r = assigned.select(col("ivf_cell"), col("vec_id").as("n"),
@@ -588,10 +589,9 @@ object Similarity {
     * voting is a (vec, label)-bounded aggregate and the per-vector argmax
     * rides the bounded-heap [[graft.ops.TopK.perKey]], never a window. */
   def knnClassify(corpus: DataFrame, model: Ivf.Model, k: Int,
-      labelCol: String = "label",
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      labelCol: String = "label"): DataFrame = {
     val g = knnGraph(corpus.select(col("vec_id"), col("embedding")),
-      model, k, scope)
+      model, k)
     val votes = g
       .join(corpus.select(col("vec_id").as("neighbor_id"),
         col(labelCol).cast(LongType).as("_nl")), "neighbor_id")
@@ -609,10 +609,9 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs above a similarity threshold,
     * via the multi-table LSH buckets (each unordered pair once). */
   def nearDupPairs(corpus: DataFrame, minCos: Double, nTables: Int = 4,
-      planesPerTable: Int = 8, maxBucket: Int = 512,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      planesPerTable: Int = 8, maxBucket: Int = 512): DataFrame = {
     val cand = candidatePairs(corpus, nTables, planesPerTable, maxBucket,
-      ordered = true, scope)
+      ordered = true)
       .select(col("left").as("a"), col("right").as("b"))
     withEmb(withEmb(cand, "a", "a_emb", corpus), "b", "b_emb", corpus)
       .withColumn("cos", cosine(col("a_emb"), col("b_emb")))

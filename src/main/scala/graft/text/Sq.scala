@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.storage.StorageLevel
 
 /** Scalar quantization (SQ8) — the SIMPLEST compressed-vector tier, beside
   * PQ's codebook compression: each dimension independently maps to an
@@ -129,16 +130,15 @@ object Sq {
     * heap top-k, never a corpus sort. */
   def searchTopKIvf(corpus: DataFrame, queries: DataFrame,
       ivf: Ivf.Model, k: Int, nprobe: Int,
-      embCol: String = "embedding", idCol: String = "vec_id",
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     val model = trainModel(corpus, embCol)
     // the cell-tagged reconstruction table IS the stored index — persist
     // (the Pq.searchTopKIvf contract: unpersisted, its encode expressions
     // re-plan into the join output path)
-    val cand = scope.persist(
+    val cand =
       decode(encode(Ivf.assign(corpus, ivf), model, embCol), model)
         .select(col("ivf_cell"), col(idCol).as("neighbor_id"),
-          col("_xr").as("_nxr")))
+          col("_xr").as("_nxr")).persist(StorageLevel.MEMORY_AND_DISK)
     val qRec = decode(encode(queries, model, embCol), model)
       .select(col(idCol).as("q_id"), col("_xr").as("_qxr"))
     // probe cells from the raw query embedding; the reconstructed query

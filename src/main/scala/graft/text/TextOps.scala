@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, document fingerprinting.
@@ -444,14 +445,13 @@ object TextOps {
   def substrRuns(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", w: Int = 5, minRun: Int = 20,
       maxDf: Int = 100,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session,
       pairBudget: Long = 2000000000L): DataFrame = {
     require(minRun >= w, "minRun must be at least the window width")
     require(pairBudget > 0, "substrRuns: pairBudget must be positive")
     // persisted: the exploded window table feeds the df-count aggregate
     // once and the pair self-join twice (the shingleIntersections contract)
-    val wins = scope.persist(
-      rollingWindows(docs, textCol, idCol, w).select("doc_id", "pos", "wh"))
+    val wins = rollingWindows(docs, textCol, idCol, w)
+      .select("doc_id", "pos", "wh").persist(StorageLevel.MEMORY_AND_DISK)
     // ENFORCED pair-mass contract (the round-16 ×100 OOM closure was
     // advisory — "run substrStats first"; this makes it code): the pair
     // join's EXACT input mass Σ_h (T_h² − Σ_d c_{h,d}²)/2 over kept
@@ -606,8 +606,7 @@ object TextOps {
     * back, one token-keyed join, one doc-keyed aggregate. The "model" is
     * the counts table itself; nothing corpus-sized sorts or windows. */
   def lmLogProb(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id",
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     // (doc, token) OCCURRENCE COUNTS as the shared base for the model
     // build AND the scoring join, PERSISTED (r18): the raw exploded
     // stream was rebuilt once per branch, and exchange reuse cannot
@@ -616,9 +615,10 @@ object TextOps {
     // Persisting the AGGREGATED pair frame instead of the raw stream
     // keeps the footprint at distinct (doc, token) pairs, and the
     // scoring join carries pairs, never raw occurrences.
-    val tokd = scope.persist(
+    val tokd =
       docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-        .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("_k")))
+        .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("_k"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = tokd.groupBy("tok").agg(sum("_k").as("_c"))
     val tot = counts.agg(sum("_c").as("_n_total"), count(lit(1)).as("_v"))
     val lp = floor((graft.ops.Sampling.portableLn(col("_c") + lit(1L)) -
@@ -652,13 +652,13 @@ object TextOps {
     * keyed on bigram, a broadcast 1-row total; shuffles carry distinct
     * bigrams / bigram occurrences, never per-doc buffers. */
   def bigramLogProb(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id",
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      idCol: String = "doc_id"): DataFrame = {
     // same persisted-pair-frame shape as [[lmLogProb]]: per-(doc, bigram)
     // occurrence counts feed both the model build and the scoring join
-    val bgd = scope.persist(
+    val bgd =
       docs.select(col(idCol), explode(bigrams(col(textCol))).as("bg"))
-        .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("_k")))
+        .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("_k"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = bgd.groupBy("bg").agg(sum("_k").as("_c"))
     val tot = counts.agg(sum("_c").as("_n_total"), count(lit(1)).as("_v"))
     val lp = floor((graft.ops.Sampling.portableLn(col("_c") + lit(1L)) -
@@ -699,9 +699,8 @@ object TextOps {
   def substrScrub(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", w: Int = 5, minRun: Int = 20,
       maxDf: Int = 100,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session,
       pairBudget: Long = 2000000000L): DataFrame = {
-    val runs = substrRuns(docs, textCol, idCol, w, minRun, maxDf, scope,
+    val runs = substrRuns(docs, textCol, idCol, w, minRun, maxDf,
       pairBudget)
     // a run's token span on the b side is [start_b, start_b+run_tokens-1];
     // identical intervals from different a-partners collapse pre-aggregate
@@ -1126,19 +1125,18 @@ object TextOps {
     * (x asc, y asc) — a total order, so the merge list (and therefore
     * every downstream byte) is deterministic cross-engine. */
   def bpeApply(docs: DataFrame, textCol: String = "text",
-      mergesPerRound: Int = 16, rounds: Int = 2, topK: Int = 100,
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session)
-      : DataFrame = {
+      mergesPerRound: Int = 16, rounds: Int = 2, topK: Int = 100): DataFrame = {
     require(mergesPerRound > 0, "mergesPerRound must be positive")
     require(rounds > 0, "rounds must be positive")
     require(topK > 0, "topK must be positive")
     // (word, freq) vocab — read by every round's pair count AND the final
-    // piece aggregate, so it persists under the caller's scope
-    val vocab = scope.persist(docs
+    // piece aggregate, so it persists for the session
+    val vocab = docs
       .select(explode(
         filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
           w => length(w) > 0)).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("freq")))
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // initial symbol string: chars of word || '_', '||'-guarded
     val sym0 = concat(lit("||"),
       array_join(transform(sequence(lit(1), length(col("word")) + 1),
@@ -1600,7 +1598,7 @@ object TextOps {
     * expression — the HOF formulation (char split → filter → slices →
     * zip_with concats → distinct) measured ~2.6 ms/doc interpreted,
     * 12.8 s at sf0.1; one primitive substring loop replaced it (the
-    * round-10 escalation rule). The trigram frame is PERSISTED (`scope`):
+    * round-10 escalation rule). The trigram frame is PERSISTED (session lifetime):
     * it feeds the profile build AND the probe stream, and caching it
     * keeps the downstream joins whole-stage-codegen (the op_knn_graph
     * lesson).
@@ -1613,16 +1611,16 @@ object TextOps {
     * the final argmax window is per doc over ≤ |langs| rows. */
   def ngramLangId(docs: DataFrame, profileK: Int = 300,
       textCol: String = "text", idCol: String = "doc_id",
-      langCol: String = "lang",
-      scope: graft.ops.CacheScope = graft.ops.CacheScope.Session): DataFrame = {
+      langCol: String = "lang"): DataFrame = {
     require(profileK >= 1, "profileK must be positive")
     val w = org.apache.spark.sql.expressions.Window
     // Persisting the trigram frame measured 8× (1.4 s vs 11.2 s at
     // sf0.1): both the profile build and the probe stream consume it, and
     // the cached flat arrays keep the fan-out stages short
-    val docTris = scope.persist(docs.select(col(idCol), col(langCol),
+    val docTris = docs.select(col(idCol), col(langCol),
       graft.functions.CharNgrams(
-        lower(regexp_replace(col(textCol), "\\s+", " ")), 3).as("_tris")))
+        lower(regexp_replace(col(textCol), "\\s+", " ")), 3).as("_tris"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = docTris
       .select(col(langCol).as("_plang"), explode(col("_tris")).as("_tri"))
       .groupBy("_plang", "_tri").agg(count(lit(1)).as("_cnt"))

@@ -60,19 +60,27 @@ class CliSpec extends SparkSpec {
       "\"period\":\"2024-Q1\",\"generated_date\":\"2026-08-12\","), json)
   }
 
-  test("compliance reads its CSV from disk once") {
+  test("each file command reads its CSV from disk once") {
     // Hadoop's `file`-scheme statistics count bytes read from disk, not
-    // from Spark's cache; the nexus table, the alerts and the export all
-    // read one collected activity relation
+    // from Spark's cache: every action after the first reads the
+    // persisted input
     def bytesRead = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
       .filter(_.getScheme == "file").map(_.getBytesRead).sum
-    val out = Files.createTempDirectory("graft_cli_compliance")
-    val before = bytesRead
-    runCapture("compliance", "--file", sampleCsv, "--registered", "CA,TX",
-      "--as-of", "2026-08-12", "--export-json", "nexus.json",
-      "--output-dir", out.toString)
-    val reads = (bytesRead - before).toDouble / Files.size(Path.of(sampleCsv))
-    assert(math.round(reads) == 1, s"read the CSV $reads times")
+    val out = Files.createTempDirectory("graft_cli_reads")
+    Seq(
+      Seq("calculate", "--file", sampleCsv, "--export-json", "calc.json"),
+      Seq("compliance", "--file", sampleCsv, "--registered", "CA,TX",
+        "--export-json", "nexus.json"),
+      Seq("refund", "--file", sampleCsv),
+      Seq("refund", "--file", sampleCsv, "--quick"),
+      Seq("report", "--file", sampleCsv, "--export-json", "report.json",
+        "--export-csv", "report.csv")
+    ).foreach { args =>
+      val before = bytesRead
+      runCapture(args ++ Seq("--as-of", "2026-08-12", "--output-dir", out.toString): _*)
+      val reads = (bytesRead - before).toDouble / Files.size(Path.of(sampleCsv))
+      assert(math.round(reads) == 1, s"${args.mkString(" ")} read the CSV $reads times")
+    }
   }
 
   test("an unknown or missing command throws with the usage line") {

@@ -44,4 +44,13 @@ class VerifySpec extends SparkSpec {
     assert(read(out, "op_throws_build").collect().head.getString(0)
       .contains("boom at plan build"))
   }
+
+  test("main with the wrong argument count throws with the usage line") {
+    // the throw comes before any session is built
+    Seq(Array.empty[String], Array("only-one"), Array("a", "b", "c", "d")).foreach { args =>
+      val e = intercept[IllegalArgumentException](Verify.main(args))
+      assert(e.getMessage.contains(s"got ${args.length}"))
+      assert(e.getMessage.contains("usage: graft.Verify <sfDir> <outDir>"))
+    }
+  }
 }

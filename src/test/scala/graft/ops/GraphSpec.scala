@@ -238,10 +238,8 @@ class GraphSpec extends SparkSpec {
 
   test("labelPropagation: the symmetrized edge build is persisted, appearing once across rounds") {
     import spark.implicits._
-    val scope = new CacheScope
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("x", "y")
-    val out = Graph.labelPropagation(edges, rounds = 3, topK = 10,
-      scope = scope)
+    val out = Graph.labelPropagation(edges, rounds = 3, topK = 10)
     // the final plan references the edge list only through
     // InMemoryTableScan nodes — the union-symmetrize subtree itself was
     // computed once into the cache, not unrolled per round
@@ -250,6 +248,6 @@ class GraphSpec extends SparkSpec {
       .split("== Initial Plan ==").head
     assert(plan.contains("InMemoryTableScan") ||
       plan.contains("TableCacheQueryStage"), plan)
-    scope.unpersistAll()
+    spark.catalog.clearCache()
   }
 }

@@ -53,10 +53,9 @@ class LayoutSpec extends SparkSpec {
     graft.text.Pq.writeCellStore(emb, ivf, pq, s"$dir/codes")
     val queries = emb.filter($"vec_id" % 25 === 0)
     val nprobe = 2
-    val scope = new CacheScope
     try {
       val res = graft.text.Pq.searchTopKIvfStore(spark, s"$dir/codes",
-        queries, ivf, pq, k = 5, nprobe = nprobe, scope = scope)
+        queries, ivf, pq, k = 5, nprobe = nprobe)
       // the probed-cell set this query is allowed to touch
       val probedCells = graft.text.Ivf.probeCells(queries, ivf, nprobe)
         .select("ivf_cell").distinct().collect().map(_.getInt(0)).toSet
@@ -65,7 +64,7 @@ class LayoutSpec extends SparkSpec {
       val store = res.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       val mem = graft.text.Pq.searchTopKIvf(emb, queries, ivf, pq, k = 5,
-        nprobe = nprobe, scope = scope)
+        nprobe = nprobe)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(store == mem)
       // executed plan: the store scan's selected partitions == probed cells
@@ -84,7 +83,7 @@ class LayoutSpec extends SparkSpec {
         "pruning must skip at least one existing cell directory")
       assert(res.queryExecution.executedPlan.toString
         .contains("PartitionFilters: [ivf_cell"))
-    } finally scope.unpersistAll()
+    } finally spark.catalog.clearCache()
   }
 
   test("identically bucketed tables join without an exchange") {

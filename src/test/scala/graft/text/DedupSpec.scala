@@ -372,12 +372,10 @@ class DedupSpec extends SparkSpec {
       (600L, "completely different content about spark distributed query engines"),
       (601L, "another unrelated document mentioning neither foxes nor rivers at all"))
     val corpus = (mega ++ rest).toDF("doc_id", "text")
-    val scope = new graft.ops.CacheScope
     try {
-      val capped = Dedup.minhashPairs(corpus, minAgree = 20,
-        scope = scope)
+      val capped = Dedup.minhashPairs(corpus, minAgree = 20)
       val exact = Dedup.minhashPairs(corpus, minAgree = 20,
-        maxBucket = Int.MaxValue, scope = scope)
+        maxBucket = Int.MaxValue)
       val nCapped = capped.count()
       val nExact = exact.count()
       assert(nExact >= 300L * 299 / 2, s"all-pairs form should be quadratic: $nExact")
@@ -390,7 +388,7 @@ class DedupSpec extends SparkSpec {
       val dc = dropSet(capped)
       assert(dc == dropSet(exact), "capped and exact CC drop-sets differ")
       assert(dc == ((101L to 399L).toSet + 501L), s"unexpected drop-set: ${dc.size}")
-    } finally scope.unpersistAll()
+    } finally spark.catalog.clearCache()
   }
 
   test("bandStats: over-cap accounting recomputes on the planted mega-cluster") {
@@ -399,9 +397,8 @@ class DedupSpec extends SparkSpec {
     val corpus = (mega ++ Seq(
       (600L, "completely different content about spark distributed query engines")))
       .toDF("doc_id", "text")
-    val scope = new graft.ops.CacheScope
     try {
-      val out = Dedup.bandStats(corpus, scope = scope).collect()
+      val out = Dedup.bandStats(corpus).collect()
         .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))).toMap
       val (nb, over, maxOcc, pe, pm, se, sv) = out("minhash")
@@ -423,7 +420,7 @@ class DedupSpec extends SparkSpec {
         s"simhash mass: $spe/$spm")
       assert(snb >= 5L, s"simhash buckets: $snb")
       assert(sse == 299L && ssv == 299L, s"simhash star edges: $sse/$ssv")
-    } finally scope.unpersistAll()
+    } finally spark.catalog.clearCache()
   }
 
   test("bandStats: star-edge verify shortfall is MEASURED on an adversarial over-cap bucket") {
@@ -441,7 +438,6 @@ class DedupSpec extends SparkSpec {
       (380L to 399L).map(i => (i, base + " tonight")) ++
       Seq((600L, "completely different content about spark engines")))
       .toDF("doc_id", "text")
-    val scope = new graft.ops.CacheScope
     try {
       // brute-force ground truth from the signatures themselves
       val sigRows = corpus.select(col("doc_id"),
@@ -462,8 +458,7 @@ class DedupSpec extends SparkSpec {
       assert(star.nonEmpty, "fixture must produce over-cap star edges")
       assert(starVerified < star.size,
         "fixture must contain star edges a strict verify rejects")
-      val out = Dedup.bandStats(corpus, minAgree = 64, maxHamming = 0,
-        scope = scope).collect()
+      val out = Dedup.bandStats(corpus, minAgree = 64, maxHamming = 0).collect()
         .map(r => r.getString(0) -> ((r.getLong(6), r.getLong(7)))).toMap
       assert(out("minhash") == ((star.size.toLong, starVerified.toLong)),
         s"minhash star ledger: ${out("minhash")} vs brute " +
@@ -489,12 +484,11 @@ class DedupSpec extends SparkSpec {
           s"(${sStar.size}, $sVerified)")
       // no-over-cap semantics: with the cap lifted there are no star
       // edges, so the ledger is exactly zero on both miners
-      val zero = Dedup.bandStats(corpus, maxBucket = Int.MaxValue,
-        scope = scope).collect()
+      val zero = Dedup.bandStats(corpus, maxBucket = Int.MaxValue).collect()
         .map(r => r.getString(0) -> ((r.getLong(6), r.getLong(7)))).toMap
       assert(zero("minhash") == ((0L, 0L)) && zero("simhash") == ((0L, 0L)),
         s"uncapped star ledger must be zero: $zero")
-    } finally scope.unpersistAll()
+    } finally spark.catalog.clearCache()
   }
 
   test("simhashPairs: star edges keep an over-cap exact-dup mega-cluster connected") {
@@ -503,14 +497,13 @@ class DedupSpec extends SparkSpec {
     val corpus = (mega ++ Seq(
       (600L, "completely different content about spark distributed query engines")))
       .toDF("doc_id", "text")
-    val scope = new graft.ops.CacheScope
     try {
-      val got = Dedup.simhashPairs(corpus, scope = scope)
+      val got = Dedup.simhashPairs(corpus)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // linear star output: every mega member pairs with the bucket min
       // (hamming 0 — identical docs), nothing quadratic, singleton untouched
       assert(got == (101L to 399L).map(i => (100L, i)).toSet, s"${got.size}")
-    } finally scope.unpersistAll()
+    } finally spark.catalog.clearCache()
   }
 
   test("minhashSweep: each threshold row matches an independent minhashPairs run") {
@@ -564,23 +557,30 @@ class DedupSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), plan.take(1000))
   }
 
-  test("CacheScope releases the dedup family's internal persists") {
-    val scope = new graft.ops.CacheScope
-    val pairs = Dedup.jaccardPairs(docs, scope = scope)
-    assert(pairs.count() >= 0) // materialize (fills the tracked caches)
-    assert(scope.size == 1) // the de-hubbed index (r19: raw index no longer persists)
-    val probe = scope.persist(docs.limit(1))
-    probe.count()
-    assert(probe.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    scope.unpersistAll(blocking = true)
-    assert(scope.size == 0)
-    assert(probe.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    // the Session default remains untracked: unpersistAll is a no-op there
-    val keep = graft.ops.CacheScope.Session.persist(docs.limit(2))
-    keep.count()
-    graft.ops.CacheScope.Session.unpersistAll(blocking = true)
-    assert(keep.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-    keep.unpersist(blocking = true)
+  /** Ids of the RDDs with cached blocks. */
+  private def cachedRddIds: Set[Int] =
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  test("jaccardPairs persists one intermediate for the session: the de-hubbed index") {
+    spark.catalog.clearCache()
+    val before = cachedRddIds
+    assert(Dedup.jaccardPairs(docs).count() >= 0)
+    val added = cachedRddIds -- before
+    assert(added.size == 1, s"expected one cached RDD, got ${added.size}")
+    spark.catalog.clearCache()
+  }
+
+  test("components: labels are materialized blocks that clearCache leaves in place") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    val before = cachedRddIds
+    val labels = Dedup.components(pairs)
+    assert(labels.collect().length == 5)
+    val added = cachedRddIds -- before
+    assert(added.nonEmpty, "the labels must be backed by persisted blocks")
+    // the blocks are a local checkpoint, not a CacheManager entry
+    spark.catalog.clearCache()
+    assert(added.subsetOf(cachedRddIds))
+    assert(labels.collect().length == 5)
   }
 
   test("multimodal: stub decode + batched feature extraction shapes") {

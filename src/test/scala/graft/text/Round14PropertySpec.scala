@@ -32,19 +32,18 @@ class Round14PropertySpec extends SparkSpec {
         .zipWithIndex.map { case (txt, i) => (i.toLong, txt) }
         .toDF("doc_id", "text")
       val cap = 2 + (seedVal % 7).toInt
-      val scope = new graft.ops.CacheScope
       try {
         def drops(maxBucket: Int): Set[Long] =
           Dedup.components(
             Dedup.minhashPairs(docs, minAgree = 20,
-              maxBucket = maxBucket, scope = scope).select("a", "b"))
+              maxBucket = maxBucket).select("a", "b"))
             .filter(col("doc_id") =!= col("cluster_id"))
             .select("doc_id").collect().map(_.getLong(0)).toSet
         val capped = drops(cap)
         assert(capped == drops(Int.MaxValue),
           s"seed $seedVal cap $cap: capped and exact CC drop-sets differ")
         assert(capped.nonEmpty, s"seed $seedVal: fixture lost its dup groups")
-      } finally scope.unpersistAll()
+      } finally spark.catalog.clearCache()
     }
   }
 
