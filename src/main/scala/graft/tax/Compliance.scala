@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
+
 /** Nexus monitoring, filing-deadline generation, and compliance alerts,
   * re-expressed from /root/reference/tax_engine/compliance.py.
   *
@@ -39,13 +41,14 @@ object Compliance {
   /** [[checkNexus]] without the final sort — usable under Structured
     * Streaming (sorting is the caller's concern there). */
   def checkNexusUnsorted(activity: DataFrame): DataFrame = {
-    val withPhys =
-      if (activity.columns.contains("physical_presence")) activity
-      else activity.withColumn("physical_presence", lit(false))
+    val phys =
+      if (activity.columns.contains("physical_presence")) Nil
+      else Seq(lit(false).as("physical_presence"))
 
     val noNexus = col("state").isin(Dims.noNexusStates: _*)
     // every threshold row has a period: a NULL period is a lookup miss
     val noData = col("measurement_period").isNull
+    val outside = noNexus || noData
 
     val revPct = when(col("revenue_threshold") > 0,
       col("revenue").cast(DoubleType) /
@@ -62,52 +65,57 @@ object Compliance {
 
     val physical = col("physical_presence")
 
+    // One projection per stage. The thresholds are replaced in stage 1,
+    // and the pcts (stage 2) and the details (stage 3) read the replaced
+    // values, so each of those reads sits one stage above the replacement.
     val state = col("state")
-    withPhys
-      .select(col("*"),
-        Dims.nexusRevenueThreshold(state).as("revenue_threshold"),
-        Dims.nexusTransactionThreshold(state).as("transaction_threshold"),
-        Dims.nexusPeriod(state).as("measurement_period"))
-      .withColumn("has_nexus",
+    val looked = activity.select(col("*") +: (phys ++ Seq(
+      Dims.nexusRevenueThreshold(state).as("revenue_threshold"),
+      Dims.nexusTransactionThreshold(state).as("transaction_threshold"),
+      Dims.nexusPeriod(state).as("measurement_period"))): _*)
+    val judged = looked.withColumns(ListMap(
+      "has_nexus" ->
         when(noNexus, lit(false))
           .when(noData, physical)
-          .otherwise(physical || economic))
-      .withColumn("nexus_types",
+          .otherwise(physical || economic),
+      "nexus_types" ->
         when(noNexus, array().cast(ArrayType(StringType, containsNull = false)))
           .otherwise(filter(array(
             when(physical, lit("physical")),
-            when(!noData && economic, lit("economic"))), x => x.isNotNull)))
-      .withColumn("revenue_threshold",
-        when(noNexus || noData, lit(BigDecimal(0)).cast(Money))
-          .otherwise(col("revenue_threshold")))
-      .withColumn("transaction_threshold",
-        when(noNexus || noData, lit(null).cast(IntegerType))
-          .otherwise(col("transaction_threshold")))
-      .withColumn("revenue_pct_of_threshold",
-        when(noNexus || noData, lit(0.0)).otherwise(revPct))
-      .withColumn("transaction_pct_of_threshold",
-        when(noNexus || noData, lit(null).cast(DoubleType)).otherwise(txnPct))
-      // approaching := (rev_pct ≥ 80 OR txn_pct ≥ 80) AND NOT has_nexus
-      // (compliance.py:316, 340)
-      .withColumn("approaching_threshold",
-        when(noNexus || noData, lit(false))
-          .otherwise((col("revenue_pct_of_threshold") >= 80 ||
-            coalesce(col("transaction_pct_of_threshold") >= 80, lit(false))) &&
-            !col("has_nexus")))
-      .withColumn("details",
-        when(noNexus, concat(col("state"), lit(" has no sales tax")))
-          .when(noData, lit("No economic nexus data available"))
-          .otherwise(concat_ws("; ",
-            format_string("Revenue: $%,.2f / $%,.2f (%.1f%%)",
-              col("revenue").cast(DoubleType),
-              col("revenue_threshold").cast(DoubleType),
-              col("revenue_pct_of_threshold")),
-            when(col("transaction_threshold").isNotNull,
-              format_string("Transactions: %d / %d (%.1f%%)",
-                col("transaction_count"), col("transaction_threshold"),
-                col("transaction_pct_of_threshold"))),
-            concat(lit("Period: "), col("measurement_period")))))
-      .drop("measurement_period")
+            when(!noData && economic, lit("economic"))), x => x.isNotNull)),
+      "revenue_threshold" ->
+        when(outside, lit(BigDecimal(0)).cast(Money))
+          .otherwise(col("revenue_threshold")),
+      "transaction_threshold" ->
+        when(outside, lit(null).cast(IntegerType))
+          .otherwise(col("transaction_threshold"))))
+    val measured = judged.withColumns(ListMap(
+      "revenue_pct_of_threshold" -> when(outside, lit(0.0)).otherwise(revPct),
+      "transaction_pct_of_threshold" ->
+        when(outside, lit(null).cast(DoubleType)).otherwise(txnPct)))
+    // approaching := (rev_pct ≥ 80 OR txn_pct ≥ 80) AND NOT has_nexus
+    // (compliance.py:316, 340)
+    val approaching =
+      when(outside, lit(false))
+        .otherwise((col("revenue_pct_of_threshold") >= 80 ||
+          coalesce(col("transaction_pct_of_threshold") >= 80, lit(false))) &&
+          !col("has_nexus"))
+    val details =
+      when(noNexus, concat(col("state"), lit(" has no sales tax")))
+        .when(noData, lit("No economic nexus data available"))
+        .otherwise(concat_ws("; ",
+          format_string("Revenue: $%,.2f / $%,.2f (%.1f%%)",
+            col("revenue").cast(DoubleType),
+            col("revenue_threshold").cast(DoubleType),
+            col("revenue_pct_of_threshold")),
+          when(col("transaction_threshold").isNotNull,
+            format_string("Transactions: %d / %d (%.1f%%)",
+              col("transaction_count"), col("transaction_threshold"),
+              col("transaction_pct_of_threshold"))),
+          concat(lit("Period: "), col("measurement_period"))))
+    measured.select(
+      measured.columns.toSeq.filter(_ != "measurement_period").map(col) ++
+        Seq(approaching.as("approaching_threshold"), details.as("details")): _*)
   }
 
   /** Monthly/quarterly/annual filing periods for a year, generated with
@@ -144,39 +152,38 @@ object Compliance {
     // Due date = due_day of the month after period end, Dec→Jan rollover
     // (compliance.py:171-183).
     val nextMonth = add_months(col("period_end"), 1)
-    val withDue = periods
-      .withColumn("due_day_eff",
-        coalesce(Dims.dueDay(col("state_code")), lit(Dims.DefaultDueDay)))
-      .withColumn("due_date",
-        make_date(year(nextMonth), month(nextMonth), col("due_day_eff")))
+    val dueDate = make_date(year(nextMonth), month(nextMonth),
+      coalesce(Dims.dueDay(col("state_code")), lit(Dims.DefaultDueDay)))
 
     val withFiled = filed match {
       case Some(f) =>
         val fk = f.select(col("state_code").as("fl_state"),
           col("period_start").as("fl_start"), col("period_end").as("fl_end"),
           lit(true).as("is_filed_raw"))
+        val withDue = periods.withColumn("due_date", dueDate)
         withDue.join(broadcast(fk),
           col("state_code") === col("fl_state") &&
             col("period_start") === col("fl_start") &&
             col("period_end") === col("fl_end"), "left")
-          .withColumn("is_filed", coalesce(col("is_filed_raw"), lit(false)))
-          .drop("fl_state", "fl_start", "fl_end", "is_filed_raw")
-      case None => withDue.withColumn("is_filed", lit(false))
+          .select(withDue.columns.toSeq.map(col) :+
+            coalesce(col("is_filed_raw"), lit(false)).as("is_filed"): _*)
+      case None => periods.withColumns(ListMap(
+        "due_date" -> dueDate, "is_filed" -> lit(false)))
     }
 
-    withFiled
-      .withColumn("is_overdue", col("due_date") < asOfCol && !col("is_filed"))
-      .withColumn("days_until_due", datediff(col("due_date"), asOfCol))
-      .withColumn("estimated_liability",
+    val overdue = col("due_date") < asOfCol && !col("is_filed")
+    withFiled.withColumns(ListMap(
+      "is_overdue" -> overdue,
+      "days_until_due" -> datediff(col("due_date"), asOfCol),
+      "estimated_liability" ->
         (col("estimated_annual_liability") /
           when(col("frequency") === "monthly", 12)
             .when(col("frequency") === "quarterly", 4).otherwise(1))
-          .cast(DecimalType(18, 6)))
-      .withColumn("status",
+          .cast(DecimalType(18, 6)),
+      "status" ->
         when(col("is_filed"), "filed")
-          .when(col("is_overdue"), "overdue")
-          .otherwise("pending"))
-      .drop("due_day_eff")
+          .when(overdue, "overdue")
+          .otherwise("pending")))
   }
 
   /** Overdue filings across registered states (compliance.py:483-497). */

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
+
 /** Refund / overpayment analysis pipeline, re-expressed from the reference's
   * per-row loop (/root/reference/tax_engine/refund_analyzer.py) as lazy
   * DataFrame transforms sharing [[TaxCalc.withTax]]'s expression block —
@@ -34,32 +36,30 @@ object Refunds {
     val taxed = TaxCalc.withTax(txns)
     val asOfCol = lit(java.sql.Date.valueOf(asOf))
 
+    val paid = coalesce(col("tax_paid"), lit(BigDecimal(0))).cast(Money)
     val withOver = taxed
-      .withColumn("tax_paid", coalesce(col("tax_paid"), lit(BigDecimal(0))).cast(Money))
-      .withColumn("tax_owed", col("tax_amount"))
-      .withColumn("overpayment", roundMoney(col("tax_paid") - col("tax_amount")))
+      .withColumns(ListMap(
+        "tax_paid" -> paid,
+        "tax_owed" -> col("tax_amount"),
+        "overpayment" -> roundMoney(paid - col("tax_amount"))))
       .filter(col("overpayment") > 0)
 
-    val withSol = withOver
-      .withColumn("sol_years_eff",
-        coalesce(Dims.solYears(col("state")), lit(Dims.DefaultSolYears)))
-      // cutoff = as_of shifted back sol_years; eligible := txn_date >= cutoff
-      .withColumn("sol_cutoff",
-        make_date(year(asOfCol) - col("sol_years_eff"), month(asOfCol),
-          dayofmonth(asOfCol)))
-      .withColumn("refund_eligible",
-        coalesce(col("transaction_date") >= col("sol_cutoff"), lit(false)))
-      .withColumn("statute_of_limitations_date", {
-        // Calendar-year shift; the reference's date() ctor would raise on
-        // Feb-29 + non-leap target (refund_analyzer.py:131) — our documented
-        // policy clamps to Feb 28 (ANSI make_date would otherwise error).
-        val yy = year(col("transaction_date")) + col("sol_years_eff")
-        val mm = month(col("transaction_date"))
-        val dd = dayofmonth(col("transaction_date"))
-        val leap = (yy % 4 === 0 && yy % 100 =!= 0) || (yy % 400 === 0)
-        make_date(yy, mm,
-          when(mm === 2 && dd === 29 && !leap, 28).otherwise(dd))
-      })
+    // the SOL lookup feeds both the cutoff and the SOL date: one stage
+    val withSolYears = withOver.withColumn("sol_years_eff",
+      coalesce(Dims.solYears(col("state")), lit(Dims.DefaultSolYears)))
+    // cutoff = as_of shifted back sol_years; eligible := txn_date >= cutoff
+    val solCutoff = make_date(year(asOfCol) - col("sol_years_eff"),
+      month(asOfCol), dayofmonth(asOfCol))
+    val solDate = {
+      // Calendar-year shift; the reference's date() ctor would raise on
+      // Feb-29 + non-leap target (refund_analyzer.py:131) — our documented
+      // policy clamps to Feb 28 (ANSI make_date would otherwise error).
+      val yy = year(col("transaction_date")) + col("sol_years_eff")
+      val mm = month(col("transaction_date"))
+      val dd = dayofmonth(col("transaction_date"))
+      val leap = (yy % 4 === 0 && yy % 100 =!= 0) || (yy % 400 === 0)
+      make_date(yy, mm, when(mm === 2 && dd === 29 && !leap, 28).otherwise(dd))
+    }
 
     // Reason derivation (refund_analyzer.py:156-170). `tax_paid > tax_owed`
     // is implied by overpayment > 0 for the rate-mismatch branch; the
@@ -81,13 +81,13 @@ object Refunds {
         .when(col("tax_owed") > 0, "Rate mismatch")
         .otherwise("Tax collected in no-tax jurisdiction")
 
-    withSol
-      .withColumn("reason", reason)
-      .withColumn("reason_key", reasonKey)
-      .select("transaction_id", "transaction_date", "state", "city",
-        "amount", "tax_paid", "tax_owed", "overpayment", "reason",
-        "reason_key", "refund_eligible", "statute_of_limitations_date")
-      .withColumnRenamed("amount", "sale_amount")
+    withSolYears.select(col("transaction_id"), col("transaction_date"),
+      col("state"), col("city"), col("amount").as("sale_amount"),
+      col("tax_paid"), col("tax_owed"), col("overpayment"),
+      reason.as("reason"), reasonKey.as("reason_key"),
+      coalesce(col("transaction_date") >= solCutoff, lit(false))
+        .as("refund_eligible"),
+      solDate.as("statute_of_limitations_date"))
   }
 
   /** Batch refund summary (refund_analyzer.py:191-252): single-pass global
@@ -167,15 +167,15 @@ object Refunds {
         col("transaction_id"), col("transaction_date"), col("sale_amount"),
         col("tax_paid"), col("tax_owed"), col("overpayment"), col("reason"))))
         .as("records"))
+    val notes = format_string(
+      "Refund claim for %d transactions. SOL: %d years from transaction date. Total requested: $%,.2f",
+      col("transaction_count"),
+      coalesce(Dims.solYears(col("state_code")), lit(Dims.DefaultSolYears)),
+      col("total_refund_requested").cast(DoubleType))
     headers
       .join(recs, col("state_code") === col("rec_state"), "left")
-      .withColumn("sol_years_eff",
-        coalesce(Dims.solYears(col("state_code")), lit(Dims.DefaultSolYears)))
-      .withColumn("filing_notes", format_string(
-        "Refund claim for %d transactions. SOL: %d years from transaction date. Total requested: $%,.2f",
-        col("transaction_count"), col("sol_years_eff"),
-        col("total_refund_requested").cast(DoubleType)))
-      .drop("rec_state", "sol_years_eff")
+      .select(headers.columns.toSeq.map(col) ++
+        Seq(col("records"), notes.as("filing_notes")): _*)
       .orderBy(col("total_refund_requested").desc, col("state_code"))
   }
 

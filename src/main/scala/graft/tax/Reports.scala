@@ -19,9 +19,16 @@ object Reports {
     * global summary struct + per-state breakdown array (sorted by state),
     * folded from [[taxSummaryFlat]]'s rows so each figure is defined once. */
   def taxSummaryReport(taxed: DataFrame, periodLabel: String = "",
-      generatedDate: String = ""): DataFrame = {
+      generatedDate: String = ""): DataFrame =
+    taxSummaryFold(taxSummaryFlat(taxed), periodLabel, generatedDate)
+
+  /** [[taxSummaryReport]] from rows shaped like [[taxSummaryFlat]]'s — a
+    * caller that already holds those rows (collected, as a local relation)
+    * folds the document without aggregating the transactions again. */
+  def taxSummaryFold(flat: DataFrame, periodLabel: String,
+      generatedDate: String): DataFrame = {
     val isSummary = col("section") === "summary"
-    taxSummaryFlat(taxed).agg(
+    flat.agg(
       lit("tax_liability_summary").as("report_type"),
       lit(periodLabel).as("period"),
       lit(generatedDate).as("generated_date"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.ListMap
+
 /** The per-transaction tax computation, re-expressed as one reusable lazy
   * column-expression block over a transactions DataFrame.
   *
@@ -24,17 +26,22 @@ object TaxCalc {
   /** Adds any missing optional columns with their reference defaults and
     * normalizes: state upper-cased, empty strings → NULL (cli.py:57-59). */
   def normalize(txns: DataFrame): DataFrame = {
-    var df = txns
-    if (!df.columns.contains("city")) df = df.withColumn("city", lit(null).cast(StringType))
-    if (!df.columns.contains("item_category")) df = df.withColumn("item_category", lit(null).cast(StringType))
-    if (!df.columns.contains("exemption_certificate")) df = df.withColumn("exemption_certificate", lit(null).cast(StringType))
-    if (!df.columns.contains("customer_type")) df = df.withColumn("customer_type", lit("retail"))
-    if (!df.columns.contains("pricing_model")) df = df.withColumn("pricing_model", lit("exclusive"))
-    if (!df.columns.contains("tax_paid")) df = df.withColumn("tax_paid", lit(null).cast(Money))
-    df.withColumn("state", upper(trim(col("state"))))
-      .withColumn("city", nullif(trim(col("city")), lit("")))
-      .withColumn("item_category", nullif(trim(col("item_category")), lit("")))
-      .withColumn("amount", col("amount").cast(Money))
+    val defaults = Seq(
+      "city" -> lit(null).cast(StringType),
+      "item_category" -> lit(null).cast(StringType),
+      "exemption_certificate" -> lit(null).cast(StringType),
+      "customer_type" -> lit("retail"),
+      "pricing_model" -> lit("exclusive"),
+      "tax_paid" -> lit(null).cast(Money))
+      .filterNot { case (c, _) => txns.columns.contains(c) }
+    // two projections: the defaults first, because the clean-up below
+    // reads `city` and `item_category` whether given or defaulted
+    txns.select(col("*") +: defaults.map { case (c, e) => e.as(c) }: _*)
+      .withColumns(ListMap(
+        "state" -> upper(trim(col("state"))),
+        "city" -> nullif(trim(col("city")), lit("")),
+        "item_category" -> nullif(trim(col("item_category")), lit("")),
+        "amount" -> col("amount").cast(Money)))
   }
 
   /** HALF_UP cents rounding — Spark's `round` on DecimalType is HALF_UP,
@@ -119,7 +126,7 @@ object TaxCalc {
     // Tax-inclusive back-out: taxable = round(amount / (1 + rate), 2)
     // (calculator.py:229-232); otherwise taxable = amount.
     val backout = roundMoney(col("amount").cast(DecimalType(28, 10)) /
-      (lit(BigDecimal(1)).cast(Rate) + combinedRate))
+      (lit(BigDecimal(1)).cast(Rate) + col("_crate")))
     val zeroMoney = lit(BigDecimal(0)).cast(Money)
 
     val warnings =
@@ -142,40 +149,48 @@ object TaxCalc {
     // consumers downstream, exactly the guard that blocks inlining.
     // Measured on op_incl_backout (600 k rows, every row inclusive):
     // 7.5 s -> 1.4 s warm. Still one codegen stage, still zero shuffles.
-    val staged = withDims
-      .withColumn("is_exempt", isExempt)
-      .withColumn("exemption_reason", exemptReason)
-      .withColumn("_taxed", taxed)
-      .withColumn("_srate", stateRate)
-      .withColumn("_lrate", localRate)
-      .withColumn("_crate", combinedRate)
-      .withColumn("taxable_amount",
+    //
+    // Grouping rule: one projection per dependency level, never one per
+    // column. A column joins the first stage whose input already holds
+    // every column it reads, so a stage only reads attributes of the
+    // stage below: dims -> rates and flags -> taxable -> the rounded
+    // components -> their sums (total_with_tax repeats tax_amount's one
+    // decimal addition rather than take a stage of its own). A chained
+    // `withColumn` per column would re-analyze the growing plan once per
+    // column on the driver.
+    val rated = withDims.withColumns(ListMap(
+      "is_exempt" -> isExempt,
+      "exemption_reason" -> exemptReason,
+      "_taxed" -> taxed,
+      "_srate" -> stateRate,
+      "_lrate" -> localRate,
+      "_crate" -> combinedRate))
+    val withTaxable = rated.withColumns(ListMap(
+      "taxable_amount" ->
         when(col("_taxed") && col("pricing_model") === "inclusive", backout)
-          .otherwise(col("amount")).cast(Money))
-      // components rounded separately, then summed (calculator.py:236-238)
-      // — round-of-sum would differ on .005 splits and is observable
-      .withColumn("state_tax", when(col("_taxed"),
-        roundMoney(col("taxable_amount") * col("_srate"))).otherwise(zeroMoney))
-      .withColumn("local_tax", when(col("_taxed"),
-        roundMoney(col("taxable_amount") * col("_lrate"))).otherwise(zeroMoney))
-      .withColumn("tax_amount",
-        (col("state_tax") + col("local_tax")).cast(Money))
-      .withColumn("state_rate",
-        when(col("_taxed"), col("_srate")).otherwise(zeroRate))
-      .withColumn("local_rate",
-        when(col("_taxed"), col("_lrate")).otherwise(zeroRate))
-      .withColumn("effective_rate",
-        when(col("_taxed"), col("_crate").cast(DoubleType)).otherwise(lit(0.0)))
-      .withColumn("warnings", warnings)
-      .withColumn("total_with_tax",
-        (col("taxable_amount") + col("tax_amount")).cast(Money))
+          .otherwise(col("amount")).cast(Money),
+      "state_rate" -> when(col("_taxed"), col("_srate")).otherwise(zeroRate),
+      "local_rate" -> when(col("_taxed"), col("_lrate")).otherwise(zeroRate),
+      "effective_rate" ->
+        when(col("_taxed"), col("_crate").cast(DoubleType)).otherwise(lit(0.0)),
+      "warnings" -> warnings))
+    // components rounded separately, then summed (calculator.py:236-238)
+    // — round-of-sum would differ on .005 splits and is observable
+    val withComponents = withTaxable.withColumns(ListMap(
+      "state_tax" -> when(col("_taxed"),
+        roundMoney(col("taxable_amount") * col("_srate"))).otherwise(zeroMoney),
+      "local_tax" -> when(col("_taxed"),
+        roundMoney(col("taxable_amount") * col("_lrate"))).otherwise(zeroMoney)))
 
-    // restore the published column order (inputs, then the TaxResult
-    // fields in their historical positions) and drop dims + internals
-    val resultCols = Seq("is_exempt", "exemption_reason", "state_rate",
-      "local_rate", "taxable_amount", "state_tax", "local_tax",
-      "tax_amount", "effective_rate", "warnings", "total_with_tax")
-    staged.select((txns.columns.toSeq ++ resultCols).map(col): _*)
+    // the sums, in the published column order (inputs, then the TaxResult
+    // fields in their historical positions); dims and internals drop out
+    val taxAmount = (col("state_tax") + col("local_tax")).cast(Money)
+    withComponents.select(txns.columns.toSeq.map(col) ++ Seq(
+      col("is_exempt"), col("exemption_reason"), col("state_rate"),
+      col("local_rate"), col("taxable_amount"), col("state_tax"),
+      col("local_tax"), taxAmount.as("tax_amount"), col("effective_rate"),
+      col("warnings"),
+      (col("taxable_amount") + taxAmount).cast(Money).as("total_with_tax")): _*)
   }
 
   /** Batch aggregation (calculator.py:258-303): global totals + exempt

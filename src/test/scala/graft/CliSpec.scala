@@ -2,14 +2,20 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** CLI surface pins: the fixed-date single-transaction path (no hidden
   * now() — `--as-of` threads the date through), the `rates --category`
   * exemption listing (reference rates.py:856-862), and the stdout and
   * exports of the file commands on the sample CSV, byte for byte against
   * goldens under `src/test/resources/cli/`. */
-class CliSpec extends SparkSpec {
+class CliSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def runCapture(args: String*): String = {
     val bos = new java.io.ByteArrayOutputStream()
     Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
@@ -17,8 +23,6 @@ class CliSpec extends SparkSpec {
     }
     bos.toString("UTF-8")
   }
-
-  private val sampleCsv = getClass.getResource("/sample_transactions.csv").getPath
 
   private def golden(name: String): String =
     new String(getClass.getResourceAsStream(s"/cli/$name").readAllBytes(), UTF_8)
@@ -81,6 +85,63 @@ class CliSpec extends SparkSpec {
       val reads = (bytesRead - before).toDouble / Files.size(Path.of(sampleCsv))
       assert(math.round(reads) == 1, s"${args.mkString(" ")} read the CSV $reads times")
     }
+  }
+
+  test("calculate, refund and report tax each transaction once; compliance and refund --quick cache nothing") {
+    spark.sharedState.cacheManager.clearCache()
+    val plans = ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    /** The executed plans of one command that read the transactions, from
+      * the file or from the cache; plans over collected rows are left out. */
+    def readers(args: String*): Seq[SparkPlan] = {
+      ListenerBus.drain(spark.sparkContext)
+      plans.synchronized(plans.clear())
+      runCapture(args ++ Seq("--as-of", "2026-08-12"): _*)
+      ListenerBus.drain(spark.sparkContext)
+      plans.synchronized(plans.toList).filter(p => find(p) {
+        case _: FileSourceScanExec | _: InMemoryTableScanExec => true
+        case _ => false
+      }.isDefined)
+    }
+    val out = Files.createTempDirectory("graft_cli_taxed").toString
+    spark.listenerManager.register(listener)
+    try {
+      Seq(
+        Seq("calculate", "--file", sampleCsv, "--export-json", "calc.json",
+          "--output-dir", out),
+        Seq("refund", "--file", sampleCsv),
+        Seq("report", "--file", sampleCsv, "--export-json", "report.json",
+          "--export-csv", "report.csv", "--output-dir", out)
+      ).foreach { args =>
+        val read = readers(args: _*)
+        assert(read.size >= 3, s"${args.head}: ${read.size} actions read the input")
+        // the first action fills the cache; every later one reads the
+        // taxed frame from it, and none reads the file
+        read.tail.foreach { p =>
+          val taxedScans = collect(p) {
+            case s: InMemoryTableScanExec
+                if s.output.exists(_.name == "tax_amount") => s
+          }
+          assert(taxedScans.nonEmpty, s"${args.head} re-taxes:\n$p")
+          assert(collect(p) { case s: FileSourceScanExec => s }.isEmpty,
+            s"${args.head} reads the file again:\n$p")
+        }
+      }
+      Seq(
+        Seq("compliance", "--file", sampleCsv, "--registered", "CA,TX"),
+        Seq("refund", "--file", sampleCsv, "--quick")
+      ).foreach { args =>
+        val read = readers(args: _*)
+        assert(read.size == 1, s"${args.mkString(" ")}: ${read.size} actions read the input")
+        assert(collect(read.head) { case s: InMemoryTableScanExec => s }.isEmpty,
+          s"${args.mkString(" ")} read a cached frame:\n${read.head}")
+        assert(spark.sharedState.cacheManager.isEmpty)
+      }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("an unknown or missing command throws with the usage line") {

@@ -188,4 +188,12 @@ class ComplianceSpec extends SparkSpec {
       .select("severity").as[String].collect()
     assert(al.sortBy(s => if (s == "critical") 0 else 1).sameElements(al))
   }
+
+  test("checkNexusUnsorted builds one projection per stage: 4 Projects") {
+    // lookups, then nexus and the replaced thresholds, then the pcts that
+    // read them, then the approaching flag and details
+    val act = activity(("TX", "600000", 10), ("OR", "5", 1))
+    val n = projectsOver(Compliance.checkNexusUnsorted(act), act)
+    assert(n <= 4, s"checkNexusUnsorted stacks $n Projects")
+  }
 }

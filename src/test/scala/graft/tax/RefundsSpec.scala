@@ -145,4 +145,11 @@ class RefundsSpec extends SparkSpec {
     assert(top.getAs[String]("reason") ==
       "Rate mismatch: paid 9.0000%, correct rate 8.5000%")
   }
+
+  test("overpayments builds one projection per stage: withTax's 5 Projects and 3 more") {
+    // the paid/owed/overpayment stage, the SOL lookup, the output select
+    val txns = TaxCalc.normalize(TaxCalc.readCsv(spark, sampleCsv))
+    val n = projectsOver(Refunds.overpayments(txns, asOf), txns)
+    assert(n <= 5 + 3, s"overpayments stacks $n Projects over its input")
+  }
 }

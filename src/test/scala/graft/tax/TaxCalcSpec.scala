@@ -2,6 +2,7 @@ package graft.tax
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Divide
 import org.apache.spark.sql.functions._
 import java.sql.Date
 
@@ -185,5 +186,26 @@ class TaxCalcSpec extends SparkSpec {
       .orderBy($"base_rate".asc, $"state_code").limit(5)
       .select("state_code").as[String].collect()
     assert(lo.contains("CO")) // CO 2.9% is the lowest nonzero state rate
+  }
+
+  test("normalize and withTax build one projection per stage: 7 Projects, not 24") {
+    // normalize: the defaults, then the clean-up; withTax: dims, rates
+    // and flags, taxable, the rounded components, the sums
+    val raw = TaxCalc.readCsv(spark, sampleCsv)
+    val n = projectsOver(TaxCalc.withTax(TaxCalc.normalize(raw)), raw)
+    assert(n <= 7, s"withTax(normalize(csv)) stacks $n Projects")
+  }
+
+  test("withTax's optimized plan divides once: the back-out is not inlined") {
+    // the staged projections keep the one division behind its alias; an
+    // inlined copy per consumer is the op_incl_backout slowdown. The
+    // pricing model comes from the data: a defaulted "exclusive" literal
+    // lets the optimizer fold the back-out branch away
+    val txns = TaxCalc.readCsv(spark, sampleCsv).withColumn("pricing_model",
+      when(col("amount") > 100, "inclusive").otherwise("exclusive"))
+    val taxed = TaxCalc.withTax(TaxCalc.normalize(txns))
+    val divides = taxed.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case d: Divide => d }))
+    assert(divides.size == 1, taxed.queryExecution.optimizedPlan.treeString)
   }
 }
