@@ -102,9 +102,9 @@ object Catalog {
     * the session's pinned UTC zone. Downstream operators keep exact
     * integer-nanos arithmetic either way; the DuckDB oracle side is
     * already unit-agnostic (epoch_ns/epoch_us/INTERVAL on TIMESTAMP). */
-  private[graft] def tsAsNanos(df: DataFrame, c: String = "ts"): DataFrame =
-    df.schema(c).dataType match {
-      case LongType => df.withColumn(c,
+  private[graft] def tsAsNanos(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case LongType => df.withColumn("ts",
         // A plain BIGINT ts is ASSUMED to be epoch-nanos (the
         // TIMESTAMP(NANOS)-under-`nanosAsLong` representation). The
         // fixture unit is driver-owned and has changed once already
@@ -114,15 +114,15 @@ object Catalog {
         // LOUDLY on magnitude instead: post-1973 nanos are ≥ 1e17, while a
         // 2020s-era µs epoch is ~1.7e15, ms ~1.7e12, s ~1.7e9. One long
         // compare per row, codegen-friendly.
-        when(col(c).isNotNull && col(c) < lit(100000000000000000L),
+        when(col("ts").isNotNull && col("ts") < lit(100000000000000000L),
           raise_error(concat(
-            lit(s"tsAsNanos: long column '$c' holds "), col(c).cast(StringType),
+            lit("tsAsNanos: long column 'ts' holds "), col("ts").cast(StringType),
             lit(" — too small for epoch-nanos (>= 1e17); the fixture's ts " +
               "unit likely changed to micros/millis/seconds as a bare " +
               "BIGINT. Normalize it here before any downstream op runs."))))
-          .otherwise(col(c)))
-      case _ => df.withColumn(c,
-        unix_micros(col(c).cast(TimestampType)) * lit(1000L))
+          .otherwise(col("ts")))
+      case _ => df.withColumn("ts",
+        unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
     }
 
   /** Temp dir for the sink round-trip queries, removed at JVM exit — the
@@ -923,7 +923,7 @@ object Catalog {
           col("o_totalprice") > 200000.0)
       graft.ops.BloomJoin.semiJoin(t(s, dir, "lineitem"), urgent,
           col("l_orderkey"), col("o_orderkey"),
-          expectedItems = 100000L, fpp = 0.01)
+          expectedItems = 100000L)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           dbl(sum(col("l_quantity").cast(M2))).as("sum_qty"))
@@ -1384,7 +1384,7 @@ object Catalog {
               timestamp_millis(expr("ts div 1000000")).as("ts"))
             .as[graft.streaming.Sessions.Event]
           graft.streaming.Sessions
-            .sessionize(evs, gapMinutes = 30, lateness = "61 minutes").toDF()
+            .sessionize(evs, lateness = "61 minutes").toDF()
             .select(col("user_id"),
               unix_millis(col("session_start")).as("session_start_ms"),
               unix_millis(col("session_end")).as("session_end_ms"),
@@ -1405,7 +1405,7 @@ object Catalog {
       graft.streaming.Replay.replayAppend(s, stagedDocDups(s, dir),
         StructType.fromDDL("doc_id BIGINT, text STRING, ts TIMESTAMP"),
         st => graft.streaming.Sessions
-          .dedupByContent(st, "text", "ts", lateness = "3650 days")
+          .dedupByContent(st, lateness = "3650 days")
           .select("text_hash"),
         noDataFlush = false)
     }),
@@ -1758,7 +1758,7 @@ object Catalog {
     // the distinct-word vocab weighted by word frequency (pair work scales
     // with vocab, not corpus rows — the standard BPE-trainer reduction)
     "op_bpe_pairs" -> ((s, dir) =>
-      TextOps.bpePairs(t(s, dir, "documents"), "text", topK = 50)),
+      TextOps.bpePairs(t(s, dir, "documents"))),
 
     // batch-BPE APPLY — the middle of the op_bpe_pairs -> op_oov_rate
     // tokenizer loop: 2 rounds x 16 learned merges applied in priority
@@ -1766,8 +1766,7 @@ object Catalog {
     // not corpus rows; each round's merge list is a bounded 16-row pin),
     // emitting the top-100 subword pieces of the tokenized corpus
     "op_bpe_apply" -> ((s, dir) =>
-      TextOps.bpeApply(t(s, dir, "documents"), "text",
-        mergesPerRound = 16, rounds = 2, topK = 100)),
+      TextOps.bpeApply(t(s, dir, "documents"))),
 
     // out-of-vocabulary stats per doc against the corpus' own top-500 word
     // vocab: the tokenizer-coverage measurement (explode + broadcast mark
@@ -1788,16 +1787,14 @@ object Catalog {
     // POSITION-keyed (O(window) per token — hub words cannot explode it),
     // the aggregate is pair-keyed with map-side partials
     "op_cooccur" -> ((s, dir) =>
-      TextOps.cooccurPairs(t(s, dir, "documents"), "text",
-        window = 2, topK = 50)),
+      TextOps.cooccurPairs(t(s, dir, "documents"), "text")),
 
     // Church & Hanks PMI collocations: adjacent bigrams RANKED by
     // pointwise mutual information (micro-nat integer via the portable
     // series ln — hash-exact cross-engine) under a min-support floor;
     // op_cooccur ranks by frequency, this surfaces association strength
     "op_pmi" -> ((s, dir) =>
-      TextOps.pmiCollocations(t(s, dir, "documents"), "text",
-        minCount = 5L, topK = 50)),
+      TextOps.pmiCollocations(t(s, dir, "documents"))),
 
     // top-3 TF-IDF terms per document (rational add-one idf — every float
     // op IEEE-exact cross-engine); per-doc selection via the bounded-heap
@@ -2089,8 +2086,7 @@ object Catalog {
     // compare; suppresses on a non-positive noisy total
     "op_dp_quantile" -> ((s, dir) =>
       graft.ops.Audit.dpQuantile(t(s, dir, "documents"), Seq("lang"),
-        col("n_chars"), lo = 0L, hi = 2000L, buckets = 64,
-        phiNum = 1L, phiDen = 2L, epsilon = 1.0)),
+        col("n_chars"), lo = 0L, hi = 2000L)),
 
     // differentially-private SUM release over the same contingency table:
     // per-row char mass clipped to 2000 (the sensitivity bound), then
@@ -2232,13 +2228,13 @@ object Catalog {
     // portable series ln: per-token micro-nat quantization keeps the
     // per-doc sum exact-integer, so the log-prob is engine-reproducible
     "op_lm_logprob" -> ((s, dir) =>
-      TextOps.lmLogProb(t(s, dir, "documents"), "text")),
+      TextOps.lmLogProb(t(s, dir, "documents"))),
 
     // bigram-LM rung of the KenLM ladder (round 17): mean add-1-smoothed
     // BIGRAM log-prob — separates fluent text from word salad the unigram
     // LM scores identically (common words, rare pairs)
     "op_bigram_logprob" -> ((s, dir) =>
-      TextOps.bigramLogProb(t(s, dir, "documents"), "text")),
+      TextOps.bigramLogProb(t(s, dir, "documents"))),
 
     // CCNet head/middle/tail terciles per language by the lm_logprob
     // score quantized to milli-nats — the published filter-by-perplexity
@@ -2251,7 +2247,7 @@ object Catalog {
     // (exact-integer micro-nat numerator via the portable ln, one final
     // int/int division); two doc-keyed aggregates, nothing corpus-global
     "op_token_entropy" -> ((s, dir) =>
-      TextOps.tokenEntropy(t(s, dir, "documents"), "text")),
+      TextOps.tokenEntropy(t(s, dir, "documents"))),
 
     // per-language Zipf rank-frequency exponent over the top-1000 tokens —
     // the corpus-health diagnostic (healthy text ≈ +1); milli-nat integer
@@ -2300,19 +2296,19 @@ object Catalog {
       TextOps.cdcChunks(dedupCorpus(s, dir))),
 
     "op_rolling_fp" -> ((s, dir) =>
-      TextOps.rollingFingerprint(t(s, dir, "documents"), "text", w = 8)),
+      TextOps.rollingFingerprint(t(s, dir, "documents"), "text")),
 
     // winnowing fingerprint selection (the MOSS scheme) over the rolling
     // windows: rightmost minimum of every 4-window run — any >= 11-token
     // match shares a fingerprint at ~2/5 the density of all windows
     "op_winnow" -> ((s, dir) =>
-      TextOps.winnow(t(s, dir, "documents"), "text", w = 8, g = 4)),
+      TextOps.winnow(t(s, dir, "documents"), "text")),
 
     // cross-document duplicated passages at 5-token granularity over the
     // planted-boilerplate corpus — substring-level dedup between whole-doc
     // fingerprints and paragraph dedup
     "op_passage_dups" -> ((s, dir) =>
-      TextOps.passageDups(paraCorpus(s, dir), "text", w = 5)),
+      TextOps.passageDups(paraCorpus(s, dir), "text")),
 
     // bigram LM quality score (the next KenLM-style rung): sum of each
     // doc's bigrams' corpus-wide counts — same join shape as the unigram
@@ -2353,7 +2349,7 @@ object Catalog {
     // original paragraph order (hash-summarized; the text itself never
     // leaves the executors)
     "op_boilerplate" -> ((s, dir) =>
-      Dedup.stripBoilerplate(paraCorpus(s, dir), minDf = 10)),
+      Dedup.stripBoilerplate(paraCorpus(s, dir))),
 
     // deterministic global training shuffle: shard = hash mod 16 (one
     // shard = one output file), shard_pos = position in hash order inside
@@ -2700,14 +2696,14 @@ object Catalog {
     // onto the token stream, weight = ONE exact-integer IEEE division
     "op_dsir_weights" -> ((s, dir) =>
       TextOps.dsirWeights(t(s, dir, "documents"), "text",
-        isTarget = col("lang") === "en", buckets = 2048)),
+        isTarget = col("lang") === "en")),
 
     // the selection on top of op_dsir_weights: top-100 most target-like
     // docs, weight desc / id asc — a bounded TakeOrdered, never a corpus
     // sort
     "op_dsir_select" -> ((s, dir) =>
       TextOps.dsirSelect(t(s, dir, "documents"), "text",
-        isTarget = col("lang") === "en", n = 100, buckets = 2048)),
+        isTarget = col("lang") === "en", n = 100)),
 
     // tokenizer-vocab coverage curve: top-50 tokens with the cumulative
     // share of all token occurrences they cover

@@ -106,10 +106,10 @@ object KmvSketch {
   /** Distinct-count estimate from the minima array: exact size when fewer
     * than k minima were seen, else (k-1) · 2^60 / kth_min (for 60-bit
     * hashes). IEEE double division — engine-reproducible. */
-  def estimate(minima: Column, k: Int, hashSpace: Double = math.pow(2, 60)): Column = {
+  def estimate(minima: Column, k: Int): Column = {
     import org.apache.spark.sql.functions._
     when(size(minima) < k, size(minima).cast(DoubleType))
-      .otherwise(lit((k - 1).toDouble * hashSpace) /
+      .otherwise(lit((k - 1).toDouble * math.pow(2, 60)) /
         element_at(minima, k).cast(DoubleType))
   }
 }

@@ -179,7 +179,7 @@ case class PortableSimHash(child: Expression, bits: Int)
 }
 
 object PortableSimHash {
-  def apply(shingles: Column, bits: Int = 60): Column =
+  def apply(shingles: Column): Column =
     ColumnBridge.column(
-      PortableSimHash(ColumnBridge.expression(shingles), bits))
+      PortableSimHash(ColumnBridge.expression(shingles), 60))
 }

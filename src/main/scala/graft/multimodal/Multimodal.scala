@@ -104,26 +104,6 @@ object Multimodal {
     }
   }
 
-  /** Real bilinear resize (pixel-center sampling, edge clamp) — the
-    * quality path for model-input preprocessing; deterministic double
-    * arithmetic, unit-pinned (the oracle op uses [[resizeNearest]] whose
-    * integer math is SQL-recomputable). */
-  def resizeBilinear(px: Array[Int], w: Int, h: Int, ow: Int, oh: Int): Array[Double] = {
-    require(px.length == w * h && ow > 0 && oh > 0)
-    Array.tabulate(ow * oh) { i =>
-      val ox = i % ow
-      val oy = i / ow
-      val fx = math.max(0.0, (ox + 0.5) * w / ow - 0.5)
-      val fy = math.max(0.0, (oy + 0.5) * h / oh - 0.5)
-      val x0 = math.min(fx.toInt, w - 1); val x1 = math.min(x0 + 1, w - 1)
-      val y0 = math.min(fy.toInt, h - 1); val y1 = math.min(y0 + 1, h - 1)
-      val dx = fx - x0
-      val dy = fy - y0
-      (px(y0 * w + x0) * (1 - dx) + px(y0 * w + x1) * dx) * (1 - dy) +
-        (px(y1 * w + x0) * (1 - dx) + px(y1 * w + x1) * dx) * dy
-    }
-  }
-
   case class ResizeFeatures(media_id: Long, out_w: Int, out_h: Int,
       r_sum: Long, r_min: Int, r_max: Int)
 
@@ -198,10 +178,11 @@ object Multimodal {
     (w, h, px)
   }
 
-  /** Encode signed 16-bit mono PCM samples as a WAV payload (lossless). */
-  def encodeWav(samples: Array[Short], sampleRate: Int = 16000): Array[Byte] = {
+  /** Encode signed 16-bit mono PCM samples as a 16 kHz WAV payload
+    * (lossless). */
+  def encodeWav(samples: Array[Short]): Array[Byte] = {
     val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRate.toFloat, 16, 1, true, false) // 16-bit signed mono little-endian
+      16000f, 16, 1, true, false) // 16 kHz 16-bit signed mono little-endian
     val bytes = new Array[Byte](samples.length * 2)
     var i = 0
     while (i < samples.length) {
@@ -334,17 +315,16 @@ object Multimodal {
       })
   }
 
-  /** Decode GIF frames, sample every `stride`-th frame, and emit pixel
-    * statistics over the sampled frames — the real-codec version of the
+  /** Decode GIF frames, sample every 2nd frame (at most 64), and emit
+    * pixel statistics over the sampled frames — the real-codec version of the
     * frame-sample stage. Narrow mapPartitions, payloads off-driver. */
-  def videoFeatures(media: Dataset[EncodedMedia], stride: Int = 2,
-      maxFrames: Int = 64): Dataset[VideoFeatures] = {
+  def videoFeatures(media: Dataset[EncodedMedia]): Dataset[VideoFeatures] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map { m =>
       val frames = decodeGifFrames(m.payload)
       val sampled = frames.indices.collect {
-        case f if f % stride == 0 => frames(f)
-      }.take(maxFrames)
+        case f if f % 2 == 0 => frames(f)
+      }.take(64)
       val (w, h) = (frames.head._1, frames.head._2)
       var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
       sampled.foreach(_._3.foreach { v =>

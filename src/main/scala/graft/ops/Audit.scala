@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.text.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -72,12 +73,11 @@ object Audit {
     * Scale: one narrow hash projection per snapshot, one full outer
     * equi-join on the id, one 4-row aggregate with map-side partials —
     * content never moves, only (id, 32-char hash, length). */
-  def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def snapshotDiff(oldSnap: DataFrame, newSnap: DataFrame): DataFrame = {
     def side(df: DataFrame, h: String, l: String): DataFrame =
-      df.select(col(idCol).as("_id"),
-        md5(col(textCol).cast("binary")).as(h),
-        length(col(textCol)).cast(LongType).as(l))
+      df.select(col("doc_id").as("_id"),
+        md5(col("text").cast("binary")).as(h),
+        length(col("text")).cast(LongType).as(l))
     side(oldSnap, "_ho", "_lo")
       .join(side(newSnap, "_hn", "_ln"), Seq("_id"), "full_outer")
       .select(
@@ -365,9 +365,8 @@ object Audit {
     * Scale: one group-keyed count aggregate (map-side partials); the
     * noise is O(1) narrow arithmetic per GROUP, not per row. Output is
     * |groups| rows. */
-  def dpCounts(df: DataFrame, keyCols: Seq[String], epsilon: Double = 1.0,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.text.Dedup.portableHash): DataFrame = {
+  def dpCounts(df: DataFrame, keyCols: Seq[String],
+      epsilon: Double = 1.0): DataFrame = {
     require(epsilon > 0, "dpCounts: epsilon must be positive")
     // the salt namespace has 1e-6 resolution: two epsilons rounding to
     // the same micro tag would SHARE a draw, re-enabling the exact
@@ -396,8 +395,10 @@ object Audit {
     // solve exactly for the true count (2·noisy@ε − noisy@ε/2 = truth when
     // the (e1−e2) draw is shared)
     val epsTag = math.round(epsilon * 1e6).toString
-    val e1 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dp+" + epsTag))))
-    val e2 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dp-" + epsTag))))
+    val e1 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dp+" + epsTag))))
+    val e2 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dp-" + epsTag))))
     // Laplace(1/eps) in micro-units: every step from the two bit-identical
     // exponentials is one correctly-rounded IEEE op, then an exact floor
     // NoCodegen: keep the two 17-term ln chains OUT of the aggregation's
@@ -429,9 +430,7 @@ object Audit {
     * (map-side partials); noise is O(1) per GROUP. |groups| output rows. */
   def dpSum(df: DataFrame, keyCols: Seq[String],
       value: org.apache.spark.sql.Column, clip: Long,
-      epsilon: Double = 1.0,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.text.Dedup.portableHash): DataFrame = {
+      epsilon: Double = 1.0): DataFrame = {
     require(epsilon > 0, "dpSum: epsilon must be positive")
     // same namespace-grid rule as dpCounts: off-grid epsilons could
     // collide into one salt namespace and share a draw
@@ -451,8 +450,10 @@ object Audit {
     // composing releases over the same groups — across mechanisms or
     // across epsilons — never reuses a draw
     val epsTag = math.round(epsilon * 1e6).toString
-    val e1 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dps+" + epsTag))))
-    val e2 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dps-" + epsTag))))
+    val e1 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dps+" + epsTag))))
+    val e2 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dps-" + epsTag))))
     // NoCodegen: the dpCounts boundary treatment (ln chains out of the
     // aggregation's generated method)
     val noiseMicro = graft.functions.NoCodegen(
@@ -489,9 +490,7 @@ object Audit {
     * noise O(1) per group. */
   def dpAvg(df: DataFrame, keyCols: Seq[String],
       value: org.apache.spark.sql.Column, clip: Long,
-      epsilon: Double = 1.0,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.text.Dedup.portableHash): DataFrame = {
+      epsilon: Double = 1.0): DataFrame = {
     require(epsilon > 0, "dpAvg: epsilon must be positive")
     // the ε/2 components must land on the component mechanisms' 1e-6
     // salt grid, so the composed ε needs 2e-6 resolution
@@ -518,13 +517,17 @@ object Audit {
     val keyStr = concat_ws("\u0001",
       keyCols.map(c => col(c).cast("string")): _*)
     val epsTag = math.round(eps2 * 1e6).toString
-    val s1 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dps+" + epsTag))))
-    val s2 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dps-" + epsTag))))
+    val s1 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dps+" + epsTag))))
+    val s2 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dps-" + epsTag))))
     val noiseSumMicro = graft.functions.NoCodegen(
       floor((s1 - s2) * lit(clip.toDouble) / lit(eps2)
         * lit(1000000.0)).cast(LongType))
-    val c1 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dp+" + epsTag))))
-    val c2 = Sampling.negLnU(hashOf(concat(keyStr, lit(":dp-" + epsTag))))
+    val c1 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dp+" + epsTag))))
+    val c2 = Sampling.negLnU(Dedup.portableHash(
+      concat(keyStr, lit(":dp-" + epsTag))))
     val noiseCntMicro = graft.functions.NoCodegen(
       floor((c1 - c2) / lit(eps2) * lit(1000000.0)).cast(LongType))
     val clipped = greatest(lit(0L), least(value.cast(LongType), lit(clip)))
@@ -558,15 +561,15 @@ object Audit {
     * of it — here the φ-quantile of the noisy CDF — costs NO extra
     * budget. Values clamp into the DECLARED public range [lo, hi] (the
     * dpSum clipping precondition — sensitivity must never depend on
-    * data) and bucket into `buckets` equal-width integer bins over that
+    * data) and bucket into 64 equal-width integer bins over that
     * fixed public domain; EVERY bin releases, empty ones included (a
     * missing bin would leak emptiness), each with an independent
     * Laplace(1/ε) draw from the `:dpq±` salt namespace — ε AND the bin
     * index micro-encoded, so no two bins (and no other mechanism or
     * epsilon) ever share a draw. The released quantile is the LOWER
     * EDGE of the first bin whose noisy cumulative mass reaches
-    * φ = phiNum/phiDen of the noisy total — an exact integer compare in
-    * micro-units (`cum·phiDen ≥ tot·phiNum`), no float accumulation, so
+    * φ = phiNum/2 of the noisy total — an exact integer compare in
+    * micro-units (`cum·2 ≥ tot·phiNum`), no float accumulation, so
     * the release is bit-identical cross-engine. A non-positive noisy
     * total suppresses (NULL q_bin/q_value — the dpAvg rule); otherwise
     * the last bin always satisfies the compare (cum at the last bin IS
@@ -575,15 +578,12 @@ object Audit {
     * groups, documented there. True bin counts never leave.
     *
     * Scale: one group-keyed bin count (map-side partials), a per-key
-    * bin-grid explode BOUNDED at `buckets` rows per key, cumulative
-    * windows over ≤ `buckets` rows per partition, one keyed argmin.
+    * bin-grid explode BOUNDED at 64 rows per key, cumulative
+    * windows over ≤ 64 rows per partition, one keyed argmin.
     * Noise is O(1) narrow arithmetic per (key, bin). */
   def dpQuantile(df: DataFrame, keyCols: Seq[String],
       value: org.apache.spark.sql.Column, lo: Long, hi: Long,
-      buckets: Int = 64, phiNum: Long = 1L, phiDen: Long = 2L,
-      epsilon: Double = 1.0,
-      hashOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.text.Dedup.portableHash): DataFrame = {
+      phiNum: Long = 1L, epsilon: Double = 1.0): DataFrame = {
     require(epsilon > 0, "dpQuantile: epsilon must be positive")
     require(epsilon >= 1e-6 &&
       math.abs(epsilon * 1e6 - math.round(epsilon * 1e6)) <
@@ -591,14 +591,12 @@ object Audit {
       "dpQuantile: epsilon must be a multiple of 1e-6 (the salt " +
         "namespace resolution)")
     require(lo < hi, "dpQuantile: lo must be below hi")
-    require(buckets >= 1 && buckets <= 4096,
-      "dpQuantile: buckets must be in [1, 4096] (the bounded-grid rule)")
-    require(phiNum >= 1L && phiNum <= phiDen,
+    require(phiNum >= 1L && phiNum <= 2L,
       "dpQuantile: phi must be a rational in (0, 1]")
     require(keyCols.nonEmpty, "dpQuantile: at least one group column")
     require(!keyCols.exists(Set("q_bin", "q_value", "noisy_total")),
       "dpQuantile: q_bin/q_value/noisy_total are reserved output names")
-    val w = (hi - lo + 1L + buckets - 1L) / buckets
+    val w = (hi - lo + 1L + 63L) / 64L
     val epsTag = math.round(epsilon * 1e6).toString
     val clamped = greatest(lit(lo), least(value.cast(LongType), lit(hi)))
     // integer `div`, not `/`: the bin id must be exact integer floor
@@ -613,7 +611,7 @@ object Audit {
     // non-null (a NULL key never equi-joins its counts back).
     val grid = df.select(keyCols.map(col): _*).distinct()
       .withColumn("_bin",
-        explode(sequence(lit(0L), lit((buckets - 1).toLong))))
+        explode(sequence(lit(0L), lit(63L))))
     val full = grid.join(cnt, keyCols :+ "_bin", "left")
       .withColumn("_n", coalesce(col("_n"), lit(0L)))
     val keyStr = concat_ws("\u0001",
@@ -622,8 +620,8 @@ object Audit {
       col("_bin").cast("string"))
     val binTag2 = concat(keyStr, lit(":dpq-" + epsTag + ":"),
       col("_bin").cast("string"))
-    val e1 = Sampling.negLnU(hashOf(binTag))
-    val e2 = Sampling.negLnU(hashOf(binTag2))
+    val e1 = Sampling.negLnU(Dedup.portableHash(binTag))
+    val e2 = Sampling.negLnU(Dedup.portableHash(binTag2))
     val noiseMicro = graft.functions.NoCodegen(
       floor((e1 - e2) / lit(epsilon) * lit(1000000.0)).cast(LongType))
     val nm = full.withColumn("_nm",
@@ -644,7 +642,7 @@ object Audit {
     cum.groupBy(keyCols.map(col): _*)
       .agg(max("_tot").as("_totm"),
         min(when(col("_tot") > 0L &&
-          col("_cum") * lit(phiDen) >= col("_tot") * lit(phiNum),
+          col("_cum") * lit(2L) >= col("_tot") * lit(phiNum),
           col("_bin"))).as("q_bin"))
       .select((keyCols.map(col) :+ col("q_bin") :+
         (lit(lo) + col("q_bin") * lit(w)).as("q_value") :+
@@ -665,11 +663,11 @@ object Audit {
     * The id-keyed split hash and the content-keyed fingerprint are
     * INDEPENDENT by construction — which is exactly why dup content
     * scatters and the audit is necessary. */
-  def splitLeakage(docs: DataFrame, hash: org.apache.spark.sql.Column,
-      textCol: String = "text"): DataFrame = {
+  def splitLeakage(docs: DataFrame,
+      hash: org.apache.spark.sql.Column): DataFrame = {
     val withSplit = Sampling.assignSplit(docs, hash)
     val groups = withSplit
-      .select(graft.text.TextOps.fingerprint(col(textCol)).as("_fp"),
+      .select(graft.text.TextOps.fingerprint(col("text")).as("_fp"),
         col("split"))
       .groupBy("_fp")
       .agg(count(lit(1)).as("_n"), countDistinct(col("split")).as("_ns"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.text.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -35,11 +36,10 @@ object Bloom {
     * carries more than distinct keys. */
   def fprCalibration(members: DataFrame, memberKey: Column,
       probes: DataFrame, probeKey: Column, mBits: Int = 16384,
-      kHashes: Int = 3,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame =
+      kHashes: Int = 3): DataFrame =
     fprFromBits(
-      bitRows(members, memberKey, mBits, kHashes, hashOf).distinct(),
-      members, memberKey, probes, probeKey, mBits, kHashes, hashOf)
+      bitRows(members, memberKey, mBits, kHashes).distinct(),
+      members, memberKey, probes, probeKey, mBits, kHashes)
 
   /** The STREAMABLE half of the filter build: one bucket row per key per
     * salt — a narrow in-row map with NO aggregation, so
@@ -50,18 +50,17 @@ object Bloom {
     * stream == batch argument BloomCalSpec pins as a decomposition
     * equality. */
   def bitRows(keys: DataFrame, key: Column, mBits: Int = 16384,
-      kHashes: Int = 3,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+      kHashes: Int = 3): DataFrame = {
     require(mBits >= 2 && mBits <= (1 << 26), "bitRows: mBits in [2, 2^26]")
     require(kHashes >= 1 && kHashes <= 16, "bitRows: kHashes in [1, 16]")
     keys.select(key.cast("string").as("_k"))
       .withColumn("_j", explode(typedLit((0 until kHashes).toList)))
-      .select(bitCol(col("_k"), col("_j"), mBits, hashOf).as("_b"))
+      .select(bitCol(col("_k"), col("_j"), mBits).as("_b"))
   }
 
-  private def bitCol(v: Column, j: Column, mBits: Int,
-      hashOf: Column => Column): Column =
-    pmod(hashOf(concat(v, lit(":bf"), j.cast("string"))), lit(mBits.toLong))
+  private def bitCol(v: Column, j: Column, mBits: Int): Column =
+    pmod(Dedup.portableHash(concat(v, lit(":bf"), j.cast("string"))),
+      lit(mBits.toLong))
 
   /** Calibration FINISHER over an externally-built set-bit table `(_b)`
     * (distinct rows) — e.g. one a streaming aggregation maintained; the
@@ -69,8 +68,7 @@ object Bloom {
     * n_members report. [[fprCalibration]] is this over a batch build. */
   def fprFromBits(bits: DataFrame, members: DataFrame, memberKey: Column,
       probes: DataFrame, probeKey: Column, mBits: Int = 16384,
-      kHashes: Int = 3,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+      kHashes: Int = 3): DataFrame = {
     require(mBits >= 2 && mBits <= (1 << 26), "fprFromBits: mBits in [2, 2^26]")
     require(kHashes >= 1 && kHashes <= 16, "fprFromBits: kHashes in [1, 16]")
     // defensive distinct (r18 advice): the left-join formulation below
@@ -88,7 +86,7 @@ object Bloom {
     // bit — membership is over the distinct positions it needs covered
     val pb = pr
       .withColumn("_j", explode(typedLit((0 until kHashes).toList)))
-      .select(col("_p"), bitCol(col("_p"), col("_j"), mBits, hashOf).as("_b"))
+      .select(col("_p"), bitCol(col("_p"), col("_j"), mBits).as("_b"))
       .distinct()
     // need + have in ONE per-probe aggregate off ONE broadcast left join
     // (hit = the bit is set), then n_probes + n_false_pos in ONE finishing

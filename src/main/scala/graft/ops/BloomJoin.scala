@@ -35,8 +35,8 @@ object BloomJoin {
     * `probe.join(build, probeKey === buildKey, "left_semi")`. */
   def semiJoin(probe: DataFrame, build: DataFrame,
       probeKey: Column, buildKey: Column,
-      expectedItems: Long = 1000000L, fpp: Double = 0.01): DataFrame = {
-    val bf = buildFilter(build, buildKey, expectedItems, fpp)
+      expectedItems: Long = 1000000L): DataFrame = {
+    val bf = buildFilter(build, buildKey, expectedItems, 0.01)
     probe
       .filter(BloomMightContain(probeKey, bf))
       .join(broadcast(build.select(buildKey.as("__bloom_k")).distinct()),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.text.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -31,14 +32,13 @@ object Cms {
     * depth × width rows and built FROM the counts (Σ n per bucket ==
     * counting occurrences directly), the top-K pick is a bounded
     * TakeOrdered, and the estimate join touches topK × depth rows. */
-  private def bucketCol(v: Column, j: Column, width: Int,
-      hashOf: Column => Column): Column =
-    pmod(hashOf(concat(v.cast("string"), lit(":cms"), j.cast("string"))),
+  private def bucketCol(v: Column, j: Column, width: Int): Column =
+    pmod(Dedup.portableHash(
+      concat(v.cast("string"), lit(":cms"), j.cast("string"))),
       lit(width.toLong))
 
   def errorTopK(df: DataFrame, value: Column, depth: Int = 4,
-      width: Int = 1024, topK: Int = 50,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+      width: Int = 1024, topK: Int = 50): DataFrame = {
     require(depth >= 1 && depth <= 16, "errorTopK: depth in [1, 16]")
     require(width >= 1, "errorTopK: width must be positive")
     val counts = df.select(value.as("_v"))
@@ -46,10 +46,10 @@ object Cms {
     // counters FROM the counts (Σ n per bucket == counting occurrences)
     val counters = (0 until depth).map(j =>
       counts.select(lit(j).as("_j"),
-        bucketCol(col("_v"), lit(j), width, hashOf).as("_b"), col("_n")))
+        bucketCol(col("_v"), lit(j), width).as("_b"), col("_n")))
       .reduce(_ unionByName _)
       .groupBy("_j", "_b").agg(sum("_n").as("_c"))
-    estimateTopK(counters, counts, depth, width, topK, hashOf)
+    estimateTopK(counters, counts, depth, width, topK)
   }
 
   /** The STREAMABLE half of the sketch: each input row explodes into its
@@ -61,14 +61,13 @@ object Cms {
     * batch one ([[errorTopK]]'s) exactly — the stream == batch proof
     * CmsSpec pins as a decomposition equality. */
   def cellRows(df: DataFrame, value: Column, depth: Int = 4,
-      width: Int = 1024,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+      width: Int = 1024): DataFrame = {
     require(depth >= 1 && depth <= 16, "cellRows: depth in [1, 16]")
     require(width >= 1, "cellRows: width must be positive")
     df.select(value.as("_v"))
       .withColumn("_j", explode(typedLit((0 until depth).toList)))
       .select(col("_j"),
-        bucketCol(col("_v"), col("_j"), width, hashOf).as("_b"))
+        bucketCol(col("_v"), col("_j"), width).as("_b"))
   }
 
   /** Batch FINISHER over an externally-built counter table `(_j, _b, _c)`
@@ -78,15 +77,14 @@ object Cms {
     * Bounded: the counter table is depth × width rows, the top-K pick a
     * bounded TakeOrdered, the estimate join topK × depth rows. */
   def estimateTopK(counters: DataFrame, counts: DataFrame, depth: Int,
-      width: Int, topK: Int,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+      width: Int, topK: Int): DataFrame = {
     require(depth >= 1 && depth <= 16, "estimateTopK: depth in [1, 16]")
     require(width >= 1, "estimateTopK: width must be positive")
     require(topK >= 1, "estimateTopK: topK must be positive")
     val top = counts.orderBy(col("_n").desc, col("_v")).limit(topK)
     (0 until depth).map(j =>
       top.select(col("_v"), col("_n"), lit(j).as("_j"),
-        bucketCol(col("_v"), lit(j), width, hashOf).as("_b")))
+        bucketCol(col("_v"), lit(j), width).as("_b")))
       .reduce(_ unionByName _)
       .join(counters, Seq("_j", "_b"))
       .groupBy("_v", "_n").agg(min("_c").as("cms_est"))

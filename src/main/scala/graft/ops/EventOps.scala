@@ -38,27 +38,25 @@ object EventOps {
     * shuffle all joins are co-partitioned (no re-exchange under AQE).
     * Stages are sequential by construction (stage i needs stage i-1's
     * timestamps) — depth = funnel length, each level near-linear. */
-  def funnel(events: DataFrame, stages: Seq[String],
-      userCol: String = "user_id", tsCol: String = "ts",
-      typeCol: String = "event_type"): DataFrame = {
+  def funnel(events: DataFrame, stages: Seq[String]): DataFrame = {
     require(stages.nonEmpty, "funnel needs at least one stage")
     require(stages.distinct == stages, "funnel stages must be distinct")
     def tsName(s: String) = s"ts_$s"
-    val first = events.filter(col(typeCol) === stages.head)
-      .groupBy(col(userCol))
-      .agg(min(col(tsCol)).as(tsName(stages.head)))
+    val first = events.filter(col("event_type") === stages.head)
+      .groupBy(col("user_id"))
+      .agg(min(col("ts")).as(tsName(stages.head)))
     val chained = stages.zipWithIndex.drop(1).foldLeft(first) {
       case (acc, (st, i)) =>
         val prev = tsName(stages(i - 1))
-        val next = events.filter(col(typeCol) === st)
-          .select(col(userCol), col(tsCol).as("_t"))
-          .join(acc.select(col(userCol), col(prev)), Seq(userCol))
+        val next = events.filter(col("event_type") === st)
+          .select(col("user_id"), col("ts").as("_t"))
+          .join(acc.select(col("user_id"), col(prev)), Seq("user_id"))
           .filter(col("_t") > col(prev))
-          .groupBy(col(userCol)).agg(min("_t").as(tsName(st)))
-        acc.join(next, Seq(userCol), "left")
+          .groupBy(col("user_id")).agg(min("_t").as(tsName(st)))
+        acc.join(next, Seq("user_id"), "left")
     }
     chained.select(
-      col(userCol) +:
+      col("user_id") +:
         stages.map(s => col(tsName(s))) :+
         stages.map(s => when(col(tsName(s)).isNotNull, 1).otherwise(0))
           .reduce(_ + _).as("n_stages"): _*)
@@ -79,14 +77,12 @@ object EventOps {
     * (user, day) is unique after the distinct, the final count is a plain
     * `count(*)` — no count-distinct expansion. Output is bounded by
     * cohorts × horizon, independent of event count. */
-  def retention(events: DataFrame, userCol: String = "user_id",
-      tsCol: String = "ts"): DataFrame = {
+  def retention(events: DataFrame): DataFrame = {
     val dayNs = 86400L * 1000L * 1000L * 1000L
     // `div`, not `/`: Column./ on longs goes through DOUBLE, and a 2^60-ns
     // timestamp is not double-representable — integer division is exact
     val active = events
-      .select(col(userCol).as("user_id"),
-        expr(s"`$tsCol` div ${dayNs}L").as("day"))
+      .select(col("user_id"), expr(s"`ts` div ${dayNs}L").as("day"))
       .distinct()
     val cohort = active.groupBy("user_id").agg(min("day").as("cohort_day"))
     active.join(cohort, Seq("user_id"))
@@ -210,13 +206,12 @@ object EventOps {
     * for the session, Spark plans having no common-subtree elimination; a
     * caller that sweeps many event logs frees it with
     * `spark.catalog.clearCache()`. */
-  def rollingActives(events: DataFrame, userCol: String = "user_id",
-      tsCol: String = "ts", windowDays: Int = 7): DataFrame = {
+  def rollingActives(events: DataFrame,
+      windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1, "windowDays must be positive")
     val dayNs = 86400L * 1000L * 1000L * 1000L
     val active = events
-      .select(col(userCol).as("user_id"),
-        expr(s"`$tsCol` div ${dayNs}L").as("day"))
+      .select(col("user_id"), expr(s"`ts` div ${dayNs}L").as("day"))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     val cover = active
       .select(col("user_id"), explode(sequence(col("day"),
@@ -233,11 +228,11 @@ object EventOps {
 
   /** Event-type transition matrix — the first-order Markov view of the
     * event log: for every (prev → next) pair observed inside some user's
-    * (tsCol, tieCol)-ordered stream, the transition count and the
+    * (ts, event_id)-ordered stream, the transition count and the
     * row-normalized probability `p = n / Σ n(prev → *)`.
     *
-    * Determinism: `tieCol` must make (tsCol, tieCol) unique per user (the
-    * record id — the sort family's total-order discipline); `tsCol` is
+    * Determinism: `event_id` makes (ts, event_id) unique per user (the
+    * record id — the sort family's total-order discipline); `ts` is
     * used for ORDERING ONLY, so any orderable representation (timestamp
     * of either precision, epoch long) works unmodified. The probability
     * is ONE division of exact integer counts — bit-stable cross-engine.
@@ -251,14 +246,12 @@ object EventOps {
     * audit) — the window form is one pass, with the normalizing exchange
     * touching only the bounded counts. Output ≤ |types|², independent of
     * event volume. */
-  def transitions(events: DataFrame, userCol: String = "user_id",
-      tsCol: String = "ts", typeCol: String = "event_type",
-      tieCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(userCol).orderBy(col(tsCol), col(tieCol))
+  def transitions(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val counts = events
-      .withColumn("prev_type", lag(col(typeCol), 1).over(w))
+      .withColumn("prev_type", lag(col("event_type"), 1).over(w))
       .filter(col("prev_type").isNotNull)
-      .groupBy(col("prev_type"), col(typeCol).as("next_type"))
+      .groupBy(col("prev_type"), col("event_type").as("next_type"))
       .agg(count(lit(1)).as("n"))
     val wTot = Window.partitionBy("prev_type")
     counts
@@ -277,13 +270,13 @@ object EventOps {
     * interval formulation `valid_from <= t < valid_to` (the DuckDB
     * oracle checks exactly that cross-formulation equivalence).
     *
-    * Changes pre-collapse to ONE state row per (key, tsCol) via
-    * [[compactLatest]] (last record by `tieCol` wins) so version
+    * Changes pre-collapse to ONE state row per (user_id, tus) via
+    * [[compactLatest]] (last record by `event_id` wins) so version
     * boundaries are unique and both formulations agree when several
     * change records share a timestamp.
     *
-    * Returns the left records with `dim_type`-style attribute columns
-    * (`attrCols` values as-of the record's time) and `version`.
+    * Returns the left records with `dim_type` (the `event_type` as of the
+    * record's time) and `version`.
     *
     * Match semantics: the default `keepUnmatched = false` DROPS left
     * records with no as-of dimension state — inner-join-like. With the
@@ -294,26 +287,25 @@ object EventOps {
     * bites — pass the external log as `dimEvents` with
     * `keepUnmatched = true` to surface unmatched records with null
     * `dim_type`/`version` instead of hiding them. */
-  def pitJoin(events: DataFrame, userCol: String = "user_id",
-      tsCol: String = "tus", tieCol: String = "event_id",
-      attrCol: String = "event_type",
-      dimEvents: Option[DataFrame] = None,
+  def pitJoin(events: DataFrame, dimEvents: Option[DataFrame] = None,
       keepUnmatched: Boolean = false): DataFrame = {
     val changes = compactLatest(
-      dimEvents.getOrElse(events).select(userCol, tsCol, tieCol, attrCol),
-      keys = Seq(userCol, tsCol), orderCols = Seq(tieCol),
-      payload = Seq(attrCol))
-    val dim = scd2(changes, userCol, col(tsCol), col(tieCol), Seq(attrCol))
-      .select(col(userCol), col(attrCol).as("dim_type"),
-        col("valid_from").as(tsCol), col("version"))
+      dimEvents.getOrElse(events)
+        .select("user_id", "tus", "event_id", "event_type"),
+      keys = Seq("user_id", "tus"), orderCols = Seq("event_id"),
+      payload = Seq("event_type"))
+    val dim = scd2(changes, "user_id", col("tus"), col("event_id"),
+      Seq("event_type"))
+      .select(col("user_id"), col("event_type").as("dim_type"),
+        col("valid_from").as("tus"), col("version"))
     AsOfJoin.asOf(
-      left = events.select(tieCol, userCol, tsCol),
+      left = events.select("event_id", "user_id", "tus"),
       right = dim,
-      keys = Seq(userCol), leftTs = tsCol, rightTs = tsCol,
+      keys = Seq("user_id"), leftTs = "tus", rightTs = "tus",
       valueCols = Seq("dim_type", "version"),
       rightIdCol = Some("version"))
       .filter(lit(keepUnmatched) || col("dim_type").isNotNull)
-      .select(tieCol, userCol, "dim_type", "version")
+      .select("event_id", "user_id", "dim_type", "version")
   }
 
   /** Rolling `windowDays`-day aggregate via a RANGE-frame window over the

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.text.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -33,13 +34,13 @@ object Hll {
     * row — a narrow projection (no shuffle), usable from batch AND from a
     * stream (the register MAX aggregate is then the stream's ONE stateful
     * aggregation, state bounded at keys × m). */
-  def registers(df: DataFrame, keyCols: Seq[String], value: Column,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+  def registers(df: DataFrame, keyCols: Seq[String],
+      value: Column): DataFrame = {
     require(keyCols.nonEmpty, "registers: at least one key column")
     // register index = low P bits (h ≥ 0, so pmod == bitmask); rank = 1 +
     // leading zeros of the remaining 48-bit window = 49 − bitlength(w)
     df.select(keyCols.map(col) :+ value.as("_v"): _*)
-      .withColumn("_h", hashOf(col("_v")))
+      .withColumn("_h", Dedup.portableHash(col("_v")))
       .withColumn("_idx", pmod(col("_h"), lit(M.toLong)))
       .withColumn("_w", expr(s"_h div $M"))
       .withColumn("_rank",
@@ -90,13 +91,13 @@ object Hll {
     * key-keyed sum — state bounded by m per key regardless of corpus
     * size, and mergeable across any partitioning. The exact side is the
     * usual two-phase distinct aggregate. */
-  def distinctPerKey(df: DataFrame, keyCols: Seq[String], value: Column,
-      hashOf: Column => Column = graft.text.Dedup.portableHash): DataFrame = {
+  def distinctPerKey(df: DataFrame, keyCols: Seq[String],
+      value: Column): DataFrame = {
     require(keyCols.nonEmpty, "distinctPerKey: at least one key column")
     require(!keyCols.exists(Set("n_exact", "v_zero", "hll_est")),
       "distinctPerKey: n_exact/v_zero/hll_est are reserved output names")
     val src = df.select(keyCols.map(col) :+ value.as("_v"): _*)
-    val regs = registers(src, keyCols, col("_v"), hashOf)
+    val regs = registers(src, keyCols, col("_v"))
       .groupBy(keyCols.map(col) :+ col("_idx"): _*)
       .agg(max("_rank").as("_M"))
     val est = estimateFromRegisters(regs, keyCols)

@@ -32,7 +32,7 @@ object Layout {
 
   /** Derived partition columns for transaction facts: year/month from the
     * transaction date — the natural layout for filing-period queries. */
-  def withDateParts(txns: DataFrame, dateCol: String = "transaction_date"): DataFrame =
-    txns.withColumn("txn_year", year(col(dateCol)))
-      .withColumn("txn_month", month(col(dateCol)))
+  def withDateParts(txns: DataFrame): DataFrame =
+    txns.withColumn("txn_year", year(col("transaction_date")))
+      .withColumn("txn_month", month(col("transaction_date")))
 }

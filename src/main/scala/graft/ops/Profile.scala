@@ -20,16 +20,13 @@ import org.apache.spark.sql.types._
   */
 object Profile {
 
-  /** One row per profiled column: `n_null`, `n_distinct` (exact, nulls
+  /** One row per column: `n_null`, `n_distinct` (exact, nulls
     * excluded), numeric range (`min_num`/`max_num` — doubles, timestamps
     * as epoch micros, null for strings) and lexical range
     * (`min_str`/`max_str` — strings only). */
-  def profile(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
-    val fields =
-      if (cols.isEmpty) df.schema.fields.toSeq
-      else df.schema.fields.filter(f => cols.contains(f.name)).toSeq
-    require(fields.nonEmpty, "no columns to profile")
-    val parts = fields.map { f =>
+  def profile(df: DataFrame): DataFrame = {
+    require(df.schema.fields.nonEmpty, "no columns to profile")
+    val parts = df.schema.fields.toSeq.map { f =>
       val c = col(f.name)
       val numExpr: Column = f.dataType match {
         case _: NumericType => c.cast(DoubleType)

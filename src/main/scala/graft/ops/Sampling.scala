@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.text.Dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -41,27 +42,25 @@ object Sampling {
   }
 
   /** Temperature-scaled group mixing — the standard multilingual-corpus
-    * rebalancing recipe: target group shares ∝ count^alpha (alpha < 1
+    * rebalancing recipe: target group shares ∝ count^α (α = 0.5
     * flattens the head), realized as deterministic per-group keep rates
-    * `permille_g = ⌊1000 · (c_min / c_g)^(1−alpha)⌋` — the SMALLEST group
+    * `permille_g = ⌊1000 · √(c_min / c_g)⌋` — the SMALLEST group
     * keeps everything, larger groups downsample toward the tempered
     * distribution. Rates derive from the data itself (one bounded
     * group-count aggregate, broadcast back), then the keep decision is
     * the same pure content-hash filter as [[byRates]] — reproducible
     * across engines, reruns, and partitionings.
     *
-    * Only `alpha = 0.5` is oracle-portable (the exponent computes via
-    * IEEE `sqrt`, correctly rounded in both engines; an arbitrary-`alpha`
-    * `pow` is libm-specific) — other alphas work but are engine-local. */
-  def byTemperature(df: DataFrame, groupCol: String, hash: Column,
-      alpha: Double = 0.5): DataFrame = {
-    require(alpha > 0 && alpha <= 1, "alpha in (0, 1]")
+    * α is fixed at 0.5 because that is what makes it oracle-portable: the
+    * exponent computes via IEEE `sqrt`, correctly rounded in both engines,
+    * where an arbitrary-α `pow` is libm-specific. */
+  def byTemperature(df: DataFrame, groupCol: String,
+      hash: Column): DataFrame = {
     require(!df.columns.exists(Set("__c", "__cmin", "__permille")),
       "byTemperature: input must not contain reserved __ columns")
     val counts = df.groupBy(groupCol).agg(count(lit(1)).as("__c"))
-    val ratio = col("__cmin").cast("double") / col("__c").cast("double")
     val tempered =
-      if (alpha == 0.5) sqrt(ratio) else pow(ratio, 1.0 - alpha)
+      sqrt(col("__cmin").cast("double") / col("__c").cast("double"))
     val rates = counts
       .crossJoin(counts.agg(min(col("__c")).as("__cmin")))
       .select(col(groupCol),
@@ -106,7 +105,7 @@ object Sampling {
 
   /** EXACT weighted sampling without replacement, deterministic and
     * RNG-free: row i holds `w_i` independent 60-bit lottery tickets
-    * (ticket r = `hashOf(id ":" r)`), its priority is its smallest
+    * (ticket r = `portableHash(id ":" r)`), its priority is its smallest
     * ticket, and the k smallest priorities overall win. The global
     * minimum ticket is uniform over all Σw tickets, so row i wins the
     * first draw with probability w_i/Σw; removing the winner repeats the
@@ -115,20 +114,19 @@ object Sampling {
     * realized in integer hash space), yet it is a pure function of the
     * data: reruns, engines, and partitionings agree row-for-row.
     *
-    * Weights clamp to [1, maxWeight]: the ticket list is a bounded
+    * Weights clamp to [1, 64]: the ticket list is a bounded
     * in-row HOF (`sequence` → `transform` → `array_min`), so the pass
     * stays NARROW — no explode, no shuffle — and the global top-k is a
     * bounded `TakeOrdered` (k rows per partition), never a sort. */
-  def weightedByHash(df: DataFrame, id: Column, weight: Column, k: Int,
-      hashOf: Column => Column = graft.text.Dedup.portableHash,
-      maxWeight: Int = 64): DataFrame = {
+  def weightedByHash(df: DataFrame, id: Column, weight: Column,
+      k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    require(maxWeight >= 1, "maxWeight must be positive")
     require(!df.columns.exists(Set("weight", "priority")),
       "weightedByHash: input must not contain the output columns weight/priority")
-    val w = greatest(lit(1L), least(weight.cast("long"), lit(maxWeight.toLong)))
+    val w = greatest(lit(1L), least(weight.cast("long"), lit(64L)))
     val priority = array_min(transform(sequence(lit(1L), w),
-      r => hashOf(concat(id.cast("string"), lit(":"), r.cast("string")))))
+      r => Dedup.portableHash(
+        concat(id.cast("string"), lit(":"), r.cast("string")))))
     df.withColumn("weight", w)
       .withColumn("priority", priority)
       .orderBy(col("priority"), id)
@@ -195,6 +193,10 @@ object Sampling {
     p.cast("double") * lit(RaceLn2) + (lit(2.0) * z) * t
   }
 
+  /** A race weight clamped to [1, 10⁶]. */
+  private def raceWeight(weight: Column): Column =
+    greatest(lit(1L), least(weight.cast("long"), lit(1000000L)))
+
   /** Closed-form EXPONENTIAL-RACE weighted sampling — [[weightedByHash]]'s
     * distribution realized in O(1) per row for ANY weight magnitude: row
     * priority = −ln(u_i)/w_i from ONE content hash (the Efraimidis–Spirakis
@@ -202,25 +204,24 @@ object Sampling {
     * w_i/Σw exactly (the exponential race), successive minima repeat the
     * argument — the same without-replacement semantics as the ticket
     * scheme, but weight magnitude no longer costs per-row work, so real
-    * importance weights (10³–10⁶) clamp at `maxWeight` 10⁶ instead of 64.
+    * importance weights (10³–10⁶) clamp at 10⁶ instead of 64.
     *
     * Deterministic and engine-reproducible like everything in this file:
     * the ln is [[negLnU]]'s portable series (bit-identical cross-engine),
     * u is a pure content hash, and the global top-k is a bounded
     * TakeOrdered (k rows per partition) — never a sort. */
-  def weightedByRace(df: DataFrame, id: Column, weight: Column, k: Int,
-      hashOf: Column => Column = graft.text.Dedup.portableHash,
-      maxWeight: Int = 1000000): DataFrame = {
+  def weightedByRace(df: DataFrame, id: Column, weight: Column,
+      k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    require(maxWeight >= 1, "maxWeight must be positive")
     require(!df.columns.exists(Set("weight", "priority")),
       "weightedByRace: input must not contain the output columns weight/priority")
-    val w = greatest(lit(1L), least(weight.cast("long"), lit(maxWeight.toLong)))
+    val w = raceWeight(weight)
     // hash the STRING form of the id (like weightedByHash's tickets), so
     // the oracle's md5(CAST(id AS VARCHAR)) reproduces it for any id type
     df.withColumn("weight", w)
       .withColumn("priority",
-        negLnU(hashOf(id.cast("string"))) / w.cast("double"))
+        negLnU(Dedup.portableHash(id.cast("string"))) /
+          w.cast("double"))
       .orderBy(col("priority"), id)
       .limit(k)
   }
@@ -237,17 +238,14 @@ object Sampling {
     * language costs what a 100-doc language costs after the map-side
     * heaps. Ties cannot exist (the struct carries the id). */
   def weightedRacePerKey(df: DataFrame, keyCols: Seq[String], id: Column,
-      weight: Column, k: Int,
-      hashOf: Column => Column = graft.text.Dedup.portableHash,
-      maxWeight: Int = 1000000): DataFrame = {
+      weight: Column, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    require(maxWeight >= 1, "maxWeight must be positive")
     require(!df.columns.exists(Set("weight", "priority")),
       "weightedRacePerKey: input must not contain the output columns weight/priority")
-    val w = greatest(lit(1L), least(weight.cast("long"), lit(maxWeight.toLong)))
-    val keyed = df.withColumn("weight", w)
+    val keyed = df.withColumn("weight", raceWeight(weight))
       .withColumn("priority",
-        negLnU(hashOf(id.cast("string"))) / col("weight").cast("double"))
+        negLnU(Dedup.portableHash(id.cast("string"))) /
+          col("weight").cast("double"))
     TopK.perKey(keyed, keyCols, struct(col("priority"), id), k,
       descending = false)
   }
@@ -296,7 +294,7 @@ object Sampling {
     * separation cannot leak through nondeterminism. */
   def assignSplit(df: DataFrame, hash: Column,
       cuts: Seq[(Int, String)] = Seq(900 -> "train", 950 -> "val"),
-      defaultLabel: String = "test", outCol: String = "split"): DataFrame = {
+      defaultLabel: String = "test"): DataFrame = {
     // strictly ascending: a duplicated bound (e.g. 900->train, 900->val)
     // would pass a sorted-equality check but make the later label
     // unreachable — reject it loudly instead
@@ -308,7 +306,7 @@ object Sampling {
     val label = cuts.foldRight(lit(defaultLabel): Column) {
       case ((bound, lbl), acc) => when(bucket < bound, lbl).otherwise(acc)
     }
-    df.withColumn(outCol, label)
+    df.withColumn("split", label)
   }
 
   /** Deterministic global shuffle for training-order assignment: every row

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * content dedup; [[graft.text.IncrDedup]] is the batch incremental
   * near-dup): documents stream through signature banding, and each LSH
   * band keeps per-band state of the signatures seen, so a new doc is
-  * flagged the moment it verifies (≥ `minAgree` of 64 slots) against ANY
+  * flagged the moment it verifies (≥ 20 of 64 slots) against ANY
   * smaller-id doc sharing a band key.
   *
   * Semantics: the DIRECT-NEIGHBOR smaller-id rule (a doc drops iff some
@@ -63,18 +63,18 @@ object NearDup {
     * frame: portable MinHash signatures and band keys are the narrow
     * codegen maps of the batch path; each band's
     * `flatMapGroupsWithState` keeps the members seen and flags arrivals
-    * that verify at `minAgree`. Aggregate `max(band_dup)` per doc_id on
-    * the consumer side for the final keep flag. */
-  def bandVerdicts(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", tsCol: String = "ts",
-      minAgree: Int = 20, horizonMs: Long = 3600000L): Dataset[BandVerdict] = {
+    * that agree on at least 20 of the 64 slots. Aggregate
+    * `max(band_dup)` per doc_id on the consumer side for the final keep
+    * flag. */
+  def bandVerdicts(docs: DataFrame,
+      horizonMs: Long = 3600000L): Dataset[BandVerdict] = {
     import docs.sparkSession.implicits._
     require(horizonMs > 0, "horizonMs must be positive")
-    val sig: Column = graft.text.Dedup.minhashSignaturePortable(col(textCol))
+    val sig: Column = graft.text.Dedup.minhashSignaturePortable(col("text"))
     docs
       .withColumn("sig", sig)
-      .select(col(idCol).cast("long").as("doc_id"), col("sig"),
-        col(tsCol).as("ts"),
+      .select(col("doc_id").cast("long").as("doc_id"), col("sig"),
+        col("ts"),
         explode(graft.text.IncrDedup.bandKeys(col("sig"))).as("bk"))
       .select(col("bk"), col("doc_id"), col("sig"), col("ts"))
       .withWatermark("ts", s"$horizonMs milliseconds")
@@ -111,7 +111,7 @@ object NearDup {
                 s"bandVerdicts: signature width ${e.sig.length} != $stride")
               // a doc verifies iff some SMALLER-id member (prior state or
               // earlier in this batch — both already in the flat arrays)
-              // agrees on >= minAgree slots
+              // agrees on >= 20 slots
               var j = 0
               var dup = false
               while (!dup && j < count) {
@@ -123,7 +123,7 @@ object NearDup {
                     if (sigs(base + i) == e.sig(i)) n += 1
                     i += 1
                   }
-                  if (n >= minAgree) dup = true
+                  if (n >= 20) dup = true
                 }
                 j += 1
               }

@@ -123,10 +123,10 @@ object NexusMonitor {
   }
 
   /** Watermarked daily revenue per state over event time; accepts data up
-    * to `lateness` behind the max seen event time, drops later. */
-  def windowedRevenue(txns: DataFrame, lateness: String = "1 hour"): DataFrame =
+    * to an hour behind the max seen event time, drops later. */
+  def windowedRevenue(txns: DataFrame): DataFrame =
     txns
-      .withWatermark("ts", lateness)
+      .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("state"))
       .agg(sum(col("amount")).cast(Dims.Money).as("revenue"),
         count(lit(1)).as("transaction_count"))

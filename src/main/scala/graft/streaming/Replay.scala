@@ -32,41 +32,54 @@ object Replay {
     * accumulate driver-held result tables for the session lifetime. */
   def replayComplete(spark: SparkSession, srcDir: String, schema: StructType,
       transform: DataFrame => DataFrame): DataFrame =
-    replay(spark, srcDir, schema, transform, "complete")
+    run(spark, "complete", noDataFlush = true)(
+      transform(read(spark, srcDir, schema)))
 
   /** Append-mode sibling of [[replayComplete]] for stateful row-level
     * streaming ops (dedup, sessionize): the sink accumulates every APPENDED
     * row across the replay's micro-batches. Callers keep the appended set
     * bounded (deduped/aggregated rows, not the raw input).
     *
-    * `statePartitions` overrides the bounded-replay shuffle-partition
-    * override (default 4, see [[replayJoin2]]'s measurement note) — a
-    * compute-heavy stateful transform (the near-dup signature verify)
-    * gains more from task parallelism than it loses in per-partition
-    * state-commit overhead, so its caller passes more. `noDataFlush =
-    * false` disables the trailing no-data micro-batch for transforms
-    * whose OUTPUT is provably complete after the data batches (verdict/
-    * match rows emitted on arrival; timeouts only evict state) — the
-    * flush batch costs a full state-store commit cycle and contributes
+    * `noDataFlush = false` disables the trailing no-data micro-batch for
+    * transforms whose OUTPUT is provably complete after the data batches
+    * (verdict/match rows emitted on arrival; timeouts only evict state) —
+    * the flush batch costs a full state-store commit cycle and contributes
     * zero rows there. Transforms that EMIT on event-time timeout
     * (sessionize) must keep it. */
   def replayAppend(spark: SparkSession, srcDir: String, schema: StructType,
-      transform: DataFrame => DataFrame, statePartitions: Int = 4,
+      transform: DataFrame => DataFrame,
       noDataFlush: Boolean = true): DataFrame =
-    replay(spark, srcDir, schema, transform, "append", statePartitions,
-      noDataFlush)
+    run(spark, "append", noDataFlush)(transform(read(spark, srcDir, schema)))
 
   /** Two-stream sibling: reads `srcDir` as TWO independent file-source
     * streams (each with its own offsets/state) and runs a binary streaming
     * transform — the stream-stream join replay path. Append mode: joined
-    * rows are emitted as the watermark proves them complete. */
+    * rows are emitted as the watermark proves them complete. An APPEND
+    * inner interval join emits matches eagerly as data arrives, so join
+    * callers pass `noDataFlush = false`: the trailing no-data batch only
+    * evicts state (measured 1.4-2.2 s of pure state-store commits at
+    * sf0.1, zero output rows); the batch-oracle equality pins that the
+    * emitted set is unchanged. */
   def replayJoin2(spark: SparkSession, srcDir: String, schema: StructType,
       transform: (DataFrame, DataFrame) => DataFrame,
-      noDataFlush: Boolean = true): DataFrame = {
+      noDataFlush: Boolean = true): DataFrame =
+    run(spark, "append", noDataFlush)(
+      transform(read(spark, srcDir, schema), read(spark, srcDir, schema)))
+
+  private def read(spark: SparkSession, srcDir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema).parquet(srcDir)
+
+  /** Runs the streaming frame `query` builds to completion into a memory
+    * sink and returns a batch copy of the sink's rows. */
+  private def run(spark: SparkSession, mode: String, noDataFlush: Boolean)(
+      query: => DataFrame): DataFrame = {
+    // unique sink name per replay: Bench re-runs each query and memory
+    // sink names are session-global
     val name = s"graft_replay_${nameCounter.incrementAndGet()}"
-    // Stream-stream join state commits per partition per operator: at the
-    // session's 32 shuffle partitions the HDFS-backed store's per-commit
-    // fsyncs dominate a replay (measured ~8 s at sf0.1 vs ~0.3 s for the
+    // Stateful operators commit state per partition: at the session's 32
+    // shuffle partitions the HDFS-backed store's per-commit fsyncs
+    // dominate a replay (measured ~8 s at sf0.1 vs ~0.3 s for the
     // equivalent batch join). A replay is one bounded run, so fewer,
     // larger state partitions win; production continuous streams keep the
     // session default. Restored after the query finishes. 4 is measured,
@@ -75,11 +88,6 @@ object Replay {
     // store commits); 4 -> 2 REGRESSED the stateful-heavy replays
     // (neardup b0 3.0 -> 3.9 s — the real flatMapGroupsWithState work
     // loses parallelism faster than commit overhead shrinks).
-    // `noDataFlush = false`: an APPEND inner interval join emits matches
-    // eagerly as data arrives — the trailing no-data batch only evicts
-    // state (measured 1.4-2.2 s of pure state-store commits at sf0.1,
-    // zero output rows), so join callers skip it; the batch-oracle
-    // equality pins that the emitted set is unchanged.
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.streaming.noDataMicroBatches.enabled")
     val prev = keys.map(k => k -> spark.conf.get(k))
@@ -87,10 +95,8 @@ object Replay {
     spark.conf.set(keys(1), noDataFlush.toString)
     val ckpt = ephemeralCheckpoint(name)
     try {
-      val left = spark.readStream.schema(schema).parquet(srcDir)
-      val right = spark.readStream.schema(schema).parquet(srcDir)
-      val q = transform(left, right).writeStream
-        .format("memory").queryName(name).outputMode("append")
+      val q = query.writeStream
+        .format("memory").queryName(name).outputMode(mode)
         .option("checkpointLocation", ckpt.toString)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -100,6 +106,8 @@ object Replay {
       deleteRecursively(ckpt)
     }
     val sink = spark.table(name)
+    // materialize off the sink, then drop its view: the copy is what the
+    // caller computes on; the sink's rows are GC-able immediately
     val rows = sink.collect()
     spark.catalog.dropTempView(name)
     spark.createDataFrame(
@@ -157,39 +165,4 @@ object Replay {
         s"b${p.batchId}:${p.durationMs.get("triggerExecution")}ms:" +
           s"${p.numInputRows}r").mkString(" "))
     }
-
-  private def replay(spark: SparkSession, srcDir: String, schema: StructType,
-      transform: DataFrame => DataFrame, mode: String,
-      statePartitions: Int = 4, noDataFlush: Boolean = true): DataFrame = {
-    // unique sink name per replay: Bench re-runs each query and memory
-    // sink names are session-global
-    val name = s"graft_replay_${nameCounter.incrementAndGet()}"
-    // same bounded-replay state-partition override as [[replayJoin2]]:
-    // per-partition state commits dominate replays at 32 partitions
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    val prev = keys.map(k => k -> spark.conf.get(k))
-    spark.conf.set(keys(0), statePartitions.toString)
-    spark.conf.set(keys(1), noDataFlush.toString)
-    val ckpt = ephemeralCheckpoint(name)
-    try {
-      val stream = spark.readStream.schema(schema).parquet(srcDir)
-      val q = transform(stream).writeStream
-        .format("memory").queryName(name).outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      debugProgress(name, q)
-    } finally {
-      prev.foreach { case (k, v) => spark.conf.set(k, v) }
-      deleteRecursively(ckpt)
-    }
-    val sink = spark.table(name)
-    // materialize off the sink, then drop its view: the copy is what the
-    // caller computes on; the sink's rows are GC-able immediately
-    val rows = sink.collect()
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), sink.schema)
-  }
 }

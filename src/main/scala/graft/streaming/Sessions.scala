@@ -29,14 +29,14 @@ object Sessions {
       session_end: Timestamp, n_events: Long)
 
   /** Gap-based sessionization over an event stream: a session closes after
-    * `gapMinutes` of per-user inactivity (same rule as the batch
+    * 30 minutes of per-user inactivity (same rule as the batch
     * op_sessionize window query). Closed sessions are emitted when the next
     * event proves the gap, or by event-time timeout once the watermark
     * passes `session_end + gap`. */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30,
+  def sessionize(events: Dataset[Event],
       lateness: String = "1 hour"): Dataset[Session] = {
     import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60L * 1000L
+    val gapMs = 30L * 60L * 1000L
     events
       .withWatermark("ts", lateness)
       .groupByKey(_.user_id)
@@ -78,10 +78,10 @@ object Sessions {
   /** Exact streaming dedup by content hash: first event per md5(text) within
     * the watermark horizon survives. State is bounded by the watermark —
     * the streaming counterpart of [[graft.text.Dedup.exact]]. */
-  def dedupByContent(docs: DataFrame, textCol: String = "text",
-      tsCol: String = "ts", lateness: String = "1 hour"): DataFrame =
+  def dedupByContent(docs: DataFrame,
+      lateness: String = "1 hour"): DataFrame =
     docs
-      .withColumn("text_hash", md5(col(textCol).cast(BinaryType)))
-      .withWatermark(tsCol, lateness)
+      .withColumn("text_hash", md5(col("text").cast(BinaryType)))
+      .withWatermark("ts", lateness)
       .dropDuplicatesWithinWatermark("text_hash")
 }

@@ -59,17 +59,6 @@ object Schemas {
       approaching_threshold: Boolean,
       details: String)
 
-  case class FilingDeadline(
-      state_code: String,
-      frequency: String,
-      period_start: java.sql.Date,
-      period_end: java.sql.Date,
-      due_date: java.sql.Date,
-      is_overdue: Boolean,
-      days_until_due: Int,
-      estimated_liability: BigDecimal,
-      status: String)
-
   /** Typed transactions → typed tax results, through the shared expression
     * block (the Dataset face of [[TaxCalc.withTax]]). */
   def calculate(txns: Dataset[Transaction]): Dataset[TaxResult] = {

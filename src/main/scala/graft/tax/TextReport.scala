@@ -48,15 +48,15 @@ object TextReport {
   private def str(r: Row, field: String, default: String = ""): String =
     getOpt(r, field).map(_.toString).getOrElse(default)
 
-  private def dbl(r: Row, field: String, default: Double = 0.0): Double =
+  private def dbl(r: Row, field: String): Double =
     getOpt(r, field).map {
       case d: Double               => d
       case f: Float                => f.toDouble
       case b: java.math.BigDecimal => b.doubleValue
       case l: Long                 => l.toDouble
       case i: Int                  => i.toDouble
-      case _                       => default
-    }.getOrElse(default)
+      case _                       => 0.0
+    }.getOrElse(0.0)
 
   private def rows(r: Row, field: String): Seq[Row] =
     getOpt(r, field)

@@ -29,16 +29,16 @@ import org.apache.spark.sql.types._
   * for one shuffle.
   */
 object Bm25 {
+  private val K1 = 1.2
+  private val B = 0.75
 
   /** Per matching doc (≥1 query term present): `dl` token length, per-term
     * `tf_<term>` counts, and the fixed-order BM25 `score`. */
-  def score(docs: DataFrame, terms: Seq[String], textCol: String = "text",
-      idCol: String = "doc_id", k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
+  def score(docs: DataFrame, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty && terms.distinct == terms)
-    val toks = TextOps.tokens(col(textCol))
+    val toks = TextOps.tokens(col("text"))
     val base = docs.select(
-      col(idCol).as("doc_id") +:
+      col("doc_id") +:
         size(toks).as("dl") +:
         terms.map(t =>
           size(filter(toks, x => x === lit(t))).as(s"tf_$t")): _*)
@@ -53,9 +53,9 @@ object Bm25 {
     def contrib(t: String): Column =
       ((col("n_docs") - col(s"df_$t") + lit(0.5)) /
         (col(s"df_$t") + lit(0.5))) *
-        (col(s"tf_$t") * lit(k1 + 1.0)) /
-        (col(s"tf_$t") + lit(k1) *
-          (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
+        (col(s"tf_$t") * lit(K1 + 1.0)) /
+        (col(s"tf_$t") + lit(K1) *
+          (lit(1.0) - lit(B) + lit(B) * col("dl") / avgdl))
     base.crossJoin(broadcast(stats))
       .filter(terms.map(t => col(s"tf_$t") > 0).reduce(_ || _))
       .select(col("doc_id") +: col("dl") +:

@@ -34,14 +34,14 @@ object Dedup {
   val RowsPerBand = 4
 
   /** Exact dedup: canonical survivor per identical text. */
-  def exact(docs: DataFrame, textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    docs.groupBy(md5(col(textCol).cast(BinaryType)).as("text_hash"))
-      .agg(min(idCol).as("keep_id"), count(lit(1)).as("n_dups"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text").cast(BinaryType)).as("text_hash"))
+      .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
 
   /** Paragraph-level exact dedup — the C4/Gopher recipe granularity: the
     * standard pipelines drop REPEATED PARAGRAPHS (boilerplate, licenses,
     * navigation chrome) across the whole corpus, not just whole-document
-    * duplicates. Paragraphs are `sepRegex` splits (default blank-line);
+    * duplicates. Paragraphs are blank-line (`\n\n`) splits;
     * the canonical survivor of each distinct paragraph is its occurrence
     * in the LOWEST doc id.
     *
@@ -54,10 +54,9 @@ object Dedup {
     * / (doc, hash) with map-side partials, and the min-owner join moves
     * (hash, doc_id) rows only — the same bounded-agg shape as [[exact]],
     * one explode wider. No windows, no per-doc buffers. */
-  def paraDedup(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", sepRegex: String = "\\n\\n"): DataFrame = {
-    val paras = docs.select(col(idCol).as("doc_id"),
-        explode(split(col(textCol), sepRegex)).as("para"))
+  def paraDedup(docs: DataFrame): DataFrame = {
+    val paras = docs.select(col("doc_id"),
+        explode(split(col("text"), "\\n\\n")).as("para"))
       .filter(length(trim(col("para"))) > 0)
       .select(col("doc_id"), md5(col("para").cast(BinaryType)).as("ph"))
     val perDoc = paras.groupBy("doc_id", "ph").agg(count(lit(1)).as("n_occ"))
@@ -70,7 +69,7 @@ object Dedup {
 
   /** C4-style boilerplate STRIP (the deliverable [[paraDedup]] only
     * reports stats for): a paragraph is boilerplate when it appears in at
-    * least `minDf` distinct documents (licenses, navigation chrome,
+    * least 10 distinct documents (licenses, navigation chrome,
     * subscribe banners), and the cleaned document is the remaining
     * paragraphs re-joined in their original order. Output per doc:
     * `n_paras`, `n_dropped`, and `clean_hash` (md5 of the re-joined
@@ -82,13 +81,10 @@ object Dedup {
     * only (hash, df) pairs; re-assembly is ONE shuffle keyed on doc_id
     * whose per-group state is the document's own paragraphs — nothing
     * corpus-wide ever sits in one task. */
-  def stripBoilerplate(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minDf: Int = 10,
-      sepRegex: String = "\\n\\n", sep: String = "\n\n"): DataFrame = {
-    require(minDf >= 2, "minDf < 2 would strip every paragraph")
+  def stripBoilerplate(docs: DataFrame): DataFrame = {
     val paras = docs
-      .select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol), sepRegex)).as(Seq("pos", "para")))
+      .select(col("doc_id"),
+        posexplode(split(col("text"), "\\n\\n")).as(Seq("pos", "para")))
       .filter(length(trim(col("para"))) > 0)
       .select(col("doc_id"), col("pos"), col("para"),
         md5(col("para").cast(BinaryType)).as("ph"))
@@ -97,13 +93,13 @@ object Dedup {
     paras.join(docFreq, "ph")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_paras"),
-        count(when(col("df") >= minDf, 1)).as("n_dropped"),
+        count(when(col("df") >= 10, 1)).as("n_dropped"),
         md5(array_join(
           transform(
             array_sort(collect_list(
-              when(col("df") < minDf, struct(col("pos"), col("para"))))),
+              when(col("df") < 10, struct(col("pos"), col("para"))))),
             p => p.getField("para")),
-          sep).cast(BinaryType)).as("clean_hash"))
+          "\n\n").cast(BinaryType)).as("clean_hash"))
   }
 
   /** Word 3-gram shingles (distinct); short docs fall back to the whole
@@ -151,6 +147,11 @@ object Dedup {
     * pigeonhole-exact) and an over-cap band bucket is in practice an
     * exact-dup mega-cluster whose star edges all verify. */
   val MaxBandBucket = 256
+
+  /** Hub-shingle cap of the shingle inverted index ([[jaccardPairs]],
+    * [[containmentPairs]], [[contamination]]): a shingle in more than
+    * this many documents is dropped before the pair join. */
+  private val MaxShingleDf = 100
 
   /** Hybrid all-pairs/star edges from an exploded bucket table
     * `(bucket key cols..., id)`: per bucket, occupancy ≤ `maxBucket` emits
@@ -221,8 +222,7 @@ object Dedup {
     * from the "over-cap buckets are exact-dup mega-clusters" assumption
     * the cap's recall argument rests on, instead of assuming it. Bounded
     * aggregates per miner plus one star-edge-sized verify join. */
-  def bandStats(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxBucket: Int = MaxBandBucket,
+  def bandStats(docs: DataFrame, maxBucket: Int = MaxBandBucket,
       minAgree: Int = 20, maxHamming: Int = 3): DataFrame = {
     def report(miner: String, buckets: DataFrame,
         keyCols: Seq[String]): DataFrame =
@@ -257,8 +257,8 @@ object Dedup {
         .select(col("n_star_edges"),
           coalesce(col("n_star_verified"), lit(0L)).as("n_star_verified"))
     val sigs = docs
-      .withColumn("sig", minhashSignaturePortable(col(textCol)))
-      .select(col(idCol).as("sid"), col("sig"))
+      .withColumn("sig", minhashSignaturePortable(col("text")))
+      .select(col("doc_id").as("sid"), col("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val mh = bandedSigs(sigs.select(col("sid").as("id"), col("sig")))
     val mhStars = starCounts(
@@ -270,8 +270,8 @@ object Dedup {
             (x, y) => when(x === y, 1).otherwise(0)), lit(0),
             (acc, v) => acc + v)),
       col("n_agree") >= minAgree)
-    val shSigs = withSimhash(docs, textCol)
-      .select(col(idCol).as("id"), col("simhash"))
+    val shSigs = withSimhash(docs)
+      .select(col("doc_id").as("id"), col("simhash"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sh = shSigs
       .select(col("id"),
@@ -292,16 +292,15 @@ object Dedup {
   /** Candidate pairs + estimated Jaccard from signature agreement; keep
     * pairs with est ≥ threshold (num agreeing hashes ≥ thresh64/64).
     * Signatures are [[minhashSignaturePortable]]'s, DuckDB-reproducible. */
-  def minhashPairs(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minAgree: Int = 32,
+  def minhashPairs(docs: DataFrame, minAgree: Int = 32,
       maxBucket: Int = MaxBandBucket): DataFrame = {
     // Persist the (id, sig) table: it feeds the band join twice and the
     // verify join twice — without it the signature aggregate (the expensive
     // narrow stage) runs 3-4×. Size is id + 64 longs per doc — tiny
     // relative to the corpus, safe to persist at any scale.
     val sigs = docs
-      .withColumn("sig", minhashSignaturePortable(col(textCol)))
-      .select(col(idCol).as("sid"), col("sig"))
+      .withColumn("sig", minhashSignaturePortable(col("text")))
+      .select(col("doc_id").as("sid"), col("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     lshCandidatesFromSigs(sigs.select(col("sid").as("id"), col("sig")), maxBucket)
       .join(sigs.select(col("sid").as("a"), col("sig").as("sig_a")), "a")
@@ -316,9 +315,9 @@ object Dedup {
   /** SimHash over shingle hashes: per-bit majority vote of ±1 over the
     * 60 bits of [[portableHash]] (DuckDB-reproducible), computed by the
     * native codegen expression [[graft.functions.PortableSimHash]]. */
-  def withSimhash(docs: DataFrame, textCol: String = "text"): DataFrame =
+  def withSimhash(docs: DataFrame): DataFrame =
     docs.withColumn("simhash",
-      graft.functions.PortableSimHash(shingles(col(textCol)), 60))
+      graft.functions.PortableSimHash(shingles(col("text"))))
 
   /** Hamming distance between two simhash longs (bit_count of xor). */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
@@ -327,7 +326,7 @@ object Dedup {
     * [[withSimhash]]'s fingerprints exist for: the 60-bit portable
     * simhash splits into 4 bands of 15 bits, candidates collide on any
     * band, and the exact Hamming distance (one xor + popcount) verifies
-    * ≤ `maxHamming`. Pigeonhole gives GUARANTEED recall at this banding:
+    * ≤ 3. Pigeonhole gives GUARANTEED recall at this banding:
     * a pair within Hamming 3 differs in at most 3 of the 4 bands, so at
     * least one band matches exactly — no probabilistic miss, unlike
     * MinHash banding.
@@ -337,32 +336,25 @@ object Dedup {
     * O(band collisions), never all-pairs; the verify is integer-only.
     * Near-identical docs (the use case) collide on all 4 bands, so the
     * distinct() pre-verify dedups candidate multiplicity. Buckets over
-    * `maxBucket` emit star edges to the bucket min instead of all pairs
-    * ([[MaxBandBucket]]): the pigeonhole guarantee then holds for pairs
-    * whose shared bucket is ≤ cap; over-cap buckets (in practice exact-dup
-    * mega-clusters, hamming 0 to the representative) stay connected through
-    * the star — pass `Int.MaxValue` for the exact form. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id",
-      maxBucket: Int = MaxBandBucket): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      "4x15-bit banding guarantees recall only for maxHamming <= 3; and " +
-        "only for pairs whose shared bucket is <= maxBucket — consult " +
-        "bandStats' n_overcap_buckets/star-edge columns before trusting " +
-        "recall on a corpus with over-cap buckets")
-    val sh = withSimhash(docs, textCol)
-      .select(col(idCol).as("id"), col("simhash"))
+    * [[MaxBandBucket]] emit star edges to the bucket min instead of all
+    * pairs: the pigeonhole guarantee then holds for pairs whose shared
+    * bucket is ≤ cap; over-cap buckets (in practice exact-dup
+    * mega-clusters, hamming 0 to the representative) stay connected
+    * through the star — [[bandStats]] reports how many there are. */
+  def simhashPairs(docs: DataFrame): DataFrame = {
+    val sh = withSimhash(docs)
+      .select(col("doc_id").as("id"), col("simhash"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val banded = sh.select(col("id"),
         explode(array((0 until 4).map(b => struct(lit(b).as("bd"),
           shiftrightunsigned(col("simhash"), 15 * b)
             .bitwiseAND(lit(32767L)).as("bkey"))): _*)).as("_band"))
       .select(col("id"), col("_band.bd").as("bd"), col("_band.bkey").as("bkey"))
-    cappedBucketPairs(banded, Seq("bd", "bkey"), maxBucket)
+    cappedBucketPairs(banded, Seq("bd", "bkey"), MaxBandBucket)
       .join(sh.select(col("id").as("a"), col("simhash").as("_sa")), "a")
       .join(sh.select(col("id").as("b"), col("simhash").as("_sb")), "b")
       .select(col("a"), col("b"), hamming(col("_sa"), col("_sb")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
   }
 
   /** Exact n-gram Jaccard near-dup pairs via shingle inverted index:
@@ -370,19 +362,19 @@ object Dedup {
     * count; union from per-doc distinct counts. Division-free output:
     * (a, b, inter, union) with 2*inter ≥ union (Jaccard ≥ 1/3 kept,
     * caller filters tighter). Hub shingles are capped to bound the join
-    * (a shingle shared by > maxDf docs is dropped — standard inverted-
-    * index trick; at 100 TB this is what keeps the op near-linear).
+    * (a shingle shared by > [[MaxShingleDf]] docs is dropped — standard
+    * inverted-index trick; at 100 TB this is what keeps the op
+    * near-linear).
     *
-    * `maxDf` bounds the pair join, not the document-frequency count:
+    * The cap bounds the pair join, not the document-frequency count:
     * the df comes from a count window partitioned by shingle, so every
     * row of a hub shingle passes through ONE window buffer, in one task,
-    * before the `maxDf` filter drops it. The buffer spills to disk past
+    * before the cap's filter drops it. The buffer spills to disk past
     * `spark.sql.windowExec.buffer.spill.threshold` rows, so a hub costs
     * disk and one task's time, not heap; the op assumes no shingle's
     * posting list is a large share of the corpus. */
-  def jaccardPairs(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxDf: Int = 100): DataFrame =
-    shingleIntersections(docs, textCol, idCol, maxDf)
+  def jaccardPairs(docs: DataFrame): DataFrame =
+    shingleIntersections(docs)
       .withColumn("union_n", col("na") + col("nb") - col("inter"))
       .filter(col("inter") * 2 >= col("union_n"))
       .select("a", "b", "inter", "union_n")
@@ -390,40 +382,36 @@ object Dedup {
   /** Asymmetric shingle CONTAINMENT pairs — the near-dup signal Jaccard
     * misses: an excerpt/quote/subset doc shares nearly ALL of its own
     * shingles with its source while the symmetric Jaccard can sit at ~0.5
-    * or below. Keeps pairs where `inter / min(n_a, n_b) ≥ minPermille/1000`
+    * or below. Keeps pairs where `inter / min(n_a, n_b) ≥ 0.8`
     * (threshold multiplicative — integer-only; the reported containment is
-    * ONE exact-int division). Same de-hubbed inverted index, same maxDf
-    * cap, same O(collisions) bound as [[jaccardPairs]], and the same
-    * hub-size assumption: each hub shingle's rows pass through one window
-    * buffer (spilling past `spark.sql.windowExec.buffer.spill.threshold`)
-    * before the `maxDf` filter drops them.
+    * ONE exact-int division). Same de-hubbed inverted index, same
+    * [[MaxShingleDf]] cap, same O(collisions) bound as [[jaccardPairs]],
+    * and the same hub-size assumption: each hub shingle's rows pass
+    * through one window buffer (spilling past
+    * `spark.sql.windowExec.buffer.spill.threshold`) before the cap's
+    * filter drops them.
     *
     * Scale: identical posture to [[jaccardPairs]] — the two ops share the
     * [[shingleIntersections]] core, so running both against the same
     * corpus reuses the persisted index via plan-identity caching. */
-  def containmentPairs(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", maxDf: Int = 100, minPermille: Int = 800): DataFrame = {
-    require(minPermille >= 1 && minPermille <= 1000,
-      "minPermille must be in [1, 1000]")
-    shingleIntersections(docs, textCol, idCol, maxDf)
-      .filter(col("inter") * 1000 >= least(col("na"), col("nb")) * minPermille)
+  def containmentPairs(docs: DataFrame): DataFrame =
+    shingleIntersections(docs)
+      .filter(col("inter") * 1000 >= least(col("na"), col("nb")) * 800)
       .select(col("a"), col("b"), col("inter"),
         col("na").cast(LongType).as("na"), col("nb").cast(LongType).as("nb"),
         (col("inter").cast(DoubleType) /
           least(col("na"), col("nb")).cast(DoubleType)).as("containment"))
-  }
 
   /** Shared core of [[jaccardPairs]] / [[containmentPairs]]: de-hubbed
     * inverted shingle index → per-pair intersection counts with both
     * docs' distinct-shingle counts carried through the aggregation. */
-  private def shingleIntersections(docs: DataFrame, textCol: String,
-      idCol: String, maxDf: Int): DataFrame = {
+  private def shingleIntersections(docs: DataFrame): DataFrame = {
     // Per-doc distinct-shingle count rides ALONG the exploded index (size
     // of the shingle array, same narrow map), so there is no per-doc counts
     // aggregation and no (a)/(b) count joins downstream — two fewer
     // shuffles than the textbook inverted-index formulation.
-    val withSh = docs.select(col(idCol).as("id"),
-      shingles(col(textCol)).as("shs"))
+    val withSh = docs.select(col("doc_id").as("id"),
+      shingles(col("text")).as("shs"))
     val sh = withSh.select(col("id"),
       size(col("shs")).as("n_sh"), explode(col("shs")).as("s"))
     // De-hubbing as ONE pass (round 19): the document frequency comes from
@@ -442,7 +430,7 @@ object Dedup {
     val w = Window.partitionBy("s")
     val filtered =
       sh.withColumn("_df", count(lit(1)).over(w))
-        .filter(col("_df") <= maxDf).drop("_df")
+        .filter(col("_df") <= MaxShingleDf).drop("_df")
         .persist(StorageLevel.MEMORY_AND_DISK)
     val inter = filtered.select(col("s"), col("id").as("a"), col("n_sh").as("na"))
       .join(filtered.select(col("s"), col("id").as("b"), col("n_sh").as("nb")), "s")
@@ -461,8 +449,8 @@ object Dedup {
     * Iterative min-label propagation: each round every vertex takes the
     * min of its own and its neighbors' labels; converges to the component
     * min in O(component diameter) rounds. Near-dup clusters are
-    * near-cliques (diameter 1-2), so 1-2 rounds in practice; `maxIters`
-    * bounds pathological chains.
+    * near-cliques (diameter 1-2), so 1-2 rounds in practice; a cap of 20
+    * rounds bounds pathological chains.
     *
     * Scale: DataFrame-only (no GraphX/RDDs, no driver collect) — per round
     * one shuffle join (edges ⋈ labels) and one per-vertex min aggregate;
@@ -484,17 +472,15 @@ object Dedup {
     * reports from one clustering — survivors, cluster sizes,
     * best-survivor argmax — should call this once and reuse the returned
     * frame, not re-call per report. */
-  def components(pairs: DataFrame, aCol: String = "a", bCol: String = "b",
-      maxIters: Int = 20): DataFrame =
-    componentsWithStats(pairs, aCol, bCol, maxIters).labels
+  def components(pairs: DataFrame): DataFrame =
+    componentsWithStats(pairs).labels
 
   /** Result of [[componentsWithStats]]: final labels + convergence info. */
   final case class ComponentsResult(labels: DataFrame, rounds: Int,
       converged: Boolean)
 
   /** [[components]] with the round count and convergence flag exposed. */
-  def componentsWithStats(pairs: DataFrame, aCol: String = "a",
-      bCol: String = "b", maxIters: Int = 20): ComponentsResult = {
+  def componentsWithStats(pairs: DataFrame): ComponentsResult = {
     // ITERATION STORAGE: per-round LOCAL CHECKPOINTS, not cache entries.
     // Spark's CacheManager re-compiles (and drops the materialized blocks
     // of) every cached entry whose plan references an entry being
@@ -512,8 +498,8 @@ object Dedup {
     // bounded O(diameter)-round batch op.
     import org.apache.spark.sql.graft.CheckpointBridge
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-      .unionByName(pairs.select(col(bCol).as("u"), col(aCol).as("v")))
+    val edges = pairs.select(col("a").as("u"), col("b").as("v"))
+      .unionByName(pairs.select(col("b").as("u"), col("a").as("v")))
       .distinct().persist(lvl)
     // initialization fused with the first propagation round: every vertex
     // starts at min(self, neighbors) — one round fewer for the common
@@ -524,7 +510,7 @@ object Dedup {
     var labels = ck
     var iters = 0
     var converged = false
-    while (!converged && iters < maxIters) {
+    while (!converged && iters < 20) {
       val nmin = edges
         .join(labels.select(col("id").as("v"), col("label").as("vl")), "v")
         .groupBy(col("u").as("id")).agg(min("vl").as("nmin"))
@@ -548,8 +534,8 @@ object Dedup {
     if (!converged)
       // a truncated fixpoint silently diverges from exact CC — make it loud
       System.err.println(s"[graft] Dedup.components: label propagation did " +
-        s"NOT converge within maxIters=$maxIters rounds; cluster labels may " +
-        s"be split. Raise maxIters for long-chain graphs.")
+        s"NOT converge within 20=20 rounds; cluster labels may " +
+        s"be split. Raise 20 for long-chain graphs.")
     edges.unpersist()
     // the result is a projection of the final checkpoint — lineage-free,
     // so later unpersists can't invalidate it
@@ -566,9 +552,8 @@ object Dedup {
     * Scale: one left join keyed on doc id against the labels frame —
     * labels hold only docs that appeared in a pair, so the join's small
     * side is the near-dup subset, not the corpus. */
-  def survivors(corpus: DataFrame, labels: DataFrame,
-      idCol: String = "doc_id"): DataFrame =
-    corpus.select(col(idCol).as("doc_id"))
+  def survivors(corpus: DataFrame, labels: DataFrame): DataFrame =
+    corpus.select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
@@ -591,10 +576,10 @@ object Dedup {
     * corpus (cluster sizes are unbounded in a crawl: a boilerplate
     * cluster can hold millions of members); the winner list (one row per
     * cluster) joins back hash-keyed on cluster_id. */
-  def bestSurvivors(corpus: DataFrame, labels: DataFrame, quality: Column,
-      idCol: String = "doc_id"): DataFrame = {
+  def bestSurvivors(corpus: DataFrame, labels: DataFrame,
+      quality: Column): DataFrame = {
     val lab = corpus
-      .select(col(idCol).as("doc_id"), quality.as("_q"))
+      .select(col("doc_id"), quality.as("_q"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"),
@@ -631,19 +616,17 @@ object Dedup {
     * by cluster count, one join back, one group-keyed aggregate bounded
     * by group count — all map-side-partial friendly, nothing all-pairs
     * (the pair work already happened in the clustering). */
-  def dupAttribution(corpus: DataFrame, labels: DataFrame,
-      groupCol: String = "source", textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  def dupAttribution(corpus: DataFrame, labels: DataFrame): DataFrame = {
     val asg = corpus
-      .select(col(idCol).as("doc_id"), col(groupCol).as("_grp"),
-        length(col(textCol)).cast(LongType).as("_len"))
+      .select(col("doc_id"), col("source").as("_grp"),
+        length(col("text")).cast(LongType).as("_len"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), col("_grp"), col("_len"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
     val sizes = asg.groupBy("cluster_id")
       .agg(count(lit(1)).as("_sz"), min("doc_id").as("_keep"))
     asg.join(sizes, "cluster_id")
-      .groupBy(col("_grp").as(groupCol))
+      .groupBy(col("_grp").as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("_sz") > 1, 1L).otherwise(0L)).as("n_dup_docs"),
         sum(when(col("doc_id") =!= col("_keep"), 1L).otherwise(0L))
@@ -668,15 +651,13 @@ object Dedup {
     * rides the plan as a cross-joined 1-row aggregate (the
     * [[graft.ops.Sampling.tokenBudgetMix]] pattern) — no eager count()
     * action, so the whole sweep is ONE job. */
-  def minhashSweep(docs: DataFrame, thresholds: Seq[Int],
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def minhashSweep(docs: DataFrame, thresholds: Seq[Int]): DataFrame = {
     require(thresholds.nonEmpty, "thresholds must be non-empty")
     require(thresholds == thresholds.sorted && thresholds.distinct == thresholds,
       "thresholds must be strictly ascending")
     val spark = docs.sparkSession
     val nDocs = docs.agg(count(lit(1)).as("_n_docs"))
-    val pairs = minhashPairs(docs, textCol, idCol,
-      minAgree = thresholds.head)
+    val pairs = minhashPairs(docs, minAgree = thresholds.head)
     val hits = pairs
       .select(col("b"),
         explode(array(thresholds.map(t => lit(t)): _*)).as("min_agree"),
@@ -705,12 +686,11 @@ object Dedup {
     * Scale: two hash joins of the (already bounded) pair frame against the
     * (id, group) projection, then one matrix-bounded aggregate — nothing
     * rescans text; the pair work already happened upstream. */
-  def crossSourceOverlap(corpus: DataFrame, pairs: DataFrame,
-      groupCol: String = "source", idCol: String = "doc_id"): DataFrame = {
-    val src = corpus.select(col(idCol), col(groupCol).as("_g"))
+  def crossSourceOverlap(corpus: DataFrame, pairs: DataFrame): DataFrame = {
+    val src = corpus.select(col("doc_id"), col("source").as("_g"))
     pairs
-      .join(src.select(col(idCol).as("a"), col("_g").as("_ga")), "a")
-      .join(src.select(col(idCol).as("b"), col("_g").as("_gb")), "b")
+      .join(src.select(col("doc_id").as("a"), col("_g").as("_ga")), "a")
+      .join(src.select(col("doc_id").as("b"), col("_g").as("_gb")), "b")
       .select(
         least(col("_ga"), col("_gb")).as("source_a"),
         greatest(col("_ga"), col("_gb")).as("source_b"),
@@ -727,40 +707,39 @@ object Dedup {
   }
 
   /** Cross-corpus contamination check (train/benchmark decontamination):
-    * for each benchmark doc, the train docs sharing at least `minOverlap`
+    * for each benchmark doc, the train docs sharing at least 5
     * distinct word 3-grams, with the overlap count and the benchmark's
     * shingle count (so callers can threshold on overlap/bench_n coverage).
     *
     * Same inverted-index shape as [[jaccardPairs]], but the two sides are
     * DIFFERENT corpora: the index is built over the train side only and
     * benchmark shingles probe it — a benchmark row never pairs with
-    * another benchmark row, and df-capping (`maxDf`, on TRAIN document
+    * another benchmark row, and df-capping ([[MaxShingleDf]], on TRAIN document
     * frequency) bounds hub shingles exactly as in the self-join case.
     * At 100 TB train / small benchmark, the probe side is the small one:
     * the join shuffles O(bench shingles + train index rows), never pairs
     * of train docs. */
-  def contamination(train: DataFrame, bench: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      minOverlap: Int = 5, maxDf: Int = 100): DataFrame = {
+  def contamination(train: DataFrame, bench: DataFrame): DataFrame = {
     // persisted for the same reason as jaccardPairs' index: the exploded
     // train shingles feed the df-count aggregate AND the probe join
-    val tSh = train.select(col(idCol).as("train_id"),
-      explode(shingles(col(textCol))).as("s"))
+    val tSh = train.select(col("doc_id").as("train_id"),
+      explode(shingles(col("text"))).as("s"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val tIdx = tSh.join(
-      tSh.groupBy("s").agg(count(lit(1)).as("df")).filter(col("df") <= maxDf)
+      tSh.groupBy("s").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= MaxShingleDf)
         .select("s"), "s")
     // stage the shingle array once (same pattern as jaccardPairs) so size
     // and explode read one computed array
     val bSh = bench
-      .select(col(idCol).as("bench_id"), shingles(col(textCol)).as("shs"))
+      .select(col("doc_id").as("bench_id"), shingles(col("text")).as("shs"))
       .select(col("bench_id"),
         size(col("shs")).cast(LongType).as("bench_n_sh"),
         explode(col("shs")).as("s"))
     bSh.join(tIdx, "s")
       .groupBy("bench_id", "train_id")
       .agg(count(lit(1)).as("overlap"), first("bench_n_sh").as("bench_n_sh"))
-      .filter(col("overlap") >= minOverlap)
+      .filter(col("overlap") >= 5)
   }
 
   /** N-gram NOVELTY of each probe document against a reference corpus —
@@ -779,13 +758,12 @@ object Dedup {
     * shingle) / shingle rows with map-side partials — linear in corpus
     * shingles, and the reference set is the same standing index shape a
     * recurring ingest would maintain incrementally. */
-  def ngramNovelty(probe: DataFrame, reference: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
+  def ngramNovelty(probe: DataFrame, reference: DataFrame): DataFrame = {
     val refSet = reference
-      .select(explode(shingles(col(textCol))).as("s")).distinct()
+      .select(explode(shingles(col("text"))).as("s")).distinct()
       .withColumn("_seen", lit(true))
     probe
-      .select(col(idCol).as("doc_id"), explode(shingles(col(textCol))).as("s"))
+      .select(col("doc_id"), explode(shingles(col("text"))).as("s"))
       .join(refSet, Seq("s"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),

@@ -27,31 +27,25 @@ object Embeddings {
     * otherwise be ambiguous or silently shadow the caller's data).
     * ~4× storage reduction for float32 embeddings at a bounded, monitored
     * precision cost — the standard trade for ANN candidate stores. */
-  def quantizeInt8(df: DataFrame, embCol: String = "embedding"): DataFrame = {
+  def quantizeInt8(df: DataFrame): DataFrame = {
     val reserved = Seq("max_abs", "scale", "q", "q_sum", "max_err")
     val clash = df.columns.filter(reserved.contains)
     require(clash.isEmpty,
       s"quantizeInt8: input must not contain reserved output column(s) " +
         clash.mkString(", "))
     df.withColumn("max_abs", expr(
-      s"array_max(transform($embCol, x -> abs(cast(x as double))))"))
+      "array_max(transform(embedding, x -> abs(cast(x as double))))"))
       .filter(col("max_abs") > 0)
       .withColumn("scale", lit(127.0) / col("max_abs"))
       .withColumn("q", expr(
-        s"transform($embCol, x -> cast(round(cast(x as double) * scale) as tinyint))"))
+        "transform(embedding, x -> cast(round(cast(x as double) * scale) as tinyint))"))
       .withColumn("q_sum", expr(
         "aggregate(q, cast(0 as bigint), (acc, v) -> acc + cast(v as bigint))"))
       .withColumn("max_err", expr(
-        s"""array_max(transform($embCol,
+        """array_max(transform(embedding,
             x -> abs(cast(x as double)
                      - round(cast(x as double) * scale) / scale)))"""))
   }
-
-  /** Dequantize back to doubles: `x̂_i = q_i / scale`. */
-  def dequantize(df: DataFrame, qCol: String = "q",
-      scaleCol: String = "scale", outCol: String = "emb_hat"): DataFrame =
-    df.withColumn(outCol, expr(
-      s"transform($qCol, v -> cast(v as double) / $scaleCol)"))
 
   /** Per-dimension z-standardization from EXACT integer sufficient
     * statistics — the deterministic distributed preprocessing for
@@ -68,12 +62,11 @@ object Embeddings {
     * dimensionality, whose tiny result broadcast-joins back onto the
     * subset stream. Zero-variance dims yield NULL z (0/0 guard), never a
     * fake 0. */
-  def standardize(corpus: DataFrame, subset: DataFrame,
-      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def standardize(corpus: DataFrame, subset: DataFrame): DataFrame = {
     val d18 = DecimalType(18, 0)
     def qrows(df: DataFrame): DataFrame = df
-      .select(col(idCol), posexplode(col(embCol)).as(Seq("dim", "x")))
-      .select(col(idCol), col("dim"),
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "x")))
+      .select(col("vec_id"), col("dim"),
         round(col("x").cast(DoubleType) * 10000).cast(LongType).as("q"))
     val stats = qrows(corpus).groupBy("dim")
       .agg(count(lit(1)).as("n"),
@@ -86,7 +79,7 @@ object Embeddings {
           * (col("s1").cast(DoubleType) / col("n").cast(DoubleType)))
           .as("sd"))
     qrows(subset).join(broadcast(stats), "dim")
-      .select(col(idCol), col("dim"), col("q"),
+      .select(col("vec_id"), col("dim"), col("q"),
         when(col("sd") > 0.0,
           (col("q").cast(DoubleType) - col("mean")) / col("sd")).as("z"))
   }
@@ -108,8 +101,8 @@ object Embeddings {
     * multiplies rows by `outDims` but stays pipeline-local (no shuffle).
     * At 100 TB this is the one-pass map you'd run before building an ANN
     * index at reduced dimensionality. */
-  def randProj(df: DataFrame, outDims: Int = 16, inDims: Int = 64,
-      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+  def randProj(df: DataFrame, outDims: Int = 16,
+      inDims: Int = 64): DataFrame = {
     require(outDims >= 1 && inDims >= 1, "dims must be positive")
     // One fused native expression ([[graft.functions.SignedProj]]):
     // quantize + all outDims signed sums in a single primitive loop. The
@@ -117,10 +110,10 @@ object Embeddings {
     // reference re-evaluates its subtree per element once CollapseProject
     // inlines it), and a flat 1024-term element_at chain paid ≥1.5 s of
     // fixed codegen-compilation per execution.
-    df.select(col(idCol),
-      graft.functions.SignedProj(col(embCol), outDims, inDims).as("proj"))
+    df.select(col("vec_id"),
+      graft.functions.SignedProj(col("embedding"), outDims, inDims).as("proj"))
       .filter(col("proj").isNotNull) // all-zero vectors drop (no scale)
-      .select(col(idCol), posexplode(col("proj")).as(Seq("dim", "proj_q")))
-      .select(col(idCol), col("dim").cast(LongType).as("dim"), col("proj_q"))
+      .select(col("vec_id"), posexplode(col("proj")).as(Seq("dim", "proj_q")))
+      .select(col("vec_id"), col("dim").cast(LongType).as("dim"), col("proj_q"))
   }
 }

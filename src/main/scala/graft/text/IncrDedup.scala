@@ -62,9 +62,9 @@ object IncrDedup {
   /** Write the persistent index for a historical corpus: `path/sigs` and
     * `path/bands` (parquet). Call once; append [[Result.deltaSigs]] /
     * [[Result.deltaBands]] after each ingest. */
-  def writeIndex(hist: DataFrame, path: String, textCol: String = "text",
-      idCol: String = "doc_id"): Unit = {
-    val sigs = signatures(hist, textCol, idCol)
+  def writeIndex(hist: DataFrame, path: String,
+      textCol: String = "text"): Unit = {
+    val sigs = signatures(hist, textCol, "doc_id")
     sigs.write.mode("overwrite").parquet(s"$path/sigs")
     bandTable(sigs).write.mode("overwrite").parquet(s"$path/bands")
   }
@@ -101,9 +101,9 @@ object IncrDedup {
     * while read), and the caller flips the pipeline's index pointer —
     * the standard compact-then-swap. Counts are two bounded aggregates. */
   def compactIndex(spark: SparkSession, srcPath: String, dstPath: String,
-      retainedIds: DataFrame, idCol: String = "doc_id"): CompactStats = {
+      retainedIds: DataFrame): CompactStats = {
     val sigs = spark.read.parquet(s"$srcPath/sigs")
-    val keep = retainedIds.select(col(idCol).cast(LongType).as("id")).distinct()
+    val keep = retainedIds.select(col("doc_id").cast(LongType).as("id")).distinct()
     val kept = sigs.join(keep, Seq("id"), "left_semi")
     kept.write.mode("overwrite").parquet(s"$dstPath/sigs")
     // bands: narrow regeneration from the kept signatures just written —
@@ -123,30 +123,29 @@ object IncrDedup {
 
   /** Signature-verified near-dup pairs from band-collision candidates:
     * join both ids back to their signatures, count agreeing hash slots,
-    * keep pairs agreeing on ≥ `minAgree` of the 64. */
-  private def verify(cand: DataFrame, aSigs: DataFrame, bSigs: DataFrame,
-      minAgree: Int): DataFrame =
+    * keep pairs agreeing on ≥ 20 of the 64. */
+  private def verify(cand: DataFrame, aSigs: DataFrame,
+      bSigs: DataFrame): DataFrame =
     cand
       .join(aSigs.select(col("id").as("a"), col("sig").as("sig_a")), "a")
       .join(bSigs.select(col("id").as("b"), col("sig").as("sig_b")), "b")
       .withColumn("n_agree",
         aggregate(zip_with(col("sig_a"), col("sig_b"),
           (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, v) => acc + v))
-      .filter(col("n_agree") >= minAgree)
+      .filter(col("n_agree") >= 20)
       .select("a", "b")
 
   /** Dedup `newBatch` against the index at `path`.
     *
     * Pair graph = (new ⋈ history band collisions) ∪ (new ⋈ new band
-    * collisions), both signature-verified at `minAgree`; decisions come
+    * collisions), both signature-verified at 20 of 64 slots; decisions come
     * from connected components over that graph (transitive chains through
     * history or through other new docs must drop, exactly as a
     * from-scratch run would) — `keep` ⟺ cluster min == own id. History
     * never recomputes and history×history never joins.
     */
   def dedupAgainst(spark: SparkSession, newBatch: DataFrame, path: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      minAgree: Int = 20): Result = {
+      textCol: String = "text", idCol: String = "doc_id"): Result = {
     val histSigs = spark.read.parquet(s"$path/sigs")
     val histBands = spark.read.parquet(s"$path/bands")
     // persisted: feeds its band explode, two verify joins, and the final
@@ -182,8 +181,8 @@ object IncrDedup {
       .join(newBands.select(col("bk"), col("id").as("b")), "bk")
       .filter(col("a") < col("b"))
       .select("a", "b").distinct()
-    val pairs = verify(nhCand, histSigs, newSigs, minAgree)
-      .unionByName(verify(nnCand, newSigs, newSigs, minAgree))
+    val pairs = verify(nhCand, histSigs, newSigs)
+      .unionByName(verify(nnCand, newSigs, newSigs))
 
     val labels = Dedup.components(pairs)
     val decisions = newSigs.select(col("id").as("doc_id"))

@@ -76,9 +76,9 @@ object IncrSemDedup {
     * probe economics) survives compaction unchanged. New path + pointer
     * swap, same immutable-snapshot convention as the text side. */
   def compactIndex(spark: SparkSession, srcPath: String, dstPath: String,
-      retainedIds: DataFrame, idCol: String = "vec_id"): CompactStats = {
+      retainedIds: DataFrame): CompactStats = {
     val store = spark.read.parquet(srcPath)
-    val keep = retainedIds.select(col(idCol).cast("long").as("vec_id"))
+    val keep = retainedIds.select(col("vec_id").cast("long").as("vec_id"))
       .distinct()
     val kept = store.join(keep, Seq("vec_id"), "left_semi")
       .select(col("ivf_cell"), col("vec_id"), col("embedding"))

@@ -35,11 +35,11 @@ object Ivf {
   /** Centroid component formula, mirrored textually in the oracle SQL. */
   def fixedComponent(j: Int, d: Int): Int = ((j * 131 + d * 17 + 7) % 13) - 6
 
-  /** Deterministic spherical k-means: init = first `c` sampled vectors,
-    * fixed Lloyd iterations, cosine assignment on normalized vectors. */
-  def train(corpus: DataFrame, c: Int, iters: Int = 8,
-      sampleN: Int = 2048): Model = {
-    val sample = corpus.orderBy("vec_id").limit(sampleN)
+  /** Deterministic spherical k-means over a sample of the first 2048
+    * vectors by `vec_id`: init = first `c` sampled vectors, fixed Lloyd
+    * iterations, cosine assignment on normalized vectors. */
+  def train(corpus: DataFrame, c: Int, iters: Int = 8): Model = {
+    val sample = corpus.orderBy("vec_id").limit(2048)
       .select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
     require(sample.length >= c, s"need >= $c sample vectors")
@@ -190,9 +190,6 @@ object Ivf {
         col("probe.cell").as("ivf_cell"))
   }
 
-  /** ANN top-k with `nprobe` probed cells per query: queries explode into
-    * their nprobe best cells, candidates come from the cell equi-join,
-    * scoring is exact cosine within candidates. */
   /** Salted cell-candidate equi-join — the skew fix for every IVF scoring
     * path (round 18): a cell join has only C distinct keys (16 here), so
     * at scale the scored stream lands on ≤ C tasks no matter how many
@@ -201,8 +198,9 @@ object Ivf {
     * it prunes 4× of (69 s), entirely scheduling skew. AQE's skew-join
     * can't help: it splits on INPUT partition bytes (a few MB per cell)
     * and never sees the join-OUTPUT explosion. The fix is the standard
-    * salt: candidates take `xxhash64(neighbor_id) % salt` as a subkey,
-    * probes explode all `salt` subkeys, the join runs on (cell, subkey) —
+    * salt: candidates take `xxhash64(neighbor_id) % CellSalt` as a
+    * subkey, probes explode all [[CellSalt]] subkeys, the join runs on
+    * (cell, subkey) —
     * C×salt keys spread over every core, result set IDENTICAL (each
     * candidate owns exactly one subkey; xxh64 is Spark-internal and never
     * reaches a result column). Probe-side replication is ×salt of a
@@ -213,17 +211,21 @@ object Ivf {
     * broadcast loop; the deployment answer remains the cell-bucketed
     * store (Pq.writeCellStore), where routing is directory pruning and
     * no cell join exists at all. */
-  private[text] def saltedCellJoin(probes: DataFrame, cand: DataFrame,
-      salt: Int = 8): DataFrame = {
-    require(salt >= 1, "saltedCellJoin: salt must be positive")
+  private[text] def saltedCellJoin(probes: DataFrame,
+      cand: DataFrame): DataFrame =
     probes
-      .withColumn("_cs", explode(array((0 until salt).map(lit): _*)))
+      .withColumn("_cs", explode(array((0 until CellSalt).map(lit): _*)))
       .join(cand.withColumn("_cs",
-        pmod(xxhash64(col("neighbor_id")), lit(salt.toLong)).cast("int")),
+        pmod(xxhash64(col("neighbor_id")), lit(CellSalt.toLong)).cast("int")),
         Seq("ivf_cell", "_cs"))
       .drop("_cs")
-  }
 
+  /** Subkeys per cell in [[saltedCellJoin]]. */
+  private val CellSalt = 8
+
+  /** ANN top-k with `nprobe` probed cells per query: queries explode into
+    * their nprobe best cells, candidates come from the cell equi-join,
+    * scoring is exact cosine within candidates. */
   def searchTopK(corpus: DataFrame, queries: DataFrame, model: Model,
       k: Int, nprobe: Int): DataFrame = {
     val assigned = assign(corpus, model)

@@ -45,9 +45,9 @@ object Pq {
     * codebook per block (train on residuals like a real PQ index) would
     * give tighter cells on real data — [[Ivf.train]] shows the bounded-
     * sample pattern to follow; the fixed model is the parity default. */
-  def fixedModel(m: Int = 8, dsub: Int = 8, ksub: Int = 16): Model =
-    Model(m, dsub, ksub, Array.tabulate(m)(b => Array.tabulate(ksub)(j =>
-      Array.tabulate(dsub)(d => fixedComponent(b, j, d).toDouble))))
+  def fixedModel(): Model =
+    Model(8, 8, 16, Array.tabulate(8)(b => Array.tabulate(16)(j =>
+      Array.tabulate(8)(d => fixedComponent(b, j, d).toDouble))))
 
   /** Left-to-right double dot of a subvector column against a literal
     * codeword via the native [[graft.functions.DotProduct]] — the
@@ -147,9 +147,9 @@ object Pq {
     * pq_0..pq_{m−1}) under their cell directory: ~9 small values per
     * vector, the ×32-compressed index PQ exists for. */
   def writeCellStore(corpus: DataFrame, ivf: Ivf.Model, pq: Model,
-      path: String, embCol: String = "embedding"): Unit =
+      path: String): Unit =
     graft.ops.Layout.writePartitioned(
-      encode(Ivf.assign(corpus, ivf), pq, embCol)
+      encode(Ivf.assign(corpus, ivf), pq, "embedding")
         .select(col("ivf_cell") +: col("vec_id").as("neighbor_id") +:
           (0 until pq.m).map(b => col(codeCol(b))): _*),
       path, Seq("ivf_cell"))

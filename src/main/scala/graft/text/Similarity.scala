@@ -320,26 +320,26 @@ object Similarity {
         (col("pos_cos") - col("neg_cos")).as("margin"))
   }
 
-  /** (vec_id, tbl, bkt) rows: one bucket assignment per LSH table, hub
-    * buckets larger than `maxBucket` dropped. Ids only — the embedding is
+  /** (vec_id, tbl, bkt) rows: one bucket assignment per LSH table (4
+    * tables), hub buckets larger than 512 dropped. Ids only — the embedding is
     * re-joined AFTER candidate dedup, so the bucket join, the pair
     * `distinct`, and this persist all move 16-byte rows, never the
     * embedding arrays (at 100 TB the arrays dominate row width ~30×). */
-  private def bucketed(corpus: DataFrame, nTables: Int, planesPerTable: Int,
-      maxBucket: Int): DataFrame = {
-    val sigArr = graft.functions.LshSig(col("embedding"), nTables, planesPerTable)
+  private def bucketed(corpus: DataFrame,
+      planesPerTable: Int): DataFrame = {
+    val sigArr = graft.functions.LshSig(col("embedding"), 4, planesPerTable)
     val b = corpus.select(col("vec_id"),
       posexplode(sigArr).as(Seq("tbl", "bkt")))
     val keep = b.groupBy("tbl", "bkt").agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= maxBucket).drop("bsz")
+      .filter(col("bsz") <= 512).drop("bsz")
     b.join(keep, Seq("tbl", "bkt"))
   }
 
   /** Distinct candidate id-pairs from the multi-table bucket self-join
     * (`left` < `right` when `ordered`, `left` ≠ `right` otherwise). */
-  private def candidatePairs(corpus: DataFrame, nTables: Int,
-      planesPerTable: Int, maxBucket: Int, ordered: Boolean): DataFrame = {
-    val b = bucketed(corpus, nTables, planesPerTable, maxBucket)
+  private def candidatePairs(corpus: DataFrame, planesPerTable: Int,
+      ordered: Boolean): DataFrame = {
+    val b = bucketed(corpus, planesPerTable)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val l = b.select(col("tbl"), col("bkt"), col("vec_id").as("left"))
     val r = b.select(col("tbl"), col("bkt"), col("vec_id").as("right"))
@@ -355,7 +355,7 @@ object Similarity {
     df.join(corpus.select(col("vec_id").as(idCol),
       col("embedding").as(embAs)), idCol)
 
-  /** LSH ANN: candidates from `nTables` independent bucket joins (deduped),
+  /** LSH ANN: candidates from 4 independent bucket joins (deduped),
     * exact cosine on candidates, bounded-heap top-k per query. Recall < 1 by
     * construction; more tables raise recall, more planes shrink buckets.
     *
@@ -377,11 +377,9 @@ object Similarity {
     *
     * The internal bucket table stays persisted for the session; a caller
     * that sweeps many corpora frees it with `spark.catalog.clearCache()`. */
-  def lshTopK(corpus: DataFrame, k: Int, nTables: Int = 4,
-      planesPerTable: Int = 8, maxBucket: Int = 512,
+  def lshTopK(corpus: DataFrame, k: Int, planesPerTable: Int = 8,
       queries: Option[DataFrame] = None): DataFrame = {
-    val all = candidatePairs(corpus, nTables, planesPerTable, maxBucket,
-      ordered = false)
+    val all = candidatePairs(corpus, planesPerTable, ordered = false)
       .select(col("left").as("q_id"), col("right").as("neighbor_id"))
     val cand = queries.fold(all)(q =>
       all.join(q.select(col("vec_id").as("q_id")), Seq("q_id"), "left_semi"))
@@ -588,19 +586,18 @@ object Similarity {
     * Scale: the k-NN graph is the cell-scoped Σ n_c² pass ([[knnGraph]]);
     * voting is a (vec, label)-bounded aggregate and the per-vector argmax
     * rides the bounded-heap [[graft.ops.TopK.perKey]], never a window. */
-  def knnClassify(corpus: DataFrame, model: Ivf.Model, k: Int,
-      labelCol: String = "label"): DataFrame = {
+  def knnClassify(corpus: DataFrame, model: Ivf.Model, k: Int): DataFrame = {
     val g = knnGraph(corpus.select(col("vec_id"), col("embedding")),
       model, k)
     val votes = g
       .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col(labelCol).cast(LongType).as("_nl")), "neighbor_id")
+        col("label").cast(LongType).as("_nl")), "neighbor_id")
       .groupBy(col("vec_id"), col("_nl"))
       .agg(count(lit(1)).as("n_votes"))
     graft.ops.TopK.perKey(votes, Seq("vec_id"),
         struct(-col("n_votes"), col("_nl")), 1, descending = false)
       .join(corpus.select(col("vec_id"),
-        col(labelCol).cast(LongType).as("true_label")), "vec_id")
+        col("label").cast(LongType).as("true_label")), "vec_id")
       .select(col("vec_id"), col("_nl").as("pred_label"), col("n_votes"),
         col("true_label"),
         (col("_nl") === col("true_label")).as("correct"))
@@ -608,10 +605,8 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs above a similarity threshold,
     * via the multi-table LSH buckets (each unordered pair once). */
-  def nearDupPairs(corpus: DataFrame, minCos: Double, nTables: Int = 4,
-      planesPerTable: Int = 8, maxBucket: Int = 512): DataFrame = {
-    val cand = candidatePairs(corpus, nTables, planesPerTable, maxBucket,
-      ordered = true)
+  def nearDupPairs(corpus: DataFrame, minCos: Double): DataFrame = {
+    val cand = candidatePairs(corpus, 8, ordered = true)
       .select(col("left").as("a"), col("right").as("b"))
     withEmb(withEmb(cand, "a", "a_emb", corpus), "b", "b_emb", corpus)
       .withColumn("cos", cosine(col("a_emb"), col("b_emb")))
@@ -635,17 +630,16 @@ object Similarity {
     * bit-identical to the oracle-mirrored HOF form); ties by neighbor
     * id. */
   def mrlRecall(corpus: DataFrame, queries: DataFrame, k: Int,
-      dims: Seq[Int], embCol: String = "embedding",
-      idCol: String = "vec_id"): DataFrame = {
+      dims: Seq[Int]): DataFrame = {
     require(dims.nonEmpty, "mrlRecall: at least one truncation rung")
     require(dims.forall(_ >= 1), "mrlRecall: rungs must be positive")
     val brute = bruteForceTopK(corpus, queries, k)
       .select("q_id", "neighbor_id")
     val perDim = dims.map { d =>
-      val c = corpus.select(col(idCol).as("vec_id"),
-        slice(col(embCol), 1, d).as("_e"))
-      val q = queries.select(col(idCol).as("q_id"),
-        slice(col(embCol), 1, d).as("_qe"))
+      val c = corpus.select(col("vec_id"),
+        slice(col("embedding"), 1, d).as("_e"))
+      val q = queries.select(col("vec_id").as("q_id"),
+        slice(col("embedding"), 1, d).as("_qe"))
       val scored = c.crossJoin(broadcast(q))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id").as("neighbor_id"),
@@ -684,10 +678,9 @@ object Similarity {
     * [[graft.ops.TopK.perKey]] finish. The expensive part of hybrid
     * retrieval is PRODUCING the input rankings (each audited on its own
     * op); fusion itself is a reduction over their outputs. */
-  def rrfFuse(rankings: Seq[DataFrame], k: Int, kRrf: Long = 60L): DataFrame = {
+  def rrfFuse(rankings: Seq[DataFrame], k: Int): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse: at least one ranking")
     require(k >= 1, "rrfFuse: k must be positive")
-    require(kRrf >= 1L, "rrfFuse: kRrf must be positive")
     val tagged = rankings
       .map(_.select(col("q_id"), col("neighbor_id"), col("rank")))
       .reduce(_.unionByName(_))
@@ -697,7 +690,7 @@ object Similarity {
         // score depend on double rounding; div truncates identically in
         // both engines (ranks are positive, so truncation == floor)
         sum(expr(s"CAST(1000000 AS BIGINT) div " +
-          s"(CAST($kRrf AS BIGINT) + CAST(rank AS BIGINT))"))
+          s"(CAST(60 AS BIGINT) + CAST(rank AS BIGINT))"))
           .as("rrf_micro"))
     graft.ops.TopK.perKey(scored, Seq("q_id"),
       struct(col("rrf_micro"), -col("neighbor_id")), k)

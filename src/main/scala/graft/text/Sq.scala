@@ -128,19 +128,18 @@ object Sq {
     * the nprobe probed cells' candidates score (the [[Ivf.searchTopK]]
     * join shape, unhinted for the same measured AQE reasons); bounded-
     * heap top-k, never a corpus sort. */
-  def searchTopKIvf(corpus: DataFrame, queries: DataFrame,
-      ivf: Ivf.Model, k: Int, nprobe: Int,
-      embCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
-    val model = trainModel(corpus, embCol)
+  def searchTopKIvf(corpus: DataFrame, queries: DataFrame, ivf: Ivf.Model,
+      k: Int, nprobe: Int): DataFrame = {
+    val model = trainModel(corpus, "embedding")
     // the cell-tagged reconstruction table IS the stored index — persist
     // (the Pq.searchTopKIvf contract: unpersisted, its encode expressions
     // re-plan into the join output path)
     val cand =
-      decode(encode(Ivf.assign(corpus, ivf), model, embCol), model)
-        .select(col("ivf_cell"), col(idCol).as("neighbor_id"),
+      decode(encode(Ivf.assign(corpus, ivf), model, "embedding"), model)
+        .select(col("ivf_cell"), col("vec_id").as("neighbor_id"),
           col("_xr").as("_nxr")).persist(StorageLevel.MEMORY_AND_DISK)
-    val qRec = decode(encode(queries, model, embCol), model)
-      .select(col(idCol).as("q_id"), col("_xr").as("_qxr"))
+    val qRec = decode(encode(queries, model, "embedding"), model)
+      .select(col("vec_id").as("q_id"), col("_xr").as("_qxr"))
     // probe cells from the raw query embedding; the reconstructed query
     // vector joins back on the (small, broadcast) query side
     val probes = Ivf.probeCells(queries, ivf, nprobe)

@@ -89,14 +89,13 @@ object TextOps {
     * datasheet run that already reads every byte; when an estimate
     * suffices at 100 TB, swap in the mergeable KMV sketch
     * ([[graft.functions.KmvSketch]], op_kmv_distinct) instead. */
-  def datasetCard(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang"): DataFrame =
+  def datasetCard(docs: DataFrame): DataFrame =
     docs.agg(
       count(lit(1)).as("n_docs"),
-      sum(tokenCount(col(textCol)).cast(LongType)).as("n_tokens"),
-      sum(length(col(textCol)).cast(LongType)).as("n_chars"),
-      countDistinct(col(langCol)).as("n_langs"),
-      (count(lit(1)) - countDistinct(md5(col(textCol)))).as("n_dup_docs"))
+      sum(tokenCount(col("text")).cast(LongType)).as("n_tokens"),
+      sum(length(col("text")).cast(LongType)).as("n_chars"),
+      countDistinct(col("lang")).as("n_langs"),
+      (count(lit(1)) - countDistinct(md5(col("text")))).as("n_dup_docs"))
     .withColumn("mean_doc_tokens",
       col("n_tokens").cast(DoubleType) / col("n_docs").cast(DoubleType))
 
@@ -111,11 +110,10 @@ object TextOps {
     * Scale: one narrow pass (token count + `bin` bit-length — integer
     * math, engine-portable) into a (langs × 64)-bounded aggregate with
     * map-side partials. */
-  def lengthHist(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang"): DataFrame =
+  def lengthHist(docs: DataFrame): DataFrame =
     docs
-      .select(col(langCol).as("lang"),
-        tokenCount(col(textCol)).cast(LongType).as("_n"))
+      .select(col("lang"),
+        tokenCount(col("text")).cast(LongType).as("_n"))
       .withColumn("bucket",
         when(col("_n") === 0L, lit(0)).otherwise(length(bin(col("_n")))))
       .groupBy("lang", "bucket")
@@ -133,17 +131,15 @@ object TextOps {
     * Scale: one bounded sketch aggregate (≤ k pairs per map-side
     * partial), the per-group floors broadcast back onto the scan, one
     * bounded re-aggregate — the [[op_winsorize]] recipe as a filter. */
-  def qualityFloor(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang", idCol: String = "doc_id",
-      pct: Int = 25, k: Int = 256): DataFrame = {
-    val n = tokenCount(col(textCol)).cast(LongType)
-    val h = graft.text.Dedup.portableHash(col(idCol).cast(StringType))
-    val floors = docs.groupBy(col(langCol).as("lang"))
-      .agg(graft.functions.SampleSketch(h, n, k).as("_s"))
+  def qualityFloor(docs: DataFrame): DataFrame = {
+    val n = tokenCount(col("text")).cast(LongType)
+    val h = graft.text.Dedup.portableHash(col("doc_id").cast(StringType))
+    val floors = docs.groupBy(col("lang"))
+      .agg(graft.functions.SampleSketch(h, n, 256).as("_s"))
       .select(col("lang"),
-        graft.functions.SampleSketch.quantile(array_sort(col("_s")), pct)
+        graft.functions.SampleSketch.quantile(array_sort(col("_s")), 25)
           .as("floor_tokens"))
-    docs.select(col(langCol).as("lang"), n.as("_n"))
+    docs.select(col("lang"), n.as("_n"))
       .join(broadcast(floors), "lang")
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
@@ -169,11 +165,10 @@ object TextOps {
     * languages-bounded aggregate, then a tiny outer join — nothing
     * pairwise, no corpus-keyed shuffle at all. */
   def corpusDrift(history: DataFrame, batch: DataFrame,
-      textCol: String = "text",
       segmentOf: Column => Column = langId): DataFrame = {
     def side(df: DataFrame, n: String, tk: String): DataFrame =
-      df.select(segmentOf(col(textCol)).as("segment"),
-          tokenCount(col(textCol)).cast(LongType).as("_t"))
+      df.select(segmentOf(col("text")).as("segment"),
+          tokenCount(col("text")).cast(LongType).as("_t"))
         .groupBy("segment")
         .agg(count(lit(1)).as(n), sum("_t").as(tk))
     val h = side(history, "n_hist", "_th")
@@ -201,11 +196,10 @@ object TextOps {
     * whose fertility balloons is being shredded into characters and will
     * eat the token budget). Exact integer sums per language, fertility =
     * ONE IEEE division. One narrow pass, languages-bounded aggregate. */
-  def tokFertility(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang"): DataFrame =
-    docs.select(col(langCol).as("lang"),
-        tokenCount(col(textCol)).cast(LongType).as("_w"),
-        subwordCount(col(textCol)).cast(LongType).as("_s"))
+  def tokFertility(docs: DataFrame): DataFrame =
+    docs.select(col("lang"),
+        tokenCount(col("text")).cast(LongType).as("_w"),
+        subwordCount(col("text")).cast(LongType).as("_s"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("_w").as("n_words"),
         sum("_s").as("n_subwords"))
@@ -224,10 +218,10 @@ object TextOps {
     * totals broadcast, and a bounded TakeOrdered for the top-k — the
     * open vocabulary is shuffled once per side and never sorted. */
   def vocabShift(history: DataFrame, batch: DataFrame,
-      textCol: String = "text", k: Int = 50): DataFrame = {
+      k: Int = 50): DataFrame = {
     require(k >= 1, "k must be positive")
     def cnt(df: DataFrame, n: String): DataFrame =
-      df.select(explode(tokens(col(textCol))).as("token"))
+      df.select(explode(tokens(col("text"))).as("token"))
         .groupBy("token").agg(count(lit(1)).as(n))
     val h = cnt(history, "n_hist")
     val b = cnt(batch, "n_batch")
@@ -278,14 +272,14 @@ object TextOps {
     * shuffle is the same shape the unigram/repetition ops already pay.
     * Returns (doc_id, pos, wh) — one row per window.
     *
-    * PRECONDITION: `idCol` values must be UNIQUE — duplicate ids merge
+    * PRECONDITION: `doc_id` values must be UNIQUE — duplicate ids merge
     * into one window partition whose `pos` ordering ties across the
     * duplicates, making the lead() folds (and everything built on them:
     * [[rollingFingerprint]], [[winnow]], [[passageDups]]) nondeterministic.
     * Dedup or disambiguate ids (e.g. append a source discriminator)
     * before calling. */
   def rollingWindows(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id", w: Int = 8): DataFrame = {
+      w: Int = 8): DataFrame = {
     require(w >= 1)
     val P = 2147483647L
     val win = org.apache.spark.sql.expressions.Window
@@ -294,7 +288,7 @@ object TextOps {
     val horner = (1 until w).foldLeft(th: Column)((acc, j) =>
       (acc * 31 + lead(th, j).over(win)) % P)
     docs
-      .select(col(idCol).as("doc_id"),
+      .select(col("doc_id"),
         posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
       .select(col("doc_id"), col("pos"), horner.as("wh"))
       .filter(col("wh").isNotNull)
@@ -321,8 +315,7 @@ object TextOps {
     * (doc, chunk)-keyed aggregate with map-side partials whose groups
     * are ~2^maskBits windows; the summary is a second bounded
     * aggregate. */
-  def cdcChunks(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 8, maskBits: Int = 4): DataFrame = {
+  def cdcChunks(docs: DataFrame, w: Int = 8, maskBits: Int = 4): DataFrame = {
     require(maskBits >= 1 && maskBits < 31, "maskBits must be in [1, 30]")
     val P = 2147483647L
     val modv = 1L << maskBits
@@ -330,7 +323,7 @@ object TextOps {
       .partitionBy("doc_id").orderBy("pos")
       .rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val chunks = rollingWindows(docs, textCol, idCol, w)
+    val chunks = rollingWindows(docs, "text", w)
       // chunk id = boundaries among STRICTLY PRECEDING windows, so a
       // boundary window ENDS its chunk and the next one starts fresh
       .withColumn("chunk_id", coalesce(
@@ -352,63 +345,60 @@ object TextOps {
 
   /** Per-document rolling-hash fingerprint summary: window count, distinct
     * windows, and the minimum window hash (the 1-sketch winnowing anchor).
-    * Docs with fewer than `w` tokens drop (they have no windows). */
-  def rollingFingerprint(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id", w: Int = 8): DataFrame =
-    rollingWindows(docs, textCol, idCol, w)
+    * Docs with fewer than 8 tokens drop (they have no 8-token windows). */
+  def rollingFingerprint(docs: DataFrame, textCol: String): DataFrame =
+    rollingWindows(docs, textCol, 8)
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_windows"),
         countDistinct(col("wh")).cast("int").as("n_distinct"),
         min("wh").as("min_wh"))
-      .withColumnRenamed("doc_id", idCol)
 
-  /** Winnowing fingerprint selection (the MOSS scheme) over
-    * [[rollingWindows]]: every run of `g` consecutive window hashes
-    * contributes its RIGHTMOST minimum — the standard guarantee that any
-    * match of `w + g − 1` tokens or longer shares a selected fingerprint,
-    * at expected density 2/(g+1) instead of every window. Selection is a
-    * CASE over `g` leads in the same per-doc window pass as the hashes —
-    * no extra shuffle. Returns per doc: the number of selection windows
-    * (`n_select`), distinct selected fingerprints (`n_fp`), and the
-    * minimum selected hash (`min_fp`). Docs with fewer than `w + g − 1`
-    * tokens drop (no full selection window). */
-  def winnow(docs: DataFrame, textCol: String, idCol: String = "doc_id",
-      w: Int = 8, g: Int = 4): DataFrame = {
-    require(g >= 1)
+  /** Winnowing fingerprint selection (the MOSS scheme) over the 8-token
+    * [[rollingWindows]]: every run of g = [[WinnowRun]] consecutive window
+    * hashes contributes its RIGHTMOST minimum — the standard guarantee that
+    * any match of 8 + g − 1 tokens or longer shares a selected
+    * fingerprint, at expected density 2/(g+1) instead of every window.
+    * Selection is a CASE over g leads in the same per-doc window pass as
+    * the hashes — no extra shuffle. Returns per doc: the number of
+    * selection windows (`n_select`), distinct selected fingerprints
+    * (`n_fp`), and the minimum selected hash (`min_fp`). Docs with fewer
+    * than 8 + g − 1 tokens drop (no full selection window). */
+  def winnow(docs: DataFrame, textCol: String): DataFrame = {
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
-    val whs: Seq[Column] = (0 until g).map(j =>
+    val whs: Seq[Column] = (0 until WinnowRun).map(j =>
       if (j == 0) col("wh") else lead(col("wh"), j).over(win))
     val m = least(whs: _*)
     // rightmost minimum: CASE scanning offsets g−1 → 1, else offset 0.
     // (least() skips nulls, so partial tail windows must be filtered on
     // the furthest lead explicitly — __full below.)
-    val selPos = (g - 1 until 0 by -1)
+    val selPos = (WinnowRun - 1 until 0 by -1)
       .map(j => (whs(j) === m, col("pos") + j))
       .foldRight(col("pos") + lit(0)) { case ((cond, v), acc) =>
         when(cond, v).otherwise(acc)
       }
-    rollingWindows(docs, textCol, idCol, w)
+    rollingWindows(docs, textCol, 8)
       .select(col("doc_id"), m.as("__m"), selPos.as("__sel"),
-        (if (g == 1) lit(true) else whs(g - 1).isNotNull).as("__full"))
+        whs(WinnowRun - 1).isNotNull.as("__full"))
       .filter(col("__full"))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("int").as("n_select"),
         countDistinct(col("__sel")).cast("int").as("n_fp"),
         min("__m").as("min_fp"))
-      .withColumnRenamed("doc_id", idCol)
   }
+
+  /** Winnowing selection run: consecutive window hashes per selection. */
+  private val WinnowRun = 4
 
   /** Cross-document duplicated passages: window hashes appearing in two or
     * more documents, with the earliest (min-id) owner — substring-level
-    * dedup/contamination at `w`-token granularity, the repeated-passage
+    * dedup/contamination at 5-token granularity, the repeated-passage
     * complement of [[Dedup.paraDedup]]. Per-doc DISTINCT windows feed the
     * group (a doc repeating its own passage is not a cross-doc dup).
     * Scale: one hash-keyed aggregate with map-side partials; output is
     * only the repeated windows. */
-  def passageDups(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id", w: Int = 5): DataFrame =
-    rollingWindows(docs, textCol, idCol, w)
+  def passageDups(docs: DataFrame, textCol: String): DataFrame =
+    rollingWindows(docs, textCol, 5)
       .select(col("doc_id"), col("wh")).distinct()
       .groupBy("wh")
       .agg(count(lit(1)).as("n_docs"), min("doc_id").as("keep_doc"))
@@ -420,7 +410,8 @@ object TextOps {
     * Models Better" signal (arbitrary long exact repeats, ≥ `minRun`
     * tokens) realized without a distributed suffix array, as CHAINED
     * WINDOW-HASH RUNS: two docs sharing an exact L-token substring share
-    * L−w+1 [[rollingWindows]] hashes at positions of CONSTANT OFFSET
+    * L−w+1 [[rollingWindows]] hashes (w = [[SubstrWindow]] tokens) at
+    * positions of CONSTANT OFFSET
     * (pa − pb), so maximal runs are gaps-and-islands over each doc
     * pair's offset diagonal — island id = pa − row_number, one bounded
     * aggregate per island. Output: (a, b, start_a, start_b, run_tokens)
@@ -442,15 +433,13 @@ object TextOps {
     * can throw there. Plan-only callers (Explain sweeps, plan audits)
     * that must stay lazy pass `pairBudget = Long.MaxValue`, which skips
     * the enforcement job entirely (and with it the protection). */
-  def substrRuns(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 5, minRun: Int = 20,
-      maxDf: Int = 100,
+  def substrRuns(docs: DataFrame, minRun: Int = 20, maxDf: Int = 100,
       pairBudget: Long = 2000000000L): DataFrame = {
-    require(minRun >= w, "minRun must be at least the window width")
+    require(minRun >= SubstrWindow, "minRun must be at least the window width")
     require(pairBudget > 0, "substrRuns: pairBudget must be positive")
     // persisted: the exploded window table feeds the df-count aggregate
     // once and the pair self-join twice (the shingleIntersections contract)
-    val wins = rollingWindows(docs, textCol, idCol, w)
+    val wins = rollingWindows(docs, "text", SubstrWindow)
       .select("doc_id", "pos", "wh").persist(StorageLevel.MEMORY_AND_DISK)
     // ENFORCED pair-mass contract (the round-16 ×100 OOM closure was
     // advisory — "run substrStats first"; this makes it code): the pair
@@ -497,10 +486,14 @@ object TextOps {
     islands.groupBy("a", "b", "_diff", "_isl")
       .agg(min("pa").as("start_a"), min("pb").as("start_b"),
         count(lit(1)).as("_nw"))
-      .withColumn("run_tokens", col("_nw") + lit((w - 1).toLong))
+      .withColumn("run_tokens", col("_nw") + lit((SubstrWindow - 1).toLong))
       .filter(col("run_tokens") >= minRun)
       .select("a", "b", "start_a", "start_b", "run_tokens")
   }
+
+  /** Window width, in tokens, of [[substrRuns]] and its [[substrStats]]
+    * pre-flight read. */
+  private val SubstrWindow = 5
 
   /** PRE-FLIGHT sizing read for [[substrRuns]]/[[substrScrub]] — the
     * [[graft.text.Dedup.bandStats]] idea applied to the window-hash
@@ -525,9 +518,8 @@ object TextOps {
     *
     * Scale: one (hash, doc) count with map-side partials, one
     * hash-keyed rollup, a 1-row finish — never the pair join itself. */
-  def substrStats(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 5, maxDf: Int = 100): DataFrame = {
-    val perDoc = rollingWindows(docs, textCol, idCol, w)
+  def substrStats(docs: DataFrame, maxDf: Int = 100): DataFrame = {
+    val perDoc = rollingWindows(docs, "text", SubstrWindow)
       .groupBy("wh", "doc_id").agg(count(lit(1)).as("_c"))
     val perWin = perDoc.groupBy("wh").agg(
       count(lit(1)).as("_df"), sum("_c").as("_t"),
@@ -554,12 +546,11 @@ object TextOps {
     * high. Scale: one (token) count aggregate with map-side partials, then
     * an exploded-token join keyed on token — both shuffles carry distinct
     * tokens / token occurrences, never per-doc buffers. */
-  def unigramScore(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id"): DataFrame = {
-    val tok = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+  def unigramScore(docs: DataFrame, textCol: String): DataFrame = {
+    val tok = docs.select(col("doc_id"), explode(tokens(col(textCol))).as("tok"))
     val counts = tok.groupBy("tok").agg(count(lit(1)).as("corpus_n"))
     tok.join(counts, "tok")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"), sum("corpus_n").as("freq_sum"))
   }
 
@@ -574,12 +565,11 @@ object TextOps {
     * map-side partials, then an exploded-bigram join keyed on bigram; both
     * shuffles carry distinct bigrams / bigram occurrences, never per-doc
     * buffers. ~linear in corpus tokens. */
-  def bigramScore(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id"): DataFrame = {
-    val bg = docs.select(col(idCol), explode(bigrams(col(textCol))).as("bg"))
+  def bigramScore(docs: DataFrame, textCol: String): DataFrame = {
+    val bg = docs.select(col("doc_id"), explode(bigrams(col(textCol))).as("bg"))
     val counts = bg.groupBy("bg").agg(count(lit(1)).as("corpus_n"))
     bg.join(counts, "bg")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("corpus_n").as("freq_sum"))
   }
 
@@ -605,8 +595,7 @@ object TextOps {
     * aggregate (map-side partials), the 1-row (N, V) totals broadcast
     * back, one token-keyed join, one doc-keyed aggregate. The "model" is
     * the counts table itself; nothing corpus-sized sorts or windows. */
-  def lmLogProb(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  def lmLogProb(docs: DataFrame): DataFrame = {
     // (doc, token) OCCURRENCE COUNTS as the shared base for the model
     // build AND the scoring join, PERSISTED (r18): the raw exploded
     // stream was rebuilt once per branch, and exchange reuse cannot
@@ -616,8 +605,8 @@ object TextOps {
     // keeps the footprint at distinct (doc, token) pairs, and the
     // scoring join carries pairs, never raw occurrences.
     val tokd =
-      docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-        .groupBy(col(idCol), col("tok")).agg(count(lit(1)).as("_k"))
+      docs.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("_k"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = tokd.groupBy("tok").agg(sum("_k").as("_c"))
     val tot = counts.agg(sum("_c").as("_n_total"), count(lit(1)).as("_v"))
@@ -627,7 +616,7 @@ object TextOps {
     tokd.join(counts, "tok")
       .crossJoin(broadcast(tot))
       .withColumn("_lp", lp)
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(sum("_k").as("n_tokens"),
         sum(col("_k") * col("_lp")).as("sum_lp_micro"))
       .withColumn("avg_logprob", col("sum_lp_micro").cast(DoubleType) /
@@ -651,13 +640,12 @@ object TextOps {
     * bigram-keyed count with map-side partials, one exploded-bigram join
     * keyed on bigram, a broadcast 1-row total; shuffles carry distinct
     * bigrams / bigram occurrences, never per-doc buffers. */
-  def bigramLogProb(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  def bigramLogProb(docs: DataFrame): DataFrame = {
     // same persisted-pair-frame shape as [[lmLogProb]]: per-(doc, bigram)
     // occurrence counts feed both the model build and the scoring join
     val bgd =
-      docs.select(col(idCol), explode(bigrams(col(textCol))).as("bg"))
-        .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("_k"))
+      docs.select(col("doc_id"), explode(bigrams(col("text"))).as("bg"))
+        .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("_k"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = bgd.groupBy("bg").agg(sum("_k").as("_c"))
     val tot = counts.agg(sum("_c").as("_n_total"), count(lit(1)).as("_v"))
@@ -667,7 +655,7 @@ object TextOps {
     bgd.join(counts, "bg")
       .crossJoin(broadcast(tot))
       .withColumn("_lp", lp)
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(sum("_k").as("n_bigrams"),
         sum(col("_k") * col("_lp")).as("sum_lp_micro"))
       .withColumn("avg_logprob", col("sum_lp_micro").cast(DoubleType) /
@@ -696,12 +684,9 @@ object TextOps {
     * higher-order `filter` over the token array — a narrow map stage.
     * Per-token work is O(intervals-of-this-doc), bounded by the maxDf
     * partner cap, not by the corpus. */
-  def substrScrub(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", w: Int = 5, minRun: Int = 20,
-      maxDf: Int = 100,
+  def substrScrub(docs: DataFrame,
       pairBudget: Long = 2000000000L): DataFrame = {
-    val runs = substrRuns(docs, textCol, idCol, w, minRun, maxDf,
-      pairBudget)
+    val runs = substrRuns(docs, pairBudget = pairBudget)
     // a run's token span on the b side is [start_b, start_b+run_tokens-1];
     // identical intervals from different a-partners collapse pre-aggregate
     val ivs = runs.select(col("b").as("_did"),
@@ -710,9 +695,9 @@ object TextOps {
             .as("e")).as("_iv"))
       .distinct()
       .groupBy("_did").agg(collect_list("_iv").as("_ivs"))
-    val toks = tokens(col(textCol))
+    val toks = tokens(col("text"))
     val noIvs = array().cast("array<struct<s:bigint,e:bigint>>")
-    docs.select(col(idCol).as("doc_id"), col(textCol))
+    docs.select(col("doc_id"), col("text"))
       .join(ivs, col("doc_id") === col("_did"), "left")
       .withColumn("_keep", filter(toks, (_, i) =>
         !exists(coalesce(col("_ivs"), noIvs), iv =>
@@ -750,10 +735,9 @@ object TextOps {
     * values per language regardless of corpus size — the same
     * value-range-bounded-window trick as [[scoreAuc]]. Nothing
     * corpus-sized sorts or windows. */
-  def ccnetBuckets(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", langCol: String = "lang"): DataFrame = {
-    val scored = lmLogProb(docs, textCol, idCol)
-      .join(docs.select(col(idCol), col(langCol)), Seq(idCol))
+  def ccnetBuckets(docs: DataFrame): DataFrame = {
+    val scored = lmLogProb(docs)
+      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     // exact integer floor division to milli-nats/token: subtract the
     // non-negative pmod, then `div` on an exactly-divisible numerator
     // (truncating and flooring division agree there)
@@ -761,11 +745,11 @@ object TextOps {
       .withColumn("_den", col("n_tokens") * lit(1000L))
       .withColumn("_q",
         expr("(sum_lp_micro - pmod(sum_lp_micro, _den)) div _den"))
-      .groupBy(col(langCol), col("_q"))
+      .groupBy(col("lang"), col("_q"))
       .agg(count(lit(1)).as("_n"), sum("n_tokens").as("_toks"))
     val cumWin = org.apache.spark.sql.expressions.Window
-      .partitionBy(langCol).orderBy(col("_q").desc)
-    val totWin = org.apache.spark.sql.expressions.Window.partitionBy(langCol)
+      .partitionBy("lang").orderBy(col("_q").desc)
+    val totWin = org.apache.spark.sql.expressions.Window.partitionBy("lang")
     hist
       .withColumn("_cum", sum("_n").over(cumWin))
       .withColumn("_tot", sum("_n").over(totWin))
@@ -773,7 +757,7 @@ object TextOps {
         when((col("_cum") - col("_n")) * 3 < col("_tot"), "head")
           .when((col("_cum") - col("_n")) * 3 < col("_tot") * 2, "middle")
           .otherwise("tail"))
-      .groupBy(col(langCol), col("bucket"))
+      .groupBy(col("lang"), col("bucket"))
       .agg(sum("_n").as("n_docs"), sum("_toks").as("n_tokens"),
         min("_q").as("min_millinats"), max("_q").as("max_millinats"))
   }
@@ -799,15 +783,14 @@ object TextOps {
     * under) the doc id. NOTHING corpus-global: no vocabulary join, no
     * broadcast, no window. The cheapest-possible two-shuffle shape, and
     * each doc's work is bounded by its own length. */
-  def tokenEntropy(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
+  def tokenEntropy(docs: DataFrame): DataFrame = {
     def lnMicro(m: Column): Column =
       floor(graft.ops.Sampling.portableLn(m) * lit(1000000.0)).cast(LongType)
-    docs.select(col(idCol), explode(tokens(col(textCol))).as("_tok"))
-      .groupBy(col(idCol), col("_tok"))
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("_tok"))
+      .groupBy(col("doc_id"), col("_tok"))
       .agg(count(lit(1)).as("_c"))
       .withColumn("_clnc", col("_c") * lnMicro(col("_c")))
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(sum("_c").as("n_tokens"), count(lit(1)).as("n_distinct"),
         sum("_clnc").as("_sum_clnc"))
       .withColumn("entropy",
@@ -841,27 +824,24 @@ object TextOps {
     * per (lang, partition) move, NEVER a vocabulary-wide sort — and the
     * rank window + OLS aggregate run over ≤ topK rows per language. A
     * 10⁹-token vocabulary costs what a 10³ one costs after the heaps. */
-  def zipfSlope(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang", topK: Int = 1000): DataFrame = {
-    require(topK >= 2 && topK <= 100000,
-      "zipfSlope: topK must be in [2, 100000] (milli-nat OLS overflow bound)")
+  def zipfSlope(docs: DataFrame): DataFrame = {
     def lnMilli(m: Column): Column =
       floor(graft.ops.Sampling.portableLn(m) * lit(1000.0)).cast(LongType)
     val counts = docs
-      .select(col(langCol), explode(tokens(col(textCol))).as("_tok"))
-      .groupBy(col(langCol), col("_tok"))
+      .select(col("lang"), explode(tokens(col("text"))).as("_tok"))
+      .groupBy(col("lang"), col("_tok"))
       .agg(count(lit(1)).as("_c"))
       .withColumn("_h", Dedup.portableHash(col("_tok")))
     // ascending struct(−count, hash) == count desc, hash asc — the same
     // total order the rank window and the oracle use
-    val top = graft.ops.TopK.perKey(counts, Seq(langCol),
-      struct(-col("_c"), col("_h")), topK, descending = false)
+    val top = graft.ops.TopK.perKey(counts, Seq("lang"),
+      struct(-col("_c"), col("_h")), 1000, descending = false)
     val rankWin = org.apache.spark.sql.expressions.Window
-      .partitionBy(langCol).orderBy(col("_c").desc, col("_h"))
+      .partitionBy("lang").orderBy(col("_c").desc, col("_h"))
     top
       .withColumn("_x", lnMilli(row_number().over(rankWin).cast(LongType)))
       .withColumn("_y", lnMilli(col("_c")))
-      .groupBy(langCol)
+      .groupBy("lang")
       .agg(count(lit(1)).as("n_points"),
         sum("_x").as("_sx"), sum("_y").as("_sy"),
         sum(col("_x") * col("_y")).as("_sxy"),
@@ -874,7 +854,7 @@ object TextOps {
         when(col("slope_den") === 0, lit(null).cast(DoubleType))
           .otherwise(-(col("slope_num").cast(DoubleType) /
             col("slope_den").cast(DoubleType))))
-      .select(col(langCol), col("n_points"), col("slope_num"),
+      .select(col("lang"), col("n_points"), col("slope_num"),
         col("slope_den"), col("zipf_slope"))
   }
 
@@ -883,7 +863,7 @@ object TextOps {
     * hashed-token distribution is, so a raw pool can be filtered toward a
     * target domain (here: the caller's `isTarget` rows, e.g. a curated
     * subset) without training a classifier. The hashed-n-gram feature
-    * space bounds the "language model" to `buckets` rows regardless of
+    * space bounds the "language model" to 2048 bucket rows regardless of
     * corpus vocabulary — the published trick that makes the method run at
     * web scale.
     *
@@ -894,28 +874,27 @@ object TextOps {
     * rounded in any IEEE engine; no float accumulation anywhere, no log).
     * Docs with no tokens drop (no feature evidence).
     *
-    * Scale: explode → narrow bucket hash → one `buckets`-bounded count
+    * Scale: explode → narrow bucket hash → one 2048-row-bounded count
     * aggregate (map-side partials) → BROADCAST join of the bucket model
     * back onto the token stream → per-doc aggregate. The only corpus-
     * sized shuffle is the per-doc sum, keyed on the doc id. Selection on
     * top of this ([[dsirSelect]]) is a bounded TakeOrdered, never a
     * global sort. */
-  def dsirWeights(docs: DataFrame, textCol: String, isTarget: Column,
-      buckets: Int = 2048, idCol: String = "doc_id"): DataFrame = {
-    require(buckets >= 2, "buckets must be >= 2")
-    val tok = docs.select(col(idCol), isTarget.as("_is_t"),
+  def dsirWeights(docs: DataFrame, textCol: String,
+      isTarget: Column): DataFrame = {
+    val tok = docs.select(col("doc_id"), isTarget.as("_is_t"),
         explode(tokens(col(textCol))).as("_tok"))
-      .select(col(idCol), col("_is_t"),
-        pmod(Dedup.portableHash(col("_tok")), lit(buckets.toLong)).as("_bkt"))
+      .select(col("doc_id"), col("_is_t"),
+        pmod(Dedup.portableHash(col("_tok")), lit(2048L)).as("_bkt"))
     val model = tok.groupBy("_bkt").agg(
       sum(when(col("_is_t"), 1L).otherwise(0L)).as("_t_n"),
       count(lit(1)).as("_p_n"))
-    tok.select(col(idCol), col("_bkt"))
+    tok.select(col("doc_id"), col("_bkt"))
       .join(broadcast(model), "_bkt")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         sum("_t_n").as("t_sum"), sum("_p_n").as("p_sum"))
-      .select(col(idCol), col("n_tokens"), col("t_sum"), col("p_sum"),
+      .select(col("doc_id"), col("n_tokens"), col("t_sum"), col("p_sum"),
         (col("t_sum").cast(DoubleType) / col("p_sum").cast(DoubleType))
           .as("weight"))
   }
@@ -924,10 +903,10 @@ object TextOps {
     * id asc — the id tie-break makes the cut deterministic). A bounded
     * TakeOrdered: k rows per partition move, never a corpus sort. */
   def dsirSelect(docs: DataFrame, textCol: String, isTarget: Column,
-      n: Int, buckets: Int = 2048, idCol: String = "doc_id"): DataFrame = {
+      n: Int): DataFrame = {
     require(n >= 1, "n must be positive")
-    dsirWeights(docs, textCol, isTarget, buckets, idCol)
-      .orderBy(col("weight").desc, col(idCol)).limit(n)
+    dsirWeights(docs, textCol, isTarget)
+      .orderBy(col("weight").desc, col("doc_id")).limit(n)
   }
 
   /** GPT-style sequence packing (concat-then-chunk): documents are
@@ -935,12 +914,12 @@ object TextOps {
     * fixed-token-budget training sequences; a document may span a chunk
     * boundary (the standard trade — no padding waste). Each doc's start
     * offset is a running per-shard cumsum of token counts: one window
-    * pass, no sequential loop. Sharding (`shardCol`) is what makes this
+    * pass, no sequential loop. Sharding (by `source`) is what makes this
     * scale — a global ordered cumsum would funnel the corpus through one
     * reducer; per-shard packing is both the production layout and an
     * independent window per shard. */
-  def packSequences(docs: DataFrame, textCol: String, budget: Int,
-      shardCol: String = "source", idCol: String = "doc_id"): DataFrame = {
+  def packSequences(docs: DataFrame, textCol: String,
+      budget: Int): DataFrame = {
     require(budget > 0)
     // n_tokens tiebreaks duplicate ids within a shard: rows that still tie
     // are identical in every projected column, so the output MULTISET is
@@ -948,10 +927,10 @@ object TextOps {
     // different lengths would make start_offset order-dependent, defeating
     // the cross-engine reproducibility guarantee
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(shardCol).orderBy(col(idCol), col("n_tokens"))
+      .partitionBy("source").orderBy(col("doc_id"), col("n_tokens"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     docs
-      .select(col(idCol), col(shardCol), tokenCount(col(textCol)).as("n_tokens"))
+      .select(col("doc_id"), col("source"), tokenCount(col(textCol)).as("n_tokens"))
       .withColumn("start_offset",
         coalesce(sum("n_tokens").over(w), lit(0L)).cast(LongType))
       .withColumn("chunk_start", expr(s"start_offset div $budget"))
@@ -981,13 +960,12 @@ object TextOps {
     * regexp_replace) — one narrow codegen map over the corpus scan, zero
     * shuffles; at 100 TB this rides the same scan as the other quality
     * signals. */
-  def piiScrub(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id"): DataFrame = {
+  def piiScrub(docs: DataFrame, textCol: String): DataFrame = {
     val scrubbed = PiiPatterns.foldLeft(col(textCol)) {
       case (acc, (_, pat, repl)) => regexp_replace(acc, pat, repl)
     }
     docs.select(
-      col(idCol) +:
+      col("doc_id") +:
         PiiPatterns.map { case (name, pat, _) =>
           regexp_count(col(textCol), lit(pat)).as(s"n_$name") } :+
         md5(scrubbed.cast(BinaryType)).as("scrubbed_hash"): _*)
@@ -1013,14 +991,14 @@ object TextOps {
     * stride). The token array is computed once per document at the
     * generator input (plain expression context — no HOF lambda captures;
     * see [[Dedup.shingles]]' PERF note for the trap this avoids). */
-  def chunk(docs: DataFrame, textCol: String, size: Int, overlap: Int,
-      idCol: String = "doc_id"): DataFrame = {
+  def chunk(docs: DataFrame, textCol: String, size: Int,
+      overlap: Int): DataFrame = {
     require(size > 0, "chunk size must be positive")
     require(overlap >= 0 && overlap < size,
       "overlap must be in [0, size) — stride = size - overlap must advance")
     val stride = size - overlap
     docs
-      .select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), tokens(col(textCol)).as("toks"))
       .withColumn("n_tokens", org.apache.spark.sql.functions.size(col("toks")))
       .filter(col("n_tokens") > 0)
       .select(col("doc_id"), col("n_tokens"), col("toks"),
@@ -1050,12 +1028,11 @@ object TextOps {
     * row count, and the final aggregate is bounded by the symbol-pair
     * alphabet. Top-k via a total order (count desc, pair asc) keeps the
     * result deterministic under ties. */
-  def bpePairs(docs: DataFrame, textCol: String = "text",
-      topK: Int = 50): DataFrame = {
+  def bpePairs(docs: DataFrame, topK: Int = 50): DataFrame = {
     require(topK > 0, "topK must be positive")
     val vocab = docs
       .select(explode(
-        filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
+        filter(split(lower(col("text")), "[^\\p{L}\\p{N}]+"),
           t => length(t) > 0)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
     vocab
@@ -1077,16 +1054,15 @@ object TextOps {
     * (TopK-sized, broadcastable); coverage = explode + broadcast LEFT
     * SEMI-shaped mark join + per-doc aggregate — the wide shuffle carries
     * (doc, token) pairs only. */
-  def oovStats(docs: DataFrame, textCol: String, vocabSize: Int,
-      idCol: String = "doc_id"): DataFrame = {
+  def oovStats(docs: DataFrame, textCol: String, vocabSize: Int): DataFrame = {
     require(vocabSize > 0, "vocabSize must be positive")
-    val toks = docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
+    val toks = docs.select(col("doc_id"), explode(tokens(col(textCol))).as("tok"))
     val vocab = toks.groupBy("tok").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), asc("tok")).limit(vocabSize)
       .select(col("tok").as("vword"))
     toks
       .join(broadcast(vocab), col("tok") === col("vword"), "left")
-      .groupBy(idCol)
+      .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         count(when(col("vword").isNull, 1)).as("n_oov"))
   }
@@ -1098,7 +1074,7 @@ object TextOps {
     * recount pairs on the merged symbols and repeat. Returns the top
     * `topK` subword pieces by total occurrence (count desc, piece asc —
     * deterministic), i.e. the piece-frequency table of the learned
-    * tokenizer applied to the whole corpus. With `rounds` ≥ 2 the merges
+    * tokenizer applied to the whole corpus. Over its 2 rounds the merges
     * compose (round 2 merges pairs of round-1 pieces), so pieces grow
     * beyond 2 chars exactly as sequential BPE's do.
     *
@@ -1124,16 +1100,15 @@ object TextOps {
     * pattern of [[Pq]]'s codebooks). Pair-count ties break on
     * (x asc, y asc) — a total order, so the merge list (and therefore
     * every downstream byte) is deterministic cross-engine. */
-  def bpeApply(docs: DataFrame, textCol: String = "text",
-      mergesPerRound: Int = 16, rounds: Int = 2, topK: Int = 100): DataFrame = {
+  def bpeApply(docs: DataFrame, mergesPerRound: Int = 16,
+      topK: Int = 100): DataFrame = {
     require(mergesPerRound > 0, "mergesPerRound must be positive")
-    require(rounds > 0, "rounds must be positive")
     require(topK > 0, "topK must be positive")
     // (word, freq) vocab — read by every round's pair count AND the final
     // piece aggregate, so it persists for the session
     val vocab = docs
       .select(explode(
-        filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
+        filter(split(lower(col("text")), "[^\\p{L}\\p{N}]+"),
           w => length(w) > 0)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1143,7 +1118,7 @@ object TextOps {
         i => concat(col("word"), lit("_")).substr(i, lit(1))), "||"),
       lit("||"))
     var cur = vocab.select(col("word"), col("freq"), sym0.as("s"))
-    for (_ <- 1 to rounds) {
+    for (_ <- 1 to 2) {
       // adjacent-symbol pairs of the CURRENT segmentation, freq-weighted;
       // single-symbol words have no pairs (and sequence(1, 0) would count
       // DOWN — the filter keeps the generator total)
@@ -1186,22 +1161,21 @@ object TextOps {
     * [[graft.text.Dedup.paraDedup]], whose cross-document ownership
     * genuinely needs one). The one division per doc is exact-int-to-double
     * — bit-stable cross-engine. */
-  def lineDups(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val ls = filter(transform(split(col(textCol), "\n"), l => trim(l)),
+  def lineDups(docs: DataFrame): DataFrame = {
+    val ls = filter(transform(split(col("text"), "\n"), l => trim(l)),
       l => length(l) > 0)
     val charSum = (a: Column) =>
       aggregate(a, lit(0L), (acc, l) => acc + length(l))
     docs
-      .select(col(idCol), ls.as("ls"))
+      .select(col("doc_id"), ls.as("ls"))
       .filter(size(col("ls")) > 0)
-      .select(col(idCol),
+      .select(col("doc_id"),
         size(col("ls")).cast(LongType).as("n_lines"),
         (size(col("ls")) - size(array_distinct(col("ls"))))
           .cast(LongType).as("n_dup_lines"),
         charSum(col("ls")).as("chars_total"),
         charSum(array_distinct(col("ls"))).as("chars_distinct"))
-      .select(col(idCol), col("n_lines"), col("n_dup_lines"),
+      .select(col("doc_id"), col("n_lines"), col("n_dup_lines"),
         col("chars_total"),
         ((col("chars_total") - col("chars_distinct")).cast(DoubleType) /
           col("chars_total").cast(DoubleType)).as("dup_char_frac"))
@@ -1217,28 +1191,27 @@ object TextOps {
     * Scale: the full-corpus aggregation this replaces shuffles every
     * distinct (token, partial-count) pair; here the wide shuffle carries
     * only candidate-token rows (heavy hitters are few by definition —
-    * `eps` tunes how few false candidates leak: overestimate ≤ eps · N
-    * with prob `confidence`). The same two-pass sketch-then-settle shape
+    * the sketch's eps = 0.0005 bounds how few false candidates leak:
+    * overestimate ≤ eps · N with probability 0.99). The same two-pass sketch-then-settle shape
     * as [[graft.ops.BloomJoin]]. */
-  def heavyHitters(docs: DataFrame, textCol: String, threshold: Long,
-      eps: Double = 0.0005, confidence: Double = 0.99,
-      seed: Int = 42): DataFrame = {
+  def heavyHitters(docs: DataFrame, textCol: String,
+      threshold: Long): DataFrame = {
     val toks = docs.select(explode(tokens(col(textCol))).as("tok"))
-    val sketch = toks.stat.countMinSketch("tok", eps, confidence, seed)
+    val sketch = toks.stat.countMinSketch("tok", 0.0005, 0.99, 42)
     toks
       .filter(graft.functions.CmsEstimate(col("tok"), sketch) >= threshold)
       .groupBy("tok").agg(count(lit(1)).as("n"))
       .filter(col("n") >= threshold)
   }
 
-  /** Token co-occurrence pair counts within a ±`window` POSITION window
+  /** Token co-occurrence pair counts within a ±2 POSITION window
     * (the GloVe/word2vec co-occurrence-matrix builder), with the
     * independence lift `p(x,y) / (p(x)·p(y))` from exact counts. Pairs
     * are unordered canonical (least, greatest); a repeated adjacent word
     * pairs with itself (that IS data — "very very").
     *
     * Scale: pair GENERATION is position-keyed — each token joins only the
-    * `window` positions after it via exact (doc, pos+d) equi-joins — so
+    * 2 positions after it via exact (doc, pos+d) equi-joins — so
     * per-token work is O(window) and hub words cannot blow up generation
     * (unlike similarity self-joins keyed on the token). The aggregate is
     * keyed on pairs with map-side partials; marginals ride one more hash
@@ -1248,15 +1221,14 @@ object TextOps {
     * Lift arithmetic: all counts are exact longs; the double math is the
     * textually-pinned `(nxy/P) / ((nx/T)·(ny/T))` — divisions and one
     * multiply of correctly-rounded doubles, bit-stable cross-engine. */
-  def cooccurPairs(docs: DataFrame, textCol: String, window: Int = 2,
-      topK: Int = 50, idCol: String = "doc_id"): DataFrame = {
-    require(window >= 1 && window <= 16, "window must be in [1, 16]")
+  def cooccurPairs(docs: DataFrame, textCol: String,
+      topK: Int = 50): DataFrame = {
     require(topK > 0, "topK must be positive")
-    val toks = docs.select(col(idCol).as("id"),
+    val toks = docs.select(col("doc_id").as("id"),
       posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
     val b = toks.select(col("id").as("idb"), col("pos").as("posb"),
       col("tok").as("tokb"))
-    val pairs = (1 to window).map { d =>
+    val pairs = (1 to 2).map { d =>
       toks.join(b, col("id") === col("idb") && col("posb") === col("pos") + d)
         .select(least(col("tok"), col("tokb")).as("x"),
           greatest(col("tok"), col("tokb")).as("y"))
@@ -1294,11 +1266,9 @@ object TextOps {
     * key-equi joins on the SUPPORT-FILTERED bigram table (≥ minCount rows
     * only — the floor is also the scale guard), and a bounded TakeOrdered
     * top-k. No self-joins, no windows. */
-  def pmiCollocations(docs: DataFrame, textCol: String = "text",
-      minCount: Long = 5L, topK: Int = 50): DataFrame = {
+  def pmiCollocations(docs: DataFrame, minCount: Long = 5L): DataFrame = {
     require(minCount >= 1L, "pmiCollocations: minCount must be positive")
-    require(topK >= 1, "pmiCollocations: topK must be positive")
-    val t0 = tokens(col(textCol))
+    val t0 = tokens(col("text"))
     val pairsArr = zip_with(slice(t0, lit(1), size(t0) - 1),
       slice(t0, lit(2), size(t0) - 1), (a, b) => struct(a.as("w1"), b.as("w2")))
     val bgp = docs.select(explode(when(size(t0) >= 2, pairsArr)
@@ -1306,7 +1276,7 @@ object TextOps {
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
     val big = bgp.groupBy("w1", "w2").agg(count(lit(1)).as("n_xy"))
       .filter(col("n_xy") >= minCount)
-    val uni = docs.select(explode(tokens(col(textCol))).as("tok"))
+    val uni = docs.select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("_c"))
     val tot = uni.agg(sum("_c").as("_n"))
     val ln = (c: Column) => graft.ops.Sampling.portableLn(c)
@@ -1321,7 +1291,7 @@ object TextOps {
       .select(col("w1"), col("w2"), col("n_xy"), col("n_x"), col("n_y"),
         col("pmi_micro"))
       .orderBy(col("pmi_micro").desc, col("w1"), col("w2"))
-      .limit(topK)
+      .limit(50)
   }
 
   /** Top-`k` TF-IDF terms per document — the keyword-extraction /
@@ -1338,20 +1308,19 @@ object TextOps {
     * single row. Per-doc selection goes through the bounded-heap
     * [[graft.ops.TopK]] operator — no corpus-wide window sort; ties at
     * the k boundary are broken by the (score, term) struct order. */
-  def tfidfTopTerms(docs: DataFrame, textCol: String, k: Int = 3,
-      idCol: String = "doc_id"): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, textCol: String, k: Int = 3): DataFrame = {
     require(k > 0, "k must be positive")
     val tf = docs
-      .select(col(idCol), explode(tokens(col(textCol))).as("term"))
-      .groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
+      .select(col("doc_id"), explode(tokens(col(textCol))).as("term"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val scored = tf.join(df, "term").crossJoin(n)
-      .select(col(idCol), col("term"), col("tf"), col("df"),
+      .select(col("doc_id"), col("term"), col("tf"), col("df"),
         (col("tf").cast(DoubleType) *
           ((col("n_docs").cast(DoubleType) + lit(1.0d)) /
             (col("df").cast(DoubleType) + lit(1.0d)))).as("score"))
-    graft.ops.TopK.perKey(scored, Seq(idCol),
+    graft.ops.TopK.perKey(scored, Seq("doc_id"),
       struct(col("score"), col("term")), k, descending = true)
   }
 
@@ -1370,13 +1339,12 @@ object TextOps {
     * array_distinct) measured ~4.4 ms/doc interpreted — ~7× the native
     * loop at the ×10 probe — the round-10 escalation rule applied at
     * design time. */
-  def dupNgramFrac(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
+  def dupNgramFrac(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol),
-        graft.functions.NgramDupStats(tokens(col(textCol)), 3).as("_st"))
+      .select(col("doc_id"),
+        graft.functions.NgramDupStats(tokens(col("text")), 3).as("_st"))
       .filter(col("_st.n_ngrams") > 0)
-      .select(col(idCol),
+      .select(col("doc_id"),
         col("_st.n_ngrams").as("n_ngrams"),
         col("_st.n_distinct").as("n_distinct"))
       .withColumn("dup_frac",
@@ -1389,11 +1357,10 @@ object TextOps {
     * documents drop (no tokens). Scale: explode + two hash aggregates with
     * map-side partials keyed (id, token) then id — the shuffle carries
     * distinct (doc, token) pairs, never a per-document buffer. */
-  def repetitionSignals(docs: DataFrame, textCol: String,
-      idCol: String = "doc_id"): DataFrame =
-    docs.select(col(idCol), explode(tokens(col(textCol))).as("tok"))
-      .groupBy(idCol, "tok").agg(count(lit(1)).as("c"))
-      .groupBy(idCol)
+  def repetitionSignals(docs: DataFrame, textCol: String): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col(textCol))).as("tok"))
+      .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
+      .groupBy("doc_id")
       .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
         max("c").as("top_tok_n"))
 
@@ -1414,20 +1381,17 @@ object TextOps {
     * Scale: [[qualitySignals]] is a narrow map over the scan;
     * [[repetitionSignals]] adds the one (doc, token)-keyed aggregate —
     * the join back is doc-keyed with map-side partials everywhere. */
-  def gopherRules(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minTokens: Int = 25,
-      maxTokens: Int = 10000): DataFrame = {
-    require(minTokens < maxTokens, "minTokens must be below maxTokens")
-    val sig = qualitySignals(docs.select(col(idCol), col(textCol)), textCol)
+  def gopherRules(docs: DataFrame): DataFrame = {
+    val sig = qualitySignals(docs.select(col("doc_id"), col("text")), "text")
       .withColumn("n_word_chars",
-        length(regexp_replace(col(textCol), "\\s", "")))
-    val rep = repetitionSignals(docs, textCol, idCol)
-      .select(col(idCol), col("top_tok_n"))
-    sig.join(rep, Seq(idCol), "left") // token-less docs have no rep row
-      .select(col(idCol), col("n_tokens"), col("n_word_chars"),
+        length(regexp_replace(col("text"), "\\s", "")))
+    val rep = repetitionSignals(docs, "text")
+      .select(col("doc_id"), col("top_tok_n"))
+    sig.join(rep, Seq("doc_id"), "left") // token-less docs have no rep row
+      .select(col("doc_id"), col("n_tokens"), col("n_word_chars"),
         coalesce(col("top_tok_n"), lit(0L)).as("top_tok_n"),
-        (col("n_tokens") < minTokens).as("fail_short"),
-        (col("n_tokens") > maxTokens).as("fail_long"),
+        (col("n_tokens") < 25).as("fail_short"),
+        (col("n_tokens") > 10000).as("fail_long"),
         (col("n_word_chars") < col("n_tokens") * 3 ||
           col("n_word_chars") > col("n_tokens") * 10).as("fail_word_len"),
         (col("n_digit") * 5 > col("n_word_chars")).as("fail_digit"),
@@ -1451,10 +1415,9 @@ object TextOps {
     * Scale: one (lang, token)-keyed count with map-side partials, one
     * lang-keyed rollup. Nothing corpus-sized moves after the first
     * aggregate. */
-  def vocabRichness(docs: DataFrame, textCol: String = "text",
-      langCol: String = "lang"): DataFrame = {
+  def vocabRichness(docs: DataFrame): DataFrame = {
     val counts = docs
-      .select(col(langCol).as("lang"), explode(tokens(col(textCol))).as("tok"))
+      .select(col("lang"), explode(tokens(col("text"))).as("tok"))
       .groupBy("lang", "tok").agg(count(lit(1)).as("_c"))
     counts.groupBy("lang").agg(
         sum("_c").as("n_tokens"),
@@ -1482,10 +1445,9 @@ object TextOps {
     * sort); the cumulative window then runs over ≤ topN rows — a
     * deliberately bounded single-partition frame, like the reference's
     * report tails. */
-  def vocabCoverage(docs: DataFrame, topN: Int = 50,
-      textCol: String = "text"): DataFrame = {
+  def vocabCoverage(docs: DataFrame, topN: Int = 50): DataFrame = {
     require(topN >= 1, "topN must be positive")
-    val counts = docs.select(explode(tokens(col(textCol))).as("token"))
+    val counts = docs.select(explode(tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum("cnt").as("n_total"))
     val top = counts.orderBy(col("cnt").desc, col("token")).limit(topN)
@@ -1503,8 +1465,8 @@ object TextOps {
   /** C4-style line-level quality filter (the Raffel et al. 2020 cleaning
     * family re-expressed as per-doc NAMED flags, like [[gopherRules]]):
     * a line is KEPT when it ends in terminal punctuation (`. ! ? "`) and
-    * has at least `minLineWords` whitespace words; a doc fails on
-    *   - fail_few_lines — fewer than `minKeptLines` kept lines
+    * has at least 5 whitespace words; a doc fails on
+    *   - fail_few_lines — fewer than 3 kept lines
     *   - fail_lorem / fail_js — boilerplate markers (`lorem ipsum`,
     *     `javascript`) anywhere in the lower-cased text
     *   - fail_brace — a `{` anywhere (code/templating leak)
@@ -1516,33 +1478,29 @@ object TextOps {
     * per-line HOF predicate), both char sums, and every marker test ride
     * the corpus scan as one codegen stage; no explode, no shuffle
     * (the same posture as [[lineDups]]). */
-  def c4Rules(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", minKeptLines: Int = 3,
-      minLineWords: Int = 5): DataFrame = {
-    require(minKeptLines >= 1 && minLineWords >= 1,
-      "minKeptLines and minLineWords must be positive")
-    val ls = filter(transform(split(col(textCol), "\n"), l => trim(l)),
+  def c4Rules(docs: DataFrame): DataFrame = {
+    val ls = filter(transform(split(col("text"), "\n"), l => trim(l)),
       l => length(l) > 0)
     val keptLine = (l: Column) =>
       substring(l, -1, 1).isin(".", "!", "?", "\"") &&
-        size(split(l, "\\s+")) >= minLineWords
+        size(split(l, "\\s+")) >= 5
     val charSum = (a: Column) =>
       aggregate(a, lit(0L), (acc, l) => acc + length(l))
-    val low = lower(col(textCol))
+    val low = lower(col("text"))
     docs
-      .select(col(idCol), col(textCol), ls.as("ls"))
-      .select(col(idCol), col(textCol), col("ls"),
+      .select(col("doc_id"), col("text"), ls.as("ls"))
+      .select(col("doc_id"), col("text"), col("ls"),
         filter(col("ls"), keptLine).as("kept"))
-      .select(col(idCol),
+      .select(col("doc_id"),
         size(col("ls")).cast(LongType).as("n_lines"),
         size(col("kept")).cast(LongType).as("n_kept_lines"),
         charSum(col("ls")).as("chars_total"),
         charSum(col("kept")).as("chars_kept"),
         low.like("%lorem ipsum%").as("fail_lorem"),
         low.like("%javascript%").as("fail_js"),
-        col(textCol).contains("{").as("fail_brace"))
-      .withColumn("fail_few_lines", col("n_kept_lines") < minKeptLines)
-      .select(col(idCol), col("n_lines"), col("n_kept_lines"),
+        col("text").contains("{").as("fail_brace"))
+      .withColumn("fail_few_lines", col("n_kept_lines") < 3)
+      .select(col("doc_id"), col("n_lines"), col("n_kept_lines"),
         when(col("chars_total") > 0,
           col("chars_kept").cast(DoubleType) /
             col("chars_total").cast(DoubleType)).as("kept_char_frac"),
@@ -1572,12 +1530,11 @@ object TextOps {
     * pins native == HOF row-for-row). Contrast the oracle's
     * unnest-and-group formulation, which moves every (doc, char) pair
     * through an aggregate. */
-  def charDiversity(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
+  def charDiversity(docs: DataFrame): DataFrame =
     docs
-      .select(col(idCol), graft.functions.CharDivStats(col(textCol)).as("_st"))
+      .select(col("doc_id"), graft.functions.CharDivStats(col("text")).as("_st"))
       .filter(col("_st.n_chars") > 0)
-      .select(col(idCol),
+      .select(col("doc_id"),
         col("_st.n_chars").as("n_chars"),
         col("_st.n_distinct_chars").as("n_distinct_chars"),
         col("_st.top_char_n").as("top_char_n"),
@@ -1586,7 +1543,7 @@ object TextOps {
           .as("repeat_prob"))
 
   /** Character-trigram language ID, Cavnar–Trenkle style, TRAINED AND
-    * APPLIED in one plan: per-language profiles are the top `profileK`
+    * APPLIED in one plan: per-language profiles are the top 300
     * char trigrams by corpus count (ties lexically), and each doc is
     * classified to the language whose profile overlaps most of its own
     * distinct trigrams (ties to the lexically smallest language; docs
@@ -1609,43 +1566,40 @@ object TextOps {
     * language's whole trigram vocabulary); the profile (≤ langs ·
     * profileK rows) BROADCASTS back onto the doc-trigram probe stream;
     * the final argmax window is per doc over ≤ |langs| rows. */
-  def ngramLangId(docs: DataFrame, profileK: Int = 300,
-      textCol: String = "text", idCol: String = "doc_id",
-      langCol: String = "lang"): DataFrame = {
-    require(profileK >= 1, "profileK must be positive")
+  def ngramLangId(docs: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
     // Persisting the trigram frame measured 8× (1.4 s vs 11.2 s at
     // sf0.1): both the profile build and the probe stream consume it, and
     // the cached flat arrays keep the fan-out stages short
-    val docTris = docs.select(col(idCol), col(langCol),
+    val docTris = docs.select(col("doc_id"), col("lang"),
       graft.functions.CharNgrams(
-        lower(regexp_replace(col(textCol), "\\s+", " ")), 3).as("_tris"))
+        lower(regexp_replace(col("text"), "\\s+", " ")), 3).as("_tris"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val counts = docTris
-      .select(col(langCol).as("_plang"), explode(col("_tris")).as("_tri"))
+      .select(col("lang").as("_plang"), explode(col("_tris")).as("_tri"))
       .groupBy("_plang", "_tri").agg(count(lit(1)).as("_cnt"))
-    // top-profileK per language through the BOUNDED HEAP, not a rank
+    // top-300 per language through the BOUNDED HEAP, not a rank
     // window: the partition would be each language's whole observed
     // trigram vocabulary (10⁶-10⁷ on a unicode corpus) sorted in one
     // task per language — the op_chi2_terms lesson. The profile is a
     // SET, so no rank needs recovering; tie-break (count desc, trigram
     // asc) rides the ascending (−count, trigram) struct.
     val profile = graft.ops.TopK.perKey(counts, Seq("_plang"),
-      struct((lit(0L) - col("_cnt")).as("_nc"), col("_tri")), profileK,
+      struct((lit(0L) - col("_cnt")).as("_nc"), col("_tri")), 300,
       descending = false)
       .select("_plang", "_tri")
     val scored = docTris
-      .select(col(idCol), col(langCol), explode(col("_tris")).as("_tri"))
+      .select(col("doc_id"), col("lang"), explode(col("_tris")).as("_tri"))
       .join(broadcast(profile), "_tri")
-      .groupBy(col(idCol), col(langCol), col("_plang"))
+      .groupBy(col("doc_id"), col("lang"), col("_plang"))
       .agg(count(lit(1)).as("score"))
-      .withColumn("_rk", row_number().over(w.partitionBy(idCol)
+      .withColumn("_rk", row_number().over(w.partitionBy("doc_id")
         .orderBy(col("score").desc, col("_plang"))))
       .filter(col("_rk") === 1)
-      .select(col(idCol), col("_plang"), col("score"))
-    docs.select(col(idCol), col(langCol))
-      .join(scored, Seq(idCol), "left")
-      .select(col(idCol), col(langCol),
+      .select(col("doc_id"), col("_plang"), col("score"))
+    docs.select(col("doc_id"), col("lang"))
+      .join(scored, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("lang"),
         coalesce(col("_plang"), lit("und")).as("lang_pred"),
         coalesce(col("score"), lit(0L)).as("score"))
   }
@@ -1679,14 +1633,12 @@ object TextOps {
     * asc) contract exactly. The rank column is then recovered WITHOUT any
     * window: `sort_array(collect_list(...))` + `posexplode` over the ≤ k
     * surviving rows per class (bounded memory by construction). */
-  def chi2Terms(docs: DataFrame, k: Int = 10, minDf: Int = 5,
-      textCol: String = "text", idCol: String = "doc_id",
-      classCol: String = "lang"): DataFrame = {
+  def chi2Terms(docs: DataFrame, k: Int = 10, minDf: Int = 5): DataFrame = {
     require(k >= 1 && minDf >= 1, "k and minDf must be positive")
-    val dt = docs.select(col(classCol).as("_cls"),
-      explode(array_distinct(tokens(col(textCol)))).as("token"))
+    val dt = docs.select(col("lang").as("_cls"),
+      explode(array_distinct(tokens(col("text")))).as("token"))
     val nTot = docs.agg(count(lit(1)).as("_n"))
-    val clsTot = docs.groupBy(col(classCol).as("_cls"))
+    val clsTot = docs.groupBy(col("lang").as("_cls"))
       .agg(count(lit(1)).as("_ncls"))
     val tokTot = dt.groupBy("token").agg(count(lit(1)).as("_ntok"))
     val aTab = dt.groupBy("_cls", "token").agg(count(lit(1)).as("_a"))
@@ -1714,21 +1666,47 @@ object TextOps {
         (lit(0.0d) - col("chi2")).as("_nchi"), col("token"),
         col("n_class_tok"), col("chi2")))).as("_top"))
       .select(col("_cls"), posexplode(col("_top")))
-      .select(col("_cls").as(classCol),
+      .select(col("_cls").as("lang"),
         (col("pos") + 1).as("rank"), col("col.token").as("token"),
         col("col.n_class_tok").as("n_class_tok"), col("col.chi2").as("chi2"))
   }
 
+  /** Feature slots of the hashed linear model ([[linearScore]],
+    * [[perceptronStep]]). */
+  private val FeatureBuckets = 64
+
+  /** The literal-folded weight vector shared by [[linearScore]] (apply)
+    * and [[perceptronStep]] (train): a (bucket, weight) frame collected
+    * into a [[FeatureBuckets]]-long array (bounded by construction — that
+    * boundedness IS the hashing trick), or the fixed deterministic
+    * stand-in when no table is given. */
+  private def weightTable(weights: Option[DataFrame]): Array[Long] =
+    weights match {
+      case Some(w) =>
+        val rows = w.select(col("bucket").cast(IntegerType),
+          col("weight").cast(LongType)).collect()
+        val arr = Array.fill(FeatureBuckets)(0L)
+        rows.foreach { r =>
+          val b = r.getInt(0)
+          require(b >= 0 && b < FeatureBuckets,
+            s"weight table: bucket $b outside [0, $FeatureBuckets)")
+          arr(b) = r.getLong(1)
+        }
+        arr
+      case None =>
+        Array.tabulate(FeatureBuckets)(b => (b.toLong * 37 % 21) - 10)
+    }
+
   /** Hashed bag-of-words linear classifier score — the fastText-style
     * "apply a trained quality model to every document" operator: each
-    * token hashes into one of `buckets` feature slots via the
+    * token hashes into one of [[FeatureBuckets]] feature slots via the
     * engine-portable md5-60 ([[Dedup.portableHash]]), the slot's integer
     * weight accumulates, and `label_positive` thresholds the total at 0.
     *
     * The weight table is a REAL parameter: pass the trained model as a
     * (bucket, weight) DataFrame and it is LITERAL-FOLDED into the scoring
     * expression — collected (bounded: a hashed linear model has exactly
-    * `buckets` weights, kilobytes by construction — that boundedness is
+    * 64 weights, kilobytes by construction — that boundedness is
     * the entire point of the hashing trick) and embedded as an array
     * literal indexed by the token's bucket. No broadcast join, no
     * shuffle: the plan with a trained table is IDENTICAL to the default's.
@@ -1741,26 +1719,18 @@ object TextOps {
     * per-row HOF chain riding the corpus scan (no vocabulary broadcast,
     * no shuffle — the entire "model" lives in the expression), exactly
     * how a hashed linear model scores 100 TB in one map stage. */
-  /** The literal-folded weight vector shared by [[linearScore]] (apply)
-    * and [[perceptronStep]] (train): a (bucket, weight) frame collected
-    * into a `buckets`-long array (bounded by construction — that
-    * boundedness IS the hashing trick), or the fixed deterministic
-    * stand-in when no table is given. */
-  private def weightTable(buckets: Int, weights: Option[DataFrame]): Array[Long] =
-    weights match {
-      case Some(w) =>
-        val rows = w.select(col("bucket").cast(IntegerType),
-          col("weight").cast(LongType)).collect()
-        val arr = Array.fill(buckets)(0L)
-        rows.foreach { r =>
-          val b = r.getInt(0)
-          require(b >= 0 && b < buckets,
-            s"weight table: bucket $b outside [0, $buckets)")
-          arr(b) = r.getLong(1)
-        }
-        arr
-      case None => Array.tabulate(buckets)(b => (b.toLong * 37 % 21) - 10)
-    }
+  def linearScore(docs: DataFrame,
+      weights: Option[DataFrame] = None): DataFrame = {
+    val tableLit = typedLit(weightTable(weights).toSeq)
+    val w = (t: Column) => element_at(tableLit,
+      (pmod(Dedup.portableHash(t), lit(FeatureBuckets.toLong)) + 1L)
+        .cast(IntegerType))
+    docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+      .select(col("doc_id"),
+        size(col("toks")).cast(LongType).as("n_tokens"),
+        aggregate(col("toks"), lit(0L), (acc, t) => acc + w(t)).as("score"))
+      .withColumn("label_positive", col("score") > 0)
+  }
 
   /** Bucketed ranking AUC of a document score against a binary reference
     * label — the evaluator behind "does the cheap classifier actually
@@ -1783,18 +1753,11 @@ object TextOps {
     * NULL auc.
     *
     * Scale: one id equi-join, one buckets-bounded keyed aggregate with
-    * map-side partials, a cumulative window over ≤ (max−min+1) bucket
+    * map-side partials, a cumulative window over ≤ 1000 bucket
     * rows (bounded by construction — the [[vocabCoverage]] pattern), one
     * 1-row rollup. Nothing corpus-sized is sorted or windowed. */
-  def scoreAuc(scored: DataFrame, labels: DataFrame,
-      scoreCol: String = "score", labelCol: String = "keep",
-      idCol: String = "doc_id",
-      minScore: Long = -500, maxScore: Long = 499): DataFrame = {
-    require(minScore < maxScore, "minScore must be below maxScore")
-    val joined = scored.select(col(idCol),
-        greatest(lit(minScore), least(col(scoreCol).cast(LongType),
-          lit(maxScore))).as("_b"))
-      .join(labels.select(col(idCol), col(labelCol).as("_pos")), idCol)
+  def scoreAuc(scored: DataFrame, labels: DataFrame): DataFrame = {
+    val joined = bucketedLabels(scored, labels)
     val perBucket = joined.groupBy("_b").agg(
       sum(when(col("_pos"), 1L).otherwise(0L)).as("_p"),
       sum(when(col("_pos"), 0L).otherwise(1L)).as("_n"))
@@ -1811,6 +1774,15 @@ object TextOps {
               * lit(2.0))).as("auc"))
   }
 
+  /** `scored`'s `score` clamped to the integer buckets [−500, 499] as
+    * `_b`, joined on `doc_id` to `labels`' boolean `keep` as `_pos`. */
+  private def bucketedLabels(scored: DataFrame,
+      labels: DataFrame): DataFrame =
+    scored.select(col("doc_id"),
+        greatest(lit(-500L), least(col("score").cast(LongType), lit(499L)))
+          .as("_b"))
+      .join(labels.select(col("doc_id"), col("keep").as("_pos")), "doc_id")
+
   /** Score-decile lift table — the reliability-diagram read beside
     * [[scoreAuc]]'s single-number ranking view: docs ordered by CLAMPED
     * integer score descending are split into `q` equal-count bins with
@@ -1824,18 +1796,12 @@ object TextOps {
     *
     * Scale: the [[scoreAuc]] shape exactly — one id equi-join, one
     * buckets-bounded keyed aggregate, cumulative windows over
-    * ≤ (max−min+1) histogram rows, a ≤ q-row finish. Nothing corpus-sized
+    * ≤ 1000 histogram rows, a ≤ q-row finish. Nothing corpus-sized
     * is sorted or windowed. */
   def scoreDeciles(scored: DataFrame, labels: DataFrame,
-      scoreCol: String = "score", labelCol: String = "keep",
-      idCol: String = "doc_id", q: Int = 10,
-      minScore: Long = -500, maxScore: Long = 499): DataFrame = {
+      q: Int = 10): DataFrame = {
     require(q >= 2 && q <= 1000, "scoreDeciles: q in [2, 1000]")
-    require(minScore < maxScore, "minScore must be below maxScore")
-    val joined = scored.select(col(idCol),
-        greatest(lit(minScore), least(col(scoreCol).cast(LongType),
-          lit(maxScore))).as("_b"))
-      .join(labels.select(col(idCol), col(labelCol).as("_pos")), idCol)
+    val joined = bucketedLabels(scored, labels)
     val perBucket = joined.groupBy("_b").agg(count(lit(1)).as("_n"),
       sum(when(col("_pos"), 1L).otherwise(0L)).as("_p"))
     val wBefore = org.apache.spark.sql.expressions.Window
@@ -1859,21 +1825,6 @@ object TextOps {
       .orderBy("bin")
   }
 
-  def linearScore(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", buckets: Int = 64,
-      weights: Option[DataFrame] = None): DataFrame = {
-    require(buckets >= 2, "buckets must be at least 2")
-    val tableLit = typedLit(weightTable(buckets, weights).toSeq)
-    val w = (t: Column) => element_at(tableLit,
-      (pmod(Dedup.portableHash(t), lit(buckets.toLong)) + 1L)
-        .cast(IntegerType))
-    docs.select(col(idCol), tokens(col(textCol)).as("toks"))
-      .select(col(idCol),
-        size(col("toks")).cast(LongType).as("n_tokens"),
-        aggregate(col("toks"), lit(0L), (acc, t) => acc + w(t)).as("score"))
-      .withColumn("label_positive", col("score") > 0)
-  }
-
   /** One BATCH EPOCH of hashed-perceptron training — the train-side
     * counterpart of [[linearScore]]'s apply-side: score every labeled
     * document under the current weight vector, and for each document the
@@ -1881,32 +1832,29 @@ object TextOps {
     * `label × token-count` into every feature slot its tokens hash to.
     * Output: one row per bucket — (bucket, w_old, grad, w_new) with
     * `w_new = w_old + grad` (learning rate 1) — i.e. the NEXT weight
-    * table, feedable straight back into [[linearScore]]/[[perceptronStep]]
-    * as the `weights` frame: the train→apply loop closes over the same
-    * (bucket, weight) contract. Labels come from `labelCol` (±1).
-    * Integer-only throughout → bit-stable cross-engine.
+    * table, feedable straight back into [[linearScore]] as the `weights`
+    * frame: the train→apply loop closes over the same (bucket, weight)
+    * contract. The epoch scores under the fixed stand-in table. Labels
+    * come from `labelCol` (±1). Integer-only throughout → bit-stable
+    * cross-engine.
     *
     * Scale — how a hashed linear model trains on 100 TB per epoch: the
     * scoring pass is the SAME fully-narrow map as linearScore (the
     * current model lives in the expression; no vocabulary broadcast);
     * misclassified docs explode to (bucket, label) and aggregate with
-    * map-side partials into a `buckets`-bounded gradient (the only
+    * map-side partials into a [[FeatureBuckets]]-bounded gradient (the only
     * shuffle, kilobytes on the wire); the final frame is a broadcast
-    * join against the `buckets`-row id range. Compare a parameter-server
+    * join against the [[FeatureBuckets]]-row id range. Compare a parameter-server
     * design: the aggregation tree IS the parameter server here. */
-  def perceptronStep(docs: DataFrame, labelCol: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      buckets: Int = 64, weights: Option[DataFrame] = None): DataFrame = {
-    require(buckets >= 2, "buckets must be at least 2")
-    val table = weightTable(buckets, weights)
-    val tableLit = typedLit(table.toSeq)
+  def perceptronStep(docs: DataFrame, labelCol: String): DataFrame = {
+    val tableLit = typedLit(weightTable(None).toSeq)
     val bucketOf = (t: Column) =>
-      pmod(Dedup.portableHash(t), lit(buckets.toLong))
+      pmod(Dedup.portableHash(t), lit(FeatureBuckets.toLong))
     val w = (t: Column) =>
       element_at(tableLit, (bucketOf(t) + 1L).cast(IntegerType))
     val mis = docs
       .select(col(labelCol).cast(LongType).as("_lbl"),
-        tokens(col(textCol)).as("toks"))
+        tokens(col("text")).as("toks"))
       .withColumn("_score",
         aggregate(col("toks"), lit(0L), (acc, t) => acc + w(t)))
       .filter(col("_lbl") * col("_score") <= 0)
@@ -1914,7 +1862,7 @@ object TextOps {
       .select(col("_lbl"), explode(col("toks")).as("tok"))
       .groupBy(bucketOf(col("tok")).cast(IntegerType).as("bucket"))
       .agg(sum(col("_lbl")).as("grad"))
-    docs.sparkSession.range(buckets)
+    docs.sparkSession.range(FeatureBuckets)
       .select(col("id").cast(IntegerType).as("bucket"))
       .join(grad, Seq("bucket"), "left")
       .select(col("bucket"),

@@ -39,6 +39,6 @@ object CheckpointBridge {
     }
 
   /** Unpersist the checkpoint blocks behind `df` (no-op otherwise). */
-  def release(df: org.apache.spark.sql.DataFrame, blocking: Boolean = false): Unit =
-    backingRdd(df).foreach(_.unpersist(blocking))
+  def release(df: org.apache.spark.sql.DataFrame): Unit =
+    backingRdd(df).foreach(_.unpersist(blocking = false))
 }

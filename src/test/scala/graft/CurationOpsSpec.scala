@@ -50,7 +50,7 @@ class CurationOpsSpec extends SparkSpec {
       (1L, "alpha beta gamma delta epsilon zeta eta theta iota"), // 9 tokens
       (2L, "short doc")) // < 8 tokens -> drops
       .toDF("doc_id", "text")
-    val out = graft.text.TextOps.rollingFingerprint(docs, "text", w = 8)
+    val out = graft.text.TextOps.rollingFingerprint(docs, "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
     assert(!out.contains(2L))
@@ -72,7 +72,7 @@ class CurationOpsSpec extends SparkSpec {
     val text = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val docs = Seq((1L, text), (2L, "too short for any window")).toDF("doc_id", "text")
-    val out = graft.text.TextOps.winnow(docs, "text", w = 8, g = 4)
+    val out = graft.text.TextOps.winnow(docs, "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getInt(1), r.getInt(2), r.getLong(3)))).toMap
     assert(!out.contains(2L)) // 5 tokens -> no 8-token window
@@ -104,7 +104,7 @@ class CurationOpsSpec extends SparkSpec {
       (7L, "a b common passage shared by many docs too"),
       (9L, "entirely different words without any overlap here"))
       .toDF("doc_id", "text")
-    val dups = graft.text.TextOps.passageDups(docs, "text", w = 5)
+    val dups = graft.text.TextOps.passageDups(docs, "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // "common passage shared by many" and "passage shared by many docs"
     // are 5-token windows common to docs 3 and 7
@@ -142,20 +142,20 @@ class CurationOpsSpec extends SparkSpec {
       (3L, s"unrelated words only here nothing shared at all $short"),
       (4L, "completely disjoint content with zero overlap whatsoever"))
       .toDF("doc_id", "text")
-    val out = graft.text.TextOps.substrRuns(docs, "text", w = 5, minRun = 20)
+    val out = graft.text.TextOps.substrRuns(docs, minRun = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getInt(2), r.getInt(3), r.getLong(4)))).toMap
     // doc1: passage starts at token 3; doc2: at token 6; run = 24 tokens
     assert(out == Map((1L, 2L) -> ((3, 6, 24L))), s"$out")
     // lowering minRun to 10 surfaces the short snippet pair too
-    val out2 = graft.text.TextOps.substrRuns(docs, "text", w = 5, minRun = 10)
+    val out2 = graft.text.TextOps.substrRuns(docs, minRun = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(4)).toMap
     assert(out2 == Map((1L, 2L) -> 24L, (2L, 3L) -> 10L), s"$out2")
     // hub cap: a window shared by more docs than maxDf never pairs
     val boiler = (1 to 30).map(i =>
       (100L + i, s"page $i says " + passage)).toDF("doc_id", "text")
-    assert(graft.text.TextOps.substrRuns(boiler, "text", w = 5, minRun = 20,
-      maxDf = 10).count() == 0L)
+    assert(graft.text.TextOps.substrRuns(boiler, minRun = 20, maxDf = 10)
+      .count() == 0L)
   }
 
   test("substrRuns: the pair-mass budget refuses a blowup BEFORE the join; raising it is deliberate") {
@@ -169,8 +169,8 @@ class CurationOpsSpec extends SparkSpec {
     val boiler = (1 to 30).map(i =>
       (100L + i, s"page $i says " + passage)).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      graft.text.TextOps.substrRuns(boiler, "text", w = 5, minRun = 20,
-        pairBudget = 100L).count()
+      graft.text.TextOps.substrRuns(boiler, minRun = 20, pairBudget = 100L)
+        .count()
     }
     assert(e.getMessage.contains("pair join"), e.getMessage)
     assert(e.getMessage.contains("maxDf"), e.getMessage)
@@ -179,16 +179,15 @@ class CurationOpsSpec extends SparkSpec {
     assert("\\d{3,}".r.findFirstIn(e.getMessage).isDefined,
       s"measured mass missing from: ${e.getMessage}")
     // override path: a budget that covers the mass mines as before...
-    assert(graft.text.TextOps.substrRuns(boiler, "text", w = 5,
+    assert(graft.text.TextOps.substrRuns(boiler,
       minRun = 20, pairBudget = 100000L).count() == 435L) // C(30,2) pairs
     // ...and the hub cap composes with the budget: capping maxDf below
     // the multiplicity drops the mass so even the tiny budget passes
-    assert(graft.text.TextOps.substrRuns(boiler, "text", w = 5,
+    assert(graft.text.TextOps.substrRuns(boiler,
       minRun = 20, maxDf = 10, pairBudget = 100L).count() == 0L)
     // substrScrub threads the budget through to the miner
     intercept[IllegalArgumentException] {
-      graft.text.TextOps.substrScrub(boiler, "text", w = 5, minRun = 20,
-        pairBudget = 100L).count()
+      graft.text.TextOps.substrScrub(boiler, pairBudget = 100L).count()
     }
   }
 
@@ -200,7 +199,7 @@ class CurationOpsSpec extends SparkSpec {
     val docs = Seq(
       (1L, s"$rep $rep"), (2L, s"x1 x2 $rep"), (3L, s"$rep y1 y2"))
       .toDF("doc_id", "text")
-    val r = graft.text.TextOps.substrStats(docs, "text", w = 5, maxDf = 100)
+    val r = graft.text.TextOps.substrStats(docs)
       .collect().head
     // windows: doc1 has 6 window positions (10 tokens, w=5), doc2/doc3
     // 3 each; the repeated-passage hash is one of several distinct hashes
@@ -213,15 +212,14 @@ class CurationOpsSpec extends SparkSpec {
     assert(r.getAs[Long]("pair_rows") >= 5L)
     // EXACT cross-check: pair_rows must equal the miner's real join
     // input mass (the a<b occurrence-pair count before diagonal chaining)
-    val wins = graft.text.TextOps.rollingWindows(docs, "text", "doc_id", 5)
+    val wins = graft.text.TextOps.rollingWindows(docs, "text", 5)
     val f = wins.select(col("wh"), col("doc_id"), col("pos"))
     val actual = f.select(col("wh"), col("doc_id").as("a"))
       .join(f.select(col("wh"), col("doc_id").as("b")), "wh")
       .filter(col("a") < col("b")).count()
     assert(r.getAs[Long]("pair_rows") == actual, s"stats vs join: $r $actual")
     // the hub cap moves mass from pair_rows to dropped_pair_rows
-    val capped = graft.text.TextOps.substrStats(docs, "text", w = 5,
-      maxDf = 2).collect().head
+    val capped = graft.text.TextOps.substrStats(docs, maxDf = 2).collect().head
     assert(capped.getAs[Long]("n_hub_windows") == 1L)
     assert(capped.getAs[Long]("dropped_pair_rows") == 5L)
     assert(capped.getAs[Long]("pair_rows") ==
@@ -237,7 +235,7 @@ class CurationOpsSpec extends SparkSpec {
       (3L, "completely disjoint content with zero overlap whatsoever"),
       (4L, "   "))
       .toDF("doc_id", "text")
-    val out = graft.text.TextOps.substrScrub(docs, "text", w = 5, minRun = 20)
+    val out = graft.text.TextOps.substrScrub(docs)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
     // doc1 (lower id) survives untouched, normalized passthrough
@@ -257,7 +255,7 @@ class CurationOpsSpec extends SparkSpec {
       (8L, s"intro pad go $p2 tail8"),
       (9L, s"frame ${(1 to 24).map(i => s"x$i").mkString(" ")} outro"))
       .toDF("doc_id", "text")
-    val out2 = graft.text.TextOps.substrScrub(tri, "text", w = 5, minRun = 20)
+    val out2 = graft.text.TextOps.substrScrub(tri)
       .collect().map(r => r.getLong(0) -> ((r.getLong(3), r.getString(4)))).toMap
     assert(out2(9L) == ((24L, "frame outro")), s"${out2(9L)}")
     // doc7 (lowest id) survives untouched; doc8 is itself the b side of
@@ -324,7 +322,7 @@ class CurationOpsSpec extends SparkSpec {
     def pmiMicro(w1: String, w2: String, cxy: Long): Long =
       math.floor((math.log(cxy.toDouble) + math.log(n.toDouble) -
         math.log(uni(w1).toDouble) - math.log(uni(w2).toDouble)) * 1e6).toLong
-    val out = graft.text.TextOps.pmiCollocations(docs, "text", minCount = 3L)
+    val out = graft.text.TextOps.pmiCollocations(docs, minCount = 3L)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
     // support floor: only pairs with >= 3 occurrences survive
@@ -341,7 +339,7 @@ class CurationOpsSpec extends SparkSpec {
     // across the corpus, under the floor — it must NOT ride (the, cat)'s 4
     assert(!out.contains(("cat", "the")))
     intercept[IllegalArgumentException] {
-      graft.text.TextOps.pmiCollocations(docs, "text", minCount = 0L)
+      graft.text.TextOps.pmiCollocations(docs, minCount = 0L)
     }
   }
 
@@ -361,7 +359,7 @@ class CurationOpsSpec extends SparkSpec {
     def lpMicro(tok: String): Long =
       math.floor((math.log((c(tok) + 1).toDouble) -
         math.log((n + v).toDouble)) * 1e6).toLong
-    val out = graft.text.TextOps.lmLogProb(docs, "text")
+    val out = graft.text.TextOps.lmLogProb(docs)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     // portableLn agrees with Math.log to ~1e-12 relative (SamplingSpec),
@@ -398,7 +396,7 @@ class CurationOpsSpec extends SparkSpec {
     def lpMicro(b: String): Long =
       math.floor((math.log((c(b) + 1).toDouble) -
         math.log((n + v).toDouble)) * 1e6).toLong
-    val out = graft.text.TextOps.bigramLogProb(docs, "text")
+    val out = graft.text.TextOps.bigramLogProb(docs)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     val d1 = corpusBg.head.map(lpMicro).sum
@@ -409,7 +407,7 @@ class CurationOpsSpec extends SparkSpec {
     // the separation claim: shuffled doc scores strictly lower, while the
     // unigram LM cannot tell them apart
     assert(out(2L)._3 < out(1L)._3)
-    val uni = graft.text.TextOps.lmLogProb(docs, "text")
+    val uni = graft.text.TextOps.lmLogProb(docs)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(uni(1L) == uni(2L))
   }
@@ -597,7 +595,7 @@ class CurationOpsSpec extends SparkSpec {
   test("Embeddings.quantizeInt8: int8 range respected; dequantize reproduces max_err") {
     val q = graft.text.Embeddings.quantizeInt8(
       spark.read.parquet(s"$sf/embeddings.parquet"))
-    val checked = graft.text.Embeddings.dequantize(q)
+    val checked = graft.text.ReferenceForms.dequantize(q)
       .select(col("vec_id"),
         expr("array_max(transform(q, v -> abs(cast(v as int))))").as("q_max"),
         expr("""array_max(zip_with(embedding, emb_hat,
@@ -616,7 +614,7 @@ class CurationOpsSpec extends SparkSpec {
     import spark.implicits._
     // vocab: aa (freq 2 — once per doc), ab (1), aaa (1)
     val docs = Seq((1L, "aa AB!"), (2L, "aa aaa"), (3L, "   ")).toDF("doc_id", "text")
-    val out = graft.text.TextOps.bpePairs(docs, "text", topK = 10)
+    val out = graft.text.TextOps.bpePairs(docs, topK = 10)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     // aa: 'aa'(1)+'a_'(1) per occurrence ×2; aaa: 'aa'×2 (overlap) + 'a_';
     // ab: 'ab' + 'b_'  (case-folded; blank doc contributes nothing)
@@ -630,8 +628,8 @@ class CurationOpsSpec extends SparkSpec {
     // vocab: abab freq 3 (case-folded), cd freq 1; blank doc contributes 0
     val docs = Seq((1L, "abab ABab"), (2L, "abab cd"), (3L, " "))
       .toDF("doc_id", "text")
-    val out = graft.text.TextOps.bpeApply(docs, "text",
-        mergesPerRound = 2, rounds = 2, topK = 10)
+    val out = graft.text.TextOps.bpeApply(docs, mergesPerRound = 2,
+        topK = 10)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     // round 1 pairs: (a,b)=6, (b,a)=3, (b,_)=3, (c,d)=1, (d,_)=1
     //   -> merges [(a,b), (b,_)] ('_' < 'a' on the y tie)
@@ -675,8 +673,7 @@ class CurationOpsSpec extends SparkSpec {
     // doc 1 "a b a": d=1 pairs {a,b},{a,b}; d=2 pair {a,a}
     // doc 2 "c a":   d=1 pair {a,c}
     val docs = Seq((1L, "a b a"), (2L, "c a"), (3L, " ")).toDF("doc_id", "text")
-    val out = graft.text.TextOps.cooccurPairs(docs, "text", window = 2,
-        topK = 10)
+    val out = graft.text.TextOps.cooccurPairs(docs, "text", topK = 10)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))).toMap
     // T=5 tokens, P=4 pair instances; unigrams a=3, b=1, c=1
@@ -1204,7 +1201,7 @@ class CurationOpsSpec extends SparkSpec {
       (4L, "bb", "el zorro marron duerme bajo el arbol del perro"),
       (5L, "aa", "xq")) // < 3 chars -> no trigrams -> und
       .toDF("doc_id", "lang", "text")
-    val out = graft.text.TextOps.ngramLangId(docs, profileK = 300)
+    val out = graft.text.TextOps.ngramLangId(docs)
       .collect().map(r => r.getLong(0) -> ((r.getString(2), r.getLong(3)))).toMap
     assert(out(1L)._1 == "aa" && out(2L)._1 == "aa")
     assert(out(3L)._1 == "bb" && out(4L)._1 == "bb")
@@ -1328,7 +1325,7 @@ class CurationOpsSpec extends SparkSpec {
       val n = cs.sum
       (n * lnMicro(n) - cs.map(c => c * lnMicro(c)).sum).toDouble / (n * 1e6)
     }
-    val out = graft.text.TextOps.tokenEntropy(docs, "text")
+    val out = graft.text.TextOps.tokenEntropy(docs)
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     // portableLn agrees with Math.log to ~1e-12 and no value here sits on

@@ -20,7 +20,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("WAV encode/decode round-trips 16-bit PCM exactly") {
     val samples = Multimodal.audioPattern(7L)
-    val bytes = Multimodal.encodeWav(samples, sampleRate = 16000)
+    val bytes = Multimodal.encodeWav(samples)
     assert(new String(bytes.take(4), "US-ASCII") == "RIFF")
     val (rate, decoded) = Multimodal.decodeWav(bytes)
     assert(rate == 16000)
@@ -63,14 +63,6 @@ class MultimodalSpec extends SparkSpec {
     assert(r.length == 64)
     for (oy <- 0 until 8; ox <- 0 until 8)
       assert(r(oy * 8 + ox) == px((oy * h / 8) * w + (ox * w / 8)))
-  }
-
-  test("resizeBilinear: 2x2 -> 1x1 is the four-pixel average; identity at same size") {
-    val px = Array(0, 100, 200, 60)
-    val one = Multimodal.resizeBilinear(px, 2, 2, 1, 1)
-    assert(math.abs(one(0) - (0 + 100 + 200 + 60) / 4.0) < 1e-12)
-    val same = Multimodal.resizeBilinear(px, 2, 2, 2, 2)
-    assert(same.toSeq == px.map(_.toDouble).toSeq)
   }
 
   test("decodeImage reduces RGB inputs to BT.601 luma") {

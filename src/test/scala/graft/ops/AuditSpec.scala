@@ -440,8 +440,7 @@ class AuditSpec extends SparkSpec {
       (1L, "en", 100L), (2L, "en", 900L), (3L, "en", 1500L),
       (4L, "de", 50L), (5L, "de", 60L)).toDF("id", "lang", "chars")
     val out = Audit.dpQuantile(rows, Seq("lang"), col("chars"),
-      lo = 0L, hi = 2000L, buckets = 64, phiNum = 1L, phiDen = 2L,
-      epsilon = 1.0).collect()
+      lo = 0L, hi = 2000L, phiNum = 1L, epsilon = 1.0).collect()
       .map(r => r.getString(0) -> ((
         if (r.isNullAt(1)) -1L else r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2),
@@ -489,8 +488,7 @@ class AuditSpec extends SparkSpec {
     assert(out("en")._1 == -1L || (out("en")._1 >= 0L && out("en")._1 <= 63L))
     // deterministic: a second invocation is bit-identical
     val again = Audit.dpQuantile(rows, Seq("lang"), col("chars"),
-      lo = 0L, hi = 2000L, buckets = 64, phiNum = 1L, phiDen = 2L,
-      epsilon = 1.0).collect()
+      lo = 0L, hi = 2000L, phiNum = 1L, epsilon = 1.0).collect()
       .map(r => r.getString(0) ->
         (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
     assert(again == out.map { case (k, v) => k -> v._1 })
@@ -508,7 +506,7 @@ class AuditSpec extends SparkSpec {
     }
     intercept[IllegalArgumentException] {
       Audit.dpQuantile(rows, Seq("lang"), col("chars"), 0L, 2000L,
-        phiNum = 3L, phiDen = 2L)
+        phiNum = 3L)
     }
   }
 

@@ -16,7 +16,7 @@ class BloomJoinSpec extends SparkSpec {
     val urgent = spark.read.parquet(s"$sf/orders.parquet")
       .filter($"o_orderpriority" === "1-URGENT" && $"o_totalprice" > 200000.0)
     val bloom = BloomJoin.semiJoin(li, urgent, $"l_orderkey", $"o_orderkey",
-      expectedItems = 10000L, fpp = 0.01)
+      expectedItems = 10000L)
       .select("l_orderkey", "l_linenumber", "l_quantity")
     val plain = li.join(urgent, $"l_orderkey" === $"o_orderkey", "left_semi")
       .select("l_orderkey", "l_linenumber", "l_quantity")

@@ -38,7 +38,7 @@ class NexusMonitorSpec extends SparkSpec {
   test("watermarked daily windows aggregate by event time") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Txn]
-    val q = windowedRevenue(in.toDF(), lateness = "1 hour")
+    val q = windowedRevenue(in.toDF())
       .writeStream.format("memory").queryName("daily_rev")
       .outputMode(OutputMode.Complete).start()
     try {
@@ -61,7 +61,7 @@ class NexusMonitorSpec extends SparkSpec {
     // append mode: a window is emitted once, only after the watermark
     // passes its end — THE mode where late-drop semantics are observable
     // (complete mode keeps all state and would still absorb late rows)
-    val q = windowedRevenue(in.toDF(), lateness = "1 hour")
+    val q = windowedRevenue(in.toDF())
       .writeStream.format("memory").queryName("late_drop")
       .outputMode(OutputMode.Append).start()
     try {

@@ -49,7 +49,7 @@ class ReplaySpec extends SparkSpec {
         st => Sessions.sessionize(
           st.select(col("event_id"), col("user_id"),
             timestamp_millis(expr("ts div 1000000")).as("ts"))
-            .as[Sessions.Event], gapMinutes = 30, lateness = "61 minutes")
+            .as[Sessions.Event], lateness = "61 minutes")
           .toDF())
       val n = sessions.count()
       // batch recount of the same rule (ms-truncated, 30-min gap)

@@ -16,7 +16,7 @@ class SessionsSpec extends SparkSpec {
   test("gap sessionization closes a session when the next event proves the gap") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Event]
-    val q = sessionize(in.toDS(), gapMinutes = 30)
+    val q = sessionize(in.toDS())
       .writeStream.format("memory").queryName("sessions")
       .outputMode(OutputMode.Append).start()
     try {
@@ -40,7 +40,7 @@ class SessionsSpec extends SparkSpec {
   test("sessions are per-user; idle users evict by event-time timeout") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[Event]
-    val q = sessionize(in.toDS(), gapMinutes = 30)
+    val q = sessionize(in.toDS())
       .writeStream.format("memory").queryName("sessions2")
       .outputMode(OutputMode.Append).start()
     try {

@@ -109,7 +109,7 @@ class DedupSpec extends SparkSpec {
       (101L, "the quick brown fox jumps over the lazy dog near the river bank"), // = train 1/4
       (102L, "totally novel benchmark question with no training overlap at all"))
       .toDF("doc_id", "text")
-    val hits = Dedup.contamination(train, bench, minOverlap = 5)
+    val hits = Dedup.contamination(train, bench)
       .collect().map(r => (r.getAs[Long]("bench_id"), r.getAs[Long]("train_id"),
         r.getAs[Long]("overlap"), r.getAs[Long]("bench_n_sh")))
     // verbatim containment: overlap equals the benchmark's own shingle count
@@ -167,7 +167,7 @@ class DedupSpec extends SparkSpec {
   test("LSH ANN returns a subset consistent with brute force on testdata") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val brute = Similarity.bruteForceTopK(emb, emb.filter($"vec_id" < 20), 5)
-    val lsh = Similarity.lshTopK(emb, k = 5, nTables = 4, planesPerTable = 4)
+    val lsh = Similarity.lshTopK(emb, k = 5, planesPerTable = 4)
       .filter($"q_id" < 20)
     // recall@5: every LSH hit must be a real vector and scores must match
     // the exact cosine (bucketing limits candidates; scoring is exact)
@@ -223,7 +223,7 @@ class DedupSpec extends SparkSpec {
     val rows = (1 to 10).map(i =>
       (i.toLong, s"unique opening $i\n\n$bp\n\nunique closing $i")) :+
       (11L, "a single unique paragraph")
-    val out = Dedup.stripBoilerplate(rows.toDF("doc_id", "text"), minDf = 10)
+    val out = Dedup.stripBoilerplate(rows.toDF("doc_id", "text"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(out.size == 11)
     assert(out(1L).getAs[Long]("n_paras") == 3L)
@@ -235,8 +235,8 @@ class DedupSpec extends SparkSpec {
     assert(out(11L).getAs[String]("clean_hash") ==
       md5hex("a single unique paragraph"))
     // df = 9 stays below the threshold: nothing dropped at minDf = 10
-    val under = Dedup.stripBoilerplate(
-      rows.take(9).toDF("doc_id", "text"), minDf = 10).collect()
+    val under =
+      Dedup.stripBoilerplate(rows.take(9).toDF("doc_id", "text")).collect()
     assert(under.forall(_.getAs[Long]("n_dropped") == 0L))
   }
 

@@ -9,6 +9,13 @@ import org.apache.spark.sql.types._
   * HOFs never codegen, so these run interpreted lambda passes; the library
   * uses only the native forms. */
 object ReferenceForms {
+  /** Dequantizes [[Embeddings.quantizeInt8]]'s `q` back to doubles as
+    * `emb_hat`, `x̂_i = q_i / scale` — the reconstruction its `max_err`
+    * bounds. */
+  def dequantize(df: DataFrame): DataFrame =
+    df.withColumn("emb_hat",
+      expr("transform(q, v -> cast(v as double) / scale)"))
+
   /** Left-to-right double dot product of two float-array columns. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),

@@ -31,11 +31,11 @@ class Round16PropertySpec extends SparkSpec {
         .zipWithIndex.map { case (txt, i) => (i.toLong, txt) }
         .toDF("doc_id", "text")
       val maxDf = 2 + (seedVal % 5).toInt
-      val stats = TextOps.substrStats(docs, "text", w = 5, maxDf = maxDf)
+      val stats = TextOps.substrStats(docs, maxDf = maxDf)
         .collect().head
       // the reference computation: build the kept index and COUNT the
       // a<b occurrence pairs the miner's join would emit
-      val wins = TextOps.rollingWindows(docs, "text", "doc_id", 5)
+      val wins = TextOps.rollingWindows(docs, "text", 5)
       val keep = wins.select("doc_id", "wh").distinct()
         .groupBy("wh").agg(count(lit(1)).as("_df"))
         .filter(col("_df") <= maxDf).select("wh")
@@ -47,8 +47,8 @@ class Round16PropertySpec extends SparkSpec {
         s"seed $seedVal cap $maxDf: ${stats.getAs[Long]("pair_rows")} vs $actual")
       // conservation: kept + dropped mass is cap-independent (it is the
       // uncapped join input), so raising the cap only MOVES mass
-      val uncapped = TextOps.substrStats(docs, "text", w = 5,
-        maxDf = Int.MaxValue).collect().head
+      val uncapped = TextOps.substrStats(docs, maxDf = Int.MaxValue)
+        .collect().head
       assert(stats.getAs[Long]("pair_rows") +
         stats.getAs[Long]("dropped_pair_rows") ==
         uncapped.getAs[Long]("pair_rows"),
